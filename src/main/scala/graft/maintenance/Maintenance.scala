@@ -572,27 +572,45 @@ object Maintenance {
    * (TokenTable.commit readDeletePaths) and conflict instead of restamping
    * rows past this merge's keys — without that check a concurrent rewrite
    * would silently resurrect deleted rows and un-do updates.
+   *
+   * File shape: a batch whose planned size is at most one target file (a
+   * micro-batch) is debounced into ONE partition, so it commits one key
+   * file and at most one data file, both with stats observed on the write
+   * — no range or footer-stats job. A batch of unknown or larger planned
+   * size keeps the debounce's shuffle partitioning. Returns None, and
+   * commits nothing, for an empty batch (zero observed keys).
    */
   def mergeMor(
       spark: SparkSession,
       table: TokenTable,
       batch: DataFrame,
-      extraSummary: Map[String, String] = Map.empty): Snapshot = {
+      extraSummary: Map[String, String] = Map.empty): Option[Snapshot] = {
     validateMergeBatch(batch)
-    val debounced = debounceBatch(batch).cache()
+    val plannedBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+    val debouncedAll = debounceBatch(batch)
+    // Cached: the staged keys and the appended rows come from ONE
+    // evaluation of the batch. The partition count is fixed before the
+    // cache, which AQE cannot coalesce afterwards.
+    val debounced =
+      (if (plannedBytes <= DefaultTargetFileBytes) debouncedAll.coalesce(1) else debouncedAll)
+        .cache()
     try {
       val jobId = s"merge-mor-${java.util.UUID.randomUUID()}"
       // the debounce output is unique per doc_id by construction — skip
       // stageDeleteKeys' dedup exchange
       val keys = table.stageDeleteKeys(
         debounced.select(col("doc_id")), jobId, assumeDistinct = true)
-      val rows = debounced.filter(col("_op") === "upsert").drop("_op")
-      val added = table.stageWrite(rows, jobId)
-      table.commit("merge-mor", added,
-        addDeletes = keys,
-        summary = Map(
-          "rule" -> "eager-mor",
-          "delete-keys" -> keys.map(_.records).sum.toString) ++ extraSummary)
+      // no keys: an empty batch, and no row to append either
+      if (keys.isEmpty) None
+      else {
+        val rows = debounced.filter(col("_op") === "upsert").drop("_op")
+        val added = table.stageWrite(rows, jobId)
+        Some(table.commit("merge-mor", added,
+          addDeletes = keys,
+          summary = Map(
+            "rule" -> "eager-mor",
+            "delete-keys" -> keys.map(_.records).sum.toString) ++ extraSummary))
+      }
     } finally debounced.unpersist()
   }
 

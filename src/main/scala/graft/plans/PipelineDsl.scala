@@ -341,7 +341,7 @@ object PipelineRunner {
           (Some(Maintenance.mergeInto(spark, table, batch, rule)), Map.empty)
         case MergeMorStep =>
           val batch = mergeBatch.getOrElse(sys.error("merge_mor step needs a batch DataFrame"))
-          (Some(Maintenance.mergeMor(spark, table, batch)), Map.empty)
+          (Maintenance.mergeMor(spark, table, batch), Map.empty)
         case SchemaStep(op) =>
           val m = table.evolveSchema(Seq(op))
           (None, Map("schema-id" -> m.schemaIdNow.toString))

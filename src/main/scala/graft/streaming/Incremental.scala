@@ -131,7 +131,8 @@ object Incremental {
     * runs once per UNSEEN batch id — a batch id already recorded in the
     * snapshot log (by the committing op, via the stream-batch-id summary
     * key) is skipped on replay. One place to fix the replay check for every
-    * streaming sink. */
+    * streaming sink. The sink runs no job of its own: each op commits
+    * nothing for an empty batch, and learns that from its own work. */
   private def idempotentBatchSink(
       stream: DataFrame, tableRoot: String, checkpointDir: String, trigger: Trigger)(
       op: (TokenTable, DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
@@ -139,18 +140,10 @@ object Incremental {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val dbg = sys.env.contains("SPARK_GRAFT_BENCH_DEBUG")
-        val t0 = System.nanoTime()
         val t = TokenTable.load(batch.sparkSession, tableRoot)
         val already = t.metadata.snapshots.exists(
           _.summary.get("stream-batch-id").contains(batchId.toString))
-        val t1 = System.nanoTime()
-        val empty = already || batch.isEmpty
-        val t2 = System.nanoTime()
-        if (!empty) op(t, batch, batchId)
-        if (dbg) System.err.println(
-          f"TRIGGER batch=$batchId load ${(t1 - t0) / 1e6}%.0fms isEmpty ${(t2 - t1) / 1e6}%.0fms op ${(System.nanoTime() - t2) / 1e6}%.0fms")
-        ()
+        if (!already) op(t, batch, batchId)
       }
       .start()
 
@@ -169,7 +162,8 @@ object Incremental {
       val staged = t.stageWrite(
         batch.select("doc_id", "tokens", "n_tok", "source"),
         s"stream-batch-$batchId-${java.util.UUID.randomUUID()}")
-      t.commit("append", staged,
+      // stageWrite stages nothing for an empty batch (its observed row count)
+      if (staged.nonEmpty) t.commit("append", staged,
         summary = Map("stream-batch-id" -> batchId.toString))
       ()
     }
@@ -183,7 +177,8 @@ object Incremental {
       rule: CreationRule.Value = CreationRule.Eager,
       trigger: Trigger = Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery =
     idempotentBatchSink(stream, tableRoot, checkpointDir, trigger) { (t, batch, batchId) =>
-      Maintenance.mergeInto(batch.sparkSession, t, batch, rule,
+      // an emptiness job is noise next to the copy-on-write rewrite it skips
+      if (!batch.isEmpty) Maintenance.mergeInto(batch.sparkSession, t, batch, rule,
         extraSummary = Map("stream-batch-id" -> batchId.toString))
       ()
     }
@@ -194,7 +189,9 @@ object Incremental {
     * shape for 10^12-sequence tables: a copy-on-write merge per micro-batch
     * would rewrite the same hot files every few seconds, while here
     * compaction retires the accumulated delete keys on ITS schedule
-    * (idempotent per batch id like every stream sink here). */
+    * (idempotent per batch id like every stream sink here). A micro-batch
+    * planned within one target file commits one key file and one data file;
+    * an empty one commits nothing. */
   def streamMergeMor(
       stream: DataFrame,
       tableRoot: String,

@@ -511,12 +511,12 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     val t0 = System.nanoTime()
     val spec = meta.spec
     // Global stats ride the write as an Observation (same pattern as
-    // stageDeleteKeys): when the write lands as ONE file — the common case
-    // for micro-batch merges and sub-target-size outputs — its file stats
-    // ARE the observed values and the footer-stats job below is skipped
-    // entirely (one fewer job + its driver planning gap per commit).
-    // Multi-file writes keep the distributed footer pass, whose per-file
-    // granularity an aggregate observation cannot provide.
+    // stageDeleteKeys). Its row count decides emptiness for every write.
+    // When the write lands as ONE file — a frame planned into one partition,
+    // such as mergeMor's sub-target-size batches or a coalesce(1) rewrite —
+    // its file stats ARE the observed values and the footer-stats job below
+    // is skipped. Multi-file writes keep the distributed footer pass, whose
+    // per-file granularity an aggregate observation cannot provide.
     val obs = new org.apache.spark.sql.Observation(s"graft-stats-${UUID.randomUUID()}")
     val df = df0.observe(obs, count(lit(1)).as("n"),
       min(col("doc_id")).as("dlo"), max(col("doc_id")).as("dhi"),
@@ -558,32 +558,30 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
         .parquet(stagingDir.toString)
     }
     val t1 = System.nanoTime()
+    val o = obs.get
+    val n = o("n").asInstanceOf[Long]
+    // Zero rows: Spark still writes one schema-only file for an empty frame.
+    // Nothing is staged, so the staging dir goes too instead of lingering
+    // as an orphan until removeOrphans.
+    if (n == 0L) { fs.delete(stagingDir, true); return Seq.empty }
     val listed = TokenTable.listParquetFast(fs, stagingDir)
     val observedStats: Option[Seq[DataFileMeta]] =
-      if (listed.size != 1) None
+      // several files, or an all-null stats column: the footer/scan path
+      if (listed.size != 1 || Seq("dlo", "dhi", "tlo", "thi", "slo", "shi").exists(o(_) == null))
+        None
       else {
-        val o = obs.get
-        val n = o("n").asInstanceOf[Long]
-        // n == 0: Spark writes one schema-only file for an empty frame —
-        // mirror collectStats, which yields no entry for it (its footer has
-        // no blocks and the scan fallback aggregates zero rows).
-        if (n == 0L) Some(Seq.empty)
-        else if (Seq("dlo", "dhi", "tlo", "thi", "slo", "shi").exists(o(_) == null))
-          None // all-null stats column: keep the footer/scan path's handling
-        else {
-          val (p, len, _) = listed.head
-          val slo = o("slo").asInstanceOf[String]
-          val shi = o("shi").asInstanceOf[String]
-          Some(Seq(DataFileMeta(
-            path = TokenTable.relativize(root, p), records = n, bytes = len,
-            minDocId = o("dlo").asInstanceOf[String],
-            maxDocId = o("dhi").asInstanceOf[String],
-            minNTok = o("tlo").asInstanceOf[Number].intValue,
-            maxNTok = o("thi").asInstanceOf[Number].intValue,
-            sumNTok = o("tsum").asInstanceOf[Long],
-            sources = if (slo == shi) Seq(slo) else Seq.empty,
-            minSource = Some(slo), maxSource = Some(shi))))
-        }
+        val (p, len, _) = listed.head
+        val slo = o("slo").asInstanceOf[String]
+        val shi = o("shi").asInstanceOf[String]
+        Some(Seq(DataFileMeta(
+          path = TokenTable.relativize(root, p), records = n, bytes = len,
+          minDocId = o("dlo").asInstanceOf[String],
+          maxDocId = o("dhi").asInstanceOf[String],
+          minNTok = o("tlo").asInstanceOf[Number].intValue,
+          maxNTok = o("thi").asInstanceOf[Number].intValue,
+          sumNTok = o("tsum").asInstanceOf[Long],
+          sources = if (slo == shi) Seq(slo) else Seq.empty,
+          minSource = Some(slo), maxSource = Some(shi))))
       }
     val stats = observedStats
       .getOrElse(collectStats(spark, fs, root, stagingDir, schema))
@@ -615,9 +613,9 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     val spark = keys.sparkSession
     val stagingDir = new Path(dataDir, s"deletes/$jobId")
     // Global (count, min, max) ride the write as an Observation — when the
-    // write lands as ONE file (the common micro-batch case under AQE
-    // coalescing) its stats are exactly the observed values and the
-    // read-back aggregation job below is skipped entirely.
+    // write lands as ONE file (a key frame planned into one partition, such
+    // as mergeMor's sub-target-size batches) its stats are exactly the
+    // observed values and the read-back aggregation job below is skipped.
     val obs = new org.apache.spark.sql.Observation(s"graft-delkeys-$jobId")
     val distinctKeys = {
       val cast = keys.select(col("doc_id").cast("string"))
@@ -628,14 +626,14 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
         min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
       .write.mode("errorifexists").parquet(stagingDir.toString)
     val observed = obs.get
-    val sizes: Map[String, Long] =
-      TokenTable.listParquetFast(fs, stagingDir)
-        .map { case (p, len, _) => (relativize(root, p), len) }.toMap
     // Zero observed keys: Spark still writes one schema-only parquet file
     // for an empty frame — a DataFileMeta built from it would carry NULL
     // min/max doc ids and NPE every later range comparison on the delete
-    // entries. No keys means nothing to commit.
-    if (sizes.isEmpty || observed("n").asInstanceOf[Long] == 0L) return Seq.empty
+    // entries. No keys means nothing to commit, and nothing to keep.
+    if (observed("n").asInstanceOf[Long] == 0L) { fs.delete(stagingDir, true); return Seq.empty }
+    val sizes: Map[String, Long] =
+      TokenTable.listParquetFast(fs, stagingDir)
+        .map { case (p, len, _) => (relativize(root, p), len) }.toMap
     if (sizes.size == 1) {
       val (rel, len) = sizes.head
       return Seq(DataFileMeta(
@@ -1203,33 +1201,14 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       .map(st => relativize(root, st.getPath))
     val dirs = top.filter(_.isDirectory).map(_.getPath.toString)
     val dSlices = math.max(1, math.min(math.max(dirs.size, 1), sc.defaultParallelism * 2))
-    // Hadoop's LocalFileSystem pays a per-file `ls -ld` exec to populate the
-    // LocatedFileStatus permissions that listFiles(recursive) returns (~4 ms/
-    // file — 2 min for 33k files); java.nio.Files.walk stats without it. Object
-    // stores / HDFS keep the recursive listFiles, which is their efficient
-    // paged-LIST call.
+    // listParquetFast: an NIO walk on the local FS (no per-file `ls -ld`
+    // exec — 2 min for 33k files through Hadoop's LocalFileSystem), the
+    // paged recursive LIST elsewhere
     val listed = sc.parallelize(dirs, dSlices).flatMap { d =>
       val p = new Path(d)
-      val tfs = p.getFileSystem(confBc.value.value)
-      val buf = scala.collection.mutable.ArrayBuffer[String]()
-      if (tfs.getScheme == "file") {
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p.toUri.getPath))
-        try walk.forEach { q =>
-          if (q.getFileName.toString.endsWith(".parquet") &&
-              java.nio.file.Files.isRegularFile(q) &&
-              java.nio.file.Files.getLastModifiedTime(q).toMillis < cutoff)
-            buf += relativize(new Path(rootStr), new Path(q.toUri))
-        } finally walk.close()
-      } else {
-        val it = tfs.listFiles(p, true)
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile && st.getPath.getName.endsWith(".parquet") &&
-              st.getModificationTime < cutoff)
-            buf += relativize(new Path(rootStr), st.getPath)
-        }
+      TokenTable.listParquetFast(p.getFileSystem(confBc.value.value), p).collect {
+        case (q, _, mtime) if mtime < cutoff => relativize(new Path(rootStr), q)
       }
-      buf
     } ++ sc.parallelize(loose, 1)
     tick("plan")
     // prefix-protected staging dirs (unparseable ledger units — conservative
@@ -1566,16 +1545,27 @@ object TokenTable {
   private[table] def listParquetFast(fs: FileSystem, dir: Path): Seq[(Path, Long, Long)] = {
     val buf = scala.collection.mutable.ArrayBuffer[(Path, Long, Long)]()
     if (fs.getScheme == "file") {
-      val base = java.nio.file.Paths.get(dir.toUri.getPath)
-      if (java.nio.file.Files.exists(base)) {
-        val walk = java.nio.file.Files.walk(base)
-        try walk.forEach { q =>
-          if (q.getFileName != null && q.getFileName.toString.endsWith(".parquet") &&
-              java.nio.file.Files.isRegularFile(q))
-            buf += ((new Path(q.toUri), java.nio.file.Files.size(q),
-              java.nio.file.Files.getLastModifiedTime(q).toMillis))
-        } finally walk.close()
+      import java.nio.file.{FileVisitResult, Files, NoSuchFileException, Paths, SimpleFileVisitor}
+      import java.nio.file.attribute.BasicFileAttributes
+      // A file or directory deleted mid-walk (a writer retiring replaced
+      // files while an orphan scan lists data/) is skipped, not fatal; a
+      // missing `dir` lists as empty.
+      def skipVanished(e: java.io.IOException): FileVisitResult = e match {
+        case null | _: NoSuchFileException => FileVisitResult.CONTINUE
+        case other => throw other
       }
+      Files.walkFileTree(Paths.get(dir.toUri.getPath), new SimpleFileVisitor[java.nio.file.Path] {
+        override def visitFile(q: java.nio.file.Path, a: BasicFileAttributes): FileVisitResult = {
+          if (a.isRegularFile && q.getFileName.toString.endsWith(".parquet"))
+            buf += ((new Path(q.toUri), a.size, a.lastModifiedTime.toMillis))
+          graft.maintenance.Failpoints.hitCallback("table.list.after-file")
+          FileVisitResult.CONTINUE
+        }
+        override def visitFileFailed(q: java.nio.file.Path, e: java.io.IOException): FileVisitResult =
+          skipVanished(e)
+        override def postVisitDirectory(q: java.nio.file.Path, e: java.io.IOException): FileVisitResult =
+          skipVanished(e)
+      })
     } else {
       val it = fs.listFiles(dir, true)
       while (it.hasNext) {

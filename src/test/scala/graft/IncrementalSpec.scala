@@ -169,6 +169,59 @@ class IncrementalSpec extends SparkSpec {
     assert(out.filter($"doc_id" === "brand-new").count() == 1)
   }
 
+  test("every stream sink: an empty micro-batch commits nothing; a replayed batch id is skipped") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQuery
+    type Sink = (DataFrame, String, String) => StreamingQuery
+    val sinks: Seq[(String, Sink)] = Seq(
+      "streamAppend" -> ((s, r, c) => Incremental.streamAppend(s, r, c)),
+      "streamMerge" -> ((s, r, c) => Incremental.streamMerge(s, r, c)),
+      "streamMergeMor" -> ((s, r, c) => Incremental.streamMergeMor(s, r, c)))
+    sinks.foreach { case (name, sink) =>
+      val root = tmpDir(s"inc-empty-$name")
+      val t = SequenceGen.createTable(spark, s"$root/tbl", nDocs = 50, nFiles = 1)
+      val src = s"$root/src"
+      val ckpt = s"$root/ckpt"
+      def land(df: DataFrame): Unit = df.coalesce(1).write.mode("append").parquet(src)
+      def drain(): Unit = {
+        val q = sink(spark.readStream.schema(TokenTable.sequenceSchema)
+          .option("maxFilesPerTrigger", 1).parquet(src), s"$root/tbl", ckpt)
+        try q.processAllAvailable() finally q.stop()
+        q.exception.foreach(e => throw e)
+      }
+      def dataTree(): Set[String] = {
+        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/tbl/data"))
+        try walk.toArray.map(_.toString).toSet finally walk.close()
+      }
+      def state() = (t.refresh().snapshots.map(_.snapshotId), dataTree())
+
+      // batch 0: one new row commits one snapshot
+      land(SequenceGen.sequences(spark, 1, seed = 5L)
+        .withColumn("doc_id", concat(lit("new-"), col("doc_id"))))
+      drain()
+      val afterFirst = state()
+      assert(t.metadata.currentSnapshot.exists(
+        _.summary.get("stream-batch-id").contains("0")), s"$name: batch 0 not committed")
+      assert(t.scan(spark).count() == 51, s"$name: row count")
+
+      // replay: drop the checkpoint's record of batch 0 so the restarted
+      // query runs it again; the sink must see the id in the log and skip
+      val commits = java.nio.file.Paths.get(ckpt, "commits")
+      Seq("0", ".0.crc").foreach(f => java.nio.file.Files.deleteIfExists(commits.resolve(f)))
+      drain()
+      assert(state() == afterFirst, s"$name: replayed batch 0 committed again")
+
+      // batch 1: an empty file is an empty micro-batch
+      val srcFiles = new java.io.File(src).list().count(_.endsWith(".parquet"))
+      land(SequenceGen.sequences(spark, 1, seed = 5L).filter(lit(false)))
+      assert(new java.io.File(src).list().count(_.endsWith(".parquet")) == srcFiles + 1)
+      drain()
+      assert(java.nio.file.Files.exists(commits.resolve("1")), s"$name: batch 1 never ran")
+      assert(state() == afterFirst, s"$name: an empty batch committed or left files")
+      assert(t.scan(spark).count() == 51)
+    }
+  }
+
   test("StreamConnector: poll == Flush micro-batch, rate limit buffers, empty polls end the drain") {
     import spark.implicits._
     import graft.streaming.{IterableStreamConnector, StreamConnector}

@@ -47,6 +47,49 @@ class MorMergeSpec extends SparkSpec {
       "MoR and CoW merge diverged")
   }
 
+  test("a small MoR batch commits one data file and one key file with footer-exact stats") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val t = fresh("mor-one-file")
+    val src = tmpDir("mor-one-file-src")
+    batch(t).write.mode("overwrite").parquet(src)
+    val b = spark.read.parquet(src) // planned size known: a few KB of parquet
+    val seedPaths = t.liveFiles().map(_.path).toSet
+    val snap = Maintenance.mergeMor(spark, t, b)
+    assert(snap.nonEmpty)
+    val added = t.liveFiles().filterNot(f => seedPaths.contains(f.path))
+    val keys = t.deleteEntries(snap.get)
+    assert(added.size == 1, s"data files: ${added.map(_.path)}")
+    assert(keys.size == 1, s"key files: ${keys.map(_.path)}")
+    // the data file's observed stats equal the footer pass on every field
+    // the footer derives (footers carry no token sum: check it by a scan)
+    val a = added.head
+    val dataDir = new Path(t.root, a.path).getParent
+    val footer = TokenTable.collectStats(spark, t.fs, t.root, dataDir)
+    assert(footer.size == 1)
+    assert(a.copy(sumNTok = 0L, schemaId = None, addedSeq = None) == footer.head)
+    val tsum = spark.read.parquet(new Path(t.root, a.path).toString)
+      .agg(sum(col("n_tok").cast("long"))).head.getLong(0)
+    assert(a.sumNTok == tsum)
+    // the key file's range and count equal its parquet footer
+    val k = keys.head
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(t.root, k.path), spark.sessionState.newHadoopConf()))
+    try {
+      val blocks = reader.getFooter.getBlocks
+      assert(blocks.size == 1)
+      val stats = blocks.get(0).getColumns.get(0).getStatistics
+      assert(k.records == blocks.get(0).getRowCount)
+      def utf8(v: Any) = v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8
+      assert(k.minDocId == utf8(stats.genericGetMin) && k.maxDocId == utf8(stats.genericGetMax))
+    } finally reader.close()
+    // and the merge still equals the copy-on-write result
+    val tCow = fresh("mor-one-file-cow")
+    Maintenance.mergeInto(spark, tCow, b)
+    assert(checksum(t.scan(spark)) == checksum(tCow.scan(spark)))
+  }
+
   test("stacked MoR merges: the later batch wins; delete then re-insert survives") {
     val t = fresh("mor-stack")
     val d0 = t.scan(spark).select(min(col("doc_id"))).head.getString(0)

@@ -314,6 +314,33 @@ class TokenTableSpec extends SparkSpec {
     assert(t.stageWrite(empty, "obs-empty").isEmpty)
   }
 
+  test("a file or directory vanishing mid-listing is skipped, not fatal") {
+    import java.nio.file.{Files, Paths}
+    val root = tmpDir("tt-list-vanish")
+    val t = TokenTable.create(spark, s"$root/tbl")
+    val data = Paths.get(s"$root/tbl/data")
+    val rels = Seq("x.parquet", "y.parquet", "a/1.parquet", "a/2.parquet", "b/3.parquet", "b/c/4.parquet")
+    rels.foreach { r =>
+      val p = data.resolve(r)
+      Files.createDirectories(p.getParent)
+      Files.write(p, Array[Byte](1))
+    }
+    val all = rels.map("data/" + _).toSet
+    assert(t.listDataFiles().toSet == all)
+    // after the first file is listed, every other file and directory still
+    // queued in the walk disappears (a writer retiring replaced files)
+    var fired = false
+    Failpoints.armCallback("table.list.after-file") { () =>
+      fired = true
+      Files.walk(data).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p))
+    }
+    val listed = try t.listDataFiles() finally Failpoints.reset()
+    assert(fired)
+    assert(listed.size == 1 && all.contains(listed.head), s"listed $listed")
+    assert(t.listDataFiles().isEmpty)
+  }
+
   test("a commit interleaved between base load and publish is never dropped") {
     import graft.maintenance.Failpoints
     val root = tmpDir("tt-slot-race")
