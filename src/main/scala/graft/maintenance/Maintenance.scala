@@ -1054,9 +1054,12 @@ object Maintenance {
 
   /**
    * Force-materialize pending merge-on-read deletes: rewrite exactly the
-   * files some delete still applies to (sequence tier + doc-range pruning —
-   * untouched ranges are never read), then retire every delete key file.
-   * After this, scans are anti-join-free again.
+   * files some delete still applies to ([[TokenTable.deleteApplies]]: a
+   * higher sequence and an intersecting doc range — untouched ranges are
+   * never read), then retire every delete key file. The rewrite reads its
+   * victims through ONE anti-join ([[TokenTable.readFiles]]) however many
+   * commits are pending, then writes: two Spark jobs. After this, scans are
+   * anti-join-free again.
    */
   def materializeDeletes(
       spark: SparkSession,
@@ -1067,10 +1070,7 @@ object Maintenance {
     val deletes = table.deleteEntries(snap)
     if (deletes.isEmpty) return None
     val live = table.liveFiles(m)
-    val affected = live.filter { f =>
-      deletes.exists(d =>
-        d.seqOr0 > f.seqOr0 && d.maxDocId >= f.minDocId && d.minDocId <= f.maxDocId)
-    }
+    val affected = live.filter(f => deletes.exists(TokenTable.deleteApplies(_, f)))
     val staged =
       if (affected.isEmpty) Seq.empty
       else {

@@ -302,55 +302,81 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     readFiles(spark, files, deletesOf(None))
 
   /**
-   * Read data files with merge-on-read equality deletes applied: rows of a
-   * data file are dropped when their `doc_id` appears in a delete key file
-   * with a HIGHER sequence (TableMeta.addedSeq). Because every rewrite path
-   * (compact / cluster / MERGE) reads its victims through here, a rewrite
-   * can never resurrect deleted rows — the rewritten file gets a fresh
-   * higher sequence the old deletes no longer apply to, and the deleted rows
-   * were filtered on the way in (deletes materialize for free as files get
-   * touched). The anti-join build side is the delete key set — AQE
-   * broadcasts it when it fits, shuffles otherwise; no hint.
+   * Read data files with merge-on-read equality deletes applied: a row is
+   * dropped when its `doc_id` appears in a delete key file with a HIGHER
+   * sequence (TableMeta.addedSeq) than the row's data file. Because every
+   * rewrite path (compact / cluster / MERGE) reads its victims through here,
+   * a rewrite can never resurrect deleted rows — the rewritten file gets a
+   * fresh higher sequence the old deletes no longer apply to, and the
+   * deleted rows were filtered on the way in (deletes materialize for free
+   * as files get touched).
+   *
+   * Files some delete applies to (higher sequence AND intersecting doc
+   * range, see [[TokenTable.deleteApplies]]) go through ONE left-anti join
+   * against every applicable key file, matching on
+   * `doc_id = _ddoc AND _dseq > _fseq`: each side is one parquet scan, and
+   * a row's sequence is its file's, looked up by `_metadata.file_path` in a
+   * map built from the manifest entries. One join, one key-file read, however
+   * many commits are pending. The data side carries the file path and looks
+   * its sequence up inside the join condition, so the lookup runs only for
+   * rows whose key matched. A key, or a matched row, whose file is missing
+   * from its map fails the read instead of turning the condition null, which
+   * would let a deleted row survive.
+   * Files no delete applies to are read plain and unioned after the join.
+   * The build side is the key set — AQE broadcasts it when it fits,
+   * shuffles otherwise; no hint.
+   *
+   * Tagging per-sequence frames with `lit(seq)` and unioning them instead
+   * would not work: Catalyst pushes the anti-join through the union and
+   * folds the condition per branch, one join and key read per sequence.
    */
   def readFiles(
       spark: SparkSession, files: Seq[DataFileMeta],
       deletes: Seq[DataFileMeta]): DataFrame = {
     if (files.isEmpty)
       return spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    if (deletes.nonEmpty) {
-      // Group data files by the set of deletes applying to them (distinct
-      // sequence tiers — few in practice: compaction collapses tiers), apply
-      // one anti-join per tier, union. Delete key files whose doc range
-      // cannot intersect a tier's files are pruned from that tier's key set.
-      val tiers = files.groupBy { f =>
-        deletes.filter(_.seqOr0 > f.seqOr0).map(_.path).toSet
-      }.toSeq.sortBy(_._1.size)
-      val frames = tiers.map { case (delPaths, fs0) =>
-        val plain = readFiles(spark, fs0, Seq.empty)
-        if (delPaths.isEmpty) plain
-        else {
-          val lo = fs0.map(_.minDocId).min
-          val hi = fs0.map(_.maxDocId).max
-          val applicable = deletes.filter(d =>
-            delPaths.contains(d.path) && d.maxDocId >= lo && d.minDocId <= hi)
-          if (applicable.isEmpty) plain
-          else {
-            val keys = spark.read
-              .schema(StructType(Seq(StructField("doc_id", StringType))))
-              .parquet(applicable.map(d => new Path(root, d.path).toString): _*)
-            plain.join(keys, Seq("doc_id"), "left_anti")
-          }
-        }
-      }
-      return frames.reduce(_.unionByName(_))
-    }
+    val (dirty, clean) = files.partition(f => deletes.exists(deleteApplies(_, f)))
+    if (dirty.isEmpty) return readSchemaGroups(spark, files, withFilePath = false)
+    val keyFiles = deletes.filter(d => dirty.exists(deleteApplies(d, _)))
+    val rows = readSchemaGroups(spark, dirty, withFilePath = true)
+    val keys = spark.read.schema(StructType(Seq(StructField("doc_id", StringType))))
+      .parquet(keyFiles.map(d => new Path(root, d.path).toString): _*)
+    val keySeqs = keys.select(col("doc_id").as("_ddoc"),
+      sequenceOf(scanPathSequences(keys, keyFiles), col("_metadata.file_path")).as("_dseq"))
+    val kept = rows.join(keySeqs,
+      col("doc_id") === col("_ddoc") &&
+        col("_dseq") > sequenceOf(scanPathSequences(rows, dirty), col("_fpath")),
+      "left_anti").drop("_fpath")
+    if (clean.isEmpty) kept
+    else readSchemaGroups(spark, clean, withFilePath = false).unionByName(kept)
+  }
+
+  /** `_metadata.file_path` of every file `df` scans → that file's commit
+    * sequence. Keys are built from `df.inputFiles` the way Spark derives the
+    * metadata column from a scanned file's path (SparkPath → Path → string
+    * → Path → URI), so they match it exactly whatever the root's spelling. */
+  private def scanPathSequences(df: DataFrame, files: Seq[DataFileMeta]): Map[String, Long] = {
+    val seqs = files.map(f => f.path -> f.seqOr0).toMap
+    df.inputFiles.iterator.map { s =>
+      val p = org.apache.spark.paths.SparkPath.fromUrlString(s).toPath
+      new Path(p.toString).toUri.toString -> seqs(relativize(root, p))
+    }.toMap
+  }
+
+  /** Read files in the current schema: one scan per schema version, unioned.
+    * `withFilePath` adds `_fpath` (`_metadata.file_path`), taken from each
+    * scan before the projection that hides the metadata column. */
+  private def readSchemaGroups(
+      spark: SparkSession, files: Seq[DataFileMeta], withFilePath: Boolean): DataFrame = {
+    val filePath = if (withFilePath) Seq(col("_metadata.file_path").as("_fpath")) else Seq.empty
     val current = meta.schemaVersion(meta.schemaIdNow)
     val currentSchema = schema
     val groups = files.groupBy(_.schemaIdOr0).toSeq.sortBy(_._1)
     val frames = groups.map { case (sid, fs) =>
       val paths = fs.map(f => new Path(root, f.path).toString)
       if (sid == meta.schemaIdNow) {
-        spark.read.schema(currentSchema).parquet(paths: _*)
+        val raw = spark.read.schema(currentSchema).parquet(paths: _*)
+        if (withFilePath) raw.select(col("*") +: filePath: _*) else raw
       } else {
         val ver = meta.schemaVersion(sid)
         val physSchema = DataType.fromJson(ver.schemaJson).asInstanceOf[StructType]
@@ -364,7 +390,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
               else col(phys).cast(f.dataType).as(f.name)
             case None => lit(null).cast(f.dataType).as(f.name)
           }
-        }: _*)
+        } ++ filePath: _*)
       }
     }
     frames.reduce(_.unionByName(_))
@@ -523,19 +549,8 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       min(col("n_tok")).as("tlo"), max(col("n_tok")).as("thi"),
       coalesce(sum(col("n_tok").cast("long")), lit(0L)).as("tsum"),
       min(col("source")).as("slo"), max(col("source")).as("shi"))
-    // zstd by default (optimization-guide §6: smaller than snappy at similar
-    // read speed — and for token-array tables MUCH smaller, so every later
-    // scan/compact/merge reads and writes a fraction of the bytes). Level 1:
-    // the write path is encode-bound and level 3 costs ~40% more wall for a
-    // marginal size delta on these files (measured in OPTIMIZATION_r07.md).
-    // Both overridable per table via write.parquet.codec /
-    // write.parquet.zstd-level properties.
-    val codec = meta.properties.getOrElse("write.parquet.codec", "zstd")
-    val zstdLevel = meta.properties.getOrElse("write.parquet.zstd-level", "1")
     graft.maintenance.Maintenance.debugPlan("stagewrite", df)
-    if (spec.isEmpty) df.write.mode("errorifexists")
-      .option("compression", codec)
-      .option("parquet.compression.codec.zstd.level", zstdLevel)
+    if (spec.isEmpty) df.write.mode("errorifexists").options(parquetWriteOptions)
       .parquet(stagingDir.toString)
     else {
       // Partition-aligned write: derived `_p_*` columns drive partitionBy so
@@ -551,9 +566,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       val sortCols = spec.map(f => col(Partitioning.partitionColName(f))) ++
         (if (df.columns.contains("doc_id")) Seq(col("doc_id")) else Seq.empty)
       stamped.sortWithinPartitions(sortCols: _*)
-        .write.mode("errorifexists")
-        .option("compression", codec)
-        .option("parquet.compression.codec.zstd.level", zstdLevel)
+        .write.mode("errorifexists").options(parquetWriteOptions)
         .partitionBy(spec.map(Partitioning.partitionColName): _*)
         .parquet(stagingDir.toString)
     }
@@ -595,6 +608,18 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     stamped
   }
 
+  /** Parquet writer options of every file the table writes, data and delete
+    * keys alike. zstd by default (optimization-guide §6: smaller than snappy
+    * at similar read speed — and for token-array tables MUCH smaller, so
+    * every later scan/compact/merge reads and writes a fraction of the
+    * bytes). Level 1: the write path is encode-bound and level 3 costs ~40%
+    * more wall for a marginal size delta on these files (measured in
+    * OPTIMIZATION_r07.md). Both overridable per table via the
+    * write.parquet.codec / write.parquet.zstd-level properties. */
+  private def parquetWriteOptions: Map[String, String] = Map(
+    "compression" -> meta.properties.getOrElse("write.parquet.codec", "zstd"),
+    "parquet.compression.codec.zstd.level" -> meta.properties.getOrElse("write.parquet.zstd-level", "1"))
+
   /** Stage equality-delete key files (merge-on-read): the distinct doc_id
     * keys land as parquet under data/deletes/<jobId>. Returns entries with
     * per-file doc ranges for scan-time pruning; NO snapshot is committed —
@@ -624,7 +649,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     distinctKeys
       .observe(obs, count(lit(1)).as("n"),
         min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-      .write.mode("errorifexists").parquet(stagingDir.toString)
+      .write.mode("errorifexists").options(parquetWriteOptions).parquet(stagingDir.toString)
     val observed = obs.get
     // Zero observed keys: Spark still writes one schema-only parquet file
     // for an empty frame — a DataFileMeta built from it would carry NULL
@@ -1497,6 +1522,18 @@ object TokenTable {
     if (files.isEmpty) None
     else Some((files.map(_.minDocId).min, files.map(_.maxDocId).max))
 
+  /** Whether equality-delete file `d` can hide rows of data file `f`: it was
+    * committed later (higher sequence) and its doc range meets `f`'s. */
+  def deleteApplies(d: DataFileMeta, f: DataFileMeta): Boolean =
+    d.seqOr0 > f.seqOr0 && d.maxDocId >= f.minDocId && d.minDocId <= f.maxDocId
+
+  /** The sequence `seqs` maps `path` to; a path with no entry raises an
+    * error instead of yielding null (a null sequence would make the delete
+    * condition null and keep a deleted row). */
+  private[graft] def sequenceOf(seqs: Map[String, Long], path: org.apache.spark.sql.Column) =
+    coalesce(typedLit(seqs).apply(path),
+      raise_error(concat(lit("no commit sequence for scanned file "), path)))
+
   /** First-committer-wins publish of `tmp` at `dst` (both sides of a
     * version-file commit race call this; exactly one must win). On local
     * filesystems Hadoop's rename delegates to java.io renameTo — POSIX
@@ -1506,34 +1543,45 @@ object TokenTable {
     * silently overwrites the first — a lost commit (observed as a vanished
     * merge snapshot under concurrent writers). link(2) is the atomic
     * no-clobber primitive there: createLink fails with
-    * FileAlreadyExistsException iff dst exists, atomically. Non-local
-    * filesystems keep exists+rename — HDFS rename refuses to clobber
-    * (returns false) and object-store renames are copy+delete with their
-    * own semantics. `tmp` is always cleaned up, win or lose. */
+    * FileAlreadyExistsException iff dst exists, atomically. A local mount
+    * without hard links (some CIFS, FAT and NFS setups) fails the link with
+    * another error; the slot is then claimed by an O_EXCL create of a
+    * `.<dst>.claim` file, so only one publisher at a time gets to check that
+    * dst is free and rename into it, and the claim is dropped once dst
+    * exists (a publisher that dies holding a claim leaves that version slot
+    * blocked until the claim file is removed). Non-local filesystems keep
+    * exists+rename — HDFS rename refuses to clobber (returns false) and
+    * object-store renames are copy+delete with their own semantics. `tmp`
+    * is always cleaned up, win or lose. */
   private[table] def firstWinsPublish(fs: FileSystem, tmp: Path, dst: Path): Boolean =
-    if (fs.getScheme == "file") {
-      val t = java.nio.file.Paths.get(tmp.toUri.getPath)
-      val d = java.nio.file.Paths.get(dst.toUri.getPath)
-      val won =
-        try { java.nio.file.Files.createLink(d, t); true }
-        catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      if (won) {
-        // carry the checksum sidecar (ChecksumFileSystem ".<name>.crc") so
-        // the published file stays verified; best-effort — a missing crc
-        // only disables verification for this one file
+    try {
+      if (fs.getScheme == "file") {
+        import java.nio.file.{FileAlreadyExistsException, Files, Paths}
+        val t = Paths.get(tmp.toUri.getPath)
+        val d = Paths.get(dst.toUri.getPath)
         try {
-          val tc = t.resolveSibling("." + t.getFileName + ".crc")
-          val dc = d.resolveSibling("." + d.getFileName + ".crc")
-          if (java.nio.file.Files.exists(tc)) java.nio.file.Files.createLink(dc, tc)
-        } catch { case _: Throwable => () }
-      }
-      fs.delete(tmp, false) // unlinks tmp's name (+its crc); the linked dst survives
-      won
-    } else {
-      val won = !fs.exists(dst) && fs.rename(tmp, dst)
-      if (!won) fs.delete(tmp, false)
-      won
-    }
+          graft.maintenance.Failpoints.hitCallback("table.publish.link")
+          Files.createLink(d, t)
+          // carry the checksum sidecar (ChecksumFileSystem ".<name>.crc") so
+          // the published file stays verified; best-effort — a missing crc
+          // only disables verification for this one file
+          try {
+            val tc = t.resolveSibling("." + t.getFileName + ".crc")
+            val dc = d.resolveSibling("." + d.getFileName + ".crc")
+            if (Files.exists(tc)) Files.createLink(dc, tc)
+          } catch { case _: Throwable => () }
+          true
+        } catch {
+          case _: FileAlreadyExistsException => false
+          case _: java.io.IOException | _: UnsupportedOperationException =>
+            val claim = d.resolveSibling("." + d.getFileName + ".claim")
+            try Files.createFile(claim)
+            catch { case _: FileAlreadyExistsException => return false }
+            try !fs.exists(dst) && fs.rename(tmp, dst)
+            finally Files.deleteIfExists(claim)
+        }
+      } else !fs.exists(dst) && fs.rename(tmp, dst)
+    } finally fs.delete(tmp, false) // unlinks tmp's name (+its crc); a linked dst survives
 
   /** Recursive `.parquet` listing of a directory tree. Hadoop's
     * LocalFileSystem pays a per-file `ls -ld` exec to populate the

@@ -34,6 +34,16 @@ class MorDeleteSpec extends SparkSpec {
     assert(t.scan(spark).count() == 100)
   }
 
+  test("a scanned file missing from the sequence map fails the read, never yields null") {
+    val paths = spark.range(2).select(col("id"),
+      concat(lit("file:/t/part-"), col("id").cast("string")).as("p"))
+    val seqs = Map("file:/t/part-0" -> 7L)
+    assert(paths.filter(col("id") === 0).select(TokenTable.sequenceOf(seqs, col("p")))
+      .head.getLong(0) == 7L)
+    val e = intercept[Exception](paths.select(TokenTable.sequenceOf(seqs, col("p"))).collect())
+    assert(e.getMessage.contains("no commit sequence for scanned file file:/t/part-1"), e.getMessage)
+  }
+
   test("MoR delete stages keys only (no data rewrite), scan applies the anti-join") {
     val t = fresh()
     val before = t.liveFiles().map(_.path).toSet

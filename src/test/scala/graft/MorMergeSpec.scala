@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.gen.SequenceGen
@@ -11,7 +12,7 @@ import graft.table.TokenTable
   * table, across stacked batches, deletes, re-inserts and compaction. */
 class MorMergeSpec extends SparkSpec {
 
-  private def checksum(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+  private def checksum(df: DataFrame): (Long, Long) = {
     val r = df.agg(count(lit(1)),
       bit_xor(xxhash64(col("doc_id"), col("tokens"), col("source")))).head
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
@@ -83,11 +84,30 @@ class MorMergeSpec extends SparkSpec {
       assert(k.records == blocks.get(0).getRowCount)
       def utf8(v: Any) = v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8
       assert(k.minDocId == utf8(stats.genericGetMin) && k.maxDocId == utf8(stats.genericGetMax))
+      // key files are written with the table's codec, like data files
+      assert(blocks.get(0).getColumns.get(0).getCodec.name == "ZSTD")
     } finally reader.close()
     // and the merge still equals the copy-on-write result
     val tCow = fresh("mor-one-file-cow")
     Maintenance.mergeInto(spark, tCow, b)
     assert(checksum(t.scan(spark)) == checksum(tCow.scan(spark)))
+  }
+
+  test("delete key files honour the table's write.parquet.codec") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val t = fresh("mor-key-codec")
+    t.updateProperties(Map("write.parquet.codec" -> "gzip"))
+    val snap = Maintenance.mergeMor(spark, t, batch(t))
+    val keys = t.deleteEntries(snap.get)
+    assert(keys.nonEmpty)
+    keys.foreach { k =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(t.root, k.path), spark.sessionState.newHadoopConf()))
+      try assert(reader.getFooter.getBlocks.get(0).getColumns.get(0).getCodec.name == "GZIP", k.path)
+      finally reader.close()
+    }
   }
 
   test("stacked MoR merges: the later batch wins; delete then re-insert survives") {
@@ -203,6 +223,103 @@ class MorMergeSpec extends SparkSpec {
     val mor = t.scan(spark).filter(col("doc_id") === d0).select("source", "lang").head
     assert(mor.getString(0) == "up2" && mor.isNullAt(1))
     assert(t.scan(spark).count() == 1000)
+  }
+
+  // ---- stacked merge-on-read commits against a driver-side model ---------
+
+  /** Six MoR merges over the same keys — update, delete, re-insert, delete
+    * again — on `t`, each checked against a driver-side last-write-wins
+    * model: the full scan, point lookups, and the changelog from the
+    * previous snapshot; then materializeDeletes must keep the model's state
+    * and retire every key file. An upsert replaces the full row (an evolved
+    * column reads null after it). Batch rows cycle three sources, so an
+    * identity-partitioned table gets files in several partition directories
+    * per commit, one of them with an escaped name. Returns the Spark jobs
+    * of a full scan through 2 and through 6 pending commits, and the
+    * snapshot with all six pending. */
+  private def stackedMorMatchesModel(t: TokenTable): (Int, Int, Long) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.graftbridge.JobCounter
+    import graft.table.Changelog
+    val cols = t.schema.fieldNames.toSeq
+    def state(df: DataFrame): Map[String, Row] =
+      df.select(cols.map(col): _*).collect().map(r => r.getString(0) -> r).toMap
+    val ids = t.scan(spark).select("doc_id").collect().map(_.getString(0)).sorted
+    val keys = ids.indices.by(ids.length / 12).take(12).map(ids(_))
+    val fresh = (0 until 4).map(i => s"new-$i")
+    // (upserts, deletes) per commit
+    val commits = Seq(
+      (keys.slice(0, 8) ++ fresh, Seq.empty),
+      (keys.slice(4, 8), keys.slice(0, 4)),
+      (keys.slice(0, 2), fresh.slice(0, 2)),
+      (keys.slice(8, 12), keys.slice(0, 1)),
+      (fresh.slice(0, 1), keys.slice(8, 10)),
+      (keys.slice(0, 4), keys.slice(4, 6)))
+    def fullScanJobs(): Int = JobCounter.jobsOf(spark.sparkContext)(checksum(t.scan(spark)))._2
+    var model = state(t.scan(spark))
+    var jobs = Map.empty[Int, Int]
+    commits.zipWithIndex.foreach { case ((ups, dels), k) =>
+      // the third source needs escaping as a partition directory name
+      val sources = Seq("web", "code", "a b=c%d")
+      val rows = ups.zipWithIndex.map { case (d, i) =>
+        (d, Seq(k, i, k + i), 3, sources((k + i) % 3), "upsert") } ++
+        dels.map(d => (d, Seq(0), 1, "web", "delete"))
+      val batch = {
+        import spark.implicits._
+        rows.toDF("doc_id", "tokens", "n_tok", "source", "_op")
+      }
+      val upserted = cols.filterNot(batch.columns.contains)
+        .foldLeft(batch.filter(col("_op") === "upsert"))((b, c) => b.withColumn(c, lit(null)))
+      val prev = t.metadata.currentSnapshotId
+      val before = model
+      model = model -- dels ++ state(upserted)
+      Maintenance.mergeMor(spark, t, batch)
+      val label = s"after commit ${k + 1}"
+      assert(state(t.scan(spark)) == model, s"scan $label")
+      (ups.take(2) ++ dels.take(2)).foreach { d =>
+        assert(state(t.lookup(spark, d)).get(d) == model.get(d), s"lookup($d) $label")
+      }
+      val changes = Changelog.changesBetween(spark, t, prev)
+        .collect().map(r => (r.getAs[String](Changelog.ChangeTypeCol),
+          Row.fromSeq(cols.map(c => r.get(r.fieldIndex(c)))))).toSet
+      val expected = (before.keySet ++ model.keySet).toSeq.flatMap { d =>
+        if (before.get(d) == model.get(d)) Seq.empty
+        else before.get(d).map("delete" -> _).toSeq ++ model.get(d).map("insert" -> _)
+      }.toSet
+      assert(changes == expected, s"changelog $label")
+      if (k + 1 == 2 || k + 1 == 6) jobs += (k + 1) -> fullScanJobs()
+    }
+    assert(t.deleteEntries(t.metadata.currentSnapshot.get).size == commits.size)
+    val pending = t.metadata.currentSnapshotId
+    Maintenance.materializeDeletes(spark, t)
+    assert(t.metadata.currentSnapshot.forall(_.deletes.isEmpty), "key files left pending")
+    assert(state(t.scan(spark)) == model, "scan after materializeDeletes")
+    assert(Changelog.changesBetween(spark, t, pending).isEmpty, "materializeDeletes changed rows")
+    (jobs(2), jobs(6), pending.get)
+  }
+
+  test("stacked MoR commits equal a last-write-wins model; scan jobs do not grow with pending commits") {
+    val (at2, at6, _) = stackedMorMatchesModel(fresh("mor-model"))
+    assert(at2 == at6, s"full scan: $at2 jobs through 2 pending commits, $at6 through 6")
+  }
+
+  test("stacked MoR model check on an identity-partitioned table (part-file names repeat)") {
+    val t = TokenTable.create(spark, tmpDir("mor-model-part") + "/tbl",
+      partitionSpec = Seq(graft.table.PartitionField("source", "identity")))
+    t.commit("append", t.stageWrite(SequenceGen.sequences(spark, 600).repartition(2), "seed"))
+    val names = t.liveFiles().map(f => new org.apache.hadoop.fs.Path(f.path).getName)
+    assert(names.distinct.size < names.size, s"no repeated part-file name: $names")
+    stackedMorMatchesModel(t)
+  }
+
+  test("stacked MoR model check on a schema-evolved table (two schema groups per read)") {
+    val t = fresh("mor-model-evolved")
+    t.evolveSchema(Seq(graft.table.AddColumn("lang", "STRING")))
+    t.commit("append", t.stageWrite(SequenceGen.sequences(spark, 50, seed = 9L)
+      .withColumn("doc_id", concat(lit("evolved-"), col("doc_id"))).withColumn("lang", lit("en")),
+      "evolved-append"))
+    val (_, _, pending) = stackedMorMatchesModel(t)
+    assert(t.liveFiles(Some(pending)).map(_.schemaIdOr0).distinct.size == 2)
   }
 
   test("merge_mor runs from the YAML pipeline DSL") {

@@ -368,6 +368,36 @@ class TokenTableSpec extends SparkSpec {
     assert(t1.metadata.snapshots.map(_.snapshotId).distinct.size == 3, s"duplicate ids: $ops")
   }
 
+  test("without hard links, racing publishers claim the version slot: one wins, no tmp left") {
+    import graft.maintenance.Failpoints
+    val root = tmpDir("tt-no-links")
+    val t1 = SequenceGen.createTable(spark, s"$root/tbl", nDocs = 100, nFiles = 2)
+    val t2 = TokenTable.load(spark, s"$root/tbl")
+    def stage(t: TokenTable, prefix: String, seed: Long) = t.stageWrite(
+      SequenceGen.sequences(spark, 10, seed = seed)
+        .withColumn("doc_id", concat(lit(prefix), col("doc_id"))), s"no-links-$prefix")
+    val (mine, theirs) = (stage(t1, "y", 4), stage(t2, "x", 3))
+    // every link attempt fails the way a link-less mount does (the callback
+    // re-arms itself, so it fires on each publish)
+    var linkFailures = 0
+    def noLinks(): Unit = Failpoints.armCallback("table.publish.link") { () =>
+      linkFailures += 1
+      noLinks()
+      throw new java.nio.file.FileSystemException("hard links not supported")
+    }
+    noLinks()
+    // t2 publishes into the very slot t1 pinned: t1 must lose it and replan
+    Failpoints.armCallback("table.commit.after-base") { () => t2.commit("append", theirs) }
+    try t1.commit("append", mine) finally Failpoints.reset()
+    assert(linkFailures == 3, s"publishes through the fallback: $linkFailures")
+    t1.refresh()
+    val ops = t1.metadata.snapshots.map(s => (s.snapshotId, s.operation))
+    assert(t1.metadata.snapshots.size == 3, s"a snapshot was dropped: $ops")
+    assert(t1.scan(spark).count() == 120)
+    val meta = new java.io.File(t1.metadataDir.toUri.getPath).list().toSeq
+    assert(!meta.exists(n => n.startsWith(".tmp-") || n.contains(".claim")), s"left behind: $meta")
+  }
+
   test("conflicting rewrites: a merge planned against files a compact replaced must abort") {
     import graft.maintenance.Maintenance
     val root = tmpDir("tt-conflict")
