@@ -18,8 +18,8 @@ import org.apache.spark.sql.SparkSession
  *   explain <dir>   — write <query>.txt = explain("formatted") of every
  *                     (filtered) query's returned frame into <dir>.
  *   maintprof <cores> <nDocs> <nFiles> [reps] — Bench.maintRun on a fresh
- *                     local[cores] session with per-step/stage debug timings
- *                     (set SPARK_GRAFT_BENCH_DEBUG=1 to see them).
+ *                     local[cores] session with per-stage timings (set
+ *                     SPARK_GRAFT_BENCH_DEBUG=1 for per-step timings).
  */
 object BenchExtra {
 

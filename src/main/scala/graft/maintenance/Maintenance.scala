@@ -2,7 +2,7 @@ package graft.maintenance
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
+import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils, PlanBridge}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Clustering, RangeBucket}
@@ -370,12 +370,12 @@ object Maintenance {
       .withColumn("_b_present", lit(true))
 
     // Output sizing from manifest stats + the fused probe (bytes/token from
-    // live file footers; 2.5 B/token is the observed parquet density for
+    // live file stats; 2.5 B/token is the observed parquet density for
     // int32 token streams on an empty table). Only files that actually
-    // carry a token sum enter the ratio — footer-derived entries record
-    // sumNTok = 0 (unknown) while observation/scan-derived entries record
-    // the exact sum, and a mixed manifest would otherwise overstate
-    // bytes/token by dividing all bytes by a partial sum.
+    // carry a token sum enter the ratio — files staged before write-time
+    // stats may record sumNTok = 0 (unknown), and a table mixing them with
+    // exact sums would otherwise overstate bytes/token by dividing all bytes
+    // by a partial sum.
     val withSums = live.filter(_.sumNTok > 0)
     val bytesPerTok =
       if (withSums.nonEmpty)
@@ -457,27 +457,22 @@ object Maintenance {
     val planHash = java.lang.Integer.toHexString(batch.queryExecution.analyzed.semanticHash())
     val stepId = s"merge-snap${m.currentSnapshotId.getOrElse(0L)}-${touchedPaths.hashCode()}-$planHash"
     val ledger = new Ledger(table, stepId)
+    val staged = ledger.completedUnits().getOrElse("merge", {
+      val stagingDir = new Path(table.dataDir, s"$stepId/merge")
+      if (table.fs.exists(stagingDir)) table.fs.delete(stagingDir, true)
+      val out = if (bounds.nonEmpty) withPartialKeyCoPartition(balanced) else balanced
+      debugPlan("merge-balanced", out)
+      val outs = table.stageWrite(out, s"$stepId/merge")
+      ledger.record("merge", outs)
+      outs
+    })
     // Per-flush observed counters (the reference's QueryExecutorWithStatistics,
-    // nodestream/databases/query_executor_with_statistics.py): an Observation
-    // rides the write action — zero extra jobs — and lands in the snapshot
-    // summary. Attached only on a live write: a ledger-resumed merge replays
-    // staged files and has no action for the observation to observe.
-    var observed: Map[String, String] = Map.empty
-    val staged = withPartialKeyCoPartition(spark, needed = bounds.nonEmpty) {
-      debugPlan("merge-balanced", balanced)
-      ledger.completedUnits().getOrElse("merge", {
-        val stagingDir = new Path(table.dataDir, s"$stepId/merge")
-        if (table.fs.exists(stagingDir)) table.fs.delete(stagingDir, true)
-        val obs = new org.apache.spark.sql.Observation(s"graft-$stepId")
-        val outs = table.stageWrite(
-          balanced.observe(obs, count(lit(1)).as("rows"),
-            coalesce(sum(col("n_tok").cast("long")), lit(0L)).as("tokens")),
-          s"$stepId/merge")
-        observed = obs.get.map { case (k, v) => s"observed-$k" -> String.valueOf(v) }.toMap
-        ledger.record("merge", outs)
-        outs
-      })
-    }
+    // nodestream/databases/query_executor_with_statistics.py), summed from the
+    // staged files' write-time stats: zero extra jobs, and a ledger-resumed
+    // merge reports them too.
+    val observed = Map(
+      "observed-rows" -> staged.map(_.records).sum.toString,
+      "observed-tokens" -> staged.map(_.sumNTok).sum.toString)
     val mT2 = System.nanoTime()
     Failpoints.hit("merge.before-commit")
     val snap =
@@ -575,10 +570,10 @@ object Maintenance {
    *
    * File shape: a batch whose planned size is at most one target file (a
    * micro-batch) is debounced into ONE partition, so it commits one key
-   * file and at most one data file, both with stats observed on the write
-   * — no range or footer-stats job. A batch of unknown or larger planned
-   * size keeps the debounce's shuffle partitioning. Returns None, and
-   * commits nothing, for an empty batch (zero observed keys).
+   * file and at most one data file, both with stats folded by the writer
+   * — no range or stats job. A batch of unknown or larger planned size
+   * keeps the debounce's shuffle partitioning. Returns None, and commits
+   * nothing, for an empty batch (zero staged keys).
    */
   def mergeMor(
       spark: SparkSession,
@@ -757,41 +752,19 @@ object Maintenance {
     Some(bounds.toArray)
   }
 
-  // re-entrancy state for withPartialKeyCoPartition: concurrent merges on
-  // one session must not interleave save/restore and strand the relaxed
-  // value on the session (outermost enter saves, last exit restores)
-  private val partialKeyLock = new Object
-  private var partialKeyDepth = 0
-  private var partialKeySaved: Option[String] = None
-
-  /** Run `f` with partial-key co-partitioning allowed: the route-join's
+  /** `df` planned with partial-key co-partitioning allowed: the route-join's
     * HashPartitioning on the leading `_mrt` key must be accepted as
     * co-partitioning for join keys (_mrt, doc_id) — Spark's default
     * (`spark.sql.requireAllClusterKeysForCoPartition=true`) otherwise
     * replaces the route exchange with a full-key hash shuffle, scattering
     * the output's doc ranges. Safe here because the route is token-mass
-    * balanced by construction (the skew the default guards against).
-    * Depth-counted so interleaved concurrent merges restore the original
-    * value exactly once, when the last one leaves. */
-  private def withPartialKeyCoPartition[T](
-      spark: SparkSession, needed: Boolean)(f: => T): T = {
-    if (!needed) return f
-    val key = "spark.sql.requireAllClusterKeysForCoPartition"
-    partialKeyLock.synchronized {
-      if (partialKeyDepth == 0) {
-        partialKeySaved = spark.conf.getOption(key)
-        spark.conf.set(key, "false")
-      }
-      partialKeyDepth += 1
-    }
-    try f
-    finally partialKeyLock.synchronized {
-      partialKeyDepth -= 1
-      if (partialKeyDepth == 0) partialKeySaved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    * balanced by construction (the skew the default guards against). The
+    * key is set on a clone of the session, so the relaxation reaches this
+    * merge's plan only, never other queries on the caller's session. */
+  private def withPartialKeyCoPartition(df: DataFrame): DataFrame = {
+    val merge = PlanBridge.cloneSession(df.sparkSession)
+    merge.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
+    PlanBridge.ofRows(merge, df.queryExecution.logical)
   }
 
   /** Routing column placing doc_id range `i` exactly in partition `i` of a

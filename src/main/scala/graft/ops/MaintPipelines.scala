@@ -482,7 +482,7 @@ object MaintPipelines {
       oneSrc.forall(_.partitionValue("source").contains(srcs.head)),
       s"source pruning failed: ${oneSrc.size}/${live.size} files")
     // bucket pruning: a point lookup plans at most the key's bucket. The
-    // global min doc_id comes from file stats (footer-exact post-merge), so
+    // global min doc_id comes from file stats (exact, folded at write time), so
     // no scan is needed to pick a live key.
     val key = live.map(_.minDocId).min
     val keyFiles = t.planFilesForKey(key)

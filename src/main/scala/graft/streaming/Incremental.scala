@@ -162,7 +162,7 @@ object Incremental {
       val staged = t.stageWrite(
         batch.select("doc_id", "tokens", "n_tok", "source"),
         s"stream-batch-$batchId-${java.util.UUID.randomUUID()}")
-      // stageWrite stages nothing for an empty batch (its observed row count)
+      // stageWrite stages nothing for an empty batch (zero written rows)
       if (staged.nonEmpty) t.commit("append", staged,
         summary = Map("stream-batch-id" -> batchId.toString))
       ()

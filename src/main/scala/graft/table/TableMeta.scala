@@ -58,12 +58,12 @@ final case class DataFileMeta(
     maxDocId: String,
     minNTok: Int,
     maxNTok: Int,
-    sumNTok: Long, // 0 = unknown (footer-derived stats carry no sums)
+    sumNTok: Long, // 0 = unknown on files written before write-time stats
     sources: Seq[String], // exact distinct set when known, else empty (see min/maxSource)
     minZKey: Option[Long] = None,
     maxZKey: Option[Long] = None,
     schemaId: Option[Int] = None, // schema version at write time; None = 0
-    minSource: Option[String] = None, // footer min/max when `sources` is inexact
+    minSource: Option[String] = None, // min/max when `sources` is inexact (None on key files)
     maxSource: Option[String] = None,
     // Partition tuple of this file under the table's partitionSpec (absent
     // on files written before the spec existed or on unpartitioned tables).

@@ -2,7 +2,6 @@ package graft.table
 
 import java.util.UUID
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -528,85 +527,40 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
   }
 
   /** Stage a DataFrame into data/ under a unique job prefix; returns file metas
-    * with freshly computed per-file min/max stats. No snapshot is committed —
+    * with per-file stats folded by the writer. No snapshot is committed —
     * callers record staged units in the ledger and commit atomically at the end. */
   def stageWrite(dfIn: DataFrame, jobId: String): Seq[DataFileMeta] = {
-    val df0 = conformToSchema(dfIn, schema)
-    val spark = df0.sparkSession
+    val df = conformToSchema(dfIn, schema)
     val stagingDir = new Path(dataDir, jobId)
-    val t0 = System.nanoTime()
     val spec = meta.spec
-    // Global stats ride the write as an Observation (same pattern as
-    // stageDeleteKeys). Its row count decides emptiness for every write.
-    // When the write lands as ONE file — a frame planned into one partition,
-    // such as mergeMor's sub-target-size batches or a coalesce(1) rewrite —
-    // its file stats ARE the observed values and the footer-stats job below
-    // is skipped. Multi-file writes keep the distributed footer pass, whose
-    // per-file granularity an aggregate observation cannot provide.
-    val obs = new org.apache.spark.sql.Observation(s"graft-stats-${UUID.randomUUID()}")
-    val df = df0.observe(obs, count(lit(1)).as("n"),
-      min(col("doc_id")).as("dlo"), max(col("doc_id")).as("dhi"),
-      min(col("n_tok")).as("tlo"), max(col("n_tok")).as("thi"),
-      coalesce(sum(col("n_tok").cast("long")), lit(0L)).as("tsum"),
-      min(col("source")).as("slo"), max(col("source")).as("shi"))
     graft.maintenance.Maintenance.debugPlan("stagewrite", df)
-    if (spec.isEmpty) df.write.mode("errorifexists").options(parquetWriteOptions)
-      .parquet(stagingDir.toString)
-    else {
-      // Partition-aligned write: derived `_p_*` columns drive partitionBy so
-      // every output file holds exactly ONE partition tuple; the original
-      // data columns stay in the file (identity values are duplicated into
-      // `_p_*`, never moved), so readers are unchanged. The tuple is
-      // recovered from the directory path below and recorded per file.
-      // sortWithinPartitions(_p.. , doc_id): the dynamic-partition writer
-      // requires rows sorted by partition expressions — pre-sorting with
-      // doc_id as a tiebreaker satisfies that requirement (no second sort)
-      // AND keeps each file's doc range narrow for stats pruning.
-      val stamped = Partitioning.withPartitionCols(df, spec)
-      val sortCols = spec.map(f => col(Partitioning.partitionColName(f))) ++
-        (if (df.columns.contains("doc_id")) Seq(col("doc_id")) else Seq.empty)
-      stamped.sortWithinPartitions(sortCols: _*)
-        .write.mode("errorifexists").options(parquetWriteOptions)
-        .partitionBy(spec.map(Partitioning.partitionColName): _*)
-        .parquet(stagingDir.toString)
-    }
-    val t1 = System.nanoTime()
-    val o = obs.get
-    val n = o("n").asInstanceOf[Long]
-    // Zero rows: Spark still writes one schema-only file for an empty frame.
-    // Nothing is staged, so the staging dir goes too instead of lingering
-    // as an orphan until removeOrphans.
-    if (n == 0L) { fs.delete(stagingDir, true); return Seq.empty }
-    val listed = TokenTable.listParquetFast(fs, stagingDir)
-    val observedStats: Option[Seq[DataFileMeta]] =
-      // several files, or an all-null stats column: the footer/scan path
-      if (listed.size != 1 || Seq("dlo", "dhi", "tlo", "thi", "slo", "shi").exists(o(_) == null))
-        None
+    val staged =
+      if (spec.isEmpty) writeStaged(df, stagingDir)
       else {
-        val (p, len, _) = listed.head
-        val slo = o("slo").asInstanceOf[String]
-        val shi = o("shi").asInstanceOf[String]
-        Some(Seq(DataFileMeta(
-          path = TokenTable.relativize(root, p), records = n, bytes = len,
-          minDocId = o("dlo").asInstanceOf[String],
-          maxDocId = o("dhi").asInstanceOf[String],
-          minNTok = o("tlo").asInstanceOf[Number].intValue,
-          maxNTok = o("thi").asInstanceOf[Number].intValue,
-          sumNTok = o("tsum").asInstanceOf[Long],
-          sources = if (slo == shi) Seq(slo) else Seq.empty,
-          minSource = Some(slo), maxSource = Some(shi))))
+        // Partition-aligned write: derived `_p_*` columns drive partitionBy so
+        // every output file holds exactly ONE partition tuple; the original
+        // data columns stay in the file (identity values are duplicated into
+        // `_p_*`, never moved), so readers are unchanged. The tuple is
+        // recovered from the directory path below and recorded per file.
+        // sortWithinPartitions(_p.. , doc_id): the dynamic-partition writer
+        // requires rows sorted by partition expressions — pre-sorting with
+        // doc_id as a tiebreaker satisfies that requirement (no second sort)
+        // AND keeps each file's doc range narrow for stats pruning.
+        val stamped = Partitioning.withPartitionCols(df, spec)
+        val sortCols = spec.map(f => col(Partitioning.partitionColName(f))) ++
+          (if (df.columns.contains("doc_id")) Seq(col("doc_id")) else Seq.empty)
+        writeStaged(stamped.sortWithinPartitions(sortCols: _*), stagingDir,
+          spec.map(Partitioning.partitionColName))
+          .map(f => f.copy(partition = Partitioning.partitionFromPath(f.path)))
       }
-    val stats = observedStats
-      .getOrElse(collectStats(spark, fs, root, stagingDir, schema))
-      .map(_.copy(schemaId = Some(meta.schemaIdNow)))
-    val stamped =
-      if (spec.isEmpty) stats
-      else stats.map(f => f.copy(partition = Partitioning.partitionFromPath(f.path)))
-    if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG"))
-      System.err.println(f"STEP write ${(t1 - t0) / 1e6}%.0fms stats ${(System.nanoTime() - t1) / 1e6}%.0fms" +
-        (if (observedStats.nonEmpty) " (observed)" else ""))
-    stamped
+    staged.map(_.copy(schemaId = Some(meta.schemaIdNow)))
   }
+
+  /** Every staged data and delete-key file is written here, with the
+    * table's writer options and stats folded as it is written. */
+  private def writeStaged(
+      df: DataFrame, dir: Path, partitionCols: Seq[String] = Seq.empty): Seq[DataFileMeta] =
+    StatsParquetFormat.write(df, dir, partitionCols, parquetWriteOptions, fs, root)
 
   /** Parquet writer options of every file the table writes, data and delete
     * keys alike. zstd by default (optimization-guide §6: smaller than snappy
@@ -635,50 +589,8 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * semantics), just with redundant key rows. */
   def stageDeleteKeys(
       keys: DataFrame, jobId: String, assumeDistinct: Boolean): Seq[DataFileMeta] = {
-    val spark = keys.sparkSession
-    val stagingDir = new Path(dataDir, s"deletes/$jobId")
-    // Global (count, min, max) ride the write as an Observation — when the
-    // write lands as ONE file (a key frame planned into one partition, such
-    // as mergeMor's sub-target-size batches) its stats are exactly the
-    // observed values and the read-back aggregation job below is skipped.
-    val obs = new org.apache.spark.sql.Observation(s"graft-delkeys-$jobId")
-    val distinctKeys = {
-      val cast = keys.select(col("doc_id").cast("string"))
-      if (assumeDistinct) cast else cast.distinct()
-    }
-    distinctKeys
-      .observe(obs, count(lit(1)).as("n"),
-        min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-      .write.mode("errorifexists").options(parquetWriteOptions).parquet(stagingDir.toString)
-    val observed = obs.get
-    // Zero observed keys: Spark still writes one schema-only parquet file
-    // for an empty frame — a DataFileMeta built from it would carry NULL
-    // min/max doc ids and NPE every later range comparison on the delete
-    // entries. No keys means nothing to commit, and nothing to keep.
-    if (observed("n").asInstanceOf[Long] == 0L) { fs.delete(stagingDir, true); return Seq.empty }
-    val sizes: Map[String, Long] =
-      TokenTable.listParquetFast(fs, stagingDir)
-        .map { case (p, len, _) => (relativize(root, p), len) }.toMap
-    if (sizes.size == 1) {
-      val (rel, len) = sizes.head
-      return Seq(DataFileMeta(
-        path = rel, records = observed("n").asInstanceOf[Long], bytes = len,
-        minDocId = observed("lo").asInstanceOf[String],
-        maxDocId = observed("hi").asInstanceOf[String],
-        minNTok = 0, maxNTok = 0, sumNTok = 0L, sources = Seq.empty))
-    }
-    // Per-file ranges from one pass over the (small, just-written) key set.
-    spark.read.schema(StructType(Seq(StructField("doc_id", StringType))))
-      .parquet(stagingDir.toString)
-      .groupBy(input_file_name().as("f"))
-      .agg(count(lit(1)).as("n"), min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-      .collect().toSeq.map { r =>
-        val rel = relativize(root, new Path(new java.net.URI(r.getString(0)).getPath))
-        DataFileMeta(
-          path = rel, records = r.getLong(1), bytes = sizes.getOrElse(rel, 0L),
-          minDocId = r.getString(2), maxDocId = r.getString(3),
-          minNTok = 0, maxNTok = 0, sumNTok = 0L, sources = Seq.empty)
-      }
+    val cast = keys.select(col("doc_id").cast("string"))
+    writeStaged(if (assumeDistinct) cast else cast.distinct(), new Path(dataDir, s"deletes/$jobId"))
   }
 
   def writeManifest(files: Seq[DataFileMeta]): ManifestMeta =
@@ -1201,12 +1113,6 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       spark: SparkSession, manifestNames: Seq[String], delete: Boolean,
       cutoff: Long, protectedByLedger: Set[String],
       protectedPrefixes: Set[String]): Seq[String] = {
-    val debug = sys.env.contains("SPARK_GRAFT_BENCH_DEBUG")
-    var t0 = System.nanoTime()
-    def tick(label: String): Unit = if (debug) {
-      System.err.println(f"STEP gc.$label ${(System.nanoTime() - t0) / 1e6}%.0fms")
-      t0 = System.nanoTime()
-    }
     val sc = spark.sparkContext
     val confBc = sc.broadcast(new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf()))
@@ -1235,7 +1141,6 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
         case (q, _, mtime) if mtime < cutoff => relativize(new Path(rootStr), q)
       }
     } ++ sc.parallelize(loose, 1)
-    tick("plan")
     // prefix-protected staging dirs (unparseable ledger units — conservative
     // over-protection): tiny set, rides as a task-closure filter
     val prefixesLocal = protectedPrefixes
@@ -1248,10 +1153,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       } else dead
     // the one driver-side collect is the orphan list itself — small on any
     // maintained table, and the caller's return value either way
-    val collected = out.collect().toSeq.sorted
-    tick("run")
-    if (debug) System.err.println(s"GC orphans=${collected.size}")
-    collected
+    out.collect().toSeq.sorted
   }
 
   /** Sweep ledger directories abandoned by crashed runs: a stepId embeds the
@@ -1358,135 +1260,6 @@ object TokenTable {
     val root = new Path(rootStr)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     fs.exists(new Path(root, "metadata/v0.json"))
-  }
-
-  /**
-   * Per-file stats over a staged directory, read from parquet FOOTERS only —
-   * no data pass (the Iceberg design: the row groups' column chunk min/max
-   * ARE the file stats). Binary stats may be truncated by the writer; a
-   * truncated min is still a valid lower bound and max an upper bound, which
-   * is all pruning needs. Falls back to a Spark scan for any file whose
-   * footer lacks stats. Footers are read by a distributed Spark job over the
-   * staged paths (each task opens only footers, never data pages) — the
-   * driver does zero file IO, so a 1000-executor commit of 100k files costs
-   * one short stage instead of a driver crawl.
-   */
-  def collectStats(
-      spark: SparkSession, fs: FileSystem, root: Path, stagingDir: Path,
-      readSchema: StructType = sequenceSchema): Seq[DataFileMeta] = {
-    val tList0 = System.nanoTime()
-    val files: Seq[(Path, Long)] =
-      listParquetFast(fs, stagingDir).map { case (p, len, _) => (p, len) }
-    val tList1 = System.nanoTime()
-    if (files.isEmpty) return Seq.empty
-    val sc = spark.sparkContext
-    val confBc = sc.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val tBc = System.nanoTime()
-    val rootStr = root.toString
-    val inputs: Seq[(String, Long, String)] =
-      files.map { case (p, len) => (p.toString, len, relativize(root, p)) }
-    val slices = math.max(1, math.min(inputs.size, sc.defaultParallelism * 2))
-    val results: Array[(String, Option[DataFileMeta])] =
-      sc.parallelize(inputs, slices).map { case (pathStr, len, rel) =>
-        rel -> footerStats(confBc.value.value, new Path(pathStr), len, rel)
-      }.collect()
-    if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG"))
-      System.err.println(f"STATS list ${(tList1 - tList0) / 1e6}%.0fms bc ${(tBc - tList1) / 1e6}%.0fms job ${(System.nanoTime() - tBc) / 1e6}%.0fms files=${files.size}")
-
-    val fromFooters = results.flatMap(_._2)
-    val missing = results.collect { case (rel, None) => rel }.toSet
-    val fallback =
-      if (missing.isEmpty) Seq.empty
-      else scanStats(spark, fs, new Path(rootStr),
-        files.filter(f => missing.contains(relativize(root, f._1))), readSchema)
-    (fromFooters.toSeq ++ fallback).sortBy(_.path)
-  }
-
-  /** Footer-only stats of one parquet file (runs inside executor tasks). */
-  private def footerStats(
-      conf: Configuration, p: Path, len: Long, relPath: String): Option[DataFileMeta] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.io.api.Binary
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks
-      if (blocks.isEmpty) return None
-      var records = 0L
-      var minDoc: String = null; var maxDoc: String = null
-      var minSrc: String = null; var maxSrc: String = null
-      var minTok = Int.MaxValue; var maxTok = Int.MinValue
-      val it = blocks.iterator()
-      while (it.hasNext) {
-        val b = it.next()
-        records += b.getRowCount
-        val cit = b.getColumns.iterator()
-        while (cit.hasNext) {
-          val c = cit.next()
-          val s: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
-          if (s == null || s.isEmpty) {
-            c.getPath.toDotString match {
-              case "doc_id" | "n_tok" | "source" => return None // no stats: fall back
-              case _ => ()
-            }
-          } else c.getPath.toDotString match {
-            case "doc_id" =>
-              val lo = s.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8
-              val hi = s.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8
-              if (minDoc == null || lo < minDoc) minDoc = lo
-              if (maxDoc == null || hi > maxDoc) maxDoc = hi
-            case "n_tok" =>
-              minTok = math.min(minTok, s.genericGetMin.asInstanceOf[Number].intValue)
-              maxTok = math.max(maxTok, s.genericGetMax.asInstanceOf[Number].intValue)
-            case "source" =>
-              val lo = s.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8
-              val hi = s.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8
-              if (minSrc == null || lo < minSrc) minSrc = lo
-              if (maxSrc == null || hi > maxSrc) maxSrc = hi
-            case _ => ()
-          }
-        }
-      }
-      if (minDoc == null || minSrc == null || minTok == Int.MaxValue) None
-      else Some(DataFileMeta(
-        path = relPath, records = records, bytes = len,
-        minDocId = minDoc, maxDocId = maxDoc,
-        minNTok = minTok, maxNTok = maxTok, sumNTok = 0L,
-        sources = if (minSrc == maxSrc) Seq(minSrc) else Seq.empty,
-        minSource = Some(minSrc), maxSource = Some(maxSrc)))
-    } finally reader.close()
-  }
-
-  /** Fallback stats via a columnar scan of the metadata columns (used only
-    * when a footer carries no usable statistics). */
-  private def scanStats(
-      spark: SparkSession, fs: FileSystem, root: Path,
-      files: Seq[(Path, Long)], readSchema: StructType): Seq[DataFileMeta] = {
-    val sizes: Map[String, Long] = files.map { case (p, l) => p.toUri.getPath -> l }.toMap
-    val df = spark.read.schema(readSchema).parquet(files.map(_._1.toString): _*)
-    val stats = df
-      .select(col("doc_id"), col("n_tok"), col("source"),
-        input_file_name().as("_file"))
-      .groupBy(col("_file"))
-      .agg(
-        count(lit(1)).as("records"),
-        min("doc_id").as("minDocId"), max("doc_id").as("maxDocId"),
-        min("n_tok").as("minNTok"), max("n_tok").as("maxNTok"),
-        sum(col("n_tok").cast("long")).as("sumNTok"),
-        collect_set("source").as("sources"))
-      .collect()
-    stats.map { r =>
-      val uriPath = new Path(new java.net.URI(r.getString(0))).toUri.getPath
-      DataFileMeta(
-        path = relativize(root, new Path(uriPath)),
-        records = r.getLong(1),
-        bytes = sizes.getOrElse(uriPath, fs.getFileStatus(new Path(uriPath)).getLen),
-        minDocId = r.getString(2), maxDocId = r.getString(3),
-        minNTok = r.getInt(4), maxNTok = r.getInt(5),
-        sumNTok = r.getLong(6),
-        sources = r.getSeq[String](7).sorted)
-    }.sortBy(_.path).toSeq
   }
 
   /** Write one manifest file and return its list entry — static so the

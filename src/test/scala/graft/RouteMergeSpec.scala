@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.gen.SequenceGen
-import graft.maintenance.{CreationRule, Maintenance}
+import graft.maintenance.{CreationRule, Failpoints, Maintenance}
 
 /** The route-partitioned CoW MERGE (nOut > 1): both join sides are
   * pre-partitioned on a token-mass-balanced doc_id range route, the join
@@ -37,9 +37,16 @@ class RouteMergeSpec extends SparkSpec {
     }
     val want = fp(expected)
 
-    // tiny target forces nOut > 1 → the route-partitioned join path
-    Maintenance.mergeInto(spark, t, batch, CreationRule.Eager,
+    // tiny target forces nOut > 1 → the route-partitioned join path. The
+    // co-partition relaxation belongs to the merge alone: while it lists its
+    // staged files, the caller's session still shows the default.
+    val key = "spark.sql.requireAllClusterKeysForCoPartition"
+    var seen: Option[String] = None
+    Failpoints.armCallback("table.list.after-file") { () => seen = Some(spark.conf.get(key)) }
+    try Maintenance.mergeInto(spark, t, batch, CreationRule.Eager,
       targetFileBytes = 256L * 1024)
+    finally Failpoints.reset()
+    assert(seen.contains("true"), s"caller's session showed $key = $seen mid-merge")
 
     assert(fp(t.scan(spark)) == want, "route-merge content diverged")
     val files = t.liveFiles()

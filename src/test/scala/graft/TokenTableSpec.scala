@@ -280,38 +280,64 @@ class TokenTableSpec extends SparkSpec {
     assert(t2.scan(spark).count() == 700)
   }
 
-  test("single-file stageWrite stats (observed) match the footer/scan-derived stats") {
-    val root = tmpDir("tt-obs-stats")
-    val t = TokenTable.create(spark, s"$root/tbl")
-    val df = SequenceGen.sequences(spark, 300, seed = 7).coalesce(1)
-    val staged = t.stageWrite(df, "obs-single")
-    assert(staged.size == 1, s"expected one staged file, got ${staged.map(_.path)}")
-    val obs = staged.head
-    // independent ground truth from a scan of the staged file
-    val truth = spark.read.parquet(s"$root/tbl/data/obs-single").select(
-      count(lit(1)).as("n"),
-      min(col("doc_id")).as("dlo"), max(col("doc_id")).as("dhi"),
-      min(col("n_tok")).as("tlo"), max(col("n_tok")).as("thi"),
-      sum(col("n_tok").cast("long")).as("tsum"),
-      min(col("source")).as("slo"), max(col("source")).as("shi")).collect()(0)
-    assert(obs.records == truth.getAs[Long]("n"))
-    assert(obs.minDocId == truth.getAs[String]("dlo") && obs.maxDocId == truth.getAs[String]("dhi"))
-    assert(obs.minNTok == truth.getAs[Int]("tlo") && obs.maxNTok == truth.getAs[Int]("thi"))
-    assert(obs.sumNTok == truth.getAs[Long]("tsum"))
-    assert(obs.minSource.contains(truth.getAs[String]("slo")) &&
-      obs.maxSource.contains(truth.getAs[String]("shi")))
-    assert(obs.bytes > 0 && obs.schemaId.contains(0))
-    // and the footer pass agrees on every field it derives
-    val footer = TokenTable.collectStats(
-      spark, t.fs, new org.apache.hadoop.fs.Path(s"$root/tbl"),
-      new org.apache.hadoop.fs.Path(s"$root/tbl/data/obs-single"))
-    assert(footer.size == 1)
-    val f = footer.head
-    assert((f.path, f.records, f.bytes, f.minDocId, f.maxDocId, f.minNTok, f.maxNTok) ==
-      (obs.path, obs.records, obs.bytes, obs.minDocId, obs.maxDocId, obs.minNTok, obs.maxNTok))
-    // a zero-row single-file write stages nothing, exactly like the footer path
-    val empty = df.filter(lit(false))
-    assert(t.stageWrite(empty, "obs-empty").isEmpty)
+  test("write-time stats equal a scan oracle for every write shape") {
+    import org.apache.hadoop.fs.Path
+    import graft.table.{AddColumn, DataFileMeta, PartitionField}
+    val root = tmpDir("tt-stats-oracle")
+    val seqs = SequenceGen.sequences(spark, 400, seed = 7)
+    def check(t: TokenTable, staged: Seq[DataFileMeta], dir: String, minFiles: Int): Unit = {
+      assert(staged.size >= minFiles, s"$dir: ${staged.map(_.path)}")
+      assert(staged.map(_.path) == staged.map(_.path).sorted)
+      assert(staged.forall(f => f.records > 0 && f.bytes > 0))
+      assert(staged.map(_.copy(schemaId = None, partition = None)) ==
+        StatsOracle(spark, t.root, new Path(t.root, s"data/$dir")), dir)
+    }
+    val t = TokenTable.create(spark, s"$root/plain")
+    val one = t.stageWrite(seqs.coalesce(1), "one")
+    check(t, one, "one", 1)
+    assert(one.size == 1 && one.head.schemaId.contains(0))
+    check(t, t.stageWrite(seqs.repartition(4), "four"), "four", 4)
+    // duplicate keys through the dedup exchange, left uncoalesced so the
+    // keys land in several files
+    val prev = spark.conf.getOption("spark.sql.adaptive.coalescePartitions.enabled")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val keys = try t.stageDeleteKeys(seqs.unionByName(seqs), "keys")
+      finally prev.fold(spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled"))(
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", _))
+    check(t, keys, "deletes/keys", 2)
+    assert(keys.map(_.records).sum == 400)
+    // identity partitions: part-file names repeat across partition dirs, and
+    // one value is escaped in its directory name
+    val tp = TokenTable.create(spark, s"$root/part",
+      partitionSpec = Seq(PartitionField("source", "identity")))
+    val parts = tp.stageWrite(seqs.withColumn("source",
+      when(col("n_tok") % 2 === 0, lit("sla/sh")).otherwise(lit("web"))).repartition(2), "part")
+    check(tp, parts, "part", 4)
+    assert(parts.flatMap(_.partitionValue("source")).toSet == Set("sla/sh", "web"))
+    val te = SequenceGen.createTable(spark, s"$root/evolved", 200, 2)
+    te.evolveSchema(Seq(AddColumn("quality", "DOUBLE")))
+    val ev = te.stageWrite(seqs.withColumn("quality", lit(0.5)).repartition(2), "ev")
+    check(te, ev, "ev", 2)
+    assert(ev.forall(_.schemaId.contains(te.metadata.schemaIdNow)) && te.metadata.schemaIdNow > 0)
+    // zero rows stage nothing and leave no staging dir
+    assert(t.stageWrite(seqs.filter(lit(false)), "empty").isEmpty)
+    assert(t.stageDeleteKeys(seqs.filter(lit(false)), "no-keys").isEmpty)
+    assert(!t.fs.exists(new Path(t.root, "data/empty")) &&
+      !t.fs.exists(new Path(t.root, "data/deletes/no-keys")))
+    // the format writes only with the stats handle its table write supplies
+    val refused = intercept[Exception](seqs.write
+      .format(classOf[graft.table.StatsParquetFormat].getName).save(s"$root/no-handle"))
+    assert(Iterator.iterate[Throwable](refused)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("writes only through")), refused)
+  }
+
+  test("a multi-file stageWrite runs one Spark job") {
+    val t = TokenTable.create(spark, tmpDir("tt-write-jobs") + "/tbl")
+    val df = SequenceGen.sequences(spark, 400, seed = 7).repartition(4).localCheckpoint()
+    val (staged, jobs) = org.apache.spark.graftbridge.JobCounter.jobsOf(spark.sparkContext) {
+      t.stageWrite(df, "four")
+    }
+    assert(staged.size == 4 && jobs == 1, s"${staged.size} files, $jobs jobs")
   }
 
   test("a file or directory vanishing mid-listing is skipped, not fatal") {
