@@ -8,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Native composite quality score — the hot-path form of
- * [[graft.text.TextOps.qualityScoreColumnar]] (which stays as the semantic
+ * `graft.ColumnarReference.qualityScore` (test tree; it stays as the semantic
  * reference, shared with the DuckDB oracle and spec-pinned equal). The
  * columnar definition costs ~7 regex/replace passes per row (each stop-word
  * count is a full regexp_replace of the padded text); this expression walks

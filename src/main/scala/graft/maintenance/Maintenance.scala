@@ -59,24 +59,6 @@ object Maintenance {
 
   val DefaultTargetFileBytes: Long = 128L * 1024 * 1024
 
-  private val planDumpSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Plan-evidence hook: when SPARK_GRAFT_PLAN_DIR is set, write the
-    * formatted physical plan of an internal write frame to
-    * `<dir>/<name>-<k>.txt` (the maintenance actions execute eagerly, so
-    * query-level explain cannot show these plans). No-op otherwise. */
-  private[graft] def debugPlan(name: String, df: DataFrame): Unit =
-    sys.env.get("SPARK_GRAFT_PLAN_DIR").foreach { dir =>
-      try {
-        val p = java.nio.file.Paths.get(dir)
-        java.nio.file.Files.createDirectories(p)
-        java.nio.file.Files.writeString(
-          p.resolve(s"$name-${planDumpSeq.incrementAndGet()}.txt"),
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-      } catch { case _: Throwable => () }
-    }
-
   // ------------------------------------------------------------- compaction
 
   /**
@@ -162,7 +144,6 @@ object Maintenance {
                 input, spec, nOut, math.max(1, math.ceil(nOut.toDouble / tuples).toInt))
             case _ => applyLayout(input, layout, nOut, rows)
           }
-          debugPlan(s"$operation-layouted", layouted)
           val outs = table.stageWrite(layouted, s"$stepId/$unitId")
           ledger.record(unitId, outs)
           Failpoints.hit("compact.after-chunk")
@@ -323,8 +304,6 @@ object Maintenance {
       runPostHooks()
       return snap
     }
-    val mDbg = sys.env.contains("SPARK_GRAFT_BENCH_DEBUG")
-    val mT0 = System.nanoTime()
     val debounced = debounceBatch(batch).cache()
 
     // Manifest-level candidate-file pruning: a file is touched iff some batch
@@ -355,7 +334,6 @@ object Maintenance {
     val endpoints: Array[String] =
       live.flatMap(f => Seq(f.minDocId, f.maxDocId)).distinct.sorted.toArray
     val probeRows = pruneProbeAgg(debounced, endpoints).collect()
-    val mT1 = System.nanoTime()
     val hits: Array[Int] = probeRows.map(_.getInt(0)).sorted
     val batchRows = probeRows.map(_.getLong(1)).sum
     val batchToks = probeRows.map(_.getLong(2)).sum
@@ -461,7 +439,6 @@ object Maintenance {
       val stagingDir = new Path(table.dataDir, s"$stepId/merge")
       if (table.fs.exists(stagingDir)) table.fs.delete(stagingDir, true)
       val out = if (bounds.nonEmpty) withPartialKeyCoPartition(balanced) else balanced
-      debugPlan("merge-balanced", out)
       val outs = table.stageWrite(out, s"$stepId/merge")
       ledger.record("merge", outs)
       outs
@@ -473,7 +450,6 @@ object Maintenance {
     val observed = Map(
       "observed-rows" -> staged.map(_.records).sum.toString,
       "observed-tokens" -> staged.map(_.sumNTok).sum.toString)
-    val mT2 = System.nanoTime()
     Failpoints.hit("merge.before-commit")
     val snap =
       try table.commit("merge", staged, touchedPaths,
@@ -493,8 +469,6 @@ object Maintenance {
     ledger.clear()
     debounced.unpersist()
     runPostHooks()
-    if (mDbg) System.err.println(
-      f"MERGESTEP probe ${(mT1 - mT0) / 1e6}%.0fms stage ${(mT2 - mT1) / 1e6}%.0fms commit ${(System.nanoTime() - mT2) / 1e6}%.0fms")
     snap
   }
 

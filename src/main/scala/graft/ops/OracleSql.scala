@@ -57,7 +57,7 @@ FROM spans GROUP BY 1"""
 
   /** Oracle for ddp_simhash: 64-bit per-bit majority vote over the distinct
     * word set, bit b = parity of the b-th seeded hash (mirrors
-    * DedupOps.simHash). */
+    * DedupOps.simHashed). */
   def simhash(filter: String): String = {
     val bits = (0 until 64).map { b =>
       val vote = s"list_sum(list_transform(list_zip(h1s, h2s), " +

@@ -133,11 +133,10 @@ class PruneTokenTableScans(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => () // non-prunable conjunct: the retained Filter handles it
     }
 
-    val files = t.planFiles(
-      docIdLo = docLo, docIdHi = docHi,
-      sourceIn = sources,
-      nTokLo = tokLo, nTokHi = tokHi)
-    val scan = t.readFiles(spark, files)
+    // files, deletes and schema from one metadata value (see TokenTable.scan)
+    val m = t.metadata
+    val files = t.planFilesIn(m, None, docLo, docHi, sources, tokLo, tokHi)
+    val scan = t.readFilesIn(spark, m, files, t.deleteEntriesOf(m))
     val analyzed = scan.queryExecution.analyzed
     // keep the relation's original attribute ids so parents still resolve
     Project(

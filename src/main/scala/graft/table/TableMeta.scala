@@ -191,6 +191,12 @@ final case class TableMetadata(
 
   def snapshot(id: Long): Option[Snapshot] = snapshots.find(_.snapshotId == id)
 
+  /** Snapshot `id` and then its parent chain, newest first; the walk ends
+    * at a parent id that is no longer retained. */
+  def lineage(id: Long): Iterator[Snapshot] =
+    Iterator.iterate(snapshot(id))(_.flatMap(_.parentId).flatMap(snapshot))
+      .takeWhile(_.nonEmpty).flatten
+
   def withSnapshot(s: Snapshot): TableMetadata =
     copy(currentSnapshotId = Some(s.snapshotId), snapshots = snapshots :+ s)
 

@@ -166,26 +166,28 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     s.manifests.flatMap(m => TableJson.readManifest(readString(fs, new Path(metadataDir, m.path))))
 
   /** All live data files of a snapshot (paths relative to table root). */
-  def liveFiles(snapshotId: Option[Long] = None): Seq[DataFileMeta] = {
-    val snap = snapshotId match {
-      case Some(id) => meta.snapshot(id).getOrElse(sys.error(s"unknown snapshot $id"))
-      case None     => meta.currentSnapshot.getOrElse(sys.error("table has no snapshot"))
-    }
-    manifestEntries(snap)
+  def liveFiles(snapshotId: Option[Long] = None): Seq[DataFileMeta] =
+    manifestEntries(snapshotIn(meta, snapshotId))
+
+  /** Snapshot `snapshotId` of `m`, or `m`'s current one. */
+  private def snapshotIn(m: TableMetadata, snapshotId: Option[Long]): Snapshot = snapshotId match {
+    case Some(id) => m.snapshot(id).getOrElse(sys.error(s"unknown snapshot $id"))
+    case None     => m.currentSnapshot.getOrElse(sys.error("table has no snapshot"))
   }
 
   // ---- snapshot-consistent planning views -------------------------------
-  // A maintenance planner must derive EVERY view it plans from (live files,
-  // pending delete paths, delete entries, spec, current snapshot id) from ONE
-  // immutable TableMetadata value. Two separate reads of the volatile `meta`
-  // open a race: a merge-on-read commit landing between them makes the
-  // planned delete-path set include the new delete while the victim set
-  // predates its appended file — commit validation then passes and the
-  // rewrite commits a second live copy of the upserted key.
+  // A maintenance planner — and every read — must derive EVERY view it uses
+  // (live files, pending delete paths, delete entries, spec, schema, current
+  // snapshot id) from ONE immutable TableMetadata value. Two separate reads
+  // of the volatile `meta` open a race: a merge-on-read commit landing
+  // between them makes the planned delete-path set include the new delete
+  // while the victim set predates its appended file — commit validation then
+  // passes and the rewrite commits a second live copy of the upserted key;
+  // a read pairs one snapshot's files with the next one's deletes and loses
+  // the upserted key altogether.
 
   /** Live data files of `m`'s current snapshot. */
-  def liveFiles(m: TableMetadata): Seq[DataFileMeta] =
-    manifestEntries(m.currentSnapshot.getOrElse(sys.error("table has no snapshot")))
+  def liveFiles(m: TableMetadata): Seq[DataFileMeta] = manifestEntries(snapshotIn(m, None))
 
   /** Pending equality-delete key entries of `m`'s current snapshot. */
   def deleteEntriesOf(m: TableMetadata): Seq[DataFileMeta] =
@@ -211,16 +213,24 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       // sentinel value (a \uffff upper bound would wrongly drop files whose
       // minDocId sorts above it, e.g. supplementary-plane ids)
       docIdLo: Option[String] = None, docIdHi: Option[String] = None,
-      nTokLo: Option[Int] = None, nTokHi: Option[Int] = None): Seq[DataFileMeta] = {
-    val dLo = (docIdLo.toSeq ++ docIdRange.map(_._1)).maxOption
-    val dHi = (docIdHi.toSeq ++ docIdRange.map(_._2)).minOption
-    val tLo = (nTokLo.toSeq ++ nTokRange.map(_._1)).maxOption
-    val tHi = (nTokHi.toSeq ++ nTokRange.map(_._2)).minOption
+      nTokLo: Option[Int] = None, nTokHi: Option[Int] = None): Seq[DataFileMeta] =
+    planFilesIn(meta, snapshotId,
+      (docIdLo.toSeq ++ docIdRange.map(_._1)).maxOption,
+      (docIdHi.toSeq ++ docIdRange.map(_._2)).minOption,
+      sourceIn,
+      (nTokLo.toSeq ++ nTokRange.map(_._1)).maxOption,
+      (nTokHi.toSeq ++ nTokRange.map(_._2)).minOption)
+
+  /** [[planFiles]] against one metadata value, each bound already combined. */
+  private[graft] def planFilesIn(
+      m: TableMetadata, snapshotId: Option[Long],
+      dLo: Option[String], dHi: Option[String], sourceIn: Option[Set[String]],
+      tLo: Option[Int], tHi: Option[Int]): Seq[DataFileMeta] = {
     // truncate(n_tok, w) partition values allow stats-free exact range
     // pruning: a file whose tuple records truncate value v holds only rows
     // with n_tok in [v, v + w)
-    val truncFields = meta.spec.filter(f => f.transform == "truncate" && f.column == "n_tok")
-    liveFiles(snapshotId).filter { f =>
+    val truncFields = m.spec.filter(f => f.transform == "truncate" && f.column == "n_tok")
+    manifestEntries(snapshotIn(m, snapshotId)).filter { f =>
       dLo.forall(lo => f.maxDocId >= lo) && dHi.forall(hi => f.minDocId <= hi) &&
       // identity-partition value beats stats when recorded (exact, not a range)
       sourceIn.forall(s => f.partitionValue("source") match {
@@ -243,10 +253,12 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * bucket(doc_id, N)-partitioned table a point lookup reads ~1/N of the
     * range-matching files; at 10^12 sequences this is the difference between
     * a key probe and a table scan. */
-  def planFilesForKey(docId: String): Seq[DataFileMeta] = {
-    val bucketFields = meta.spec.filter(f => f.transform == "bucket" && f.column == "doc_id")
-    val docIdType = schema("doc_id").dataType
-    liveFiles().filter { f =>
+  def planFilesForKey(docId: String): Seq[DataFileMeta] = planFilesForKeyIn(meta, docId)
+
+  private def planFilesForKeyIn(m: TableMetadata, docId: String): Seq[DataFileMeta] = {
+    val bucketFields = m.spec.filter(f => f.transform == "bucket" && f.column == "doc_id")
+    val docIdType = schemaOf(m)("doc_id").dataType
+    liveFiles(m).filter { f =>
       f.minDocId <= docId && f.maxDocId >= docId &&
       // spec evolution safety: the tuple key carries the bucket count, so a
       // file written under a different n records a different key name,
@@ -259,28 +271,15 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
 
   /** Point lookup through bucket + range pruning (pending MoR deletes
     * applied like any scan). */
-  def lookup(spark: SparkSession, docId: String): DataFrame =
-    readFiles(spark, planFilesForKey(docId), deletesOf(None))
+  def lookup(spark: SparkSession, docId: String): DataFrame = {
+    val m = meta
+    readFilesIn(spark, m, planFilesForKeyIn(m, docId), deleteEntriesOf(m))
       .filter(col("doc_id") === docId)
-
-  /** Delete file paths pending on the current snapshot — capture at
-    * planning time (adjacent to the liveFiles() call, same metadata view)
-    * and pass to commit(readDeletePaths = …) so a rewrite aborts if new
-    * equality deletes landed mid-flight. */
-  def currentDeletePaths(): Set[String] =
-    meta.currentSnapshot.map(_.deletes.map(_.path).toSet).getOrElse(Set.empty)
+  }
 
   /** Equality-delete key entries pending on a snapshot (merge-on-read). */
   def deleteEntries(s: Snapshot): Seq[DataFileMeta] =
     s.deletes.flatMap(m => TableJson.readManifest(readString(fs, new Path(metadataDir, m.path))))
-
-  private def deletesOf(snapshotId: Option[Long]): Seq[DataFileMeta] = {
-    val snap = snapshotId match {
-      case Some(id) => meta.snapshot(id)
-      case None     => meta.currentSnapshot
-    }
-    snap.map(deleteEntries).getOrElse(Seq.empty)
-  }
 
   def scan(
       spark: SparkSession,
@@ -288,17 +287,14 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       docIdRange: Option[(String, String)] = None,
       sourceIn: Option[Set[String]] = None,
       nTokRange: Option[(Int, Int)] = None): DataFrame = {
-    val files = planFiles(snapshotId, docIdRange, sourceIn, nTokRange)
-    readFiles(spark, files, deletesOf(snapshotId))
+    val m = meta
+    val files = planFilesIn(m, snapshotId, docIdRange.map(_._1), docIdRange.map(_._2),
+      sourceIn, nTokRange.map(_._1), nTokRange.map(_._2))
+    // interleaving point for the torn-read regression test: a commit through
+    // this handle HERE must not reach this read's deletes
+    graft.maintenance.Failpoints.hitCallback("table.scan.after-plan")
+    readFilesIn(spark, m, files, deleteEntries(snapshotIn(m, snapshotId)))
   }
-
-  /** Read data files, projecting every file into the *current* schema by
-    * field-id (rename-safe, like Iceberg): files written under an older
-    * schema version keep their physical column names; we resolve each
-    * current field to the physical name its id had at write time, or null
-    * for columns added since. Single-schema tables take the fast path. */
-  def readFiles(spark: SparkSession, files: Seq[DataFileMeta]): DataFrame =
-    readFiles(spark, files, deletesOf(None))
 
   /**
    * Read data files with merge-on-read equality deletes applied: a row is
@@ -328,16 +324,26 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
    * Tagging per-sequence frames with `lit(seq)` and unioning them instead
    * would not work: Catalyst pushes the anti-join through the union and
    * folds the condition per branch, one join and key read per sequence.
+   *
+   * Every file is projected into the *current* schema by field-id
+   * (rename-safe, like Iceberg): files written under an older schema version
+   * keep their physical column names; each current field resolves to the
+   * physical name its id had at write time, or null for columns added since.
    */
   def readFiles(
       spark: SparkSession, files: Seq[DataFileMeta],
+      deletes: Seq[DataFileMeta]): DataFrame = readFilesIn(spark, meta, files, deletes)
+
+  /** [[readFiles]] in the schema of one metadata value. */
+  private[graft] def readFilesIn(
+      spark: SparkSession, m: TableMetadata, files: Seq[DataFileMeta],
       deletes: Seq[DataFileMeta]): DataFrame = {
     if (files.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+      return spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schemaOf(m))
     val (dirty, clean) = files.partition(f => deletes.exists(deleteApplies(_, f)))
-    if (dirty.isEmpty) return readSchemaGroups(spark, files, withFilePath = false)
+    if (dirty.isEmpty) return readSchemaGroups(spark, m, files, withFilePath = false)
     val keyFiles = deletes.filter(d => dirty.exists(deleteApplies(d, _)))
-    val rows = readSchemaGroups(spark, dirty, withFilePath = true)
+    val rows = readSchemaGroups(spark, m, dirty, withFilePath = true)
     val keys = spark.read.schema(StructType(Seq(StructField("doc_id", StringType))))
       .parquet(keyFiles.map(d => new Path(root, d.path).toString): _*)
     val keySeqs = keys.select(col("doc_id").as("_ddoc"),
@@ -347,7 +353,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
         col("_dseq") > sequenceOf(scanPathSequences(rows, dirty), col("_fpath")),
       "left_anti").drop("_fpath")
     if (clean.isEmpty) kept
-    else readSchemaGroups(spark, clean, withFilePath = false).unionByName(kept)
+    else readSchemaGroups(spark, m, clean, withFilePath = false).unionByName(kept)
   }
 
   /** `_metadata.file_path` of every file `df` scans → that file's commit
@@ -362,22 +368,23 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     }.toMap
   }
 
-  /** Read files in the current schema: one scan per schema version, unioned.
-    * `withFilePath` adds `_fpath` (`_metadata.file_path`), taken from each
-    * scan before the projection that hides the metadata column. */
+  /** Read files in `m`'s current schema: one scan per schema version,
+    * unioned. `withFilePath` adds `_fpath` (`_metadata.file_path`), taken
+    * from each scan before the projection that hides the metadata column. */
   private def readSchemaGroups(
-      spark: SparkSession, files: Seq[DataFileMeta], withFilePath: Boolean): DataFrame = {
+      spark: SparkSession, m: TableMetadata, files: Seq[DataFileMeta],
+      withFilePath: Boolean): DataFrame = {
     val filePath = if (withFilePath) Seq(col("_metadata.file_path").as("_fpath")) else Seq.empty
-    val current = meta.schemaVersion(meta.schemaIdNow)
-    val currentSchema = schema
+    val current = m.schemaVersion(m.schemaIdNow)
+    val currentSchema = schemaOf(m)
     val groups = files.groupBy(_.schemaIdOr0).toSeq.sortBy(_._1)
     val frames = groups.map { case (sid, fs) =>
       val paths = fs.map(f => new Path(root, f.path).toString)
-      if (sid == meta.schemaIdNow) {
+      if (sid == m.schemaIdNow) {
         val raw = spark.read.schema(currentSchema).parquet(paths: _*)
         if (withFilePath) raw.select(col("*") +: filePath: _*) else raw
       } else {
-        val ver = meta.schemaVersion(sid)
+        val ver = m.schemaVersion(sid)
         val physSchema = DataType.fromJson(ver.schemaJson).asInstanceOf[StructType]
         val idToPhys: Map[Int, String] = ver.fieldIds.map(_.swap)
         val raw = spark.read.schema(physSchema).parquet(paths: _*)
@@ -395,7 +402,10 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     frames.reduce(_.unionByName(_))
   }
 
-  def schema: StructType = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+  def schema: StructType = schemaOf(meta)
+
+  private def schemaOf(m: TableMetadata): StructType =
+    DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
 
   // ------------------------------------------------------- schema evolution
 
@@ -533,7 +543,6 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     val df = conformToSchema(dfIn, schema)
     val stagingDir = new Path(dataDir, jobId)
     val spec = meta.spec
-    graft.maintenance.Maintenance.debugPlan("stagewrite", df)
     val staged =
       if (spec.isEmpty) writeStaged(df, stagingDir)
       else {
@@ -614,7 +623,6 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       added: Seq[DataFileMeta],
       replaced: Set[String] = Set.empty,
       summary: Map[String, String] = Map.empty,
-      retries: Int = 5,
       replacedRange: Option[(String, String)] = None,
       addDeletes: Seq[DataFileMeta] = Seq.empty,
       dropDeletePaths: Set[String] = Set.empty,
@@ -635,15 +643,8 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       // Declared clustering to record IN THE SAME metadata write as the
       // snapshot (a separate setSortOrder commit could be lost to a crash
       // between the two, leaving a clustered table with no declared order).
-      declareSortOrder: Option[Seq[String]] = None): Snapshot = {
-    var attempt = 0
-    while (true) {
-      val (base, baseVersion) = refreshVersioned()
-      // interleaving point for the stale-base regression test: a commit
-      // injected HERE must force this one to lose its pinned version slot
-      // and replan — never to publish the stale base over the interleaved
-      // snapshot at the next slot
-      graft.maintenance.Failpoints.hitCallback("table.commit.after-base")
+      declareSortOrder: Option[Seq[String]] = None): Snapshot =
+    newestSnapshot(updateMeta { base =>
       branch.foreach { b =>
         base.refMap.get(b).foreach(r => require(r.kind == "branch",
           s"ref '$b' is a ${r.kind}, not a branch — tags are immutable"))
@@ -733,24 +734,13 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
           snapshots = base.snapshots :+ snap,
           refs = Some(base.refMap + (b -> SnapshotRef(snap.snapshotId, "branch"))))
       }
-      val next = declareSortOrder.fold(next0)(so => next0.copy(sortOrder = so))
-      tryCommitVersion(baseVersion + 1, next).foreach { committed =>
-        meta = committed
-        return committed.snapshot(snap.snapshotId).getOrElse(snap)
-      }
-      attempt += 1
-      if (attempt > retries)
-        throw new CommitConflictException(s"lost commit race $retries times at $root")
-    }
-    sys.error("unreachable")
-  }
+      declareSortOrder.fold(next0)(so => next0.copy(sortOrder = so))
+    })
 
   /** Metadata-only commit of an explicit manifest regrouping over the exact
     * current live file set (manifest rewrite). No data files change. */
-  def commitManifestGroups(operation: String, groups: Seq[Seq[DataFileMeta]]): Snapshot = {
-    var attempt = 0
-    while (attempt < 5) {
-      val (base, baseVersion) = refreshVersioned()
+  def commitManifestGroups(operation: String, groups: Seq[Seq[DataFileMeta]]): Snapshot =
+    newestSnapshot(updateMeta { base =>
       val parent = base.currentSnapshot.getOrElse(sys.error("no snapshot"))
       val currentLive = manifestEntries(parent).map(_.path).toSet
       val proposed = groups.flatten.map(_.path).toSet
@@ -765,14 +755,38 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
         manifests = manifests,
         summary = Map("manifests" -> manifests.size.toString),
         deleteManifests = parent.deleteManifests)
-      val next = base.withSnapshot(snap)
-      tryCommitVersion(baseVersion + 1, next).foreach { committed =>
+      base.withSnapshot(snap)
+    })
+
+  /** The snapshot an [[updateMeta]] of a new snapshot added: its id is one past
+    * every id of the base it was built on, so it is the newest id. */
+  private def newestSnapshot(m: TableMetadata): Snapshot = m.snapshots.maxBy(_.snapshotId)
+
+  /**
+   * The optimistic commit loop every metadata write runs through: load the
+   * base together with its version file, build the next metadata from it,
+   * publish at exactly base version + 1 (see [[loadVersioned]]). A lost race
+   * reloads and rebuilds from the new base; the fifth lost race raises
+   * [[CommitConflictException]]. The winner adopts the committed metadata
+   * (see [[tryCommitVersion]]) and returns it. `build` may itself throw a
+   * conflict (a stale plan) — that aborts the loop at once.
+   */
+  private def updateMeta(build: TableMetadata => TableMetadata): TableMetadata = {
+    var lost = 0
+    while (lost < 5) {
+      val (base, baseVersion) = refreshVersioned()
+      // interleaving point for the stale-base regression tests: a commit
+      // injected HERE must force this one to lose its pinned version slot
+      // and rebuild — never to publish the stale base over the interleaved
+      // snapshot at the next slot
+      graft.maintenance.Failpoints.hitCallback("table.commit.after-base")
+      tryCommitVersion(baseVersion + 1, build(base)).foreach { committed =>
         meta = committed
-        return committed.snapshot(snap.snapshotId).getOrElse(snap)
+        return committed
       }
-      attempt += 1
+      lost += 1
     }
-    throw new CommitConflictException(s"manifest rewrite lost commit race at $root")
+    throw new CommitConflictException(s"lost the commit race $lost times at $root")
   }
 
   /** Combined entry count of touched manifests above which the commit-path
@@ -868,10 +882,8 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     updateMeta { base =>
       val head = base.refMap.getOrElse(branch,
         throw new NoSuchElementException(s"no ref named '$branch'"))
-      val ancestors = Iterator.iterate(base.snapshot(head.snapshotId))(
-        _.flatMap(_.parentId).flatMap(base.snapshot)).takeWhile(_.nonEmpty).flatten
       val curId = base.currentSnapshotId
-      require(curId.isEmpty || ancestors.exists(s => curId.contains(s.snapshotId)),
+      require(curId.isEmpty || base.lineage(head.snapshotId).exists(s => curId.contains(s.snapshotId)),
         s"cannot fast-forward: current snapshot $curId is not an ancestor of '$branch'")
       base.copy(currentSnapshotId = Some(head.snapshotId))
     }
@@ -886,9 +898,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
   def rollbackTo(snapshotId: Long): TableMetadata =
     updateMeta { base =>
       require(base.snapshot(snapshotId).nonEmpty, s"unknown snapshot $snapshotId")
-      val ancestors = Iterator.iterate(base.currentSnapshot)(
-        _.flatMap(_.parentId).flatMap(base.snapshot)).takeWhile(_.nonEmpty).flatten
-      require(ancestors.exists(_.snapshotId == snapshotId),
+      require(base.currentSnapshotId.exists(base.lineage(_).exists(_.snapshotId == snapshotId)),
         s"snapshot $snapshotId is not an ancestor of the current main line — " +
           "rollback cannot publish branch-only commits (publish via fastForward)")
       base.copy(currentSnapshotId = Some(snapshotId))
@@ -920,23 +930,8 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
   def setSortOrder(entries: Seq[String]): TableMetadata =
     updateMeta(_.copy(sortOrder = entries))
 
-  private def updateMeta(f: TableMetadata => TableMetadata): TableMetadata = {
-    var attempt = 0
-    while (attempt < 5) {
-      val (base, baseVersion) = refreshVersioned()
-      val next = f(base)
-      tryCommitVersion(baseVersion + 1, next).foreach { committed =>
-        meta = committed; return committed
-      }
-      attempt += 1
-    }
-    throw new CommitConflictException(s"metadata update lost commit race at $root")
-  }
-
-  def expireSnapshots(retainLast: Int = 1, olderThanMs: Option[Long] = None): TableMetadata = {
-    var attempt = 0
-    while (attempt < 5) {
-      val (base, baseVersion) = refreshVersioned()
+  def expireSnapshots(retainLast: Int = 1, olderThanMs: Option[Long] = None): TableMetadata =
+    updateMeta { base =>
       val byRecency = base.snapshots.sortBy(-_.timestampMs)
       val keepIds: Set[Long] =
         (byRecency.take(math.max(retainLast, 1)).map(_.snapshotId) ++
@@ -946,21 +941,12 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
           // its ancestor chain: fastForward proves publishability by walking
           // parent ids, and an expired intermediate would orphan the branch.
           base.refMap.values.map(_.snapshotId) ++
-          base.refMap.values.filter(_.kind == "branch").flatMap { r =>
-            Iterator.iterate(base.snapshot(r.snapshotId))(
-              _.flatMap(_.parentId).flatMap(base.snapshot))
-              .takeWhile(_.nonEmpty).flatten.map(_.snapshotId)
-          } ++
+          base.refMap.values.filter(_.kind == "branch")
+            .flatMap(r => base.lineage(r.snapshotId).map(_.snapshotId)) ++
           olderThanMs.map(cut => base.snapshots.filter(_.timestampMs >= cut).map(_.snapshotId))
             .getOrElse(Seq.empty)).toSet
-      val next = base.copy(snapshots = base.snapshots.filter(s => keepIds.contains(s.snapshotId)))
-      tryCommitVersion(baseVersion + 1, next).foreach { committed =>
-        meta = committed; return committed
-      }
-      attempt += 1
+      base.copy(snapshots = base.snapshots.filter(s => keepIds.contains(s.snapshotId)))
     }
-    throw new CommitConflictException(s"expireSnapshots lost commit race at $root")
-  }
 
   /** Reachability GC: delete data files and manifests not referenced by any
     * retained snapshot, plus work-unit ledgers abandoned by crashed runs.
@@ -1082,12 +1068,11 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     val ledgerDir = new Path(metadataDir, "ledger")
     val cur = meta.currentSnapshotId.getOrElse(return (Set.empty, Set.empty))
     if (!fs.exists(ledgerDir)) return (Set.empty, Set.empty)
-    val snapRe = "-snap(\\d+)-".r
     val paths = Set.newBuilder[String]
     val prefixes = Set.newBuilder[String]
     fs.listStatus(ledgerDir).toSeq
       .filter(st => st.isDirectory &&
-        snapRe.findFirstMatchIn(st.getPath.getName).exists(_.group(1).toLong >= cur))
+        TokenTable.ledgerPlannedAt(st.getPath.getName).exists(_ >= cur))
       .foreach { st =>
         fs.listStatus(st.getPath).toSeq
           .filter(u => u.isFile && u.getPath.getName.endsWith(".json"))
@@ -1174,22 +1159,18 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     val ledgerDir = new Path(metadataDir, "ledger")
     val cur = meta.currentSnapshotId.getOrElse(return Seq.empty)
     if (!fs.exists(ledgerDir)) return Seq.empty
-    val snapRe = "-snap(\\d+)-".r
     def newestTouch(st: org.apache.hadoop.fs.FileStatus): Long = {
       val children = scala.util.Try(fs.listStatus(st.getPath).toSeq)
         .getOrElse(Seq.empty)
       (st.getModificationTime +: children.map(_.getModificationTime)).max
     }
     fs.listStatus(ledgerDir).toSeq
-      .filter(st => st.isDirectory && newestTouch(st) < cutoff)
-      .flatMap { st =>
-        val name = st.getPath.getName
-        snapRe.findFirstMatchIn(name) match {
-          case Some(g) if g.group(1).toLong < cur =>
-            fs.delete(st.getPath, true)
-            Some(s"metadata/ledger/$name")
-          case _ => None
-        }
+      .filter(st => st.isDirectory &&
+        TokenTable.ledgerPlannedAt(st.getPath.getName).exists(_ < cur) &&
+        newestTouch(st) < cutoff)
+      .map { st =>
+        fs.delete(st.getPath, true)
+        s"metadata/ledger/${st.getPath.getName}"
       }
   }
 
@@ -1397,6 +1378,13 @@ object TokenTable {
     }
     buf.toSeq
   }
+
+  private val LedgerSnapshot = "-snap(\\d+)-".r
+
+  /** The snapshot id a ledger's stepId says it planned against
+    * (`…-snap<N>-…`), if it names one. */
+  private def ledgerPlannedAt(ledgerDirName: String): Option[Long] =
+    LedgerSnapshot.findFirstMatchIn(ledgerDirName).map(_.group(1).toLong)
 
   private[table] def relativize(root: Path, p: Path): String = {
     val rootStr = Path.getPathWithoutSchemeAndAuthority(root).toString

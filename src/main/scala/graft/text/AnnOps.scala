@@ -63,33 +63,13 @@ object AnnOps {
    * on zero. The sign of the exact integer dot product sets the bit — no
    * float-summation-order hazard can flip a bucket between engines.
    * |vq| <= ~1e7 and |component| <= 5e5, so a 4096-dim dot stays < 2^56.
+   * The columnar reference formulation, which the DuckDB oracle mirrors, is
+   * `graft.ColumnarReference.lshSignature` in the test tree (VectorExprSpec).
    */
   def lshSignature(vec: Column, planes: Int): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.functions.LshSignature(
       ColumnBridge.expression(vec), planes))
-  }
-
-  /** The columnar reference formulation of [[lshSignature]] — the semantic
-    * spec the native expression and the DuckDB oracle both mirror; kept as
-    * the identity-test witness (VectorExprSpec), not a runtime path. */
-  private[graft] def lshSignatureColumnar(vec: Column, planes: Int): Column = {
-    val M = 1000003L // prime modulus of the component hash
-    val vq = transform(vec, x => floor(x.cast("double") * 1000000.0).cast("long"))
-    (0 until planes).map { p =>
-      // per-plane multipliers: distinct linear+quadratic walks mod M per
-      // plane (a shared walk with per-plane offsets would correlate planes)
-      val a = (2654435761L * (p + 1)) % M
-      val b = (179426549L * (p + 1) + 97L) % M
-      val proj = aggregate(
-        zip_with(vq, sequence(lit(1), size(vq)),
-          // i is INT in the sequence — square in LONG so dims > 46340 match
-          // the native Long-math LshSignature this is the identity witness for
-          (x, i) => x * (pmod(i.cast("long") * a + i.cast("long") * i * b,
-            lit(M)) - (M - 1) / 2)),
-        lit(0L), (acc, v) => acc + v)
-      when(proj > 0, lit(1L << p)).otherwise(0L)
-    }.reduce(_.bitwiseOR(_))
   }
 
   /**

@@ -74,16 +74,13 @@ object DedupOps {
   /** Per-word [[TextOps.polyHash2Pow]] states of a text column, computed by
     * the native [[graft.functions.WordHashStates]] expression (one JVM loop
     * per row instead of an interpreted per-char lambda walk — the measured
-    * MinHash cost center). [[wordHashStatesColumnar]] is the semantic
-    * reference; DedupSpec pins their equality over nasty strings. */
+    * MinHash cost center). `graft.ColumnarReference.wordHashStates` (test
+    * tree) is the semantic reference; DedupSpec pins their equality over
+    * nasty strings. */
   private[graft] def wordHashStates(textCol: org.apache.spark.sql.Column) =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.functions.WordHashStates(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(textCol)))
-
-  /** The pure-column reference formulation of [[wordHashStates]]. */
-  private[graft] def wordHashStatesColumnar(textCol: org.apache.spark.sql.Column) =
-    transform(split(lower(trim(textCol)), "\\s+"), w => TextOps.polyHash2Pow(w))
 
   /** All k MinHash values of the word n-gram shingles, from a materialized
     * [[wordHashStates]] attribute, in ONE native pass (see
@@ -342,16 +339,11 @@ object DedupOps {
       when(votes > 0, lit(1L << b)).otherwise(0L)
     }.reduce(_.bitwiseOR(_))
 
-  /** 64-bit SimHash over the word set, single-Column convenience form —
-    * prefer [[simHashed]] for corpus-scale inputs (it stages the word-hash
-    * array in its own projection so the chars are hashed once, not 64×). */
-  def simHash(textCol: org.apache.spark.sql.Column) =
-    simHashFromHashes(transform(wordSet(textCol), TextOps.polyHash2 _))
-
   /** (idCol, simhash) with the word-hash array materialized once per row by
     * the native [[graft.functions.WordSetHashes]] expression (distinct
     * words in first-occurrence order, hashed in one JVM loop; equality with
-    * the columnar [[simHash]] is spec-pinned). */
+    * the columnar `graft.ColumnarReference.simHash` in the test tree is
+    * spec-pinned). */
   def simHashed(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
     docs.select(col(idCol),
@@ -426,8 +418,6 @@ object DedupOps {
       i += 1
     }
     require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
-    if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG"))
-      System.err.println(s"CCROUNDS $i")
     labels
   }
 }

@@ -66,28 +66,13 @@ object TextOps {
   /** Quality-score composite in [0,1], rounded for cross-engine float
     * determinism. Computed by the native
     * [[graft.functions.QualityScoreRaw]] expression (one string walk per
-    * row instead of ~7 regex/replace passes); [[qualityScoreColumnar]] is
-    * the pure-column reference definition, equality spec-pinned
-    * (CurationSpec). */
+    * row instead of ~7 regex/replace passes); its pure-column reference
+    * definition is `graft.ColumnarReference.qualityScore` in the test tree,
+    * equality spec-pinned (CurationSpec). */
   def qualityScore(text: Column): Column =
     round(org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.functions.QualityScoreRaw(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(text))), 4)
-
-  /** The columnar reference definition of [[qualityScore]] — shared term by
-    * term with the DuckDB oracle (OracleSql.qualityExpr); must stay
-    * byte-equivalent to both. */
-  def qualityScoreColumnar(text: Column): Column = {
-    val len = length(text)
-    val words = wsTokenCount(text)
-    val punct = size(regexp_extract_all(text, lit("[.,;:!?]"), lit(0)))
-    val stop = Seq(" the ", " and ", " of ", " a ", " to ")
-      .map(m => countOccurrences(concat(lit(" "), text, lit(" ")), m)).reduce(_ + _)
-    val lenScore = least(len.cast("double") / 500.0, lit(1.0))
-    val punctRatio = punct.cast("double") / greatest(words, lit(1)).cast("double")
-    val stopRatio = least(stop.cast("double") * 10.0 / greatest(words, lit(1)), lit(1.0))
-    round(lenScore * 0.4 + least(punctRatio, lit(1.0)) * 0.2 + stopRatio * 0.4, 4)
-  }
 
   // --------------------------------------------- repetition quality signals
 

@@ -68,7 +68,7 @@ class CurationSpec extends SparkSpec {
         org.apache.spark.sql.types.StructField("t", org.apache.spark.sql.types.StringType, true))))
     val out = df.select(
       TextOps.qualityScore(col("t")).as("native"),
-      TextOps.qualityScoreColumnar(col("t")).as("columnar")).collect()
+      ColumnarReference.qualityScore(col("t")).as("columnar")).collect()
     out.zip(nasty).foreach { case (r, s) =>
       assert(r.isNullAt(0) == r.isNullAt(1), s"null mismatch on ${Option(s)}")
       if (!r.isNullAt(0))

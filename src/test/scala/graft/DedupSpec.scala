@@ -53,13 +53,13 @@ class DedupSpec extends SparkSpec {
     val states = nastyCorpus.select(col("doc_id"),
       DedupOps.wordHashStates(col("text")).as("h"))
     val statesRef = nastyCorpus.select(col("doc_id"),
-      DedupOps.wordHashStatesColumnar(col("text")).as("h2"))
+      ColumnarReference.wordHashStates(col("text")).as("h2"))
     assert(states.join(statesRef, Seq("doc_id"))
       .filter(!(col("h") <=> col("h2"))).isEmpty, "WordHashStates diverges")
     // WordSetHashes (via simHashed) vs the columnar simHash
     val sim = DedupOps.simHashed(nastyCorpus).as[(Long, Long)].collect().toSet
     val simRef = nastyCorpus.select(col("doc_id"),
-      DedupOps.simHash(col("text")).as("simhash")).as[(Long, Long)].collect().toSet
+      ColumnarReference.simHash(col("text")).as("simhash")).as[(Long, Long)].collect().toSet
     assert(sim == simRef, "WordSetHashes diverges from columnar simHash")
     // CharPolyHash (via fingerprint64) vs the columnar polyHash fold
     val fp = nastyCorpus.select(col("doc_id"),
@@ -96,12 +96,12 @@ class DedupSpec extends SparkSpec {
       val states = nastyCorpus.select(col("doc_id"),
         DedupOps.wordHashStates(col("text")).as("h"))
       val statesRef = nastyCorpus.select(col("doc_id"),
-        DedupOps.wordHashStatesColumnar(col("text")).as("h2"))
+        ColumnarReference.wordHashStates(col("text")).as("h2"))
       assert(states.join(statesRef, Seq("doc_id"))
         .filter(!(col("h") <=> col("h2"))).isEmpty, "WordHashStates codegen diverges")
       val sim = DedupOps.simHashed(nastyCorpus).as[(Long, Long)].collect().toSet
       val simRef = nastyCorpus.select(col("doc_id"),
-        DedupOps.simHash(col("text")).as("simhash")).as[(Long, Long)].collect().toSet
+        ColumnarReference.simHash(col("text")).as("simhash")).as[(Long, Long)].collect().toSet
       assert(sim == simRef, "WordSetHashes codegen diverges")
       val fp = nastyCorpus.select(col("doc_id"),
         TextOps.fingerprint64(col("text")).as("f"),
@@ -182,7 +182,7 @@ class DedupSpec extends SparkSpec {
 
   test("simHashed == simHash single-column form") {
     val viaCol = corpus.select(col("doc_id"),
-      DedupOps.simHash(col("text")).as("simhash"))
+      ColumnarReference.simHash(col("text")).as("simhash"))
       .as[(Long, Long)].collect().toSet
     val viaDf = DedupOps.simHashed(corpus).as[(Long, Long)].collect().toSet
     assert(viaCol == viaDf)

@@ -48,6 +48,27 @@ class MorMergeSpec extends SparkSpec {
       "MoR and CoW merge diverged")
   }
 
+  test("a scan never pairs one snapshot's files with the next snapshot's deletes") {
+    import graft.maintenance.Failpoints
+    val t = fresh("mor-torn-read")
+    val before = checksum(t.scan(spark))
+    val key = t.liveFiles().head.minDocId
+    val upd = t.lookup(spark, key)
+      .select(col("doc_id"), col("tokens"), col("n_tok"), lit("upd").as("source"),
+        lit("upsert").as("_op"))
+      .localCheckpoint()
+    // a merge-on-read upsert commits through this handle after the scan
+    // planned its files: its key file must not reach this scan's deletes
+    // (the old file's row would vanish while the new file is not planned)
+    Failpoints.armCallback("table.scan.after-plan") { () =>
+      assert(Maintenance.mergeMor(spark, t, upd).nonEmpty)
+    }
+    val during = try checksum(t.scan(spark)) finally Failpoints.reset()
+    val after = checksum(t.scan(spark))
+    assert(after != before && after._1 == before._1)
+    assert(during == before || during == after, s"torn read: $during, before $before, after $after")
+  }
+
   test("a small MoR batch commits one data file and one key file with footer-exact stats") {
     import org.apache.hadoop.fs.Path
     import org.apache.parquet.hadoop.ParquetFileReader

@@ -394,6 +394,41 @@ class TokenTableSpec extends SparkSpec {
     assert(t1.metadata.snapshots.map(_.snapshotId).distinct.size == 3, s"duplicate ids: $ops")
   }
 
+  test("expireSnapshots, setRef and manifest rewrites retry through the one commit loop") {
+    import graft.maintenance.Failpoints
+    val root = tmpDir("tt-loop-race")
+    val t1 = SequenceGen.createTable(spark, s"$root/tbl", nDocs = 100, nFiles = 2)
+    val t2 = TokenTable.load(spark, s"$root/tbl")
+    // land an append from another instance between t1's base load and its
+    // publish: t1 must lose its pinned slot and rebuild from the new base
+    def interleave(prefix: String, seed: Long): Unit = {
+      val files = t2.stageWrite(SequenceGen.sequences(spark, 10, seed = seed)
+        .withColumn("doc_id", concat(lit(prefix), col("doc_id"))), s"loop-$prefix")
+      Failpoints.armCallback("table.commit.after-base") { () => t2.commit("append", files) }
+    }
+    interleave("x", 3)
+    val expired = try t1.expireSnapshots(retainLast = 1) finally Failpoints.reset()
+    assert(expired.currentSnapshotId == t2.refresh().currentSnapshotId,
+      "expireSnapshots published over the interleaved append")
+    assert(t1.scan(spark).count() == 110)
+
+    val pinned = t1.metadata.currentSnapshotId.get
+    interleave("y", 4)
+    val tagged = try t1.setRef("pin", pinned) finally Failpoints.reset()
+    assert(tagged.refMap.get("pin").map(_.snapshotId).contains(pinned))
+    assert(tagged.currentSnapshotId == t2.refresh().currentSnapshotId,
+      "setRef published over the interleaved append")
+    assert(t1.scan(spark).count() == 120)
+
+    // a manifest regrouping planned against the old live set cannot commit
+    interleave("z", 5)
+    try intercept[graft.table.CommitConflictException] {
+      Maintenance.rewriteManifests(t1, entriesPerManifest = 1)
+    } finally Failpoints.reset()
+    assert(t1.refresh().currentSnapshotId == t2.refresh().currentSnapshotId)
+    assert(t1.scan(spark).count() == 130)
+  }
+
   test("without hard links, racing publishers claim the version slot: one wins, no tmp left") {
     import graft.maintenance.Failpoints
     val root = tmpDir("tt-no-links")

@@ -57,7 +57,7 @@ class VectorExprSpec extends SparkSpec {
         j => (pmod(col("id") * 41 + j * 13, lit(4001)) / 500.0 - 4.0).cast("float")).as("v"))
     for (planes <- Seq(1, 4, 6, 8)) {
       val bad = df.select(AnnOps.lshSignature(col("v"), planes).as("n"),
-          AnnOps.lshSignatureColumnar(col("v"), planes).as("r"))
+          ColumnarReference.lshSignature(col("v"), planes).as("r"))
         .filter(col("n") =!= col("r"))
       assert(bad.count() == 0, s"planes=$planes")
     }
@@ -71,7 +71,7 @@ class VectorExprSpec extends SparkSpec {
       transform(sequence(lit(0), pmod(col("id"), lit(7)).cast("int") + 1),
         j => (pmod(col("id") * 29 + j * 17, lit(3001)) / 400.0 - 3.7).cast("float")).as("v"))
     val bad = df.select(AnnOps.lshSignature(col("v"), 8).as("n"),
-        AnnOps.lshSignatureColumnar(col("v"), 8).as("r"))
+        ColumnarReference.lshSignature(col("v"), 8).as("r"))
       .filter(col("n") =!= col("r"))
     assert(bad.count() == 0)
   }
@@ -84,7 +84,7 @@ class VectorExprSpec extends SparkSpec {
         |  (CAST(NULL AS ARRAY<FLOAT>))
         |AS t(v)""".stripMargin)
     val rows = df.select(AnnOps.lshSignature(col("v"), 6).as("n"),
-      AnnOps.lshSignatureColumnar(col("v"), 6).as("r")).collect()
+      ColumnarReference.lshSignature(col("v"), 6).as("r")).collect()
     rows.foreach { r =>
       assert(!r.isNullAt(0), "native signature must never be null")
       assert(r.getLong(0) == r.getLong(1), r.toString)
@@ -109,7 +109,7 @@ class VectorExprSpec extends SparkSpec {
       val bad = df.select(
           AnnOps.dot(col("a"), col("b")).as("nd"), refDot(col("a"), col("b")).as("rd"),
           AnnOps.lshSignature(col("a"), 8).as("ns"),
-          AnnOps.lshSignatureColumnar(col("a"), 8).as("rs"))
+          ColumnarReference.lshSignature(col("a"), 8).as("rs"))
         .filter(col("nd") =!= col("rd") || col("ns") =!= col("rs"))
       assert(bad.count() == 0)
       val mismatch = spark.sql("SELECT array(1.0F, 2.0F) AS a, array(3.0F) AS b")
