@@ -120,10 +120,6 @@ object Clustering {
       totalRows: Option[Long] = None): Column =
     curveKey(df, cols, bits, hilbert = false, totalRows)
 
-  def hilbertKey(df: DataFrame, cols: Seq[String], bits: Int = DefaultBits,
-      totalRows: Option[Long] = None): Column =
-    curveKey(df, cols, bits, hilbert = true, totalRows)
-
   def curveKey(df: DataFrame, cols: Seq[String], bits: Int, hilbert: Boolean,
       totalRows: Option[Long] = None): Column = {
     val allBounds = sampleBoundsMulti(df, cols, 1 << bits, totalRows = totalRows)
@@ -172,10 +168,6 @@ object Clustering {
       c -> out
     }.toMap
   }
-
-  /** Single-column variant (kept for tests/direct callers). */
-  def sampleBounds(df: DataFrame, colName: String, buckets: Int, maxSample: Int = 200000): Array[AnyRef] =
-    sampleBoundsMulti(df, Seq(colName), buckets, maxSample)(colName)
 
   /** Murmur3 preimages: `preimages(b)` is an int v with
     * `pmod(murmur3_int(v, 42), parts) == b` — matching Spark's

@@ -76,7 +76,8 @@ object TextHash {
 }
 
 /** Per-word (h1, h2, p1, p2) states of a text — the native form of
-  * `transform(split(lower(trim(text)), "\\s+"), polyHash2Pow)`. Word order
+  * `transform(split(lower(trim(text)), "\\s+"), polyHash2Pow)`, with
+  * `polyHash2Pow` in the test tree's `graft.ColumnarReference`. Word order
   * and duplicates preserved (MinHash consumes these positionally). */
 case class WordHashStates(child: Expression)
     extends UnaryExpression {
@@ -109,7 +110,8 @@ case class WordHashStates(child: Expression)
 }
 
 /** Distinct-word (h1, h2) hashes in first-occurrence order — the native
-  * form of `transform(wordSet(text), polyHash2)` (filter empties, THEN
+  * form of `transform(wordSet(text), polyHash2)`, with `polyHash2` in the
+  * test tree's `graft.ColumnarReference` (filter empties, THEN
   * distinct by word string: two distinct words that hash-collide keep both
   * entries, exactly like the columnar/oracle definition). */
 case class WordSetHashes(child: Expression)

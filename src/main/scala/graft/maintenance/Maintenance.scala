@@ -1,12 +1,11 @@
 package graft.maintenance
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils, PlanBridge}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Clustering, RangeBucket}
-import graft.table.{DataFileMeta, Snapshot, TokenTable}
+import graft.table.{CommitConflictException, DataFileMeta, Snapshot, TableMetadata, TokenTable}
 
 /** Test-only failpoints for crash-resume coverage — the analogue of the
   * reference's error-path e2e suite
@@ -79,27 +78,16 @@ object Maintenance {
       smallFileThreshold: Option[Long] = None, // None = rewrite ALL files (full re-cluster)
       chunks: Int = 8,
       operation: String = "compact"): Option[Snapshot] = {
-    // ONE immutable metadata snapshot for the whole planning pass: victims,
-    // pending-delete paths, the read-time delete entries, spec and the
-    // stepId's snapshot id all come from `m`. Deriving them from separate
-    // reads of the live table races a concurrent merge-on-read commit (see
-    // TokenTable "snapshot-consistent planning views"). A stale `m` is safe —
-    // commit validation conflicts on anything that landed since — so no
-    // refresh: the caller decides how fresh its planning view is.
+    // No refresh: a stale planning view is safe (commit validation
+    // conflicts on anything that landed since), so the caller decides how
+    // fresh it is.
     val m = table.metadata
-    val live = table.liveFiles(m)
-    val plannedDeletes = table.deletePathsOf(m)
-    val plannedDeleteEntries = table.deleteEntriesOf(m)
     val threshold = smallFileThreshold.getOrElse(Long.MaxValue)
-    val victims = live.filter(_.bytes < threshold)
+    val victims = table.liveFiles(m).filter(_.bytes < threshold)
     // A compact of < 2 files has nothing to merge; a re-CLUSTER of even one
     // file is real work — the rewrite reorders its rows on the curve.
     if (if (operation == "compact") victims.size < 2 else victims.isEmpty)
       return None
-
-    val stepId = deterministicStepId(operation, m.currentSnapshotId, layout, targetFileBytes, victims)
-    val ledger = new Ledger(table, stepId)
-    val done = ledger.completedUnits()
 
     // First-fit-decreasing bin packing of victims into ~target-size bins,
     // then round-robin bins into resumable chunks. On a partitioned table
@@ -114,66 +102,23 @@ object Maintenance {
       else victims.groupBy(_.partition).values.toSeq
         .sortBy(_.map(_.path).min)
         .flatMap(group => binPack(group, targetFileBytes))
-    val chunkGroups: Seq[(String, Seq[DataFileMeta])] =
+    val chunkGroups: Seq[Seq[DataFileMeta]] =
       bins.zipWithIndex
         .groupBy(_._2 % math.max(1, math.min(chunks, bins.size)))
         .toSeq.sortBy(_._1)
-        .map { case (i, bs) => (s"chunk-$i", bs.flatMap(_._1)) }
-
-    val staged: Seq[DataFileMeta] = chunkGroups.flatMap { case (unitId, files) =>
-      done.get(unitId) match {
-        case Some(outs) => outs // resumed: reuse staged output, no recompute
-        case None =>
-          val stagingDir = new Path(table.dataDir, s"$stepId/$unitId")
-          if (table.fs.exists(stagingDir)) table.fs.delete(stagingDir, true) // partial crash leftovers
-          val input = table.readFiles(spark, files, plannedDeleteEntries)
-          val nOut = math.max(1, math.ceil(files.map(_.bytes).sum.toDouble / targetFileBytes).toInt)
-          val rows = files.map(_.records).sum
-          val spec = m.spec
-          val layouted = layout match {
-            // Partitioned concat/sort chunks distribute by partition TUPLE
-            // (+ doc-hash salt for oversized tuples): a doc_id range shuffle
-            // would re-mix tuples across write tasks and the aligned writer
-            // would re-split them per tuple — re-creating the small files
-            // the per-tuple bins were packed to fix. stageWrite's
-            // (tuple, doc_id) sort provides the within-file order. Curve
-            // layouts keep the global clustering shuffle by design.
-            case Concat | _: SortBy if spec.nonEmpty =>
-              val tuples = math.max(1, files.flatMap(_.partition).distinct.size)
-              graft.table.Partitioning.distributeByPartition(
-                input, spec, nOut, math.max(1, math.ceil(nOut.toDouble / tuples).toInt))
-            case _ => applyLayout(input, layout, nOut, rows)
-          }
-          val outs = table.stageWrite(layouted, s"$stepId/$unitId")
-          ledger.record(unitId, outs)
-          Failpoints.hit("compact.after-chunk")
-          outs
-      }
-    }
-    val snap =
-      try table.commit(
-        operation, staged, victims.map(_.path).toSet,
-        summary = Map(
-          "layout" -> layout.describe,
-          "target-file-bytes" -> targetFileBytes.toString,
-          "input-files" -> victims.size.toString,
-          "input-records" -> victims.map(_.records).sum.toString),
-        replacedRange = TokenTable.docRange(victims),
-        readDeletePaths = Some(plannedDeletes),
-        // a full re-cluster declares its layout atomically with the data
-        // commit; a binpack compact declares nothing
-        declareSortOrder =
-          if (operation == "cluster" && layout != Concat) Some(Seq(layout.describe))
-          else None)
-      catch {
-        case e: graft.table.CommitConflictException =>
-          // stale victim set: a replanned compact gets a new stepId, so the
-          // abandoned ledger would leak forever — clear it now
-          ledger.clear()
-          throw e
-      }
-    ledger.clear()
-    Some(snap)
+        .map(_._2.flatMap(_._1))
+    rewrite(spark, table, m, operation, chunkGroups, layout.describe, targetFileBytes,
+      summary = _ => Map(
+        "layout" -> layout.describe,
+        "target-file-bytes" -> targetFileBytes.toString,
+        "input-files" -> victims.size.toString,
+        "input-records" -> victims.map(_.records).sum.toString),
+      layout = layout,
+      // a full re-cluster declares its layout atomically with the data
+      // commit; a binpack compact declares nothing
+      declareSortOrder =
+        if (operation == "cluster" && layout != Concat) Some(Seq(layout.describe))
+        else None).map(_._1)
   }
 
   /** Full-table re-cluster on a space-filling curve (zorder/hilbert). */
@@ -194,8 +139,116 @@ object Maintenance {
       chunks = chunks, operation = "cluster")
   }
 
+  // --------------------------------------------------------------- rewrite
+
+  /**
+   * The one path of every operation that rewrites data files — compact and
+   * cluster, the copy-on-write and fuzzy merges, the predicate delete,
+   * delete materialization and the incremental compaction tick: the
+   * reference's single flush (debounce → one bulk MERGE) with extractor
+   * checkpoints for resume (nodestream/pipeline/extractors/extractor.py:
+   * 19-51). An operation supplies its victims, grouped into resumable
+   * `units`, and a `transform` from a unit's rows to its output rows.
+   * Everything else is planned here from the ONE metadata value `m` (see
+   * TokenTable "snapshot-consistent planning views"):
+   *  - each unit reads its victims through `m`'s pending deletes and writes
+   *    ~`targetFileBytes` files, sized from the victims' bytes plus the
+   *    `extra` (bytes, rows) the transform adds;
+   *  - routing is one decision. A partitioned table distributes by tuple
+   *    (curve layouts keep their global clustering shuffle); a transform
+   *    that fixes its own distribution (`routed`) is written as it is;
+   *    anything else takes the layout's shuffle, with bounds sampled from
+   *    the victims' read so the transform never runs twice;
+   *  - the step id `<op>-snap<N>-<hex>` hashes the sorted victim paths, the
+   *    op's `key` and the target size, so a rerun after a crash finds the
+   *    units its ledger recorded and reuses their staged files;
+   *  - one commit replaces the rewritten and the metadata-only `dropped`
+   *    files, validated against the delete files `m` read. A conflicted
+   *    plan never commits, so its ledger is cleared.
+   * Staging rule: every unit attempt stages under a fresh
+   * `data/<stepId>/<unit>-<uuid>/`, and no staging directory is ever
+   * deleted. Two handles planning from one snapshot compute the same step
+   * id, so a directory named by the step id alone may hold the other
+   * writer's committed output. Crash leftovers are plain orphans for
+   * removeOrphans. Returns None, committing nothing, when there is nothing
+   * to do; else the snapshot and the files it added.
+   */
+  private[graft] def rewrite(
+      spark: SparkSession,
+      table: TokenTable,
+      m: TableMetadata,
+      op: String,
+      units: Seq[Seq[DataFileMeta]],
+      key: Any,
+      targetFileBytes: Long,
+      summary: Seq[DataFileMeta] => Map[String, String],
+      transform: (DataFrame, Int, Long) => DataFrame = (rows, _, _) => rows,
+      routed: Boolean = false,
+      layout: Layout = SortBy(Seq("doc_id")),
+      extra: (Long, Long) = (0L, 0L),
+      dropped: Seq[DataFileMeta] = Nil,
+      dropDeletePaths: Set[String] = Set.empty,
+      declareSortOrder: Option[Seq[String]] = None): Option[(Snapshot, Seq[DataFileMeta])] = {
+    if (units.isEmpty && dropped.isEmpty && dropDeletePaths.isEmpty) return None
+    val victims = units.flatten
+    val deletes = table.deleteEntriesOf(m)
+    val hash = (key, targetFileBytes, victims.map(_.path).sorted).hashCode()
+    val stepId = s"$op-snap${m.currentSnapshotId.getOrElse(0L)}-${Integer.toHexString(hash)}"
+    val ledger = new Ledger(table, stepId)
+    val done = ledger.completedUnits()
+    val staged = units.zipWithIndex.flatMap { case (files, i) =>
+      done.getOrElse(s"chunk-$i", {
+        val input = table.readFiles(spark, files, deletes)
+        val bytes = files.map(_.bytes).sum + extra._1
+        val rows = files.map(_.records).sum + extra._2
+        val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+        val out = transform(input, nOut, rows)
+        val placed = layout match {
+          // a curve keeps its global clustering shuffle, partitioned or not
+          case _: ZOrder | _: Hilbert => applyLayout(out, layout, nOut, rows, input)
+          // by partition TUPLE (+ a doc-hash salt sized so tuples x salt ~
+          // nOut): a doc_id range shuffle would re-mix tuples across write
+          // tasks and the aligned writer would re-split them per tuple,
+          // re-creating small files; stageWrite's (tuple, doc_id) sort
+          // orders each file
+          case _ if m.spec.nonEmpty =>
+            val tuples = math.max(1, files.flatMap(_.partition).distinct.size)
+            graft.table.Partitioning.distributeByPartition(
+              out, m.spec, nOut, math.max(1, math.ceil(nOut.toDouble / tuples).toInt))
+          case _ if routed => out
+          case _ => applyLayout(out, layout, nOut, rows, input)
+        }
+        val outs = table.stageWrite(placed, s"$stepId/chunk-$i-${java.util.UUID.randomUUID()}")
+        ledger.record(s"chunk-$i", outs)
+        Failpoints.hit("rewrite.after-unit")
+        outs
+      })
+    }
+    val replaced = victims ++ dropped
+    val snap =
+      try table.commit(op, staged, replaced.map(_.path).toSet,
+        summary = summary(staged),
+        replacedRange = TokenTable.docRange(replaced),
+        readDeletePaths = Some(table.deletePathsOf(m)),
+        dropDeletePaths = dropDeletePaths,
+        declareSortOrder = declareSortOrder)
+      catch {
+        case e: CommitConflictException =>
+          // a replan gets a new step id, so the abandoned ledger would leak
+          // forever; its staged files are orphans for removeOrphans
+          ledger.clear()
+          throw e
+      }
+    ledger.clear()
+    Some((snap, staged))
+  }
+
+  /** Range bounds are sampled from `sampleFrom`, the victims' read: it
+    * spans the doc_ids of `input` and is cheaper to run than the transform
+    * that made `input`. */
   private def applyLayout(
-      input: DataFrame, layout: Layout, nOut: Int, totalRows: Long): DataFrame = layout match {
+      input: DataFrame, layout: Layout, nOut: Int, totalRows: Long,
+      sampleFrom: DataFrame): DataFrame = layout match {
     case Concat =>
       input.coalesce(nOut)
     // doc_id sort with a token-mass weight column available: the routed
@@ -203,7 +256,7 @@ object Maintenance {
     // balance under the 1% long-doc skew) and skips the range partitioner's
     // runtime sampling re-execution of the input scan
     case SortBy(cols) if cols == Seq("doc_id") && input.columns.contains("n_tok") =>
-      repartitionByTokenMass(input, nOut, Some(totalRows))
+      repartitionByTokenMass(input, nOut, Some(totalRows), Some(sampleFrom))
     case SortBy(cols) =>
       input.repartitionByRange(nOut, cols.map(col): _*)
         .sortWithinPartitions(cols.map(col): _*)
@@ -305,169 +358,116 @@ object Maintenance {
       return snap
     }
     val debounced = debounceBatch(batch).cache()
+    val snap = try {
+      // Manifest-level candidate-file pruning: a file is touched iff some
+      // batch key falls inside its [minDocId, maxDocId]. Interval stabbing
+      // via a codegen'd binary search, not a theta-join: RangeBucket over
+      // the sorted distinct file endpoints maps every batch key to an
+      // endpoint-interval id in one scan (O(|batch| log |files|)); the
+      // distinct ids (<= 2|files|+1) mark each file whose endpoint-index
+      // span they hit. Conservative at span edges (a hit in the bucket just
+      // above a file's max can flag it) — pruning only ever
+      // over-approximates, the key-equality join below stays exact.
+      val m = table.metadata
+      val live = table.liveFiles(m)
+      // interleaving point for the regression test pinning the one-snapshot
+      // rule: a MoR commit injected HERE must conflict at commit, not slip
+      // its delete path into the planned set while its file is missing
+      // from `live`
+      Failpoints.hitCallback("merge.after-live")
+      // Fused probe: ONE aggregation job over the cached debounced batch
+      // yields the pruning hits AND the batch (rows, token mass).
+      val endpoints: Array[String] =
+        live.flatMap(f => Seq(f.minDocId, f.maxDocId)).distinct.sorted.toArray
+      val probeRows = pruneProbeAgg(debounced, endpoints).collect()
+      val hits: Array[Int] = probeRows.map(_.getInt(0)).sorted
+      val batchRows = probeRows.map(_.getLong(1)).sum
+      val batchToks = probeRows.map(_.getLong(2)).sum
+      val touched =
+        if (live.isEmpty) Seq.empty else touchedByHits(live, endpoints, hits)
+      // Batch bytes from live file stats (2.5 B/token is the observed
+      // parquet density for int32 token streams on an empty table). Only
+      // files that carry a token sum enter the ratio — files staged before
+      // write-time stats may record sumNTok = 0 (unknown).
+      val withSums = live.filter(_.sumNTok > 0)
+      val bytesPerTok =
+        if (withSums.nonEmpty)
+          withSums.map(_.bytes).sum.toDouble / withSums.map(_.sumNTok).sum
+        else 2.5
+      val b = debounced
+        .withColumnRenamed("tokens", "_b_tokens").withColumnRenamed("n_tok", "_b_n_tok")
+        .withColumnRenamed("source", "_b_source")
+        .withColumn("_b_present", lit(true))
 
-    // Manifest-level candidate-file pruning: a file is touched iff some batch
-    // key falls inside its [minDocId, maxDocId]. Interval stabbing via a
-    // codegen'd binary search, not a theta-join: RangeBucket over the sorted
-    // distinct file endpoints maps every batch key to an endpoint-interval id
-    // in one scan (O(|batch| log |files|)); the distinct ids (<= 2|files|+1,
-    // bounded by file count like the old path's collect) mark each file whose
-    // endpoint-index span they hit. Conservative at span edges (a hit in the
-    // bucket just above a file's max can flag it) — pruning only ever
-    // over-approximates, the key-equality join below stays exact.
-    // One immutable metadata snapshot per planning pass (see compact): the
-    // victim set, the pending-delete paths the commit validates against, and
-    // the deletes applied while reading victims must agree — separate reads
-    // of the live table let a racing mergeMor slip its delete into
-    // plannedDeletes while its appended file is missing from `live`,
-    // committing a duplicate doc_id.
-    val m = table.metadata
-    val live = table.liveFiles(m)
-    // interleaving point for the regression test pinning the one-snapshot
-    // rule: a MoR commit injected HERE must conflict at commit, not slip its
-    // delete path into the planned set while its file is missing from `live`
-    Failpoints.hitCallback("merge.after-live")
-    val plannedDeletes = table.deletePathsOf(m)
-    // Fused probe: ONE aggregation job over the cached debounced batch
-    // yields the pruning hits AND the batch (rows, token mass) that the old
-    // path collected in two separate jobs.
-    val endpoints: Array[String] =
-      live.flatMap(f => Seq(f.minDocId, f.maxDocId)).distinct.sorted.toArray
-    val probeRows = pruneProbeAgg(debounced, endpoints).collect()
-    val hits: Array[Int] = probeRows.map(_.getInt(0)).sorted
-    val batchRows = probeRows.map(_.getLong(1)).sum
-    val batchToks = probeRows.map(_.getLong(2)).sum
-    val touched =
-      if (live.isEmpty) Seq.empty else touchedByHits(live, endpoints, hits)
-    val touchedPaths: Set[String] = touched.map(_.path).toSet
-
-    val target = table.readFiles(spark, touched, table.deleteEntriesOf(m))
-    val b = debounced
-      .withColumnRenamed("tokens", "_b_tokens").withColumnRenamed("n_tok", "_b_n_tok")
-      .withColumnRenamed("source", "_b_source")
-      .withColumn("_b_present", lit(true))
-
-    // Output sizing from manifest stats + the fused probe (bytes/token from
-    // live file stats; 2.5 B/token is the observed parquet density for
-    // int32 token streams on an empty table). Only files that actually
-    // carry a token sum enter the ratio — files staged before write-time
-    // stats may record sumNTok = 0 (unknown), and a table mixing them with
-    // exact sums would otherwise overstate bytes/token by dividing all bytes
-    // by a partial sum.
-    val withSums = live.filter(_.sumNTok > 0)
-    val bytesPerTok =
-      if (withSums.nonEmpty)
-        withSums.map(_.bytes).sum.toDouble / withSums.map(_.sumNTok).sum
-      else 2.5
-    val outBytes = touched.map(_.bytes).sum + (batchToks * bytesPerTok).toLong
-    val nOut = math.max(1, math.ceil(outBytes.toDouble / targetFileBytes).toInt)
-    val totalRows = touched.map(_.records).sum + batchRows
-    // slim (doc_id, n_tok) view of target ∪ batch — equivalently distributed
-    // to the merged result, so range bounds sample the column-pruned INPUTS
-    // instead of re-executing the whole join (guide §1.2: fewer passes)
-    def slimInputs: DataFrame = target.select(col("doc_id"), col("n_tok"))
-      .unionByName(debounced.select(col("doc_id"), col("n_tok")))
-
-    // Route-partitioned join (guide §3.3): both sides are pre-partitioned by
-    // a token-mass-balanced doc_id range bucket routed through Murmur3
-    // preimages, and the join carries the route as a leading key — Catalyst
-    // then recognizes the sides as co-partitioned (HashPartitioning on a
-    // join-key subset), so the join adds NO exchange and its output lands
-    // already range-clustered: the old post-join repartitionByTokenMass
-    // exchange (a full second pass of the merged payload, plus
-    // repartitionByRange's sampling re-execution of the join) disappears.
-    val bounds: Option[Array[AnyRef]] =
-      if (m.spec.nonEmpty || nOut <= 1) None
-      else docRouteBounds(slimInputs, nOut, Some(totalRows))
-    val (tJ, bJ, joinKeys) = bounds match {
-      case Some(bs) =>
-        val route = docRouteCol(bs)
-        (target.withColumn("_mrt", route).repartition(bs.length + 1, col("_mrt")),
-          b.withColumn("_mrt", route).repartition(bs.length + 1, col("_mrt")),
-          Seq("_mrt", "doc_id"))
-      case None => (target, b, Seq("doc_id"))
-    }
-    // full_outer (Eager): matched → batch wins; target-only → keep;
-    // batch-only → insert. left_outer (MatchOnly): unmatched batch dropped.
-    val joined = tJ.join(bJ, joinKeys,
-      if (rule == CreationRule.MatchOnly) "left_outer" else "full_outer")
-    val result = joined
-      // drop rows the batch deletes; batch-only delete rows also vanish here
-      .filter(coalesce(col("_op") =!= "delete", lit(true)))
-      // MatchOnly inserts nothing; Eager keeps batch-only rows as inserts
-      .filter(coalesce(col("_b_present"), lit(false)) || col("tokens").isNotNull)
-      .select(
-        Seq(
-          col("doc_id"),
-          coalesce(col("_b_tokens"), col("tokens")).as("tokens"),
-          coalesce(col("_b_n_tok"), col("n_tok")).as("n_tok"),
-          coalesce(col("_b_source"), col("source")).as("source")) ++
-          // evolved extra columns ride along from the target side (null for
-          // freshly inserted rows — batch carries only the canonical shape)
-          target.columns.filterNot(Set("doc_id", "tokens", "n_tok", "source")).map(col): _*)
-
-    // Partitioned tables distribute the rewrite by partition TUPLE + a
-    // doc_id-hash salt sized so (tuples x salt) ~ nOut: each write task
-    // holds few tuples (bounded partitionBy fan-out), a skewed tuple splits
-    // across salt tasks/files, and targetFileBytes sizing is honored.
-    // Unpartitioned tables are already route-clustered by the join; a local
-    // doc_id sort gives narrow per-file stats with no further exchange.
-    val balanced =
-      if (m.spec.nonEmpty) {
-        val tuples = math.max(1, touched.flatMap(_.partition).distinct.size)
-        val salt = math.max(1, math.ceil(nOut.toDouble / tuples).toInt)
-        graft.table.Partitioning.distributeByPartition(result, m.spec,
-          math.max(nOut, spark.sessionState.conf.numShufflePartitions), salt)
-      } else if (bounds.nonEmpty) result.sortWithinPartitions("doc_id")
-      else if (nOut <= 1) result.coalesce(1).sortWithinPartitions("doc_id")
-      // bounds sample too small for nOut buckets (tiny tables): fall back
-      // to plain range partitioning directly — re-invoking the token-mass
-      // partitioner would rerun the identical (deterministic) sample job
-      // only to reach the same conclusion
-      else result.repartitionByRange(nOut, col("doc_id"))
-        .sortWithinPartitions("doc_id")
-
-    // stepId must be deterministic across reruns (crash-resume finds its
-    // ledger) yet distinct for CONCURRENT merges from the same snapshot with
-    // the same touched set — the canonicalized batch plan hash separates
-    // racing writers without breaking resume (semanticHash normalizes
-    // expression ids, so the same merge re-run after a crash rehashes equal).
-    val planHash = java.lang.Integer.toHexString(batch.queryExecution.analyzed.semanticHash())
-    val stepId = s"merge-snap${m.currentSnapshotId.getOrElse(0L)}-${touchedPaths.hashCode()}-$planHash"
-    val ledger = new Ledger(table, stepId)
-    val staged = ledger.completedUnits().getOrElse("merge", {
-      val stagingDir = new Path(table.dataDir, s"$stepId/merge")
-      if (table.fs.exists(stagingDir)) table.fs.delete(stagingDir, true)
-      val out = if (bounds.nonEmpty) withPartialKeyCoPartition(balanced) else balanced
-      val outs = table.stageWrite(out, s"$stepId/merge")
-      ledger.record("merge", outs)
-      outs
-    })
-    // Per-flush observed counters (the reference's QueryExecutorWithStatistics,
-    // nodestream/databases/query_executor_with_statistics.py), summed from the
-    // staged files' write-time stats: zero extra jobs, and a ledger-resumed
-    // merge reports them too.
-    val observed = Map(
-      "observed-rows" -> staged.map(_.records).sum.toString,
-      "observed-tokens" -> staged.map(_.sumNTok).sum.toString)
-    Failpoints.hit("merge.before-commit")
-    val snap =
-      try table.commit("merge", staged, touchedPaths,
-        summary = Map("rule" -> rule.toString.toLowerCase,
-          "touched-files" -> touched.size.toString) ++ observed ++ extraSummary,
-        replacedRange = TokenTable.docRange(touched),
-        readDeletePaths = Some(plannedDeletes))
-      catch {
-        case e: graft.table.CommitConflictException =>
-          // a conflicted plan can NEVER commit (its victim set is stale):
-          // clear its ledger so the abandoned attempt is not a resume trap
-          // and does not leak metadata on high-contention tables; its staged
-          // files are plain orphans for removeOrphans
-          ledger.clear(); debounced.unpersist()
-          throw e
+      def merged(target: DataFrame, nOut: Int, totalRows: Long): DataFrame = {
+        // Route-partitioned join (guide §3.3): both sides are pre-partitioned
+        // by a token-mass-balanced doc_id range bucket routed through Murmur3
+        // preimages, and the join carries the route as a leading key —
+        // Catalyst then recognizes the sides as co-partitioned, so the join
+        // adds NO exchange and its output lands already range-clustered.
+        // Bounds sample the slim (doc_id, n_tok) view of target ∪ batch, not
+        // the join (guide §1.2: fewer passes).
+        val bounds: Option[Array[AnyRef]] =
+          if (m.spec.nonEmpty || nOut <= 1) None
+          else docRouteBounds(target.select(col("doc_id"), col("n_tok"))
+            .unionByName(debounced.select(col("doc_id"), col("n_tok"))), nOut, Some(totalRows))
+        val (tJ, bJ, joinKeys) = bounds match {
+          case Some(bs) =>
+            val route = docRouteCol(bs)
+            (target.withColumn("_mrt", route).repartition(bs.length + 1, col("_mrt")),
+              b.withColumn("_mrt", route).repartition(bs.length + 1, col("_mrt")),
+              Seq("_mrt", "doc_id"))
+          case None => (target, b, Seq("doc_id"))
+        }
+        // full_outer (Eager): matched → batch wins; target-only → keep;
+        // batch-only → insert. left_outer (MatchOnly): unmatched batch dropped.
+        val result = tJ.join(bJ, joinKeys,
+            if (rule == CreationRule.MatchOnly) "left_outer" else "full_outer")
+          // drop rows the batch deletes; batch-only delete rows also vanish here
+          .filter(coalesce(col("_op") =!= "delete", lit(true)))
+          // MatchOnly inserts nothing; Eager keeps batch-only rows as inserts
+          .filter(coalesce(col("_b_present"), lit(false)) || col("tokens").isNotNull)
+          .select(
+            Seq(
+              col("doc_id"),
+              coalesce(col("_b_tokens"), col("tokens")).as("tokens"),
+              coalesce(col("_b_n_tok"), col("n_tok")).as("n_tok"),
+              coalesce(col("_b_source"), col("source")).as("source")) ++
+              // evolved extra columns ride along from the target side (null
+              // for freshly inserted rows — batch carries only the canonical
+              // shape)
+              target.columns.filterNot(Set("doc_id", "tokens", "n_tok", "source")).map(col): _*)
+        // A partitioned table is distributed by tuple in `rewrite`. An
+        // unpartitioned one is route-clustered by the join already, so a
+        // local doc_id sort gives narrow per-file stats with no further
+        // exchange. When the bounds sample is too small for nOut buckets
+        // (tiny tables), plain range partitioning: the token-mass
+        // partitioner would rerun the identical sample only to reach the
+        // same conclusion.
+        if (m.spec.nonEmpty) result
+        else if (bounds.nonEmpty) withPartialKeyCoPartition(result.sortWithinPartitions("doc_id"))
+        else if (nOut <= 1) result.coalesce(1).sortWithinPartitions("doc_id")
+        else result.repartitionByRange(nOut, col("doc_id")).sortWithinPartitions("doc_id")
       }
-    ledger.clear()
-    debounced.unpersist()
+
+      // The canonicalized batch plan hash keeps the step id deterministic
+      // across reruns (semanticHash normalizes expression ids) yet distinct
+      // for CONCURRENT merges from the same snapshot over the same files.
+      rewrite(spark, table, m, "merge", Seq(touched),
+        (rule.toString, batch.queryExecution.analyzed.semanticHash()), targetFileBytes,
+        // Per-flush observed counters (the reference's
+        // QueryExecutorWithStatistics, nodestream/databases/
+        // query_executor_with_statistics.py), summed from the staged files'
+        // write-time stats: zero extra jobs, and a resumed merge reports
+        // them too.
+        summary = staged => Map(
+          "rule" -> rule.toString.toLowerCase,
+          "touched-files" -> touched.size.toString,
+          "observed-rows" -> staged.map(_.records).sum.toString,
+          "observed-tokens" -> staged.map(_.sumNTok).sum.toString) ++ extraSummary,
+        transform = merged, routed = true,
+        extra = ((batchToks * bytesPerTok).toLong, batchRows)).get._1
+    } finally debounced.unpersist()
     runPostHooks()
     snap
   }
@@ -758,7 +758,8 @@ object Maintenance {
    * only the files a pattern can possibly match when every pattern is
    * start-anchored with a literal prefix (range-pruned via
    * [[literalPrefix]]/[[prefixSuccessor]]); an arbitrary regex cannot be
-   * range-pruned and rewrites everything. Never inserts.
+   * range-pruned and rewrites everything. Never inserts, so a batch no
+   * file can match returns None and commits nothing.
    * When several patterns match one row, the lexicographically-largest
    * pattern wins (deterministic).
    */
@@ -766,10 +767,9 @@ object Maintenance {
       spark: SparkSession,
       table: TokenTable,
       batch: DataFrame, // doc_pattern, tokens, n_tok, source
-      targetFileBytes: Long = DefaultTargetFileBytes): Snapshot = {
-    val m = table.metadata // one planning snapshot (see compact)
+      targetFileBytes: Long = DefaultTargetFileBytes): Option[Snapshot] = {
+    val m = table.metadata
     val live = table.liveFiles(m)
-    val plannedDeletes = table.deletePathsOf(m)
     // Literal-prefix fast path: when EVERY pattern is anchored with a literal
     // prefix (`^doc00042…`), a file can only contain matches if its doc_id
     // range intersects [prefix, prefixSuccessor) — the common
@@ -784,47 +784,35 @@ object Maintenance {
       if (prefixes.exists(_.isEmpty)) live
       else live.filter(f => prefixes.flatten.exists(p =>
         f.maxDocId >= p && prefixSuccessor(p).forall(f.minDocId < _)))
-    if (touched.isEmpty)
-      return table.commit("merge", Seq.empty, Set.empty,
-        summary = Map("rule" -> "fuzzy", "touched-files" -> "0"))
-    val target = table.readFiles(spark, touched, table.deleteEntriesOf(m))
     val b = broadcast(batch.select(
       col("doc_pattern"),
       col("tokens").as("_b_tokens"), col("n_tok").as("_b_n_tok"),
       col("source").as("_b_source")))
-    val joined = target.join(b, regexp_like(col("doc_id"), col("doc_pattern")), "left_outer")
-    // Evolved extra columns ride along inside the max_by struct (same
-    // preservation contract as mergeInto) — a fuzzy merge over a
-    // schema-evolved table must not null out columns added since.
-    val extras = target.columns.filterNot(Set("doc_id", "tokens", "n_tok", "source")).toSeq
-    val merged = joined
-      .groupBy(col("doc_id"))
-      .agg(max_by(
-        struct((Seq("tokens", "n_tok", "source", "_b_tokens", "_b_n_tok", "_b_source")
-          ++ extras).map(col): _*),
-        coalesce(col("doc_pattern"), lit(""))).as("_r"))
-      .select(
-        Seq(
-          col("doc_id"),
-          coalesce(col("_r._b_tokens"), col("_r.tokens")).as("tokens"),
-          coalesce(col("_r._b_n_tok"), col("_r.n_tok")).as("n_tok"),
-          coalesce(col("_r._b_source"), col("_r.source")).as("source")) ++
-          extras.map(c => col(s"_r.$c").as(c)): _*)
-    val nOut = math.max(1, math.ceil(
-      touched.map(_.bytes).sum.toDouble / targetFileBytes).toInt)
-    val staged = table.stageWrite(
-      // bounds sampled from the slim TARGET scan (same doc_id set as the
-      // fuzzy result) so the broadcast theta-join is not executed a second
-      // time just for range sampling
-      repartitionByTokenMass(merged, nOut, Some(touched.map(_.records).sum),
-        sampleFrom = Some(target.select(col("doc_id"), col("n_tok")))),
-      s"merge-fuzzy-${java.util.UUID.randomUUID()}")
-    table.commit("merge", staged, touched.map(_.path).toSet,
-      summary = Map("rule" -> "fuzzy",
+    def matched(target: DataFrame): DataFrame = {
+      // Evolved extra columns ride along inside the max_by struct (same
+      // preservation contract as mergeInto) — a fuzzy merge over a
+      // schema-evolved table must not null out columns added since.
+      val extras = target.columns.filterNot(Set("doc_id", "tokens", "n_tok", "source")).toSeq
+      target.join(b, regexp_like(col("doc_id"), col("doc_pattern")), "left_outer")
+        .groupBy(col("doc_id"))
+        .agg(max_by(
+          struct((Seq("tokens", "n_tok", "source", "_b_tokens", "_b_n_tok", "_b_source")
+            ++ extras).map(col): _*),
+          coalesce(col("doc_pattern"), lit(""))).as("_r"))
+        .select(
+          Seq(
+            col("doc_id"),
+            coalesce(col("_r._b_tokens"), col("_r.tokens")).as("tokens"),
+            coalesce(col("_r._b_n_tok"), col("_r.n_tok")).as("n_tok"),
+            coalesce(col("_r._b_source"), col("_r.source")).as("source")) ++
+            extras.map(c => col(s"_r.$c").as(c)): _*)
+    }
+    rewrite(spark, table, m, "merge", Seq(touched).filter(_.nonEmpty),
+      batch.queryExecution.analyzed.semanticHash(), targetFileBytes,
+      summary = _ => Map("rule" -> "fuzzy",
         "touched-files" -> touched.size.toString,
         "pruned-files" -> (live.size - touched.size).toString),
-      replacedRange = TokenTable.docRange(touched),
-      readDeletePaths = Some(plannedDeletes))
+      transform = (target, _, _) => matched(target)).map(_._1)
   }
 
   /** Longest literal prefix every match of `pattern` must start with, when
@@ -917,36 +905,23 @@ object Maintenance {
       table: TokenTable,
       pred: DeletePredicate,
       targetFileBytes: Long = DefaultTargetFileBytes): Option[Snapshot] = {
-    val m = table.metadata // one planning snapshot (see compact)
-    val live = table.liveFiles(m)
-    val plannedDeletes = table.deletePathsOf(m)
-    val fullyCovered = live.filter(pred.coversFile)
-    val partial = live.filter(f => pred.intersectsFile(f) && !pred.coversFile(f))
-    if (fullyCovered.isEmpty && partial.isEmpty) return None
-
-    val staged =
-      if (partial.isEmpty) Seq.empty
-      else {
-        val kept = table.readFiles(spark, partial, table.deleteEntriesOf(m))
-          .filter(!pred.toColumn)
-        val nOut = math.max(1, math.ceil(
-          partial.map(_.bytes).sum.toDouble / targetFileBytes).toInt)
-        // token-mass routing instead of repartitionByRange: the range
-        // partitioner's runtime sampling would re-execute the filter scan
-        // (tokens included) a second time
-        table.stageWrite(
-          repartitionByTokenMass(kept, nOut, Some(partial.map(_.records).sum)),
-          s"delete-${java.util.UUID.randomUUID()}")
-      }
-    Some(table.commit("delete", staged,
-      (fullyCovered ++ partial).map(_.path).toSet,
-      summary = Map(
+    val m = table.metadata
+    val (fullyCovered, partial) = coveredAndPartial(table.liveFiles(m), pred)
+    rewrite(spark, table, m, "delete", Seq(partial).filter(_.nonEmpty), pred.toString,
+      targetFileBytes,
+      summary = _ => Map(
         "predicate" -> pred.toString,
         "metadata-only-deleted-files" -> fullyCovered.size.toString,
         "rewritten-files" -> partial.size.toString),
-      replacedRange = TokenTable.docRange(fullyCovered ++ partial),
-      readDeletePaths = Some(plannedDeletes)))
+      transform = (rows, _, _) => rows.filter(!pred.toColumn),
+      dropped = fullyCovered).map(_._1)
   }
+
+  /** Live files `pred` provably covers (dropped metadata-only) and those it
+    * may only partly match. */
+  private def coveredAndPartial(
+      live: Seq[DataFileMeta], pred: DeletePredicate): (Seq[DataFileMeta], Seq[DataFileMeta]) =
+    (live.filter(pred.coversFile), live.filter(f => pred.intersectsFile(f) && !pred.coversFile(f)))
 
   /**
    * Merge-on-read delete: stage the matching doc_id keys as equality-delete
@@ -974,11 +949,8 @@ object Maintenance {
       spark: SparkSession,
       table: TokenTable,
       pred: DeletePredicate): Option[Snapshot] = {
-    val m = table.metadata // one planning snapshot (see compact)
-    val live = table.liveFiles(m)
-    val fullyCovered = live.filter(pred.coversFile)
-    val partial = live.filter(f => pred.intersectsFile(f) && !pred.coversFile(f))
-    if (fullyCovered.isEmpty && partial.isEmpty) return None
+    val m = table.metadata // one planning snapshot (see rewrite)
+    val (fullyCovered, partial) = coveredAndPartial(table.liveFiles(m), pred)
     val keys =
       if (partial.isEmpty) Seq.empty
       else table.stageDeleteKeys(
@@ -1012,34 +984,16 @@ object Maintenance {
       spark: SparkSession,
       table: TokenTable,
       targetFileBytes: Long = DefaultTargetFileBytes): Option[Snapshot] = {
-    val m = table.metadata // one planning snapshot (see compact)
-    val snap = m.currentSnapshot.getOrElse(return None)
-    val deletes = table.deleteEntries(snap)
+    val m = table.metadata
+    val deletes = table.deleteEntriesOf(m)
     if (deletes.isEmpty) return None
-    val live = table.liveFiles(m)
-    val affected = live.filter(f => deletes.exists(TokenTable.deleteApplies(_, f)))
-    val staged =
-      if (affected.isEmpty) Seq.empty
-      else {
-        val kept = table.readFiles(spark, affected, deletes) // anti-join applies here
-        val nOut = math.max(1, math.ceil(
-          affected.map(_.bytes).sum.toDouble / targetFileBytes).toInt)
-        // token-mass routing: repartitionByRange would re-run the anti-join
-        // scan once more just to sample its bounds
-        table.stageWrite(
-          repartitionByTokenMass(kept, nOut, Some(affected.map(_.records).sum)),
-          s"materialize-${java.util.UUID.randomUUID()}")
-      }
-    Some(table.commit("materialize-deletes", staged,
-      replaced = affected.map(_.path).toSet,
-      summary = Map(
+    val affected = table.liveFiles(m).filter(f => deletes.exists(TokenTable.deleteApplies(_, f)))
+    rewrite(spark, table, m, "materialize-deletes", Seq(affected).filter(_.nonEmpty),
+      deletes.map(_.path).sorted, targetFileBytes,
+      summary = _ => Map(
         "rewritten-files" -> affected.size.toString,
         "retired-delete-files" -> deletes.size.toString),
-      replacedRange = TokenTable.docRange(affected),
-      dropDeletePaths = deletes.map(_.path).toSet,
-      // validation is delete-MANIFEST granular: the manifests this planner
-      // read (snap.deletes), NOT the key-file entries inside them
-      readDeletePaths = Some(snap.deletes.map(_.path).toSet)))
+      dropDeletePaths = deletes.map(_.path).toSet).map(_._1)
   }
 
   // ------------------------------------------------------- manifest rewrite
@@ -1069,12 +1023,5 @@ object Maintenance {
       }
     }
     bins.map(_._1.toSeq).toSeq
-  }
-
-  private def deterministicStepId(
-      op: String, planSnapshotId: Option[Long], layout: Layout,
-      targetBytes: Long, victims: Seq[DataFileMeta]): String = {
-    val h = (layout.describe, targetBytes, victims.map(_.path).sorted).hashCode()
-    s"$op-snap${planSnapshotId.getOrElse(0L)}-${Integer.toHexString(h)}"
   }
 }

@@ -39,12 +39,21 @@ object QueryCatalog {
     StructField("doc_id", LongType), StructField("n_chars", IntegerType),
     StructField("lang", StringType), StructField("source", StringType)))
 
+  /** A fresh `graft-src-<kind>` directory, deleted when the JVM exits: the
+    * DataFrames the codec round-trips return read it lazily, so it must
+    * outlive the call. */
+  private def srcDir(kind: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-src-$kind")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
+    dir
+  }
+
   /** FileExtractor CSV codec round-trip (reference …/extractors/files.py:
     * 332-341): the documents metadata is written as header CSV and read back
     * through the codec registry — the gate compares against the parquet
     * truth, so the codec must be lossless. */
   def srcCsv(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-src-csv").toString
+    val tmp = srcDir("csv").toString
     val cols = Seq("doc_id", "n_chars", "lang", "source").map(col)
     tbl(s, dir, "documents").select(cols: _*)
       .write.mode("overwrite").option("header", "true").csv(tmp)
@@ -54,7 +63,7 @@ object QueryCatalog {
 
   /** FileExtractor JSONL codec round-trip (files.py:320-329). */
   def srcJsonl(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-src-jsonl").toString
+    val tmp = srcDir("jsonl").toString
     val cols = Seq("doc_id", "n_chars", "lang", "source").map(col)
     tbl(s, dir, "documents").select(cols: _*).write.mode("overwrite").json(tmp)
     graft.sources.FileSource.read(s, s"$tmp/*.json", format = Some("jsonl"),
@@ -66,7 +75,7 @@ object QueryCatalog {
     * metadata is written as plain text and read back through the codec
     * registry. */
   def srcTxt(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-src-txt").toString
+    val tmp = srcDir("txt").toString
     tbl(s, dir, "documents")
       .select(concat(col("doc_id"), lit("|"), col("lang"), lit("|"), col("source")).as("value"))
       .write.mode("overwrite").text(tmp)
@@ -80,7 +89,7 @@ object QueryCatalog {
       .select(col("doc_id"), col("lang")).collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     val yaml = rows.map { case (id, lang) => s"- doc_id: $id\n  lang: $lang" }.mkString("\n")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-src-yaml")
+    val tmp = srcDir("yaml")
     java.nio.file.Files.writeString(tmp.resolve("docs.yaml"), yaml)
     graft.sources.FileSource.read(s, s"$tmp/docs.yaml",
       schema = Some(StructType(Seq(

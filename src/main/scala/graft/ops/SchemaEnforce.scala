@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /**
  * SchemaEnforcer recast (reference nodestream/pipeline/filters.py:179-363):
@@ -75,10 +75,4 @@ object SchemaEnforce {
   def warn(df: DataFrame, jsonCol: String, schema: StructType,
       required: Option[Set[String]] = None): DataFrame =
     df.withColumn("_schema_valid", conforms(col(jsonCol), schema, required))
-
-  /** Persisted-schema round trip — the reference stores the inferred schema
-    * in its object store (filters.py:286-291); we serialize the StructType
-    * JSON so a Fetch-mode enforcer can reload it. */
-  def schemaToJson(s: StructType): String = s.json
-  def schemaFromJson(j: String): StructType = DataType.fromJson(j).asInstanceOf[StructType]
 }

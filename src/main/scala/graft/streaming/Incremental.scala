@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
@@ -80,15 +79,13 @@ object Incremental {
       targetFileBytes: Long = Maintenance.DefaultTargetFileBytes,
       smallFileThreshold: Long = 32L * 1024 * 1024): Int = {
     val cursor = new SnapshotCursor(table, consumer)
-    // ONE immutable metadata view for the whole planning pass (victims,
-    // delete entries applied at read, delete paths validated at commit) —
-    // the same invariant every other maintenance planner holds; commit's
-    // readDeletePaths validation then catches any delete landing after it.
+    // ONE immutable metadata view for the whole planning pass, handed to
+    // Maintenance.rewrite, whose commit validation catches any delete
+    // landing after it.
     val m = table.refresh()
     val excl = cursor.exclusions()
     val fresh = newFilesSince(table, m, cursor.get())
       .filter(f => f.bytes < smallFileThreshold && !excl.contains(f.path))
-    val plannedDeletes = table.deletePathsOf(m)
     graft.maintenance.Failpoints.hitCallback("inc.after-plan")
     // Cursor discipline: advance to the PLANNING snapshot — the view
     // `fresh` was computed from — never further. The commit's own snapshot
@@ -104,18 +101,9 @@ object Incremental {
     // in place so it stays in view until a companion arrives.
     if (fresh.size >= 2) {
       // stage + commit only the freshly appended files
-      val input = table.readFiles(spark, fresh, table.deleteEntriesOf(m))
-      val nOut = math.max(1, math.ceil(
-        fresh.map(_.bytes).sum.toDouble / targetFileBytes).toInt)
-      val staged = table.stageWrite(
-        // totalRows from the manifests: a pure-fraction sample (fully
-        // parallel), never the serial CollectLimit fallback
-        Maintenance.repartitionByTokenMass(input, nOut,
-          totalRows = Some(fresh.map(_.records).sum)),
-        s"inc-compact-${java.util.UUID.randomUUID()}")
-      table.commit("compact", staged, fresh.map(_.path).toSet,
-        summary = Map("mode" -> "incremental", "consumer" -> consumer),
-        readDeletePaths = Some(plannedDeletes))
+      val (_, staged) = Maintenance.rewrite(spark, table, m, "compact", Seq(fresh),
+        ("incremental", consumer), targetFileBytes,
+        summary = _ => Map("mode" -> "incremental", "consumer" -> consumer)).get
       m.currentSnapshotId.foreach(id => cursor.set(id, staged.map(_.path).toSet))
       fresh.size
     } else {

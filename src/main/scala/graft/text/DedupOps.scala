@@ -71,10 +71,11 @@ object DedupOps {
       i => concat_ws(" ", slice(words, i + 1, lit(n)))))
   }
 
-  /** Per-word [[TextOps.polyHash2Pow]] states of a text column, computed by
-    * the native [[graft.functions.WordHashStates]] expression (one JVM loop
-    * per row instead of an interpreted per-char lambda walk — the measured
-    * MinHash cost center). `graft.ColumnarReference.wordHashStates` (test
+  /** Per-word `graft.ColumnarReference.polyHash2Pow` states (test tree)
+    * of a text column, computed by the native
+    * [[graft.functions.WordHashStates]] expression (one JVM loop per row
+    * instead of an interpreted per-char lambda walk — the measured MinHash
+    * cost center). `graft.ColumnarReference.wordHashStates` (test
     * tree) is the semantic reference; DedupSpec pins their equality over
     * nasty strings. */
   private[graft] def wordHashStates(textCol: org.apache.spark.sql.Column) =
@@ -123,13 +124,13 @@ object DedupOps {
 
   /** (id, hp): word n-gram shingle double-hash pairs per document, via
     * word-level polynomial composition — each character of the corpus is
-    * hashed ONCE ([[TextOps.polyHash2Pow]] per word, then O(1) combine
-    * steps per shingle) instead of once per covering shingle, with values
-    * BIT-IDENTICAL to hashing each shingle string directly (same
-    * polynomial), so hash-consuming oracles are unaffected. Windows are
-    * not deduplicated: downstream `array_min` (MinHash) is
-    * multiplicity-blind, and skipping the dedup also skips materializing
-    * every shingle as a string. */
+    * hashed ONCE (one `graft.ColumnarReference.polyHash2Pow` state per
+    * word, then O(1) combine steps per shingle) instead of once per
+    * covering shingle, with values BIT-IDENTICAL to hashing each shingle
+    * string directly (same polynomial), so hash-consuming oracles are
+    * unaffected. Windows are not deduplicated: downstream `array_min`
+    * (MinHash) is multiplicity-blind, and skipping the dedup also skips
+    * materializing every shingle as a string. */
   def shingleHashed(
       docs: DataFrame, n: Int, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
@@ -351,10 +352,6 @@ object DedupOps {
         graft.functions.WordSetHashes(
           org.apache.spark.sql.graftbridge.ColumnBridge.expression(col(textCol)))).as("_wh"))
       .select(col(idCol), simHashFromHashes(col("_wh")).as("simhash"))
-
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hamming64(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    bit_count(a.bitwiseXOR(b))
 
   /**
    * Connected components over near-duplicate pairs — dedup needs GROUPS, not

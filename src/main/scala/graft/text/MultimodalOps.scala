@@ -77,13 +77,6 @@ object MultimodalOps {
       greatest((h * scaleNum / longEdge).cast("int"), lit(1)).as("h"))
   }
 
-  /** Deterministic stub feature vector from payload bytes: `dim` doubles
-    * derived from the rolling checksum — stands in for an embedding model
-    * output with a real schema and batch shape. */
-  def featurePlan(checksumCol: org.apache.spark.sql.Column, dim: Int) =
-    transform(sequence(lit(0), lit(dim - 1)),
-      i => pmod(checksumCol * (i + 1), lit(10007L)).cast("double") / 10007.0)
-
   /** Build a media table from any (id, text) source: payload = utf8 bytes,
     * mime rotated deterministically. Used by tests/queries in this sandbox. */
   def mediaFromDocs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): Dataset[MediaRow] = {

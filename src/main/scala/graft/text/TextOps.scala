@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
  * `org.apache.spark.sql.functions` column expressions (no UDFs — though note
  * Catalyst higher-order-function lambdas like `aggregate`/`transform` are
  * INTERPRETED, not whole-stage-codegen'd, so per-char HOF folds are the cost
- * center of hash-heavy operators; see polyHash2Pow for the word-level
+ * center of hash-heavy operators; see polyConcat2 for the word-level
  * composition that amortizes them): language id, quality scoring, token
  * counting, fingerprinting.
  *
@@ -154,44 +154,14 @@ object TextOps {
       transform(filter(split(c, ""), ch => length(ch) > 0), ch => ascii(ch).cast("long")),
       lit(0L), (acc, x) => pmod(acc * base + x, lit(mod)))
 
-  /** Both base hashes of a string as a struct (h1, h2) — computed once,
-    * reused by every seeded hash (Kirsch–Mitzenmacher double hashing).
-    * Single pass over the characters: one split + one fold carries both
-    * accumulators (two separate folds would double the per-char allocation
-    * cost, the hot part of shingle hashing). */
-  def polyHash2(c: Column): Column =
-    aggregate(
-      transform(filter(split(c, ""), ch => length(ch) > 0), ch => ascii(ch).cast("long")),
-      struct(lit(0L).as("h1"), lit(0L).as("h2")),
-      (acc, x) => struct(
-        pmod(acc.getField("h1") * 131 + x, lit(HashMod1)).as("h1"),
-        pmod(acc.getField("h2") * 137 + x, lit(HashMod2)).as("h2")))
-
   /** The i-th member of the double-hash family: ((i+1)*h1 + (i²+1)*h2 + i)
     * mod p1. (i+1)*h1 <= 2^36 for i < 64 — no overflow anywhere. */
   def seededHash(i: Int, h1: Column, h2: Column): Column =
     pmod(lit((i + 1).toLong) * h1 + lit(i.toLong * i + 1) * h2 + lit(i.toLong), lit(HashMod1))
 
-  /** Per-word hash state for polynomial shingle composition: both char
-    * hashes of the word PLUS base^len(word) mod p for each base, all from
-    * one pass over the characters. With these, the hash of any
-    * space-joined word window composes algebraically (see [[polyConcat2]])
-    * — each character of the corpus is hashed ONCE instead of once per
-    * covering shingle, which removes the dominant interpreted-HOF cost of
-    * MinHash signature building. */
-  def polyHash2Pow(c: Column): Column =
-    aggregate(
-      transform(filter(split(c, ""), ch => length(ch) > 0), ch => ascii(ch).cast("long")),
-      struct(lit(0L).as("h1"), lit(0L).as("h2"), lit(1L).as("p1"), lit(1L).as("p2")),
-      (acc, x) => struct(
-        pmod(acc.getField("h1") * 131 + x, lit(HashMod1)).as("h1"),
-        pmod(acc.getField("h2") * 137 + x, lit(HashMod2)).as("h2"),
-        pmod(acc.getField("p1") * 131, lit(HashMod1)).as("p1"),
-        pmod(acc.getField("p2") * 137, lit(HashMod2)).as("p2")))
-
   /** Polynomial concatenation identity, both bases at once: appending
-    * " " + word (whose [[polyHash2Pow]] state is `w`) to an accumulated
-    * (h1, h2) pair `acc` gives
+    * " " + word (whose `graft.ColumnarReference.polyHash2Pow` state, in
+    * the test tree, is `w`) to an accumulated (h1, h2) pair `acc` gives
     *   h' = ((h*base + 32) mod p) * base^len(word) + h_word   (mod p)
     * — bit-identical to hashing the concatenated string char by char, since
     * it is literally the same polynomial evaluated by Horner blocks. Bounds:

@@ -33,10 +33,40 @@ object ColumnarReference {
     }.reduce(_.bitwiseOR(_))
   }
 
+  /** Both base hashes of a string as a struct (h1, h2) — computed once,
+    * reused by every seeded hash (Kirsch–Mitzenmacher double hashing).
+    * Single pass over the characters: one split + one fold carries both
+    * accumulators (two separate folds would double the per-char allocation
+    * cost, the hot part of shingle hashing). */
+  def polyHash2(c: Column): Column =
+    aggregate(
+      transform(filter(split(c, ""), ch => length(ch) > 0), ch => ascii(ch).cast("long")),
+      struct(lit(0L).as("h1"), lit(0L).as("h2")),
+      (acc, x) => struct(
+        pmod(acc.getField("h1") * 131 + x, lit(TextOps.HashMod1)).as("h1"),
+        pmod(acc.getField("h2") * 137 + x, lit(TextOps.HashMod2)).as("h2")))
+
+  /** Per-word hash state for polynomial shingle composition: both char
+    * hashes of the word PLUS base^len(word) mod p for each base, all from
+    * one pass over the characters. With these, the hash of any
+    * space-joined word window composes algebraically (see [[TextOps.polyConcat2]])
+    * — each character of the corpus is hashed ONCE instead of once per
+    * covering shingle, which removes the dominant interpreted-HOF cost of
+    * MinHash signature building. */
+  def polyHash2Pow(c: Column): Column =
+    aggregate(
+      transform(filter(split(c, ""), ch => length(ch) > 0), ch => ascii(ch).cast("long")),
+      struct(lit(0L).as("h1"), lit(0L).as("h2"), lit(1L).as("p1"), lit(1L).as("p2")),
+      (acc, x) => struct(
+        pmod(acc.getField("h1") * 131 + x, lit(TextOps.HashMod1)).as("h1"),
+        pmod(acc.getField("h2") * 137 + x, lit(TextOps.HashMod2)).as("h2"),
+        pmod(acc.getField("p1") * 131, lit(TextOps.HashMod1)).as("p1"),
+        pmod(acc.getField("p2") * 137, lit(TextOps.HashMod2)).as("p2")))
+
   /** `DedupOps.wordHashStates` (`graft.functions.WordHashStates`): the
-    * [[TextOps.polyHash2Pow]] state of every whitespace-split word. */
+    * [[polyHash2Pow]] state of every whitespace-split word. */
   def wordHashStates(textCol: Column): Column =
-    transform(split(lower(trim(textCol)), "\\s+"), w => TextOps.polyHash2Pow(w))
+    transform(split(lower(trim(textCol)), "\\s+"), w => polyHash2Pow(w))
 
   /** [[TextOps.qualityScore]] (`graft.functions.QualityScoreRaw`) — shared
     * term by term with the DuckDB oracle (`OracleSql.qualityExpr`). */
@@ -55,5 +85,5 @@ object ColumnarReference {
   /** [[DedupOps.simHashed]] (`graft.functions.WordSetHashes` feeding
     * [[DedupOps.simHashFromHashes]]) as one column over the word set. */
   def simHash(textCol: Column): Column =
-    DedupOps.simHashFromHashes(transform(DedupOps.wordSet(textCol), TextOps.polyHash2 _))
+    DedupOps.simHashFromHashes(transform(DedupOps.wordSet(textCol), polyHash2 _))
 }

@@ -129,7 +129,7 @@ class DedupSpec extends SparkSpec {
               lit(0),
               greatest(size(split(lower(trim(col("text"))), "\\s+")) - n, lit(0))),
             i => concat_ws(" ", slice(split(lower(trim(col("text"))), "\\s+"), i + 1, lit(n)))),
-          TextOps.polyHash2 _).as("hp"))
+          ColumnarReference.polyHash2 _).as("hp"))
       val viaWords = DedupOps.shingleHashed(corpus, n)
       // null-SAFE inequality: =!= on structs with null fields returns null
       // and silently drops the row — exactly how the empty-text divergence

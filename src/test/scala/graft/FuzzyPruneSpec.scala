@@ -43,7 +43,7 @@ class FuzzyPruneSpec extends SparkSpec {
 
     val batch = Seq(("^doc0000000000[0-4].", Seq(1, 2, 3), 3, "patched"))
       .toDF("doc_pattern", "tokens", "n_tok", "source")
-    val snap = Maintenance.mergeFuzzy(spark, t, batch, targetFileBytes = 64 * 1024)
+    val snap = Maintenance.mergeFuzzy(spark, t, batch, targetFileBytes = 64 * 1024).get
     assert(snap.summary("rule") == "fuzzy")
     val touched = snap.summary("touched-files").toInt
     val pruned = snap.summary("pruned-files").toInt
@@ -67,10 +67,19 @@ class FuzzyPruneSpec extends SparkSpec {
     val t = SequenceGen.createTable(spark, s"$root/tbl", nDocs = 100, nFiles = 4)
     val batch = Seq(("0000000042$", Seq(9), 1, "tail"))
       .toDF("doc_pattern", "tokens", "n_tok", "source")
-    val snap = Maintenance.mergeFuzzy(spark, t, batch)
+    val snap = Maintenance.mergeFuzzy(spark, t, batch).get
     assert(snap.summary("pruned-files").toInt == 0)
     val hit = t.scan(spark).filter(col("source") === "tail")
       .select("doc_id").as[String].collect()
     assert(hit.toSeq == Seq("doc000000000042"))
+  }
+
+  test("a fuzzy batch no file can match commits nothing") {
+    val t = SequenceGen.createTable(spark, tmpDir("graft-fuzzy-c") + "/tbl", nDocs = 100, nFiles = 4)
+    val before = t.metadata.currentSnapshotId
+    // every doc_id starts with "doc", so the literal prefix prunes every file
+    val batch = Seq(("^zzz", Seq(9), 1, "none")).toDF("doc_pattern", "tokens", "n_tok", "source")
+    assert(Maintenance.mergeFuzzy(spark, t, batch).isEmpty)
+    assert(t.refresh().currentSnapshotId == before)
   }
 }

@@ -144,7 +144,7 @@ class InterpretSpec extends SparkSpec {
   }
 
   test("!include splices another yaml document") {
-    val inc = java.nio.file.Files.createTempFile("graft-include", ".yaml")
+    val inc = java.nio.file.Files.createTempFile(SparkTestSession.scratch, "graft-include", ".yaml")
     java.nio.file.Files.writeString(inc, "{ target_file_bytes: 1234, chunks: 2 }")
     val steps = PipelineDsl.parse(
       s"""- implementation: compact

@@ -283,7 +283,7 @@ class PartitioningSpec extends SparkSpec {
     import graft.maintenance.{Failpoints, SortBy}
     val t = fresh(800)
     val before = checksum(t.scan(spark))
-    Failpoints.armAt("compact.after-chunk", 1)
+    Failpoints.armAt("rewrite.after-unit", 1)
     intercept[Failpoints.InjectedFailure] {
       Maintenance.compact(spark, t, SortBy(Seq("doc_id")),
         targetFileBytes = 1 << 20, smallFileThreshold = Some(64 << 20), chunks = 2)

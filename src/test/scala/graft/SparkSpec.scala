@@ -18,13 +18,21 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The one directory every spec's tables live under in this (forked)
+    * test JVM, deleted when the JVM exits. */
+  lazy val scratch: java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-spec-")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
+    dir
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    java.nio.file.Files.createTempDirectory(SparkTestSession.scratch, prefix).toString
 
   /** Run `body` with projection codegen MANDATORY: a native expression whose
     * doGenCode fails to compile aborts the query instead of silently

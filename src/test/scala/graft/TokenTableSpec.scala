@@ -185,7 +185,7 @@ class TokenTableSpec extends SparkSpec {
     val root = tmpDir("tt-resume")
     val t = SequenceGen.createTable(spark, s"$root/tbl", nDocs = 6000, nFiles = 24)
     val before = fingerprint(t.scan(spark))
-    Failpoints.armAt("compact.after-chunk", 2) // die after 2nd chunk staged
+    Failpoints.armAt("rewrite.after-unit", 2) // die after 2nd chunk staged
     intercept[Failpoints.InjectedFailure] {
       Maintenance.compact(spark, t, targetFileBytes = 4L * 1024 * 1024,
         smallFileThreshold = Some(4L * 1024 * 1024), chunks = 4)
