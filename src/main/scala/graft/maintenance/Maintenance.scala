@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils, PlanBridge}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Clustering, RangeBucket}
+import graft.functions.{Clustering, PackTokens, RangeBucket, RangePlan, UnpackTokens}
 import graft.table.{CommitConflictException, DataFileMeta, Snapshot, TableMetadata, TokenTable}
 
 /** Test-only failpoints for crash-resume coverage — the analogue of the
@@ -67,8 +67,10 @@ object Maintenance {
    * jobs, each staged + ledger-recorded so a killed run resumes without
    * recomputing finished chunks; one atomic snapshot swap at the end.
    *
-   * Spark shape per chunk: file-list scan → (optional curve key) →
-   * `repartitionByRange` (single shuffle) → `sortWithinPartitions` → write.
+   * Spark shape per chunk: file-list scan → one sample job planning
+   * token-mass-balanced key ranges ([[Clustering]]) → one exchange routing
+   * rows straight to their range → `sortWithinPartitions` → write. A chunk
+   * planned at one output file skips the sample and coalesces.
    */
   def compact(
       spark: SparkSession,
@@ -128,8 +130,8 @@ object Maintenance {
       layout: Layout,
       targetFileBytes: Long = DefaultTargetFileBytes,
       chunks: Int = 1): Option[Snapshot] = {
-    // One chunk: a curve re-cluster is a single global repartitionByRange so
-    // key ranges do not straddle chunk boundaries. The declared clustering
+    // One chunk: a curve re-cluster is a single global range shuffle so key
+    // ranges do not straddle chunk boundaries. The declared clustering
     // rides the cluster commit itself (TokenTable.commit declareSortOrder) —
     // atomically, so no crash window can leave clustered data undeclared.
     // The declaration is Iceberg write-order semantics: the layout the
@@ -251,12 +253,8 @@ object Maintenance {
       sampleFrom: DataFrame): DataFrame = layout match {
     case Concat =>
       input.coalesce(nOut)
-    // doc_id sort with a token-mass weight column available: the routed
-    // partitioner both balances token mass (vs repartitionByRange's row
-    // balance under the 1% long-doc skew) and skips the range partitioner's
-    // runtime sampling re-execution of the input scan
-    case SortBy(cols) if cols == Seq("doc_id") && input.columns.contains("n_tok") =>
-      repartitionByTokenMass(input, nOut, Some(totalRows), Some(sampleFrom))
+    case SortBy(Seq("doc_id")) =>
+      placeByDocRange(input, Clustering.planDocRange(sampleFrom, nOut, Some(totalRows)), nOut)
     case SortBy(cols) =>
       input.repartitionByRange(nOut, cols.map(col): _*)
         .sortWithinPartitions(cols.map(col): _*)
@@ -266,46 +264,47 @@ object Maintenance {
       curveShuffle(input, cols, bits, hilbert = true, nOut, totalRows)
   }
 
-  /** Curve re-cluster as a single-scan shuffle: the [[graft.functions.CurvePlan]]
+  /** The one doc_id range placement, each output partition sorted by
+    * doc_id: rows routed by `plan` to token-mass-balanced ranges — the
+    * routed exchange skips repartitionByRange's runtime sampling
+    * re-execution of the input scan; with no plan, one partition when one
+    * file is planned, else a plain range exchange (a sample too small to
+    * cut `nOut` ranges). */
+  private def placeByDocRange(df: DataFrame, plan: Option[RangePlan], nOut: Int): DataFrame =
+    (plan match {
+      case Some(p) => df.withColumn("_rt", p.routeCol).repartition(p.nOut, col("_rt")).drop("_rt")
+      case None if nOut <= 1 => df.coalesce(1)
+      case None => df.repartitionByRange(nOut, col("doc_id"))
+    }).sortWithinPartitions("doc_id")
+
+  /** Curve re-cluster as a single-scan shuffle: the [[graft.functions.RangePlan]]
     * routes rows straight to token-mass-balanced partitions (no
     * repartitionByRange runtime sampling pass — that would re-decode every
     * token array once more) and the within-partition sort orders by the key.
-    * The token payload crosses the exchange zigzag-delta-varint-packed
-    * ([[graft.functions.TokenCodec]], guide §2.3 "shuffle fewer bytes"):
-    * pack evaluates map-side, unpack reduce-side after the sort, so both the
-    * exchange bytes and the sort buffer shrink 2-4x while the written file
-    * is bit-identical. */
+    * When `tokens` is a packable int array the payload crosses the exchange
+    * zigzag-delta-varint-packed ([[graft.functions.TokenCodec]], guide §2.3
+    * "shuffle fewer bytes"): pack evaluates map-side, unpack reduce-side
+    * after the sort, so both the exchange bytes and the sort buffer shrink
+    * 2-4x while the written file is bit-identical. */
   private def curveShuffle(
       input: DataFrame, cols: Seq[String], bits: Int, hilbert: Boolean,
       nOut: Int, totalRows: Long): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, IntegerType}
-    val weight = if (input.columns.contains("n_tok")) Some("n_tok") else None
-    val plan = Clustering.planCurveShuffle(
-      input, cols, bits, hilbert, nOut, Some(totalRows), weight)
-    val packable = input.schema.fields.find(_.name == "tokens").map(_.dataType) match {
-      case Some(ArrayType(IntegerType, _)) => !cols.contains("tokens")
-      case _ => false
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField}
+    val plan = Clustering.planCurveShuffle(input, cols, bits, hilbert, nOut, Some(totalRows),
+      Some("n_tok").filter(input.columns.contains))
+    // Some(element nullability) when the payload is packable
+    val packable = input.schema.fields.collectFirst {
+      case StructField("tokens", ArrayType(IntegerType, n), _, _) if !cols.contains("tokens") => n
     }
-    if (!packable) {
-      input.withColumn("_ck", plan.keyCol).withColumn("_rt", plan.routeCol)
-        .repartition(plan.nOut, col("_rt"))
-        .sortWithinPartitions(col("_ck"))
-        .drop("_ck", "_rt")
-    } else {
-      val elemNullable = input.schema("tokens").dataType
-        .asInstanceOf[ArrayType].containsNull
-      val order = input.columns.toSeq
-      input
-        .withColumn("_ck", plan.keyCol).withColumn("_rt", plan.routeCol)
-        .withColumn("_pk", ExpressionUtils.column(
-          graft.functions.PackTokens(ExpressionUtils.expression(col("tokens")))))
-        .drop("tokens")
-        .repartition(plan.nOut, col("_rt"))
-        .sortWithinPartitions(col("_ck"))
-        .withColumn("tokens", ExpressionUtils.column(graft.functions.UnpackTokens(
-          ExpressionUtils.expression(col("_pk")), elemNullable)))
-        .select(order.map(col): _*)
-    }
+    def column(c: String) = ExpressionUtils.expression(col(c))
+    def pack(df: DataFrame) = packable.fold(df)(_ =>
+      df.withColumn("_pk", ExpressionUtils.column(PackTokens(column("tokens")))).drop("tokens"))
+    def unpack(df: DataFrame) = packable.fold(df)(n =>
+      df.withColumn("tokens", ExpressionUtils.column(UnpackTokens(column("_pk"), n))))
+    unpack(pack(input.withColumn("_ck", plan.keyCol).withColumn("_rt", plan.routeCol))
+      .repartition(plan.nOut, col("_rt"))
+      .sortWithinPartitions(col("_ck")))
+      .select(input.columns.toSeq.map(col): _*)
   }
 
   // ---------------------------------------------------------------- merge
@@ -401,27 +400,22 @@ object Maintenance {
 
       def merged(target: DataFrame, nOut: Int, totalRows: Long): DataFrame = {
         // Route-partitioned join (guide §3.3): both sides are pre-partitioned
-        // by a token-mass-balanced doc_id range bucket routed through Murmur3
-        // preimages, and the join carries the route as a leading key —
-        // Catalyst then recognizes the sides as co-partitioned, so the join
-        // adds NO exchange and its output lands already range-clustered.
-        // Bounds sample the slim (doc_id, n_tok) view of target ∪ batch, not
-        // the join (guide §1.2: fewer passes).
-        val bounds: Option[Array[AnyRef]] =
+        // by the doc_id plan's route, and the join carries the route as a
+        // leading key — Catalyst then recognizes the sides as co-partitioned,
+        // so the join adds NO exchange and its output lands already
+        // range-clustered. The plan samples the slim (doc_id, n_tok) view of
+        // target ∪ batch, not the join (guide §1.2: fewer passes).
+        // (the nOut test also spares building the sample frame)
+        val plan =
           if (m.spec.nonEmpty || nOut <= 1) None
-          else docRouteBounds(target.select(col("doc_id"), col("n_tok"))
+          else Clustering.planDocRange(target.select(col("doc_id"), col("n_tok"))
             .unionByName(debounced.select(col("doc_id"), col("n_tok"))), nOut, Some(totalRows))
-        val (tJ, bJ, joinKeys) = bounds match {
-          case Some(bs) =>
-            val route = docRouteCol(bs)
-            (target.withColumn("_mrt", route).repartition(bs.length + 1, col("_mrt")),
-              b.withColumn("_mrt", route).repartition(bs.length + 1, col("_mrt")),
-              Seq("_mrt", "doc_id"))
-          case None => (target, b, Seq("doc_id"))
-        }
+        def side(df: DataFrame) =
+          plan.fold(df)(p => df.withColumn("_mrt", p.routeCol).repartition(p.nOut, col("_mrt")))
         // full_outer (Eager): matched → batch wins; target-only → keep;
         // batch-only → insert. left_outer (MatchOnly): unmatched batch dropped.
-        val result = tJ.join(bJ, joinKeys,
+        val result = side(target).join(side(b),
+            if (plan.isEmpty) Seq("doc_id") else Seq("_mrt", "doc_id"),
             if (rule == CreationRule.MatchOnly) "left_outer" else "full_outer")
           // drop rows the batch deletes; batch-only delete rows also vanish here
           .filter(coalesce(col("_op") =!= "delete", lit(true)))
@@ -440,14 +434,11 @@ object Maintenance {
         // A partitioned table is distributed by tuple in `rewrite`. An
         // unpartitioned one is route-clustered by the join already, so a
         // local doc_id sort gives narrow per-file stats with no further
-        // exchange. When the bounds sample is too small for nOut buckets
-        // (tiny tables), plain range partitioning: the token-mass
-        // partitioner would rerun the identical sample only to reach the
-        // same conclusion.
+        // exchange; without a plan it takes the doc_id placement's other
+        // rungs.
         if (m.spec.nonEmpty) result
-        else if (bounds.nonEmpty) withPartialKeyCoPartition(result.sortWithinPartitions("doc_id"))
-        else if (nOut <= 1) result.coalesce(1).sortWithinPartitions("doc_id")
-        else result.repartitionByRange(nOut, col("doc_id")).sortWithinPartitions("doc_id")
+        else if (plan.nonEmpty) withPartialKeyCoPartition(result.sortWithinPartitions("doc_id"))
+        else placeByDocRange(result, None, nOut)
       }
 
       // The canonicalized batch plan hash keeps the step id deterministic
@@ -620,28 +611,24 @@ object Maintenance {
     * ids bounded by 2|files|+1). Exposed for plan evidence (PLANS.md) —
     * the probe must never plan as a BroadcastNestedLoopJoin. The live
     * merge path runs the fused [[pruneProbeAgg]] form of the same probe. */
-  def pruneProbe(batchKeys: DataFrame, endpoints: Array[String]): DataFrame = {
-    val bounds: Array[AnyRef] = endpoints.map(s =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(s): AnyRef)
-    val bucketCol = ExpressionUtils.column(
-      RangeBucket(ExpressionUtils.expression(col("doc_id")), bounds))
-    batchKeys.select(bucketCol.as("_b")).distinct()
-  }
+  def pruneProbe(batchKeys: DataFrame, endpoints: Array[String]): DataFrame =
+    batchKeys.select(endpointInterval(endpoints)).distinct()
 
   /** One-job fusion of the pruning probe and the batch-size estimate: per
     * endpoint-interval id → (row count, token mass). The distinct ids drive
     * file pruning exactly like [[pruneProbe]], while the per-group totals
     * replace what used to be a SECOND aggregation job over the batch
     * (guide §1.2: fewer passes). */
-  private def pruneProbeAgg(batch: DataFrame, endpoints: Array[String]): DataFrame = {
-    val bounds: Array[AnyRef] = endpoints.map(s =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(s): AnyRef)
-    val bucketCol = ExpressionUtils.column(
-      RangeBucket(ExpressionUtils.expression(col("doc_id")), bounds))
-    batch.groupBy(bucketCol.as("_b"))
+  private def pruneProbeAgg(batch: DataFrame, endpoints: Array[String]): DataFrame =
+    batch.groupBy(endpointInterval(endpoints))
       .agg(count(lit(1)).as("_n"),
         coalesce(sum(col("n_tok").cast("long")), lit(0L)).as("_toks"))
-  }
+
+  /** `_b`: the endpoint-interval id of each row's doc_id. */
+  private def endpointInterval(endpoints: Array[String]): Column =
+    ExpressionUtils.column(RangeBucket(ExpressionUtils.expression(col("doc_id")),
+      endpoints.map(s => org.apache.spark.unsafe.types.UTF8String.fromString(s): AnyRef)))
+      .as("_b")
 
   /** Interval-stabbing file selection from collected probe hit ids. */
   private def touchedByHits(
@@ -654,76 +641,6 @@ object Maintenance {
     }
     val idx: Map[String, Int] = endpoints.zipWithIndex.toMap
     live.filter(f => anyHitIn(idx(f.minDocId), idx(f.maxDocId)))
-  }
-
-
-  /**
-   * Salted/weighted range partitioning: choose doc_id bounds so each output
-   * partition carries ~equal *token mass* (not row count) — a long-doc skew
-   * (1% of docs carry 4k-16k tokens) would otherwise leave straggler tasks.
-   * Bounds are computed from a weighted sample; the bucket id is a codegen'd
-   * [[RangeBucket]] routed through Murmur3 preimages
-   * ([[Clustering.murmurPreimages]]), so the ONLY pass over `df` is the
-   * final hash exchange — `repartitionByRange` would re-execute the child
-   * (token arrays included) once more for its runtime bound sampling.
-   * With a `totalRows` hint the sample is a pure fraction (one fully
-   * parallel job, no serial CollectLimit). `sampleFrom` substitutes a
-   * cheaper equivalently-distributed (doc_id, n_tok) frame for the bound
-   * sample — e.g. the slim inputs of a join instead of the join itself.
-   */
-  def repartitionByTokenMass(
-      df: DataFrame, nOut: Int, totalRows: Option[Long] = None,
-      sampleFrom: Option[DataFrame] = None): DataFrame = {
-    if (nOut <= 1) return df.coalesce(1).sortWithinPartitions("doc_id")
-    docRouteBounds(sampleFrom.getOrElse(df), nOut, totalRows) match {
-      case None =>
-        df.repartitionByRange(nOut, col("doc_id")).sortWithinPartitions("doc_id")
-      case Some(bounds) =>
-        df.withColumn("_mrt", docRouteCol(bounds))
-          .repartition(bounds.length + 1, col("_mrt"))
-          .sortWithinPartitions("doc_id")
-          .drop("_mrt")
-    }
-  }
-
-  /** Token-mass-weighted doc_id cut points from a slim one-job sample
-    * (None = sample too small, caller falls back). */
-  private[graft] def docRouteBounds(
-      sampleDf: DataFrame, nOut: Int, totalRows: Option[Long]): Option[Array[AnyRef]] = {
-    val projected = sampleDf.select(col("doc_id"), col("n_tok"))
-    val raw = totalRows match {
-      case Some(n) if n > 0 =>
-        val fraction = math.min(1.0, 200000.0 * 1.2 / n)
-        projected.sample(withReplacement = false, fraction, seed = 7).collect()
-      case _ =>
-        projected.sample(withReplacement = false, 0.5, seed = 7)
-          .limit(200000).collect()
-    }
-    val sample = raw
-      .map(r => (r.getString(0), r.getInt(1).toLong))
-      .sortBy(_._1)
-    if (sample.length < nOut * 2) return None
-    // NOTE: duplicate cut points are collapsed, so under extreme mass skew
-    // (one doc_id heavier than a whole target file) the route can yield
-    // fewer than nOut partitions and files above target size. doc_ids are
-    // unique per the merge invariant and per-doc mass is bounded by the
-    // longest document, so this needs target files smaller than one
-    // document — out of range for any real sizing.
-    val totalMass = sample.map(_._2).sum.toDouble
-    val perPart = totalMass / nOut
-    val bounds = scala.collection.mutable.ArrayBuffer[AnyRef]()
-    var acc = 0.0
-    var nextCut = perPart
-    sample.foreach { case (docId, w) =>
-      acc += w
-      if (acc >= nextCut && bounds.size < nOut - 1 &&
-          !bounds.lastOption.contains(
-            org.apache.spark.unsafe.types.UTF8String.fromString(docId): AnyRef)) {
-        bounds += org.apache.spark.unsafe.types.UTF8String.fromString(docId)
-        nextCut += perPart
-      }
-    }
-    Some(bounds.toArray)
   }
 
   /** `df` planned with partial-key co-partitioning allowed: the route-join's
@@ -739,14 +656,6 @@ object Maintenance {
     val merge = PlanBridge.cloneSession(df.sparkSession)
     merge.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
     PlanBridge.ofRows(merge, df.queryExecution.logical)
-  }
-
-  /** Routing column placing doc_id range `i` exactly in partition `i` of a
-    * `repartition(bounds.length + 1, routeCol)` hash exchange. */
-  private[graft] def docRouteCol(bounds: Array[AnyRef]): Column = {
-    val bucket = ExpressionUtils.column(
-      RangeBucket(ExpressionUtils.expression(col("doc_id")), bounds))
-    element_at(typedLit(Clustering.murmurPreimages(bounds.length + 1).toSeq), bucket + 1)
   }
 
   /**

@@ -82,7 +82,7 @@ object MaintPipelines {
   /** Fresh throwaway table populated with tokensFromDocs, split into many
     * small scattered files so maintenance has real work to do. */
   def freshTable(spark: SparkSession, sfDir: String, nFiles: Int = 16): TokenTable = {
-    val root = java.nio.file.Files.createTempDirectory("graft-maint").toString
+    val root = TempDir("graft-maint").toString
     val t = TokenTable.create(spark, s"$root/tbl")
     // scatter the slim rows, THEN materialize tokens: the file assignment
     // (hash of doc_id) and file contents are identical, but the exchange
@@ -211,7 +211,7 @@ object MaintPipelines {
     * destination; per-type concurrency becomes Spark partitioning. */
   def copyRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val src = freshTable(spark, sfDir)
-    val root = java.nio.file.Files.createTempDirectory("graft-copy").toString
+    val root = TempDir("graft-copy").toString
     val dst = TokenTable.create(spark, s"$root/tbl")
     Maintenance.mergeInto(spark, dst, src.scan(spark), CreationRule.Create)
     verifiableScan(spark, dst)
@@ -364,7 +364,7 @@ object MaintPipelines {
     val m4 = Migration("m4_drop_lang", Seq(DropColumn("lang")), Seq("m2_rename_q", "m3_add_lang"))
     val sq = Migration.squash("s_2_4", Seq(m2, m3, m4))
     val dir = new org.apache.hadoop.fs.Path(
-      java.nio.file.Files.createTempDirectory("graft-migrations").toString, "migrations")
+      TempDir("graft-migrations").toString, "migrations")
     Seq(m1, m2, m3, m4, sq).foreach(_.writeToDirectory(t.fs, dir))
     val applied = Migrator.migrate(t, MigrationGraph.fromDirectory(t.fs, dir))
     require(applied.map(_.name) == Seq("m1_add_quality", "s_2_4"),
@@ -452,7 +452,7 @@ object MaintPipelines {
    */
   def partitionedRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.table.{PartitionField, TokenTable}
-    val root = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val root = TempDir("graft-part").toString
     val spec = Seq(
       PartitionField("source", "identity"),
       PartitionField("doc_id", "bucket", Some(4)))
@@ -583,10 +583,10 @@ object MaintPipelines {
     * each an atomic append snapshot (micro-batch boundary == the reference's
     * Flush, SURVEY.md §2.6). */
   def streamAppendRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-src").toString
+    val dir = TempDir("graft-stream-src").toString
     updateBatch(spark, sfDir).filter(col("_op") === "upsert").drop("_op")
       .write.mode("overwrite").parquet(dir)
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-tbl").toString
+    val root = TempDir("graft-stream-tbl").toString
     val t = TokenTable.create(spark, s"$root/tbl")
     val stream = spark.readStream
       .schema(TokenTable.sequenceSchema)
@@ -607,15 +607,15 @@ object MaintPipelines {
     * state — the oracle is mergeOracle verbatim. */
   def streamMergeRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val t = freshTable(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft-streammerge-src").toString
+    val dir = TempDir("graft-streammerge").toString
     withStreamTokens(updateBatchSlim(spark, sfDir).repartition(6), 17, 40009)
-      .write.mode("overwrite").parquet(dir)
+      .write.mode("overwrite").parquet(s"$dir/src")
     val stream = spark.readStream
       .schema(TokenTable.sequenceSchema.add("_op", org.apache.spark.sql.types.StringType))
       .option("maxFilesPerTrigger", 2)
-      .parquet(dir)
+      .parquet(s"$dir/src")
     val q = graft.streaming.Incremental.streamMerge(
-      stream, t.root.toString, s"${dir}-ckpt")
+      stream, t.root.toString, s"$dir/ckpt")
     q.processAllAvailable(); q.stop()
     t.refresh()
     verifiableScan(spark, t)
@@ -635,15 +635,15 @@ object MaintPipelines {
   def streamMergeMorRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val t = freshTable(spark, sfDir)
     val seedPaths = t.liveFiles().map(_.path).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-morstream-src").toString
+    val dir = TempDir("graft-morstream").toString
     withStreamTokens(updateBatchSlim(spark, sfDir).repartition(6), 17, 40009)
-      .write.mode("overwrite").parquet(dir)
+      .write.mode("overwrite").parquet(s"$dir/src")
     val stream = spark.readStream
       .schema(TokenTable.sequenceSchema.add("_op", org.apache.spark.sql.types.StringType))
       .option("maxFilesPerTrigger", 2)
-      .parquet(dir)
+      .parquet(s"$dir/src")
     val q = graft.streaming.Incremental.streamMergeMor(
-      stream, t.root.toString, s"$dir-ckpt")
+      stream, t.root.toString, s"$dir/ckpt")
     q.processAllAvailable(); q.stop()
     t.refresh()
     require(seedPaths.subsetOf(t.liveFiles().map(_.path).toSet),

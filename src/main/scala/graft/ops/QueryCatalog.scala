@@ -39,21 +39,12 @@ object QueryCatalog {
     StructField("doc_id", LongType), StructField("n_chars", IntegerType),
     StructField("lang", StringType), StructField("source", StringType)))
 
-  /** A fresh `graft-src-<kind>` directory, deleted when the JVM exits: the
-    * DataFrames the codec round-trips return read it lazily, so it must
-    * outlive the call. */
-  private def srcDir(kind: String): java.nio.file.Path = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-src-$kind")
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
-    dir
-  }
-
   /** FileExtractor CSV codec round-trip (reference …/extractors/files.py:
     * 332-341): the documents metadata is written as header CSV and read back
     * through the codec registry — the gate compares against the parquet
     * truth, so the codec must be lossless. */
   def srcCsv(s: SparkSession, dir: String): DataFrame = {
-    val tmp = srcDir("csv").toString
+    val tmp = TempDir("graft-src-csv").toString
     val cols = Seq("doc_id", "n_chars", "lang", "source").map(col)
     tbl(s, dir, "documents").select(cols: _*)
       .write.mode("overwrite").option("header", "true").csv(tmp)
@@ -63,7 +54,7 @@ object QueryCatalog {
 
   /** FileExtractor JSONL codec round-trip (files.py:320-329). */
   def srcJsonl(s: SparkSession, dir: String): DataFrame = {
-    val tmp = srcDir("jsonl").toString
+    val tmp = TempDir("graft-src-jsonl").toString
     val cols = Seq("doc_id", "n_chars", "lang", "source").map(col)
     tbl(s, dir, "documents").select(cols: _*).write.mode("overwrite").json(tmp)
     graft.sources.FileSource.read(s, s"$tmp/*.json", format = Some("jsonl"),
@@ -75,7 +66,7 @@ object QueryCatalog {
     * metadata is written as plain text and read back through the codec
     * registry. */
   def srcTxt(s: SparkSession, dir: String): DataFrame = {
-    val tmp = srcDir("txt").toString
+    val tmp = TempDir("graft-src-txt").toString
     tbl(s, dir, "documents")
       .select(concat(col("doc_id"), lit("|"), col("lang"), lit("|"), col("source")).as("value"))
       .write.mode("overwrite").text(tmp)
@@ -89,7 +80,7 @@ object QueryCatalog {
       .select(col("doc_id"), col("lang")).collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     val yaml = rows.map { case (id, lang) => s"- doc_id: $id\n  lang: $lang" }.mkString("\n")
-    val tmp = srcDir("yaml")
+    val tmp = TempDir("graft-src-yaml")
     java.nio.file.Files.writeString(tmp.resolve("docs.yaml"), yaml)
     graft.sources.FileSource.read(s, s"$tmp/docs.yaml",
       schema = Some(StructType(Seq(
@@ -242,7 +233,7 @@ object QueryCatalog {
     * passes the window end. The driver's oracle reproduces the emission rule
     * relationally. */
   def streamWindowCounts(s: SparkSession, dir: String): DataFrame = {
-    val src = java.nio.file.Files.createTempDirectory("graft-stream-win").toString
+    val src = TempDir("graft-stream-win").toString
     val events = tbl(s, dir, "events")
     // Replay in event-time order (4 time-range files): an unordered replay
     // would race the advancing watermark and drop arbitrary events as late —
@@ -305,7 +296,7 @@ object QueryCatalog {
     * set it to the bus's re-delivery horizon instead. Oracle: the events
     * table itself (each event exactly once). */
   def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    val src = java.nio.file.Files.createTempDirectory("graft-stream-ddp").toString
+    val src = TempDir("graft-stream-ddp").toString
     val events = tbl(s, dir, "events").persist()
     val (tsMin, tsMax) = tsBounds(events, "ts")
     val delay = s"${tsMax - tsMin + 3600} seconds"

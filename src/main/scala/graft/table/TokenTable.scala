@@ -986,13 +986,18 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     val reachableManifests: Set[String] =
       meta.snapshots.flatMap(s => s.manifests ++ s.deletes).map(_.path).toSet ++
         meta.snapshots.flatMap(_.manifestList)
-    val deadManifests = fs.listStatus(metadataDir).toSeq
+    // Crash leftovers of the commit protocol go too: an unpublished version
+    // file, an unrenamed version hint and an abandoned slot claim — a claim
+    // is held for milliseconds, so one past the grace window is dead and
+    // would block its version slot forever (see firstWinsPublish).
+    val crashLeftover = """\.tmp-.*\.json|\.hint-.*\.tmp|\.v\d+\.json\.claim""".r
+    val deadMeta = fs.listStatus(metadataDir).toSeq
       .filter(_.getModificationTime < cutoff)
       .map(_.getPath.getName)
-      .filter(n => (n.startsWith("manifest-") || n.startsWith("snap-")) &&
-        !reachableManifests.contains(n))
-    deadManifests.foreach(n => fs.delete(new Path(metadataDir, n), false))
-    deadData ++ deadManifests ++ sweepStaleLedgers(cutoff)
+      .filter(n => crashLeftover.matches(n) ||
+        (n.startsWith("manifest-") || n.startsWith("snap-")) && !reachableManifests.contains(n))
+    deadMeta.foreach(n => fs.delete(new Path(metadataDir, n), false))
+    deadData ++ deadMeta ++ sweepStaleLedgers(cutoff)
   }
 
   /** GC grace window in ms (`gc.grace-period-ms`, default 3 days — Iceberg's
@@ -1303,7 +1308,8 @@ object TokenTable {
     * `.<dst>.claim` file, so only one publisher at a time gets to check that
     * dst is free and rename into it, and the claim is dropped once dst
     * exists (a publisher that dies holding a claim leaves that version slot
-    * blocked until the claim file is removed). Non-local filesystems keep
+    * blocked until [[removeOrphans]] sweeps the claim past the grace
+    * window). Non-local filesystems keep
     * exists+rename — HDFS rename refuses to clobber (returns false) and
     * object-store renames are copy+delete with their own semantics. `tmp`
     * is always cleaned up, win or lose. */

@@ -1,8 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * and a `commit(` that passes replaced files only inside `rewrite` and
   * `deleteWhereMor`, which stages no data file: its replaced files are
   * metadata-only drops next to its delete keys. Manifest regrouping
-  * commits through `commitManifestGroups`, a different call. */
+  * commits through `commitManifestGroups`, a different call. Likewise
+  * every key-range plan samples, cuts and routes through the one planner
+  * in `Clustering`: `murmurPreimages(` is called only by its route helper,
+  * and `.sample(` appears only in its `sample` and in the k-means seeding
+  * of `AnnOps.ivfTopK`. */
 class RewriteGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -29,24 +34,31 @@ class RewriteGuardSpec extends AnyFunSuite {
     start to end
   }
 
+  /** Matches of `re` in `src` outside comment lines, each with its
+    * 0-based line. */
+  private def codeMatches(src: String, re: Regex): Seq[(Regex.Match, Int)] =
+    re.findAllMatchIn(src).flatMap { m =>
+      val line = src.substring(src.lastIndexOf('\n', m.start) + 1, m.start).trim
+      if (line.startsWith("*") || line.startsWith("//") || line.startsWith("/*")) None
+      else Some((m, src.substring(0, m.start).count(_ == '\n')))
+    }.toSeq
+
   /** 0-based lines of the `commit(` calls in `src` that pass replaced
     * files: a `replaced =` argument or a third positional one. */
   def replacingCommits(src: String): Seq[Int] = {
-    val call = """(?<!def )(?<!\w)commit\(""".r
-    call.findAllMatchIn(src).flatMap { m =>
-      val lineStart = src.lastIndexOf('\n', m.start) + 1
-      val line = src.substring(lineStart, m.start).trim
-      if (line.startsWith("*") || line.startsWith("//") || line.startsWith("/*")) None
-      else {
-        val args = topLevelArgs(src, m.end)
-        val named = """^\w+\s*=[^=>]""".r
-        val positional = args.takeWhile(a => named.findFirstIn(a).isEmpty)
-        if (positional.size >= 3 || args.exists(_.matches("""(?s)replaced\s*=[^=].*""")))
-          Some(src.substring(0, m.start).count(_ == '\n'))
-        else None
-      }
-    }.toSeq
+    val named = """^\w+\s*=[^=>]""".r
+    codeMatches(src, """(?<!def )(?<!\w)commit\(""".r).filter { case (m, _) =>
+      val args = topLevelArgs(src, m.end)
+      args.takeWhile(a => named.findFirstIn(a).isEmpty).size >= 3 ||
+        args.exists(_.matches("""(?s)replaced\s*=[^=].*"""))
+    }.map(_._2)
   }
+
+  private val preimageCall = """(?<!def )\bmurmurPreimages\(""".r
+  private val sampleCall = """\.sample\(""".r
+
+  /** 0-based lines of `src` calling `re`, outside comments. */
+  def callLines(src: String, re: Regex): Seq[Int] = codeMatches(src, re).map(_._2)
 
   /** The top-level arguments of the call whose '(' ends at `from`. */
   private def topLevelArgs(src: String, from: Int): Seq[String] = {
@@ -86,27 +98,69 @@ class RewriteGuardSpec extends AnyFunSuite {
     assert(replacingCommits("""t.commitManifestGroups("rewrite-manifests", groups)""").isEmpty)
   }
 
-  test("only Maintenance.rewrite keeps a ledger and commits rewritten files in src/main") {
+  /** Every `.scala` file under `src/main/scala`: path relative to it, text. */
+  private lazy val sources: Seq[(String, String)] = {
     assert(Files.isDirectory(root), s"run from the repository root: ${root.toAbsolutePath}")
-    val sources = Files.walk(root).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
-    def rel(p: Path) = root.relativize(p).toString.replace('\\', '/')
-    val maint = sources.find(rel(_) == maintenance).map(p => Files.readAllLines(p).asScala.toSeq)
-    assert(maint.nonEmpty, s"$maintenance missing under $root")
-    val rewrite = bodyOf(maint.get, "rewrite")
-    val mayCommit = rewrite ++ bodyOf(maint.get, "deleteWhereMor")
+    Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .map(p => (root.relativize(p).toString.replace('\\', '/'), Files.readString(p))).toSeq
+  }
 
-    val ledgers = sources.flatMap { p =>
-      Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if line.contains("new Ledger(") => (rel(p), i)
+  private def linesOf(file: String): Seq[String] = {
+    val src = sources.collectFirst { case (`file`, text) => text }
+    assert(src.nonEmpty, s"$file missing under $root")
+    src.get.split("\n", -1).toSeq
+  }
+
+  private def at(hits: Seq[(String, Int)]) =
+    hits.map { case (f, i) => s"$f:${i + 1}" }.mkString(", ")
+
+  test("the call detector skips comments and definitions") {
+    assert(callLines("""  private def murmurPreimages(parts: Int): Array[Int] = {""", preimageCall).isEmpty)
+    assert(callLines("""  * ([[Clustering.murmurPreimages]]) routes (murmurPreimages(n))""", preimageCall).isEmpty)
+    assert(callLines("""  // df.sample(false, 0.1)""", sampleCall).isEmpty)
+    assert(callLines("x\n  typedLit(Clustering.murmurPreimages(n + 1).toSeq)", preimageCall) == Seq(1))
+    assert(callLines("""val p = murmurPreimages(8)""", preimageCall) == Seq(0))
+    assert(callLines("df.select(col(\"a\"))\n  .sample(withReplacement = false, 0.5)", sampleCall) == Seq(1))
+    assert(callLines("""rows.sample(false, f, seed = 7).collect()""", sampleCall) == Seq(0))
+  }
+
+  test("only the Clustering planner samples and routes key ranges in src/main") {
+    val clustering = "graft/functions/ClusterExpressions.scala"
+    val ann = "graft/text/AnnOps.scala"
+    val route = bodyOf(linesOf(clustering), "routed")
+    val sampler = bodyOf(linesOf(clustering), "sample")
+    val seeding = bodyOf(linesOf(ann), "ivfTopK")
+    def hits(re: Regex) = sources.flatMap { case (f, src) => callLines(src, re).map((f, _)) }
+    val preimages = hits(preimageCall)
+    val samples = hits(sampleCall)
+    assert(preimages.count { case (f, i) => f == clustering && route.contains(i) } == 1,
+      "the planner's route helper computes no preimages")
+    assert(samples.exists { case (f, i) => f == clustering && sampler.contains(i) },
+      "the planner's sample draws no sample")
+    val strayRoutes = preimages.filterNot { case (f, i) => f == clustering && route.contains(i) }
+    val straySamples = samples.filterNot { case (f, i) =>
+      f == clustering && sampler.contains(i) || f == ann && seeding.contains(i)
+    }
+    assert(strayRoutes.isEmpty, s"a route column outside Clustering.routed: ${at(strayRoutes)}")
+    assert(straySamples.isEmpty, s"a sample outside Clustering.sample: ${at(straySamples)}")
+  }
+
+  test("only Maintenance.rewrite keeps a ledger and commits rewritten files in src/main") {
+    val maint = linesOf(maintenance)
+    val rewrite = bodyOf(maint, "rewrite")
+    val mayCommit = rewrite ++ bodyOf(maint, "deleteWhereMor")
+
+    val ledgers = sources.flatMap { case (f, src) =>
+      src.split("\n", -1).toSeq.zipWithIndex.collect {
+        case (line, i) if line.contains("new Ledger(") => (f, i)
       }
     }
-    val commits = sources.flatMap(p => replacingCommits(Files.readString(p)).map((rel(p), _)))
+    val commits = sources.flatMap { case (f, src) => replacingCommits(src).map((f, _)) }
     assert(ledgers.count { case (f, i) => f == maintenance && rewrite.contains(i) } == 1,
       "rewrite keeps no ledger")
     assert(commits.count { case (f, i) => f == maintenance && rewrite.contains(i) } == 1,
       "rewrite commits no replaced files")
-    def at(hits: Seq[(String, Int)]) = hits.map { case (f, i) => s"$f:${i + 1}" }.mkString(", ")
     val strayLedgers = ledgers.filterNot { case (f, i) => f == maintenance && rewrite.contains(i) }
     val strayCommits = commits.filterNot { case (f, i) => f == maintenance && mayCommit.contains(i) }
     assert(strayLedgers.isEmpty, s"a Ledger outside Maintenance.rewrite: ${at(strayLedgers)}")

@@ -6,10 +6,10 @@ import graft.gen.SequenceGen
 import graft.maintenance.{CreationRule, Failpoints, Maintenance}
 
 /** The route-partitioned CoW MERGE (nOut > 1): both join sides are
-  * pre-partitioned on a token-mass-balanced doc_id range route, the join
+  * pre-partitioned on the route column of `Clustering.planDocRange` — the
+  * token-mass-balanced doc_id plan compaction places rows by too — the join
   * adds no exchange, and the output files carry disjoint contiguous doc
-  * ranges with NO post-join repartition pass (the optimization replacing
-  * the old repartitionByTokenMass exchange over the merged payload). */
+  * ranges with NO post-join repartition pass over the merged payload. */
 class RouteMergeSpec extends SparkSpec {
 
   test("small-target merge routes output to disjoint doc ranges and exact content") {

@@ -459,6 +459,34 @@ class TokenTableSpec extends SparkSpec {
     assert(!meta.exists(n => n.startsWith(".tmp-") || n.contains(".claim")), s"left behind: $meta")
   }
 
+  test("removeOrphans sweeps an abandoned version-slot claim past the grace window") {
+    import graft.maintenance.Failpoints
+    val root = tmpDir("tt-stale-claim")
+    val t = SequenceGen.createTable(spark, s"$root/tbl", nDocs = 100, nFiles = 2)
+    val staged = t.stageWrite(SequenceGen.sequences(spark, 10, seed = 5)
+      .withColumn("doc_id", concat(lit("c"), col("doc_id"))), "stale-claim")
+    // a publisher died holding the next slot's claim, older than the window
+    val meta = java.nio.file.Paths.get(t.metadataDir.toUri.getPath)
+    val next = meta.toFile.list().count(_.matches("""v\d+\.json"""))
+    val claim = meta.resolve(s".v$next.json.claim")
+    java.nio.file.Files.createFile(claim)
+    java.nio.file.Files.setLastModifiedTime(claim, java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - t.gcGraceMs - 60000))
+    def noLinks(): Unit = Failpoints.armCallback("table.publish.link") { () =>
+      noLinks()
+      throw new java.nio.file.FileSystemException("hard links not supported")
+    }
+    noLinks()
+    try {
+      intercept[graft.table.CommitConflictException](t.commit("append", staged))
+      assert(t.removeOrphans().contains(s".v$next.json.claim"))
+      assert(!java.nio.file.Files.exists(claim))
+      t.commit("append", staged)
+    } finally Failpoints.reset()
+    assert(t.scan(spark).count() == 110)
+    assert(meta.toFile.list().count(_.matches("""v\d+\.json""")) == next + 1)
+  }
+
   test("conflicting rewrites: a merge planned against files a compact replaced must abort") {
     import graft.maintenance.Maintenance
     val root = tmpDir("tt-conflict")
