@@ -4,7 +4,7 @@ import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 import graft.plans.{PipelineDsl, PipelineRunner}
-import graft.table.{Describe, MigrationGraph, Migrator, TokenTable}
+import graft.table.{Describe, LocalFileBinding, MigrationGraph, Migrator, TokenTable}
 
 /**
  * spark-submit entry point — the engine's analogue of the reference CLI's
@@ -180,7 +180,7 @@ object Run {
             // through Hadoop FS like every other path — a java.nio write
             // would fail on hdfs:///s3a:// --out targets on a real cluster
             val hp = new org.apache.hadoop.fs.Path(p)
-            val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+            val fs = LocalFileBinding.fileSystem(spark, hp)
             val os = fs.create(hp, true)
             try os.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
             finally os.close()
@@ -210,7 +210,7 @@ object Run {
         val dir = a.autoMigrate.getOrElse(
           sys.error(s"migrations requires --migrations-dir <dir>\n$usage"))
         val p = new org.apache.hadoop.fs.Path(dir)
-        val dirFs = p.getFileSystem(spark.sessionState.newHadoopConf())
+        val dirFs = LocalFileBinding.fileSystem(spark, p)
         val graph =
           if (dirFs.exists(p)) MigrationGraph.fromDirectory(dirFs, p)
           else graft.table.MigrationGraph.fromMigrations(Nil)
@@ -271,7 +271,7 @@ object Run {
     a.autoMigrate.foreach { dir =>
       val p = new org.apache.hadoop.fs.Path(dir)
       val graph = MigrationGraph.fromDirectory(
-        p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+        LocalFileBinding.fileSystem(spark, p), p)
       val applied = Migrator.migrate(table, graph)
       applied.foreach(m => println(s"migrated ${m.name}"))
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.maintenance.{CreationRule, Maintenance}
-import graft.table.{DataFileMeta, TokenTable}
+import graft.table.{DataFileMeta, LocalFileBinding, TokenTable}
 
 /**
  * Incremental + streaming maintenance — the Spark recast of nodestream's
@@ -115,25 +115,39 @@ object Incremental {
     }
   }
 
-  /** The shared exactly-once micro-batch sink: `op(table, batch, batchId)`
-    * runs once per UNSEEN batch id — a batch id already recorded in the
-    * snapshot log (by the committing op, via the stream-batch-id summary
-    * key) is skipped on replay. One place to fix the replay check for every
-    * streaming sink. The sink runs no job of its own: each op commits
-    * nothing for an empty batch, and learns that from its own work. */
+  /** The shared exactly-once micro-batch sink: `op(table, batch, marks)`
+    * runs once per UNSEEN batch of this stream and commits `marks` into its
+    * snapshot summary: the batch id (`stream-batch-id`) and the query's
+    * persistent id (`stream-id`, kept in the checkpoint across restarts). A
+    * batch is skipped on replay when a snapshot carries both, or carries its
+    * batch id and no stream id (written before streams were told apart), so
+    * a second stream with its own checkpoint never skips the first one's
+    * batch ids. One place to fix the replay check for every streaming sink.
+    * The sink runs no job of its own: each op commits nothing for an empty
+    * batch, and learns that from its own work. The query runs on a clone of
+    * the stream's session bound to [[graft.table.LocalFileBinding]], so its
+    * offset, commit and source logs open local files like the table does. */
   private def idempotentBatchSink(
       stream: DataFrame, tableRoot: String, checkpointDir: String, trigger: Trigger)(
-      op: (TokenTable, DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
+      op: (TokenTable, DataFrame, Map[String, String]) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    LocalFileBinding.rebind(stream).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // set by the query on the thread that runs its batches
+        val streamId = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
         val t = TokenTable.load(batch.sparkSession, tableRoot)
-        val already = t.metadata.snapshots.exists(
-          _.summary.get("stream-batch-id").contains(batchId.toString))
-        if (!already) op(t, batch, batchId)
+        val already = t.metadata.snapshots.exists { s =>
+          s.summary.get(BatchIdKey).contains(batchId.toString) &&
+            s.summary.get(StreamIdKey).forall(_ == streamId)
+        }
+        if (!already) op(t, batch, Map(BatchIdKey -> batchId.toString, StreamIdKey -> streamId))
       }
       .start()
+
+  private val BatchIdKey = "stream-batch-id"
+  private val StreamIdKey = "stream-id"
 
   /**
    * Structured-Streaming ingest: every micro-batch of `(doc_id, tokens,
@@ -146,13 +160,12 @@ object Incremental {
       tableRoot: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery =
-    idempotentBatchSink(stream, tableRoot, checkpointDir, trigger) { (t, batch, batchId) =>
+    idempotentBatchSink(stream, tableRoot, checkpointDir, trigger) { (t, batch, marks) =>
       val staged = t.stageWrite(
         batch.select("doc_id", "tokens", "n_tok", "source"),
-        s"stream-batch-$batchId-${java.util.UUID.randomUUID()}")
+        s"stream-batch-${marks(BatchIdKey)}-${java.util.UUID.randomUUID()}")
       // stageWrite stages nothing for an empty batch (zero written rows)
-      if (staged.nonEmpty) t.commit("append", staged,
-        summary = Map("stream-batch-id" -> batchId.toString))
+      if (staged.nonEmpty) t.commit("append", staged, summary = marks)
       ()
     }
 
@@ -164,10 +177,10 @@ object Incremental {
       checkpointDir: String,
       rule: CreationRule.Value = CreationRule.Eager,
       trigger: Trigger = Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery =
-    idempotentBatchSink(stream, tableRoot, checkpointDir, trigger) { (t, batch, batchId) =>
+    idempotentBatchSink(stream, tableRoot, checkpointDir, trigger) { (t, batch, marks) =>
       // an emptiness job is noise next to the copy-on-write rewrite it skips
       if (!batch.isEmpty) Maintenance.mergeInto(batch.sparkSession, t, batch, rule,
-        extraSummary = Map("stream-batch-id" -> batchId.toString))
+        extraSummary = marks)
       ()
     }
 
@@ -185,9 +198,8 @@ object Incremental {
       tableRoot: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery =
-    idempotentBatchSink(stream, tableRoot, checkpointDir, trigger) { (t, batch, batchId) =>
-      Maintenance.mergeMor(batch.sparkSession, t, batch,
-        extraSummary = Map("stream-batch-id" -> batchId.toString))
+    idempotentBatchSink(stream, tableRoot, checkpointDir, trigger) { (t, batch, marks) =>
+      Maintenance.mergeMor(batch.sparkSession, t, batch, extraSummary = marks)
       ()
     }
 }

@@ -27,6 +27,9 @@ class StatsParquetFormat extends ParquetFileFormat {
     val acc = options.get(StatsParquetFormat.HandleOption).flatMap(StatsParquetFormat.open.get)
       .getOrElse(throw new IllegalStateException(
         s"${getClass.getName} writes only through StatsParquetFormat.write"))
+    // the job conf is this write's own copy; its tasks and committer open
+    // the files they create through it
+    LocalFileBinding.bind(job.getConfiguration)
     new StatsWriterFactory(super.prepareWrite(spark, job, options, dataSchema), acc)
   }
 }

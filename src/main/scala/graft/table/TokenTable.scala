@@ -805,15 +805,14 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       spark: SparkSession, toRead: Seq[ManifestMeta], replaced: Set[String])
       : Seq[(Option[ManifestMeta], Set[String])] = {
     val sc = spark.sparkContext
-    val confBc = sc.broadcast(new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf()))
+    val fsBc = sc.broadcast(LocalFileBinding.forTasks(spark))
     val replacedBc = sc.broadcast(replaced)
     val mdDir = metadataDir.toString
     val slices = math.max(1, math.min(toRead.size, sc.defaultParallelism * 2))
     sc.parallelize(toRead, slices).map { m =>
       val dir = new Path(mdDir)
       TokenTable.rewriteManifestEntries(
-        dir.getFileSystem(confBc.value.value), dir, m, replacedBc.value)
+        fsBc.value.fileSystem(dir), dir, m, replacedBc.value)
     }.collect().toSeq
   }
 
@@ -1104,8 +1103,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       cutoff: Long, protectedByLedger: Set[String],
       protectedPrefixes: Set[String]): Seq[String] = {
     val sc = spark.sparkContext
-    val confBc = sc.broadcast(new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf()))
+    val fsBc = sc.broadcast(LocalFileBinding.forTasks(spark))
     val mdDirStr = metadataDir.toString
     val rootStr = root.toString
     val mSlices = math.max(1, math.min(manifestNames.size, sc.defaultParallelism * 2))
@@ -1113,7 +1111,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     // set is bounded by crashed runs' outputs, metadata-scale either way
     val reachable = sc.parallelize(manifestNames, mSlices).flatMap { name =>
       val dir = new Path(mdDirStr)
-      val tfs = dir.getFileSystem(confBc.value.value)
+      val tfs = fsBc.value.fileSystem(dir)
       TableJson.readManifest(readString(tfs, new Path(dir, name))).map(_.path)
     } ++ sc.parallelize(protectedByLedger.toSeq, 1)
     val top = fs.listStatus(dataDir).toSeq
@@ -1127,7 +1125,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     // paged recursive LIST elsewhere
     val listed = sc.parallelize(dirs, dSlices).flatMap { d =>
       val p = new Path(d)
-      TokenTable.listParquetFast(p.getFileSystem(confBc.value.value), p).collect {
+      TokenTable.listParquetFast(fsBc.value.fileSystem(p), p).collect {
         case (q, _, mtime) if mtime < cutoff => relativize(new Path(rootStr), q)
       }
     } ++ sc.parallelize(loose, 1)
@@ -1138,7 +1136,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       .subtract(reachable)
     val out =
       if (delete) dead.mapPartitions { it =>
-        val tfs = new Path(rootStr).getFileSystem(confBc.value.value)
+        val tfs = fsBc.value.fileSystem(new Path(rootStr))
         it.map { rel => tfs.delete(new Path(rootStr, rel), false); rel }
       } else dead
     // the one driver-side collect is the orphan list itself — small on any
@@ -1210,9 +1208,8 @@ object TokenTable {
       spark: SparkSession, rootStr: String,
       properties: Map[String, String] = Map.empty,
       partitionSpec: Seq[PartitionField] = Seq.empty): TokenTable = {
-    val conf = spark.sessionState.newHadoopConf()
     val root = new Path(rootStr)
-    val fs = root.getFileSystem(conf)
+    val fs = LocalFileBinding.fileSystem(spark, root)
     val metaDir = new Path(root, "metadata")
     require(!fs.exists(new Path(metaDir, "v0.json")), s"table already exists at $rootStr")
     partitionSpec.foreach(f => require(sequenceSchema.fieldNames.contains(f.column),
@@ -1238,13 +1235,13 @@ object TokenTable {
 
   def load(spark: SparkSession, rootStr: String): TokenTable = {
     val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = LocalFileBinding.fileSystem(spark, root)
     new TokenTable(root, fs)
   }
 
   def exists(spark: SparkSession, rootStr: String): Boolean = {
     val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = LocalFileBinding.fileSystem(spark, root)
     fs.exists(new Path(root, "metadata/v0.json"))
   }
 

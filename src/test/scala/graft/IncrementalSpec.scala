@@ -222,6 +222,41 @@ class IncrementalSpec extends SparkSpec {
     }
   }
 
+  test("every stream sink: a second stream with its own checkpoint commits its batches too") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQuery
+    type Sink = (DataFrame, String, String) => StreamingQuery
+    val sinks: Seq[(String, Sink)] = Seq(
+      "streamAppend" -> ((s, r, c) => Incremental.streamAppend(s, r, c)),
+      "streamMerge" -> ((s, r, c) => Incremental.streamMerge(s, r, c)),
+      "streamMergeMor" -> ((s, r, c) => Incremental.streamMergeMor(s, r, c)))
+    sinks.foreach { case (name, sink) =>
+      val root = tmpDir(s"inc-two-$name")
+      val t = SequenceGen.createTable(spark, s"$root/tbl", nDocs = 20, nFiles = 1)
+      // each stream reads its own 3 files, one per trigger: batch ids 0..2 both times
+      def run(stream: String): Unit = {
+        val src = s"$root/src-$stream"
+        (0 until 3).foreach { b =>
+          SequenceGen.sequences(spark, 10, seed = b.toLong)
+            .withColumn("doc_id", concat(lit(s"$stream-$b-"), col("doc_id")))
+            .coalesce(1).write.mode("append").parquet(src)
+        }
+        val q = sink(spark.readStream.schema(TokenTable.sequenceSchema)
+          .option("maxFilesPerTrigger", 1).parquet(src), s"$root/tbl", s"$root/ckpt-$stream")
+        try q.processAllAvailable() finally q.stop()
+        q.exception.foreach(e => throw e)
+      }
+      run("a")
+      run("b")
+      val m = t.refresh()
+      assert(t.scan(spark).count() == 80, s"$name: the second stream's batches were skipped")
+      val marks = m.snapshots.flatMap(s =>
+        s.summary.get("stream-batch-id").map(_ -> s.summary.get("stream-id")))
+      assert(marks.size == 6 && marks.map(_._2).distinct.size == 2 && marks.forall(_._2.nonEmpty),
+        s"$name: $marks")
+    }
+  }
+
   test("StreamConnector: poll == Flush micro-batch, rate limit buffers, empty polls end the drain") {
     import spark.implicits._
     import graft.streaming.{IterableStreamConnector, StreamConnector}
