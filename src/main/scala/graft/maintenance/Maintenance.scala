@@ -161,19 +161,19 @@ object Maintenance {
    *    that fixes its own distribution (`routed`) is written as it is;
    *    anything else takes the layout's shuffle, with bounds sampled from
    *    the victims' read so the transform never runs twice;
-   *  - the step id `<op>-snap<N>-<hex>` hashes the sorted victim paths, the
+   *  - the step id ([[Ledger.stepId]]) hashes the sorted victim paths, the
    *    op's `key` and the target size, so a rerun after a crash finds the
    *    units its ledger recorded and reuses their staged files;
    *  - one commit replaces the rewritten and the metadata-only `dropped`
    *    files, validated against the delete files `m` read. A conflicted
    *    plan never commits, so its ledger is cleared.
    * Staging rule: every unit attempt stages under a fresh
-   * `data/<stepId>/<unit>-<uuid>/`, and no staging directory is ever
-   * deleted. Two handles planning from one snapshot compute the same step
-   * id, so a directory named by the step id alone may hold the other
-   * writer's committed output. Crash leftovers are plain orphans for
-   * removeOrphans. Returns None, committing nothing, when there is nothing
-   * to do; else the snapshot and the files it added.
+   * [[Ledger.stagingJobId]], and no staging directory is ever deleted: two
+   * handles planning from one snapshot compute the same step id, so the
+   * step's prefix may hold the other writer's committed output. Crash
+   * leftovers are orphans for removeOrphans. Returns None, committing
+   * nothing, when there is nothing to do; else the snapshot and the files
+   * it added.
    */
   private[graft] def rewrite(
       spark: SparkSession,
@@ -194,9 +194,8 @@ object Maintenance {
     if (units.isEmpty && dropped.isEmpty && dropDeletePaths.isEmpty) return None
     val victims = units.flatten
     val deletes = table.deleteEntriesOf(m)
-    val hash = (key, targetFileBytes, victims.map(_.path).sorted).hashCode()
-    val stepId = s"$op-snap${m.currentSnapshotId.getOrElse(0L)}-${Integer.toHexString(hash)}"
-    val ledger = new Ledger(table, stepId)
+    val ledger = new Ledger(table,
+      Ledger.stepId(op, m, (key, targetFileBytes, victims.map(_.path).sorted).hashCode()))
     val done = ledger.completedUnits()
     val staged = units.zipWithIndex.flatMap { case (files, i) =>
       done.getOrElse(s"chunk-$i", {
@@ -220,7 +219,7 @@ object Maintenance {
           case _ if routed => out
           case _ => applyLayout(out, layout, nOut, rows, input)
         }
-        val outs = table.stageWrite(placed, s"$stepId/chunk-$i-${java.util.UUID.randomUUID()}")
+        val outs = table.stageWrite(placed, ledger.stagingJobId(s"chunk-$i"))
         ledger.record(s"chunk-$i", outs)
         Failpoints.hit("rewrite.after-unit")
         outs

@@ -129,7 +129,7 @@ final class HmacSigner(key: Array[Byte]) {
       else throw new InvalidSignatureException(
         "checkpoint blob is not in signed format — checkpoint signing " +
           s"(${ObjectStore.HmacKeyProperty}) was enabled after this blob was " +
-          "written. Clear stale checkpoints (ledger/, stream cursors) or " +
+          "written. Clear stale checkpoints (ledger units, stream cursors) or " +
           "rewrite them signed before enabling the key; this is not tampering.")
     val nl = body.indexOf('\n'.toByte)
     if (nl != 64) throw new InvalidSignatureException("malformed signed object")
@@ -150,22 +150,6 @@ final class HmacSigner(key: Array[Byte]) {
 object HmacSigner {
   /** Signed-blob wire-format version tag (see [[HmacSigner.sign]]). */
   val VersionPrefix = "hmac1:"
-
-  /** Peel a signed envelope WITHOUT verifying — for readers that only need
-    * the payload's shape and must work keyless (the GC path extracts file
-    * names from ledger blobs; over-reading an unverifiable blob is its
-    * conservative failure, and the resume path still verifies). Handles
-    * both the "hmac1:"-prefixed and the prefixless round-4 form; a blob in
-    * neither form is returned unchanged (unsigned store). Lives here so the
-    * wire format has exactly one owner — an envelope change updates sign /
-    * verify / strip together. */
-  def stripUnverified(raw: String): String = {
-    val body = if (raw.startsWith(VersionPrefix)) raw.drop(VersionPrefix.length) else raw
-    val signed = body.length > 64 && body(64) == '\n' &&
-      body.substring(0, 64).forall(c =>
-        (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f'))
-    if (signed) body.substring(65) else raw
-  }
 
   def fromBase64(b64: String): HmacSigner =
     new HmacSigner(java.util.Base64.getDecoder.decode(b64))

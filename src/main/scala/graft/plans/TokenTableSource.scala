@@ -45,8 +45,8 @@ object GraftTableSource {
     val schema = t.schema
     val attrs = schema.fields.toSeq.map(f =>
       AttributeReference(f.name, f.dataType, f.nullable)())
-    // empty tables (no snapshot yet) read as empty: minimal positive size
-    val size = BigInt(scala.util.Try(t.liveFiles().map(_.bytes).sum).getOrElse(0L)).max(1)
+    // an empty table (no snapshot yet) has no files: minimal positive size
+    val size = BigInt(t.liveFiles().map(_.bytes).sum).max(1)
     PlanBridge.ofRows(spark, TokenTableRelation(path, attrs, size))
   }
 

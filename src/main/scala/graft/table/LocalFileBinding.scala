@@ -92,14 +92,21 @@ object LocalFileBinding {
   def forTasks(spark: SparkSession): TaskFileSystems =
     new TaskFileSystems(new SerializableConfiguration(hadoopConf(spark)))
 
-  /** `df` on a clone of its session whose Hadoop confs carry the binding;
-    * the file sources of a streaming plan move to the clone too, so the
-    * source log a query on it writes is bound. The caller's session is left
-    * as it is. */
+  /** One bound clone per session: a clone's streaming query manager adds a
+    * listener to the SparkContext's bus that nothing removes. */
+  private val clones = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  /** `df`, analyzed in its own session, on that session's bound clone, whose
+    * conf is made the session's current conf plus the binding; the file
+    * sources of a streaming plan move to the clone too, so the source log a
+    * query on it writes is bound. The caller's session is left as it is. */
   def rebind(df: DataFrame): DataFrame = {
-    val s = PlanBridge.cloneSession(df.sparkSession)
-    binding.foreach { case (k, v) => s.conf.set(k, v) }
-    PlanBridge.ofRows(s, df.queryExecution.logical.transform {
+    val s = clones.synchronized {
+      val c = clones.computeIfAbsent(df.sparkSession, PlanBridge.cloneSession(_))
+      PlanBridge.copyConf(df.sparkSession, c, binding)
+      c
+    }
+    PlanBridge.ofRows(s, df.queryExecution.analyzed.transform {
       case r: StreamingRelation => r.copy(dataSource = r.dataSource.copy(sparkSession = s))
     })
   }

@@ -60,8 +60,6 @@ final case class DataFileMeta(
     maxNTok: Int,
     sumNTok: Long, // 0 = unknown on files written before write-time stats
     sources: Seq[String], // exact distinct set when known, else empty (see min/maxSource)
-    minZKey: Option[Long] = None,
-    maxZKey: Option[Long] = None,
     schemaId: Option[Int] = None, // schema version at write time; None = 0
     minSource: Option[String] = None, // min/max when `sources` is inexact (None on key files)
     maxSource: Option[String] = None,

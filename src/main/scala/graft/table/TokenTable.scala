@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.maintenance.Ledger
+
 /** Injectable clock — mirrors the reference's frozen-time golden tests
   * (reference tests/integration/test_pipeline_and_data_interpretation.py:61-62). */
 object Clock {
@@ -162,18 +164,20 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     v
   }
 
-  def manifestEntries(s: Snapshot): Seq[DataFileMeta] =
-    s.manifests.flatMap(m => TableJson.readManifest(readString(fs, new Path(metadataDir, m.path))))
+  def manifestEntries(s: Snapshot): Seq[DataFileMeta] = entriesOf(s.manifests)
+
+  private def entriesOf(manifests: Seq[ManifestMeta]): Seq[DataFileMeta] =
+    manifests.flatMap(m => TableJson.readManifest(readString(fs, new Path(metadataDir, m.path))))
 
   /** All live data files of a snapshot (paths relative to table root). */
   def liveFiles(snapshotId: Option[Long] = None): Seq[DataFileMeta] =
-    manifestEntries(snapshotIn(meta, snapshotId))
+    snapshotIn(meta, snapshotId).toSeq.flatMap(manifestEntries)
 
-  /** Snapshot `snapshotId` of `m`, or `m`'s current one. */
-  private def snapshotIn(m: TableMetadata, snapshotId: Option[Long]): Snapshot = snapshotId match {
-    case Some(id) => m.snapshot(id).getOrElse(sys.error(s"unknown snapshot $id"))
-    case None     => m.currentSnapshot.getOrElse(sys.error("table has no snapshot"))
-  }
+  /** Snapshot `snapshotId` of `m`, or `m`'s current one: none before the
+    * first commit, so an empty table has no files and no deletes. */
+  private def snapshotIn(m: TableMetadata, snapshotId: Option[Long]): Option[Snapshot] =
+    snapshotId.fold(m.currentSnapshot)(id =>
+      Some(m.snapshot(id).getOrElse(sys.error(s"unknown snapshot $id"))))
 
   // ---- snapshot-consistent planning views -------------------------------
   // A maintenance planner — and every read — must derive EVERY view it uses
@@ -187,7 +191,8 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
   // the upserted key altogether.
 
   /** Live data files of `m`'s current snapshot. */
-  def liveFiles(m: TableMetadata): Seq[DataFileMeta] = manifestEntries(snapshotIn(m, None))
+  def liveFiles(m: TableMetadata): Seq[DataFileMeta] =
+    snapshotIn(m, None).toSeq.flatMap(manifestEntries)
 
   /** Pending equality-delete key entries of `m`'s current snapshot. */
   def deleteEntriesOf(m: TableMetadata): Seq[DataFileMeta] =
@@ -230,7 +235,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     // pruning: a file whose tuple records truncate value v holds only rows
     // with n_tok in [v, v + w)
     val truncFields = m.spec.filter(f => f.transform == "truncate" && f.column == "n_tok")
-    manifestEntries(snapshotIn(m, snapshotId)).filter { f =>
+    snapshotIn(m, snapshotId).toSeq.flatMap(manifestEntries).filter { f =>
       dLo.forall(lo => f.maxDocId >= lo) && dHi.forall(hi => f.minDocId <= hi) &&
       // identity-partition value beats stats when recorded (exact, not a range)
       sourceIn.forall(s => f.partitionValue("source") match {
@@ -278,8 +283,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
   }
 
   /** Equality-delete key entries pending on a snapshot (merge-on-read). */
-  def deleteEntries(s: Snapshot): Seq[DataFileMeta] =
-    s.deletes.flatMap(m => TableJson.readManifest(readString(fs, new Path(metadataDir, m.path))))
+  def deleteEntries(s: Snapshot): Seq[DataFileMeta] = entriesOf(s.deletes)
 
   def scan(
       spark: SparkSession,
@@ -293,7 +297,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     // interleaving point for the torn-read regression test: a commit through
     // this handle HERE must not reach this read's deletes
     graft.maintenance.Failpoints.hitCallback("table.scan.after-plan")
-    readFilesIn(spark, m, files, deleteEntries(snapshotIn(m, snapshotId)))
+    readFilesIn(spark, m, files, snapshotIn(m, snapshotId).toSeq.flatMap(deleteEntries))
   }
 
   /**
@@ -702,17 +706,11 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       val stamped = added.map(_.copy(addedSeq = Some(snapId)))
       val newManifests = if (added.nonEmpty) carried :+ writeManifest(stamped) else carried
       // Delete manifests: carry the parent's forward (minus dropped key
-      // files), append a manifest for newly-staged delete keys.
-      val carriedDeletes: Seq[ManifestMeta] = parent.toSeq.flatMap(_.deletes).flatMap { m =>
+      // files; none is read when nothing is dropped), append a manifest for
+      // newly-staged delete keys.
+      val carriedDeletes: Seq[ManifestMeta] = parent.toSeq.flatMap(_.deletes).flatMap(m =>
         if (dropDeletePaths.isEmpty) Some(m)
-        else {
-          val entries = TableJson.readManifest(readString(fs, new Path(metadataDir, m.path)))
-          val kept = entries.filterNot(e => dropDeletePaths.contains(e.path))
-          if (kept.size == entries.size) Some(m)
-          else if (kept.isEmpty) None
-          else Some(writeManifest(kept))
-        }
-      }
+        else TokenTable.rewriteManifestEntries(fs, metadataDir, m, dropDeletePaths)._1)
       val newDeletes = carriedDeletes ++
         (if (addDeletes.nonEmpty)
           Seq(writeManifest(addDeletes.map(_.copy(addedSeq = Some(snapId)))))
@@ -952,39 +950,36 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * Returns deleted relative paths. Never deletes a file reachable from a
     * retained snapshot (ScalaCheck-tested invariant).
     *
-    * Past `gc.distributed-threshold` total manifest entries (default 10k)
-    * with an active SparkSession, the heavy parts run as Spark jobs — one
-    * task per manifest parses entries, one task per data/ job-prefix
-    * directory lists recursively, and orphans are subtracted and deleted in
-    * executors. The driver touches only metadata-scale state (manifest
-    * NAMES, first-level directory names, and the orphan list itself, which
-    * is small relative to the table on any maintained deployment) — at
-    * 10^6+ files a single-threaded manifest parse + recursive driver
-    * listing is the GC wall, the same one Iceberg's remove-orphans solves
-    * with a distributed action.
+    * Every part of the pass derives from one refreshed metadata value: the
+    * distinct manifests of the retained snapshots, their manifest lists,
+    * and the table's ledgers ([[Ledger.onDisk]]). Everything under a
+    * resumable ledger's staging prefix counts as reachable — a resume reuses
+    * its recorded files unchecked, and [[Ledger.record]] keeps them there —
+    * so no ledger unit is read.
     *
-    * The no-arg form applies the table's grace window ([[gcGraceMs]]):
-    * "unreachable from a retained snapshot" is necessary but NOT sufficient
-    * for dead — an in-flight writer stages output under `data/<jobId>` and
-    * externalizes its `snap-*` manifest list BEFORE its version-file commit
-    * lands, and a crashed run's ledger records staged files its resume will
-    * reuse verbatim. Deleting any of those mid-flight makes the next commit
-    * reference missing files. Only files older than the grace window are
-    * candidates (Iceberg's remove-orphans `olderThan`, same reason, same
-    * default). Callers that OWN the table exclusively (single-threaded
-    * maintenance gates, tests) may pass `graceMs = 0`. */
-  def removeOrphans(): Seq[String] = removeOrphans(gcGraceMs)
-
-  def removeOrphans(graceMs: Long): Seq[String] = {
-    refresh()
+    * Past `gc.distributed-threshold` total manifest entries (default 10k)
+    * with an active SparkSession, manifests are parsed, data/ listed and
+    * orphans subtracted and deleted in Spark tasks
+    * ([[distributedOrphanData]]): at 10^6+ files a driver-side parse and
+    * recursive listing is the GC wall, as in Iceberg's remove-orphans.
+    *
+    * By default the table's grace window applies ([[gcGraceMs]]): an
+    * in-flight writer stages output under `data/<jobId>` and externalizes
+    * its `snap-*` manifest list BEFORE its version-file commit lands, so
+    * only files older than the window are candidates (Iceberg's
+    * remove-orphans `olderThan`, same reason, same default). Callers that
+    * OWN the table exclusively (single-threaded maintenance gates, tests)
+    * may pass `graceMs = 0`. */
+  def removeOrphans(graceMs: Long = gcGraceMs): Seq[String] = {
+    val m = refresh()
+    val ledgers = Ledger.onDisk(this, m)
     val cutoff = System.currentTimeMillis() - graceMs
     // Delete key files live under data/ and their manifests under metadata/:
     // both are reachable exactly like data files, or GC would corrupt every
     // snapshot that still needs a pending delete applied.
-    val deadData = orphanData(delete = true, cutoff)
+    val deadData = orphanData(m, ledgers, delete = true, cutoff)
     val reachableManifests: Set[String] =
-      meta.snapshots.flatMap(s => s.manifests ++ s.deletes).map(_.path).toSet ++
-        meta.snapshots.flatMap(_.manifestList)
+      gcManifests(m).map(_.path).toSet ++ m.snapshots.flatMap(_.manifestList)
     // Crash leftovers of the commit protocol go too: an unpublished version
     // file, an unrenamed version hint and an abandoned slot claim — a claim
     // is held for milliseconds, so one past the grace window is dead and
@@ -996,101 +991,46 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       .filter(n => crashLeftover.matches(n) ||
         (n.startsWith("manifest-") || n.startsWith("snap-")) && !reachableManifests.contains(n))
     deadMeta.foreach(n => fs.delete(new Path(metadataDir, n), false))
-    deadData ++ deadMeta ++ sweepStaleLedgers(cutoff)
+    deadData ++ deadMeta ++ Ledger.sweepStale(this, ledgers.stale, cutoff)
   }
 
-  /** GC grace window in ms (`gc.grace-period-ms`, default 3 days — Iceberg's
-    * remove-orphans default): no file younger than this is ever GC'd, so
-    * in-flight staged writes, not-yet-referenced manifest lists, and
-    * crash-resume ledgers survive a concurrent GC as long as the writer
-    * commits (or the crash is resumed) within the window. */
+  /** GC grace window in ms (`gc.grace-period-ms`, default 3 days, Iceberg's
+    * remove-orphans default): no file younger than this is ever GC'd, so an
+    * in-flight writer or a stale crash-resume ledger survives a concurrent GC
+    * if it commits (or the crash is resumed) within the window. */
   def gcGraceMs: Long =
     meta.properties.get("gc.grace-period-ms").map(_.toLong)
       .getOrElse(3L * 24 * 3600 * 1000)
 
   /** Files present in data/ but unreachable from any retained snapshot and
     * older than the grace window. */
-  def orphanFiles(): Seq[String] = orphanFiles(gcGraceMs)
+  def orphanFiles(graceMs: Long = gcGraceMs): Seq[String] = {
+    val m = refresh()
+    orphanData(m, Ledger.onDisk(this, m), delete = false, System.currentTimeMillis() - graceMs)
+  }
 
-  def orphanFiles(graceMs: Long): Seq[String] =
-    orphanData(delete = false, System.currentTimeMillis() - graceMs)
+  /** The data and delete manifests of `m`'s retained snapshots, each once:
+    * carried-forward manifests appear in many snapshots. */
+  private def gcManifests(m: TableMetadata): Seq[ManifestMeta] =
+    m.snapshots.flatMap(s => s.manifests ++ s.deletes).distinctBy(_.path)
 
-  /** Total manifest entries above which GC fans out to Spark jobs. */
-  private def gcDistributedThreshold: Long =
-    meta.properties.get("gc.distributed-threshold").map(_.toLong).getOrElse(10000L)
-
-  /** Orphaned data-file paths (optionally deleting them where computed).
-    * Only files whose modification time precedes `cutoff` are candidates —
-    * the grace-window filter runs on the LISTED side (candidate deletions),
-    * never on the reachable side. Files recorded by a still-resumable
-    * ledger ([[ledgerProtectedFiles]]) count as reachable: a resumed run
-    * reuses those staged outputs verbatim, so deleting them while
-    * [[sweepStaleLedgers]] deliberately keeps the ledger would make the
-    * resume commit dangling paths. */
-  private def orphanData(delete: Boolean, cutoff: Long): Seq[String] = {
-    // distinct by path: carried-forward manifests appear in many snapshots
-    val manifestMetas: Seq[ManifestMeta] =
-      meta.snapshots.flatMap(s => s.manifests ++ s.deletes)
-        .groupBy(_.path).map(_._2.head).toSeq
-    val totalEntries = manifestMetas.map(_.addedFiles.toLong).sum
-    val (protectedByLedger, protectedPrefixes) = ledgerProtectedFiles()
+  /** Orphaned data-file paths, deleted where computed when `delete`. The
+    * `cutoff` filters the LISTED side (candidates), never the reachable one. */
+  private def orphanData(
+      m: TableMetadata, ledgers: Ledger.OnDisk, delete: Boolean, cutoff: Long): Seq[String] = {
+    val manifests = gcManifests(m)
+    val prefixes = ledgers.resumable.map(Ledger.stagingPrefix)
+    val threshold = m.properties.get("gc.distributed-threshold").map(_.toLong).getOrElse(10000L)
     val session = org.apache.spark.sql.SparkSession.getActiveSession
-    if (session.nonEmpty && totalEntries >= gcDistributedThreshold)
-      distributedOrphanData(session.get, manifestMetas.map(_.path), delete, cutoff,
-        protectedByLedger, protectedPrefixes)
+    if (session.nonEmpty && manifests.map(_.addedFiles.toLong).sum >= threshold)
+      distributedOrphanData(session.get, manifests.map(_.path), prefixes, delete, cutoff)
     else {
-      val reachable: Set[String] =
-        meta.snapshots.flatMap(manifestEntries).map(_.path).toSet ++
-          meta.snapshots.flatMap(deleteEntries).map(_.path) ++ protectedByLedger
+      val reachable = entriesOf(manifests).map(_.path).toSet
       val dead = listDataFiles(cutoff).filterNot(p =>
-        reachable.contains(p) || protectedPrefixes.exists(p.startsWith))
+        reachable.contains(p) || prefixes.exists(p.startsWith))
       if (delete) dead.foreach(deleteDataFile)
       dead
     }
-  }
-
-  /** Data files recorded in ledgers a crashed run can still RESUME (the
-    * stepId's embedded snapshot id is not older than the current snapshot).
-    * The resume path reuses recorded staged outputs verbatim without an
-    * existence check, so GC must treat them as reachable even though no
-    * snapshot references them yet — otherwise a post-grace sweep deletes
-    * the files while [[sweepStaleLedgers]] keeps the ledger, and the
-    * resumed commit references missing parquet. Ledgers with an OLDER
-    * embedded id cannot be resumed (a replan gets a fresh stepId) and are
-    * swept — files and record — in the same GC pass. Blob signatures are
-    * stripped, NOT verified: GC only needs path names, and over-protecting
-    * on an unverifiable blob is the conservative failure (the resume path
-    * still verifies). A unit that fails to PARSE (truncated blob, crashed
-    * mid-write, signature-envelope mismatch) protects conservatively too:
-    * the whole `data/<stepId>/` staging prefix of that ledger becomes
-    * reachable, because returning nothing would let GC delete staged files
-    * while [[sweepStaleLedgers]] keeps the ledger — the exact dangling-path
-    * failure this protection exists to prevent. Ledger count is bounded by
-    * crashed runs, so this is metadata-scale driver work.
-    * Returns (exact protected paths, protected path PREFIXES). */
-  private def ledgerProtectedFiles(): (Set[String], Set[String]) = {
-    val ledgerDir = new Path(metadataDir, "ledger")
-    val cur = meta.currentSnapshotId.getOrElse(return (Set.empty, Set.empty))
-    if (!fs.exists(ledgerDir)) return (Set.empty, Set.empty)
-    val paths = Set.newBuilder[String]
-    val prefixes = Set.newBuilder[String]
-    fs.listStatus(ledgerDir).toSeq
-      .filter(st => st.isDirectory &&
-        TokenTable.ledgerPlannedAt(st.getPath.getName).exists(_ >= cur))
-      .foreach { st =>
-        fs.listStatus(st.getPath).toSeq
-          .filter(u => u.isFile && u.getPath.getName.endsWith(".json"))
-          .foreach { u =>
-            val body = graft.maintenance.HmacSigner.stripUnverified(
-              readString(fs, u.getPath))
-            scala.util.Try(TableJson.readManifest(body).map(_.path)) match {
-              case scala.util.Success(ps) => paths ++= ps
-              case scala.util.Failure(_) =>
-                prefixes += s"data/${st.getPath.getName}/"
-            }
-          }
-      }
-    (paths.result(), prefixes.result())
   }
 
   /** The distributed GC body: reachable = flatMap over manifests (entries
@@ -1099,21 +1039,18 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * count), dead = listed.subtract(reachable), deleted per-partition in
     * executors. Deletion is idempotent, so a retried task is harmless. */
   private def distributedOrphanData(
-      spark: SparkSession, manifestNames: Seq[String], delete: Boolean,
-      cutoff: Long, protectedByLedger: Set[String],
-      protectedPrefixes: Set[String]): Seq[String] = {
+      spark: SparkSession, manifestNames: Seq[String], protectedPrefixes: Seq[String],
+      delete: Boolean, cutoff: Long): Seq[String] = {
     val sc = spark.sparkContext
     val fsBc = sc.broadcast(LocalFileBinding.forTasks(spark))
     val mdDirStr = metadataDir.toString
     val rootStr = root.toString
     val mSlices = math.max(1, math.min(manifestNames.size, sc.defaultParallelism * 2))
-    // ledger-protected staged files ride in as extra reachable paths: the
-    // set is bounded by crashed runs' outputs, metadata-scale either way
     val reachable = sc.parallelize(manifestNames, mSlices).flatMap { name =>
       val dir = new Path(mdDirStr)
       val tfs = fsBc.value.fileSystem(dir)
       TableJson.readManifest(readString(tfs, new Path(dir, name))).map(_.path)
-    } ++ sc.parallelize(protectedByLedger.toSeq, 1)
+    }
     val top = fs.listStatus(dataDir).toSeq
     val loose = top.filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
         st.getModificationTime < cutoff)
@@ -1129,10 +1066,8 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
         case (q, _, mtime) if mtime < cutoff => relativize(new Path(rootStr), q)
       }
     } ++ sc.parallelize(loose, 1)
-    // prefix-protected staging dirs (unparseable ledger units — conservative
-    // over-protection): tiny set, rides as a task-closure filter
-    val prefixesLocal = protectedPrefixes
-    val dead = listed.filter(p => !prefixesLocal.exists(p.startsWith))
+    // resumable staging prefixes: a crash-bounded set, in the task closure
+    val dead = listed.filter(p => !protectedPrefixes.exists(p.startsWith))
       .subtract(reachable)
     val out =
       if (delete) dead.mapPartitions { it =>
@@ -1144,42 +1079,8 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     out.collect().toSeq.sorted
   }
 
-  /** Sweep ledger directories abandoned by crashed runs: a stepId embeds the
-    * snapshot id it planned against (`…-snap<N>-…`), and once ANY newer
-    * commit lands, a resumed run replans and gets a fresh stepId — so a
-    * ledger whose embedded id is older than the current snapshot can never
-    * be resumed and would otherwise accumulate forever on busy tables.
-    * The grace cutoff additionally protects a LIVE run in that state (its
-    * plan was invalidated by a newer commit but it is still writing units
-    * before discovering the conflict). Liveness is judged by the NEWEST
-    * CHILD file's mtime (max'd with the directory's own, for an empty just-
-    * created ledger): directory mtimes move on child writes on local FS /
-    * HDFS but object stores have no directories and no mtime propagation,
-    * so keying off the directory entry alone would sweep an actively-
-    * written ledger there. One extra listing per candidate dir — the dir is
-    * listed for deletion anyway, and ledger count is crash-bounded. */
-  private def sweepStaleLedgers(cutoff: Long): Seq[String] = {
-    val ledgerDir = new Path(metadataDir, "ledger")
-    val cur = meta.currentSnapshotId.getOrElse(return Seq.empty)
-    if (!fs.exists(ledgerDir)) return Seq.empty
-    def newestTouch(st: org.apache.hadoop.fs.FileStatus): Long = {
-      val children = scala.util.Try(fs.listStatus(st.getPath).toSeq)
-        .getOrElse(Seq.empty)
-      (st.getModificationTime +: children.map(_.getModificationTime)).max
-    }
-    fs.listStatus(ledgerDir).toSeq
-      .filter(st => st.isDirectory &&
-        TokenTable.ledgerPlannedAt(st.getPath.getName).exists(_ < cur) &&
-        newestTouch(st) < cutoff)
-      .map { st =>
-        fs.delete(st.getPath, true)
-        s"metadata/ledger/${st.getPath.getName}"
-      }
-  }
-
-  def listDataFiles(): Seq[String] = listDataFiles(Long.MaxValue)
-
-  private def listDataFiles(cutoff: Long): Seq[String] = {
+  /** Data and delete-key files under data/ last modified before `cutoff`. */
+  def listDataFiles(cutoff: Long = Long.MaxValue): Seq[String] = {
     if (!fs.exists(dataDir)) return Seq.empty
     TokenTable.listParquetFast(fs, dataDir).collect {
       case (p, _, mtime) if mtime < cutoff => relativize(root, p)
@@ -1381,13 +1282,6 @@ object TokenTable {
     }
     buf.toSeq
   }
-
-  private val LedgerSnapshot = "-snap(\\d+)-".r
-
-  /** The snapshot id a ledger's stepId says it planned against
-    * (`…-snap<N>-…`), if it names one. */
-  private def ledgerPlannedAt(ledgerDirName: String): Option[Long] =
-    LedgerSnapshot.findFirstMatchIn(ledgerDirName).map(_.group(1).toLong)
 
   private[table] def relativize(root: Path, p: Path): String = {
     val rootStr = Path.getPathWithoutSchemeAndAuthority(root).toString

@@ -10,9 +10,20 @@ object PlanBridge {
   /** A session sharing `spark`'s state, cache and conf values, whose conf
     * changes stay its own. */
   def cloneSession(spark: SparkSession): SparkSession =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+    classic(spark).cloneSession()
+
+  /** Make `to`'s session conf exactly `from`'s plus `extra`, static and
+    * core keys included, as `cloneSession` does (`conf.set` rejects those). */
+  def copyConf(from: SparkSession, to: SparkSession, extra: Seq[(String, String)]): Unit = {
+    val want = classic(from).sessionState.conf.getAllConfs ++ extra
+    val conf = classic(to).sessionState.conf
+    (conf.getAllConfs.keySet -- want.keySet).foreach(conf.unsetConf)
+    want.foreach { case (k, v) => conf.setConfString(k, v) }
+  }
+
+  private def classic(spark: SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+    org.apache.spark.sql.classic.Dataset.ofRows(classic(spark), plan)
 }

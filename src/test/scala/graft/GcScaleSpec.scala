@@ -130,10 +130,10 @@ class GcScaleSpec extends SparkSpec {
     val root = tmpDir("gc-ledger-corrupt") + "/tbl"
     val t = SequenceGen.createTable(spark, root, 300, 2)
     val cur = t.metadata.currentSnapshotId.get
-    // a resumable ledger whose single unit blob is truncated garbage: the
-    // file names it recorded are unrecoverable, so GC must over-protect the
-    // ledger's entire data/<stepId>/ staging prefix — deleting any of it
-    // while sweepStaleLedgers keeps the ledger leaves the resume dangling
+    // a resumable ledger whose single unit blob is truncated garbage: GC
+    // reads no unit and keeps the ledger's whole data/<stepId>/ staging
+    // prefix — deleting any of it while GC keeps the ledger leaves the
+    // resume dangling
     val stepId = s"compact-snap$cur-corrupt"
     val ledgerP = Paths.get(root, s"metadata/ledger/$stepId")
     Files.createDirectories(ledgerP)
@@ -149,6 +149,39 @@ class GcScaleSpec extends SparkSpec {
     t.updateProperties(Map("gc.distributed-threshold" -> "1"))
     assert(!t.removeOrphans(0).contains(staged.path)) // distributed path agrees
     assert(Files.exists(p))
+  }
+
+  test("on a table with no snapshot, a resumable snap0 ledger keeps its staged files") {
+    val root = tmpDir("gc-ledger-nosnap") + "/tbl"
+    val t = TokenTable.create(spark, root)
+    // a merge into a just-created table plans at snapshot id 0; crashed
+    // after staging a unit, its ledger is resumable until the first commit
+    val stepId = "merge-snap0-crashed"
+    val staged = entry(s"$stepId/chunk-0-attempt", 0)
+    val p = Paths.get(root, staged.path)
+    Files.createDirectories(p.getParent)
+    Files.createFile(p)
+    new graft.maintenance.Ledger(t, stepId).record("chunk-0", Seq(staged))
+    assert(!t.removeOrphans(0).contains(staged.path), "GC deleted a resumable ledger's staged output")
+    assert(Files.exists(p))
+    assert(Files.exists(Paths.get(root, s"metadata/ledger/$stepId")))
+    // a file no ledger covers is still an orphan
+    val stray = Paths.get(root, entry("stray", 1).path)
+    Files.createDirectories(stray.getParent)
+    Files.createFile(stray)
+    assert(t.orphanFiles(0) == Seq(entry("stray", 1).path))
+  }
+
+  test("a ledger records only files under its step's staging prefix") {
+    val t = TokenTable.create(spark, tmpDir("gc-ledger-record") + "/tbl")
+    val ledger = new graft.maintenance.Ledger(t, "compact-snap0-x")
+    assert(ledger.stagingJobId("chunk-0").startsWith("compact-snap0-x/chunk-0-"))
+    val e = intercept[IllegalArgumentException](
+      ledger.record("chunk-0", Seq(entry("compact-snap0-xy/chunk-0", 0))))
+    assert(e.getMessage.contains("data/compact-snap0-x/"))
+    assert(ledger.completedUnits().isEmpty)
+    ledger.record("chunk-0", Seq(entry("compact-snap0-x/chunk-0-1", 0)))
+    assert(ledger.completedUnits().keySet == Set("chunk-0"))
   }
 
   test("grace window: fresh files and ledgers survive default GC; aged ones are swept") {

@@ -169,6 +169,62 @@ class IncrementalSpec extends SparkSpec {
     assert(out.filter($"doc_id" === "brand-new").count() == 1)
   }
 
+  test("streaming merge into a freshly created table commits its first trigger") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val root = tmpDir("inc-merge-fresh")
+    val t = TokenTable.create(spark, s"$root/tbl")
+    val mem = MemoryStream[(String, Seq[Int], Int, String)]
+    val df = mem.toDF().toDF("doc_id", "tokens", "n_tok", "source")
+    mem.addData(("m1", Seq(1, 2), 2, "web"), ("m2", Seq(3), 1, "code"))
+    val q = Incremental.streamMerge(df, s"$root/tbl", tmpDir("inc-merge-fresh-ckpt"))
+    q.processAllAvailable(); q.stop()
+    assert(q.exception.isEmpty, q.exception)
+    t.refresh()
+    assert(t.metadata.snapshots.exists(_.summary.get("stream-batch-id").contains("0")))
+    assert(t.scan(spark).select("doc_id").as[String].collect().sorted.toSeq == Seq("m1", "m2"))
+  }
+
+  test("sequential stream sinks on one session add at most one listener to the bus") {
+    import spark.implicits._
+    import org.apache.spark.graftbridge.ListenerBus
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val root = tmpDir("inc-listeners")
+    val t = TokenTable.create(spark, s"$root/tbl")
+    val ckpt = tmpDir("inc-listeners-ckpt")
+    val mem = MemoryStream[(String, Seq[Int], Int, String)]
+    val df = mem.toDF().toDF("doc_id", "tokens", "n_tok", "source")
+    val before = ListenerBus.size(spark.sparkContext)
+    (1 to 3).foreach { i =>
+      mem.addData((s"l$i", Seq(i), 1, "web"))
+      val q = Incremental.streamAppend(df, s"$root/tbl", ckpt)
+      q.processAllAvailable(); q.stop()
+    }
+    val added = ListenerBus.size(spark.sparkContext) - before
+    assert(added <= 1, s"three sink starts added $added listeners")
+    assert(t.refresh().snapshots.size == 3)
+  }
+
+  test("a stream sink's session takes the caller's conf as of each start") {
+    import spark.implicits._
+    import graft.table.{ForkFreeLocalFileSystem, LocalFileBinding}
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val df = MemoryStream[Int].toDF()
+    val key = "graft.test.sink-conf"
+    try {
+      spark.conf.set(key, "one")
+      assert(LocalFileBinding.rebind(df).sparkSession.conf.get(key) == "one")
+      spark.conf.set(key, "two")
+      val bound = LocalFileBinding.rebind(df).sparkSession
+      assert(bound.conf.get(key) == "two")
+      assert(bound.conf.get("fs.file.impl") == classOf[ForkFreeLocalFileSystem].getName)
+      spark.conf.unset(key)
+      assert(LocalFileBinding.rebind(df).sparkSession.conf.getOption(key).isEmpty)
+      // the caller's session never carries the binding
+      assert(spark.conf.getOption("fs.file.impl").isEmpty)
+    } finally spark.conf.unset(key)
+  }
+
   test("every stream sink: an empty micro-batch commits nothing; a replayed batch id is skipped") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.streaming.StreamingQuery

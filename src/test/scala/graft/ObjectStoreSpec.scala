@@ -90,7 +90,7 @@ class ObjectStoreSpec extends SparkSpec {
       properties = Map(ObjectStore.HmacKeyProperty -> keyB64))
     t.commit("append", t.stageWrite(SequenceGen.sequences(spark, 200), "seed"))
     val ledger = new Ledger(t, "step-x")
-    ledger.record("unit-0", t.liveFiles())
+    ledger.record("unit-0", t.stageWrite(t.scan(spark), ledger.stagingJobId("unit-0")))
     assert(ledger.completedUnits().keySet == Set("unit-0"))
     // flip one byte of the stored blob, bypassing the store
     val p = new Path(t.metadataDir, "ledger/step-x/unit-0.json")
@@ -110,7 +110,7 @@ class ObjectStoreSpec extends SparkSpec {
   test("unsigned tables keep plain-text checkpoints (back-compat)") {
     val t = SequenceGen.createTable(spark, tmpDir("os-plain") + "/tbl", 100, 2)
     val ledger = new Ledger(t, "step-y")
-    ledger.record("u0", t.liveFiles())
+    ledger.record("u0", t.stageWrite(t.scan(spark), ledger.stagingJobId("u0")))
     // the blob on disk is plain JSON, readable by older engines
     val raw = TokenTable.readString(t.fs, new Path(t.metadataDir, "ledger/step-y/u0.json"))
     assert(raw.trim.startsWith("["))

@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * every key-range plan samples, cuts and routes through the one planner
   * in `Clustering`: `murmurPreimages(` is called only by its route helper,
   * and `.sample(` appears only in its `sample` and in the k-means seeding
-  * of `AnnOps.ivfTopK`. */
+  * of `AnnOps.ivfTopK`. And only `Ledger.scala` knows the on-disk format of
+  * crash-resume state: the ledger directory name, the step id's
+  * `-snap<N>-` part and the paths built from a step id. */
 class RewriteGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -56,6 +58,12 @@ class RewriteGuardSpec extends AnyFunSuite {
 
   private val preimageCall = """(?<!def )\bmurmurPreimages\(""".r
   private val sampleCall = """\.sample\(""".r
+
+  /** What only `Ledger.scala` may spell out, each with its pattern. */
+  private val ledgerFormat = Seq(
+    "the ledger directory name" -> """"ledger"|\bledger/|/ledger\b""".r,
+    "the -snap<N>- step-id pattern" -> """-snap(?![a-zA-Z])""".r,
+    "a path built from a step id" -> """\$\{?stepId\}?/""".r)
 
   /** 0-based lines of `src` calling `re`, outside comments. */
   def callLines(src: String, re: Regex): Seq[Int] = codeMatches(src, re).map(_._2)
@@ -125,6 +133,21 @@ class RewriteGuardSpec extends AnyFunSuite {
     assert(callLines("""rows.sample(false, f, seed = 7).collect()""", sampleCall) == Seq(0))
   }
 
+  test("the ledger-format detector finds each fact outside comments") {
+    def found(src: String) = ledgerFormat.filter { case (_, re) => callLines(src, re).nonEmpty }.map(_._1)
+    assert(found("""new Path(metadataDir, "ledger")""") == Seq("the ledger directory name"))
+    assert(found("""s"metadata/ledger/${st.getPath.getName}"""") == Seq("the ledger directory name"))
+    assert(found("""private val LedgerSnapshot = "-snap(\\d+)-".r""") == Seq("the -snap<N>- step-id pattern"))
+    assert(found("""val id = s"$op-snap${m.currentSnapshotId.getOrElse(0L)}-$h"""") ==
+      Seq("the -snap<N>- step-id pattern"))
+    assert(found("""table.stageWrite(placed, s"$stepId/chunk-$i-${java.util.UUID.randomUUID()}")""") ==
+      Seq("a path built from a step id"))
+    assert(found("""prefixes += s"data/${stepId}/"""") == Seq("a path built from a step id"))
+    assert(found("""  * `metadata/ledger/<stepId>/` under `data/$stepId/` and `-snap0-`""").isEmpty)
+    assert(found("""Map("retained-snapshots" -> n, "published-snapshot" -> id)""").isEmpty)
+    assert(found("""val ledger = new Ledger(table, Ledger.stepId(op, m, hash))""").isEmpty)
+  }
+
   test("only the Clustering planner samples and routes key ranges in src/main") {
     val clustering = "graft/functions/ClusterExpressions.scala"
     val ann = "graft/text/AnnOps.scala"
@@ -166,5 +189,19 @@ class RewriteGuardSpec extends AnyFunSuite {
     assert(strayLedgers.isEmpty, s"a Ledger outside Maintenance.rewrite: ${at(strayLedgers)}")
     assert(strayCommits.isEmpty,
       s"a commit of replaced files outside Maintenance.rewrite: ${at(strayCommits)}")
+  }
+
+  test("only Ledger spells out the on-disk format of crash-resume state in src/main") {
+    val ledger = "graft/maintenance/Ledger.scala"
+    val stray = for {
+      (f, src) <- sources if f != ledger
+      (what, re) <- ledgerFormat
+      i <- callLines(src, re)
+    } yield s"$what at $f:${i + 1}"
+    assert(stray.isEmpty, s"crash-resume format outside Ledger: ${stray.mkString(", ")}")
+    val own = linesOf(ledger).mkString("\n")
+    ledgerFormat.foreach { case (what, re) =>
+      assert(callLines(own, re).nonEmpty, s"Ledger.scala does not define $what")
+    }
   }
 }

@@ -47,4 +47,11 @@ class TokenTableSourceSpec extends SparkSpec {
     val odd = df.filter(pmod(xxhash64(col("doc_id")), lit(2)) === 0)
     assert(odd.count() > 0 && odd.count() < 5000)
   }
+
+  test("a table with no snapshot reads as empty") {
+    val root = tmpDir("tts-empty") + "/tbl"
+    graft.table.TokenTable.create(spark, root)
+    GraftTableSource.install(spark)
+    assert(GraftTableSource.table(spark, root).filter(col("n_tok") > 3).count() == 0)
+  }
 }

@@ -166,6 +166,26 @@ class TokenTableSpec extends SparkSpec {
     out.unpersist()
   }
 
+  test("merge into a table with no snapshot: eager inserts the debounced batch") {
+    import spark.implicits._
+    val t = TokenTable.create(spark, tmpDir("tt-merge-empty") + "/tbl")
+    assert(t.liveFiles().isEmpty && t.scan(spark).isEmpty)
+    intercept[RuntimeException](t.liveFiles(Some(1L)))
+    // compact and the predicate delete have nothing to rewrite yet
+    assert(Maintenance.compact(spark, t).isEmpty)
+    assert(Maintenance.deleteWhere(spark, t, Maintenance.DocIdBetween("a", "z")).isEmpty)
+    val batch = Seq(
+      ("doc-a", Seq(1, 2), 2, "web", 1L, "upsert"),
+      ("doc-a", Seq(3), 1, "code", 2L, "upsert"),
+      ("doc-b", Seq(4), 1, "web", 1L, "upsert"),
+      ("doc-c", Seq.empty[Int], 0, "web", 1L, "delete"))
+      .toDF("doc_id", "tokens", "n_tok", "source", "_seq", "_op")
+    Maintenance.mergeInto(spark, t, batch)
+    val out = t.scan(spark).orderBy("doc_id").as[(String, Seq[Int], Int, String)].collect()
+    assert(out.toSeq == Seq(("doc-a", Seq(3), 1, "code"), ("doc-b", Seq(4), 1, "web")))
+    assert(t.metadata.snapshots.size == 1)
+  }
+
   test("merge into: match-only never inserts") {
     import spark.implicits._
     val root = tmpDir("tt-merge-mo")

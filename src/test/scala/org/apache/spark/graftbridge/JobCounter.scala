@@ -24,3 +24,9 @@ object JobCounter {
     } finally sc.removeSparkListener(listener)
   }
 }
+
+/** The number of listeners on a SparkContext's bus (`listenerBus` is
+  * private[spark]). */
+object ListenerBus {
+  def size(sc: SparkContext): Int = sc.listenerBus.listeners.size()
+}
