@@ -532,12 +532,22 @@ object Maintenance {
    * rows past this merge's keys — without that check a concurrent rewrite
    * would silently resurrect deleted rows and un-do updates.
    *
-   * File shape: a batch whose planned size is at most one target file (a
-   * micro-batch) is debounced into ONE partition, so it commits one key
-   * file and at most one data file, both with stats folded by the writer
-   * — no range or stats job. A batch of unknown or larger planned size
-   * keeps the debounce's shuffle partitioning. Returns None, and commits
-   * nothing, for an empty batch (zero staged keys).
+   * File shape: the debounced batch is staged by ONE write, split on the
+   * derived flag `_op = 'upsert'` (null counts as false). Files under the
+   * flag's `true` directory hold the surviving rows and are both data files
+   * and delete-key entries of the commit; files under `false` hold the
+   * batch's delete keys, with the payload columns nulled, and are delete-key
+   * entries only. Both kinds carry the commit's sequence, and a delete
+   * applies only to strictly lower sequences, so a file's keys never mask
+   * its own rows. A batch whose planned size is at most one target file (a
+   * micro-batch) is collapsed to one partition BEFORE the debounce: a single
+   * partition already satisfies the aggregate's clustering, so the merge
+   * runs one Spark job (the write), with no exchange, and commits at most
+   * one file of each kind (per partition tuple on a partitioned table),
+   * stats folded by the writer. A batch of unknown or
+   * larger planned size keeps the debounce's shuffle. Nothing is cached: the
+   * write is the batch's only consumer. Returns None, and commits nothing,
+   * for an empty batch.
    */
   def mergeMor(
       spark: SparkSession,
@@ -546,31 +556,22 @@ object Maintenance {
       extraSummary: Map[String, String] = Map.empty): Option[Snapshot] = {
     validateMergeBatch(batch)
     val plannedBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-    val debouncedAll = debounceBatch(batch)
-    // Cached: the staged keys and the appended rows come from ONE
-    // evaluation of the batch. The partition count is fixed before the
-    // cache, which AQE cannot coalesce afterwards.
-    val debounced =
-      (if (plannedBytes <= DefaultTargetFileBytes) debouncedAll.coalesce(1) else debouncedAll)
-        .cache()
-    try {
-      val jobId = s"merge-mor-${java.util.UUID.randomUUID()}"
-      // the debounce output is unique per doc_id by construction — skip
-      // stageDeleteKeys' dedup exchange
-      val keys = table.stageDeleteKeys(
-        debounced.select(col("doc_id")), jobId, assumeDistinct = true)
-      // no keys: an empty batch, and no row to append either
-      if (keys.isEmpty) None
-      else {
-        val rows = debounced.filter(col("_op") === "upsert").drop("_op")
-        val added = table.stageWrite(rows, jobId)
-        Some(table.commit("merge-mor", added,
-          addDeletes = keys,
-          summary = Map(
-            "rule" -> "eager-mor",
-            "delete-keys" -> keys.map(_.records).sum.toString) ++ extraSummary))
-      }
-    } finally debounced.unpersist()
+    val debounced = debounceBatch(
+      if (plannedBytes <= DefaultTargetFileBytes) batch.coalesce(1) else batch)
+    val upsert = "_upsert"
+    val isUpsert = coalesce(col("_op") === "upsert", lit(false))
+    def payload(c: String) = when(isUpsert, col(c)).as(c)
+    val staged = table.stageWrite(
+      debounced.select(col("doc_id"), payload("tokens"), payload("n_tok"), payload("source"),
+        isUpsert.as(upsert)),
+      s"merge-mor-${java.util.UUID.randomUUID()}", splitBy = Some(upsert))
+    // nothing staged: an empty batch
+    if (staged.isEmpty) None
+    else Some(table.commit("merge-mor", staged.filter(TokenTable.stagedUnder(_, upsert)),
+      addDeletes = staged,
+      summary = Map(
+        "rule" -> "eager-mor",
+        "delete-keys" -> staged.map(_.records).sum.toString) ++ extraSummary))
   }
 
   /**

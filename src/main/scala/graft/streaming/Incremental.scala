@@ -42,13 +42,10 @@ object Incremental {
         (snapshotId.toString +: exclude.toSeq.sorted).mkString("\n").getBytes("UTF-8"))
   }
 
-  /** Data files present in the current snapshot but not in `sinceSnapshot`
-    * (None = everything). This is a pure manifest diff — no data IO. */
-  def newFilesSince(table: TokenTable, sinceSnapshot: Option[Long]): Seq[DataFileMeta] =
-    newFilesSince(table, table.metadata, sinceSnapshot)
-
-  /** Snapshot-consistent form: both sides of the diff come from the caller's
-    * immutable metadata view `m`, never the volatile current. */
+  /** Data files present in `m`'s current snapshot but not in
+    * `sinceSnapshot` (None = everything). This is a pure manifest diff — no
+    * data IO — and both sides of it come from the caller's immutable
+    * metadata view `m`, never the volatile current. */
   def newFilesSince(
       table: TokenTable, m: graft.table.TableMetadata,
       sinceSnapshot: Option[Long]): Seq[DataFileMeta] = {
@@ -126,25 +123,29 @@ object Incremental {
     * The sink runs no job of its own: each op commits nothing for an empty
     * batch, and learns that from its own work. The query runs on a clone of
     * the stream's session bound to [[graft.table.LocalFileBinding]], so its
-    * offset, commit and source logs open local files like the table does. */
+    * offset, commit and source logs open local files like the table does.
+    * The table is loaded once per query start; each trigger refreshes that
+    * handle, and the replay check and the op read the refreshed metadata. */
   private def idempotentBatchSink(
       stream: DataFrame, tableRoot: String, checkpointDir: String, trigger: Trigger)(
       op: (TokenTable, DataFrame, Map[String, String]) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    LocalFileBinding.rebind(stream).writeStream
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val bound = LocalFileBinding.rebind(stream)
+    val t = TokenTable.load(bound.sparkSession, tableRoot)
+    bound.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // set by the query on the thread that runs its batches
         val streamId = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
-        val t = TokenTable.load(batch.sparkSession, tableRoot)
-        val already = t.metadata.snapshots.exists { s =>
+        val already = t.refresh().snapshots.exists { s =>
           s.summary.get(BatchIdKey).contains(batchId.toString) &&
             s.summary.get(StreamIdKey).forall(_ == streamId)
         }
         if (!already) op(t, batch, Map(BatchIdKey -> batchId.toString, StreamIdKey -> streamId))
       }
       .start()
+  }
 
   private val BatchIdKey = "stream-batch-id"
   private val StreamIdKey = "stream-id"
@@ -191,8 +192,9 @@ object Incremental {
     * would rewrite the same hot files every few seconds, while here
     * compaction retires the accumulated delete keys on ITS schedule
     * (idempotent per batch id like every stream sink here). A micro-batch
-    * planned within one target file commits one key file and one data file;
-    * an empty one commits nothing. */
+    * planned within one target file runs one Spark job, one write whose
+    * upsert file is both a data file and a key file, plus one key-only file
+    * when the batch deletes; an empty one commits nothing. */
   def streamMergeMor(
       stream: DataFrame,
       tableRoot: String,

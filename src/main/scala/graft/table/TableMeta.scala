@@ -135,9 +135,11 @@ final case class Snapshot(
     manifests: Seq[ManifestMeta],
     summary: Map[String, String],
     // Merge-on-read equality-delete manifests (absent before the feature and
-    // on snapshots with no pending deletes). Each entry lists delete key
-    // files — parquet of doc_id keys — whose addedSeq is the delete's
-    // sequence number; a delete applies to data files with a smaller seq.
+    // on snapshots with no pending deletes). Each entry is a parquet file
+    // whose doc_id column holds the keys, with the delete's sequence number
+    // as addedSeq; a delete applies to data files with a smaller seq. An
+    // entry may also be a data file of the same commit (a merge-on-read
+    // upsert's rows are their own keys), listed in both manifests.
     deleteManifests: Option[Seq[ManifestMeta]] = None,
     // Where this snapshot's manifest list lives on disk (relative to
     // metadata/). Snapshots are immutable, so the list file is written

@@ -492,8 +492,10 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * schema and every later scan of the table fails — corruption by append.
     * Purely an analysis-time projection: internal rewrite paths
     * (compact/cluster/merge outputs re-read from the table) resolve to
-    * all-identity and cost nothing at runtime. */
-  private def conformToSchema(df: DataFrame, schema: StructType): DataFrame = {
+    * all-identity and cost nothing at runtime. `extra` columns pass through
+    * unchanged after the table's. */
+  private def conformToSchema(
+      df: DataFrame, schema: StructType, extra: Seq[String] = Seq.empty): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
     import org.apache.spark.sql.graftbridge.ColumnBridge
     // nullability is declarative here (writes never enforced it; parquet
@@ -507,7 +509,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       case other => other
     }
     val byName = df.schema.fields.map(f => f.name -> f).toMap
-    val unknown = df.columns.filterNot(schema.fieldNames.contains)
+    val unknown = df.columns.filterNot(c => schema.fieldNames.contains(c) || extra.contains(c))
     require(unknown.isEmpty,
       s"batch has columns not in the table schema: ${unknown.mkString(", ")} " +
         s"(table columns: ${schema.fieldNames.mkString(", ")})")
@@ -534,36 +536,43 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       }
     }
     // fast path: same names, order, and physical types → no projection
-    val same = df.schema.fields.length == schema.fields.length &&
-      df.schema.fields.zip(schema.fields).forall { case (a, b) =>
-        a.name == b.name && relax(a.dataType) == relax(b.dataType) }
-    if (same) df else df.select(cols.toIndexedSeq: _*)
+    val same = df.columns.toSeq == schema.fieldNames.toSeq ++ extra &&
+      schema.fields.forall(f => relax(byName(f.name).dataType) == relax(f.dataType))
+    if (same) df else df.select((cols.toIndexedSeq ++ extra.map(col)): _*)
   }
 
   /** Stage a DataFrame into data/ under a unique job prefix; returns file metas
     * with per-file stats folded by the writer. No snapshot is committed —
-    * callers record staged units in the ledger and commit atomically at the end. */
-  def stageWrite(dfIn: DataFrame, jobId: String): Seq[DataFileMeta] = {
-    val df = conformToSchema(dfIn, schema)
+    * callers record staged units in the ledger and commit atomically at the end.
+    *
+    * `splitBy` names a non-null boolean column of `dfIn` outside the table
+    * schema: it splits the staged files into `<splitBy>=true/` and
+    * `<splitBy>=false/` directories, ahead of any partition directory. It
+    * is written into no file and is part of no file's partition tuple;
+    * [[TokenTable.stagedUnder]] tells the two kinds of file apart. */
+  def stageWrite(
+      dfIn: DataFrame, jobId: String, splitBy: Option[String] = None): Seq[DataFileMeta] = {
+    val df = conformToSchema(dfIn, schema, splitBy.toSeq)
     val stagingDir = new Path(dataDir, jobId)
     val spec = meta.spec
+    val partitionCols = splitBy.toSeq ++ spec.map(Partitioning.partitionColName)
     val staged =
-      if (spec.isEmpty) writeStaged(df, stagingDir)
+      if (partitionCols.isEmpty) writeStaged(df, stagingDir)
       else {
         // Partition-aligned write: derived `_p_*` columns drive partitionBy so
         // every output file holds exactly ONE partition tuple; the original
         // data columns stay in the file (identity values are duplicated into
         // `_p_*`, never moved), so readers are unchanged. The tuple is
         // recovered from the directory path below and recorded per file.
-        // sortWithinPartitions(_p.. , doc_id): the dynamic-partition writer
-        // requires rows sorted by partition expressions — pre-sorting with
-        // doc_id as a tiebreaker satisfies that requirement (no second sort)
-        // AND keeps each file's doc range narrow for stats pruning.
+        // sortWithinPartitions(partition columns, doc_id): the
+        // dynamic-partition writer requires rows sorted by partition
+        // expressions — pre-sorting with doc_id as a tiebreaker satisfies
+        // that requirement (no second sort) AND keeps each file's doc range
+        // narrow for stats pruning.
         val stamped = Partitioning.withPartitionCols(df, spec)
-        val sortCols = spec.map(f => col(Partitioning.partitionColName(f))) ++
-          (if (df.columns.contains("doc_id")) Seq(col("doc_id")) else Seq.empty)
-        writeStaged(stamped.sortWithinPartitions(sortCols: _*), stagingDir,
-          spec.map(Partitioning.partitionColName))
+        val sortCols = (partitionCols ++
+          (if (df.columns.contains("doc_id")) Seq("doc_id") else Seq.empty)).map(col)
+        writeStaged(stamped.sortWithinPartitions(sortCols: _*), stagingDir, partitionCols)
           .map(f => f.copy(partition = Partitioning.partitionFromPath(f.path)))
       }
     staged.map(_.copy(schemaId = Some(meta.schemaIdNow)))
@@ -593,18 +602,8 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * callers pass the entries to commit(addDeletes = …). Cost is
     * O(deleted keys), never O(table): the whole point of the MoR path. */
   def stageDeleteKeys(keys: DataFrame, jobId: String): Seq[DataFileMeta] =
-    stageDeleteKeys(keys, jobId, assumeDistinct = false)
-
-  /** `assumeDistinct = true` skips the dedup exchange — only for callers
-    * whose key frame is unique by construction (e.g. the output of the
-    * merge debounce, a groupBy on doc_id). Duplicate keys staged by a
-    * violating caller would still delete correctly (equality-delete
-    * semantics), just with redundant key rows. */
-  def stageDeleteKeys(
-      keys: DataFrame, jobId: String, assumeDistinct: Boolean): Seq[DataFileMeta] = {
-    val cast = keys.select(col("doc_id").cast("string"))
-    writeStaged(if (assumeDistinct) cast else cast.distinct(), new Path(dataDir, s"deletes/$jobId"))
-  }
+    writeStaged(keys.select(col("doc_id").cast("string")).distinct(),
+      new Path(dataDir, s"deletes/$jobId"))
 
   def writeManifest(files: Seq[DataFileMeta]): ManifestMeta =
     TokenTable.writeManifestFile(fs, metadataDir, files)
@@ -1183,6 +1182,11 @@ object TokenTable {
     * committed later (higher sequence) and its doc range meets `f`'s. */
   def deleteApplies(d: DataFileMeta, f: DataFileMeta): Boolean =
     d.seqOr0 > f.seqOr0 && d.maxDocId >= f.minDocId && d.minDocId <= f.maxDocId
+
+  /** Whether `f`, staged by [[TokenTable.stageWrite]] with `splitBy =
+    * Some(column)`, holds the rows whose `column` was true. */
+  def stagedUnder(f: DataFileMeta, column: String): Boolean =
+    f.path.contains(s"/$column=true/")
 
   /** The sequence `seqs` maps `path` to; a path with no entry raises an
     * error instead of yielding null (a null sequence would make the delete

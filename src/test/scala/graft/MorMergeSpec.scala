@@ -69,7 +69,7 @@ class MorMergeSpec extends SparkSpec {
     assert(during == before || during == after, s"torn read: $during, before $before, after $after")
   }
 
-  test("a small MoR batch commits one data file and one key file with footer-exact stats") {
+  test("a small MoR batch commits one data+key file and one key-only file, footer-exact") {
     import org.apache.hadoop.fs.Path
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -77,19 +77,25 @@ class MorMergeSpec extends SparkSpec {
     val src = tmpDir("mor-one-file-src")
     batch(t).write.mode("overwrite").parquet(src)
     val b = spark.read.parquet(src) // planned size known: a few KB of parquet
+    val nDeletes = b.filter(col("_op") === "delete").count()
+    assert(nDeletes > 0)
     val seedPaths = t.liveFiles().map(_.path).toSet
     val snap = Maintenance.mergeMor(spark, t, b)
     assert(snap.nonEmpty)
     val added = t.liveFiles().filterNot(f => seedPaths.contains(f.path))
     val keys = t.deleteEntries(snap.get)
     assert(added.size == 1, s"data files: ${added.map(_.path)}")
-    assert(keys.size == 1, s"key files: ${keys.map(_.path)}")
+    assert(keys.size == 2, s"key files: ${keys.map(_.path)}")
     // the data file's write-time stats equal a scan of it on every field
     val a = added.head
     assert(Seq(a.copy(schemaId = None, addedSeq = None)) ==
       StatsOracle(spark, t.root, new Path(t.root, a.path).getParent))
-    // the key file's range and count equal its parquet footer
-    val k = keys.head
+    // the data file is one of the commit's key entries, with the same meta
+    assert(keys.contains(a), s"data file ${a.path} is not a key entry: ${keys.map(_.path)}")
+    // the other entry holds the batch's delete keys only: its range and
+    // count equal its parquet footer, and its payload columns are null
+    val k = keys.filterNot(_ == a).head
+    assert(k.records == nDeletes)
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
       new Path(t.root, k.path), spark.sessionState.newHadoopConf()))
     try {
@@ -102,10 +108,82 @@ class MorMergeSpec extends SparkSpec {
       // key files are written with the table's codec, like data files
       assert(blocks.get(0).getColumns.get(0).getCodec.name == "ZSTD")
     } finally reader.close()
+    assert(spark.read.parquet(new Path(t.root, k.path).toString)
+      .filter(col("tokens").isNotNull || col("n_tok").isNotNull || col("source").isNotNull)
+      .isEmpty)
     // and the merge still equals the copy-on-write result
     val tCow = fresh("mor-one-file-cow")
     Maintenance.mergeInto(spark, tCow, b)
     assert(checksum(t.scan(spark)) == checksum(tCow.scan(spark)))
+  }
+
+  test("a planned-small MoR merge runs one Spark job; an empty one commits nothing") {
+    import org.apache.spark.graftbridge.JobCounter
+    val t = fresh("mor-jobs")
+    val src = tmpDir("mor-jobs-src")
+    batch(t).write.mode("overwrite").parquet(src)
+    val b = spark.read.parquet(src)
+    val (snap, jobs) = JobCounter.jobsOf(spark.sparkContext)(Maintenance.mergeMor(spark, t, b))
+    assert(snap.nonEmpty)
+    assert(jobs == 1, s"a planned-small merge ran $jobs jobs")
+    // an empty micro-batch: a schema-only parquet file
+    val emptySrc = tmpDir("mor-jobs-empty")
+    b.filter(lit(false)).write.mode("overwrite").parquet(emptySrc)
+    val empty = spark.read.parquet(emptySrc)
+    val before = t.refresh().currentSnapshotId
+    val (none, emptyJobs) =
+      JobCounter.jobsOf(spark.sparkContext)(Maintenance.mergeMor(spark, t, empty))
+    assert(none.isEmpty)
+    assert(emptyJobs <= 1, s"an empty merge ran $emptyJobs jobs")
+    assert(t.refresh().currentSnapshotId == before)
+  }
+
+  test("a file listed as both data and delete key stays until neither manifest lists it") {
+    import org.apache.hadoop.fs.Path
+    val t = fresh("mor-both")
+    def rows(df: DataFrame): Map[String, (Seq[Int], String)] =
+      df.select("doc_id", "tokens", "source").collect().map(r =>
+        r.getString(0) -> (r.getSeq[Int](1).toSeq, r.getString(2))).toMap
+    // last-write-wins model: the batch holds one row per doc_id
+    val b = batch(t)
+    val model = b.collect().foldLeft(rows(t.scan(spark))) { (m, r) =>
+      val doc = r.getAs[String]("doc_id")
+      if (r.getAs[String]("_op") == "upsert")
+        m + (doc -> (r.getSeq[Int](r.fieldIndex("tokens")).toSeq, r.getAs[String]("source")))
+      else m - doc
+    }
+    def check(step: String): Unit = assert(rows(t.scan(spark)) == model, s"after $step")
+    val snap = Maintenance.mergeMor(spark, t, b).get
+    val seq = snap.snapshotId
+    val both = t.liveFiles().filter(_.seqOr0 == seq).map(_.path)
+    assert(both.size == 1 && t.deleteEntries(snap).exists(_.path == both.head))
+    val path = new Path(t.root, both.head)
+    def listedAsData = t.refresh().snapshots.exists(s => t.manifestEntries(s).exists(_.path == both.head))
+    def listedAsKey = t.metadata.snapshots.exists(s => t.deleteEntries(s).exists(_.path == both.head))
+    check("the merge")
+
+    // compaction replaces the file while its keys are still pending
+    Maintenance.compact(spark, t, targetFileBytes = 4 << 20, smallFileThreshold = Some(64 << 20))
+    assert(!t.liveFiles().exists(_.path == both.head), "compaction kept the file")
+    assert(t.deleteEntriesOf(t.metadata).exists(_.path == both.head))
+    check("compaction")
+    t.expireSnapshots(1)
+    t.removeOrphans(0)
+    assert(!listedAsData && listedAsKey)
+    assert(t.fs.exists(path), "GC removed a key file the current snapshot lists")
+    check("compaction and GC")
+
+    // retiring the keys leaves the file listed only by older snapshots
+    assert(Maintenance.materializeDeletes(spark, t).nonEmpty)
+    assert(t.deleteEntriesOf(t.refresh()).isEmpty)
+    check("materializeDeletes")
+    t.removeOrphans(0)
+    assert(listedAsKey && t.fs.exists(path), "GC removed a key file a retained snapshot lists")
+    t.expireSnapshots(1)
+    t.removeOrphans(0)
+    assert(!listedAsData && !listedAsKey)
+    assert(!t.fs.exists(path), "GC kept a file no manifest lists")
+    check("expiry and GC")
   }
 
   test("delete key files honour the table's write.parquet.codec") {
@@ -304,7 +382,9 @@ class MorMergeSpec extends SparkSpec {
       assert(changes == expected, s"changelog $label")
       if (k + 1 == 2 || k + 1 == 6) jobs += (k + 1) -> fullScanJobs()
     }
-    assert(t.deleteEntries(t.metadata.currentSnapshot.get).size == commits.size)
+    // every commit's key entries stay pending: one per file it wrote
+    assert(t.deleteEntries(t.metadata.currentSnapshot.get).map(_.seqOr0).distinct.size ==
+      commits.size)
     val pending = t.metadata.currentSnapshotId
     Maintenance.materializeDeletes(spark, t)
     assert(t.metadata.currentSnapshot.forall(_.deletes.isEmpty), "key files left pending")
