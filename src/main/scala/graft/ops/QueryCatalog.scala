@@ -48,7 +48,7 @@ object QueryCatalog {
     val cols = Seq("doc_id", "n_chars", "lang", "source").map(col)
     tbl(s, dir, "documents").select(cols: _*)
       .write.mode("overwrite").option("header", "true").csv(tmp)
-    graft.sources.FileSource.read(s, s"$tmp/*.csv", schema = Some(docMetaSchema))
+    graft.sources.FileSource.read(s, tmp, format = Some("csv"), schema = Some(docMetaSchema))
       .select(cols: _*)
   }
 
@@ -57,7 +57,7 @@ object QueryCatalog {
     val tmp = TempDir("graft-src-jsonl").toString
     val cols = Seq("doc_id", "n_chars", "lang", "source").map(col)
     tbl(s, dir, "documents").select(cols: _*).write.mode("overwrite").json(tmp)
-    graft.sources.FileSource.read(s, s"$tmp/*.json", format = Some("jsonl"),
+    graft.sources.FileSource.read(s, tmp, format = Some("jsonl"),
       schema = Some(docMetaSchema)).select(cols: _*)
   }
 
@@ -70,7 +70,7 @@ object QueryCatalog {
     tbl(s, dir, "documents")
       .select(concat(col("doc_id"), lit("|"), col("lang"), lit("|"), col("source")).as("value"))
       .write.mode("overwrite").text(tmp)
-    graft.sources.FileSource.read(s, s"$tmp/*.txt")
+    graft.sources.FileSource.read(s, tmp, format = Some("txt"))
   }
 
   /** FileExtractor YAML codec (files.py:365-374): whole-file YAML documents

@@ -82,8 +82,8 @@ object LocalFileBinding {
     conf
   }
 
-  /** A bound copy of the session's Hadoop conf. */
-  private def hadoopConf(spark: SparkSession): Configuration = bind(spark.sessionState.newHadoopConf())
+  /** A bound copy of the session's Hadoop conf, for a read the driver makes itself. */
+  private[graft] def hadoopConf(spark: SparkSession): Configuration = bind(spark.sessionState.newHadoopConf())
 
   /** The file system of `path` under a bound copy of the session's conf. */
   def fileSystem(spark: SparkSession, path: Path): FileSystem = path.getFileSystem(hadoopConf(spark))

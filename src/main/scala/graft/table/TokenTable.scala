@@ -2,10 +2,30 @@ package graft.table
 
 import java.util.UUID
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.parquet.io.api.Binary
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Alias, BoundReference, Cast,
+  InterpretedUnsafeProjection, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetReadSupport,
+  VectorizedParquetRecordReader}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.maintenance.Ledger
 
@@ -261,6 +281,8 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
   def planFilesForKey(docId: String): Seq[DataFileMeta] = planFilesForKeyIn(meta, docId)
 
   private def planFilesForKeyIn(m: TableMetadata, docId: String): Seq[DataFileMeta] = {
+    // no row's doc_id equals a null key
+    if (docId == null) return Seq.empty
     val bucketFields = m.spec.filter(f => f.transform == "bucket" && f.column == "doc_id")
     val docIdType = schemaOf(m)("doc_id").dataType
     liveFiles(m).filter { f =>
@@ -274,12 +296,114 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     }
   }
 
-  /** Point lookup through bucket + range pruning (pending MoR deletes
-    * applied like any scan). */
+  /** Point lookup through bucket + range pruning, with pending MoR deletes
+    * applied like any scan: the rows of `scan(spark)` whose `doc_id` equals
+    * `docId` (none for a null key), read in the metadata the call pins.
+    *
+    * When the planned files and the key files that may delete the key fit
+    * in one Spark read split — their bytes plus
+    * `spark.sql.files.openCostInBytes` per file are at most
+    * `spark.sql.files.maxPartitionBytes` — they are read on the driver, at
+    * call time, and the result is a DataFrame over a local relation: a
+    * projection or filter over it folds into the local data, so collecting
+    * it runs no Spark job. A larger plan is read by a Spark job, as a scan
+    * is. */
   def lookup(spark: SparkSession, docId: String): DataFrame = {
     val m = meta
-    readFilesIn(spark, m, planFilesForKeyIn(m, docId), deleteEntriesOf(m))
-      .filter(col("doc_id") === docId)
+    val files = planFilesForKeyIn(m, docId)
+    val deletes = deleteEntriesOf(m)
+    val keyFiles = deletes.filter(d =>
+      files.exists(deleteApplies(d, _)) && d.minDocId <= docId && d.maxDocId >= docId)
+    val conf = spark.sessionState.conf
+    if ((files ++ keyFiles).map(_.bytes + conf.filesOpenCostInBytes).sum <= conf.filesMaxPartitionBytes)
+      lookupOnDriver(spark, m, docId, files, keyFiles)
+    else readFilesIn(spark, m, files, deletes).filter(col("doc_id") === docId)
+  }
+
+  /** [[lookup]] of `files` read on the driver. Each file is probed on its
+    * `doc_id` column alone; a file that holds the key is dropped when a key
+    * file that applies to it ([[TokenTable.deleteApplies]]) holds the key
+    * too, and only the files left decode their other columns. */
+  private def lookupOnDriver(
+      spark: SparkSession, m: TableMetadata, docId: String,
+      files: Seq[DataFileMeta], keyFiles: Seq[DataFileMeta]): DataFrame = {
+    val conf = LocalFileBinding.hadoopConf(spark)
+    parquetReadConfs.foreach(k => conf.set(k, spark.conf.get(k)))
+    val holdsKey = scala.collection.mutable.Map.empty[String, Boolean]
+    def holds(f: DataFileMeta, keyColumn: StructField): Boolean =
+      holdsKey.getOrElseUpdate(f.path, {
+        var hit = false
+        readKeyRows(conf, f, StructType(Seq(keyColumn)), keyColumn.name, docId) { _ =>
+          hit = true; false
+        }
+        hit
+      })
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val rows = files.flatMap { f =>
+      val v = versionRead(m, f.schemaIdOr0, tz)
+      val physical = relax(v.physical).asInstanceOf[StructType]
+      val keyColumn = physical(v.docIdColumn)
+      if (!holds(f, keyColumn) ||
+          keyFiles.exists(d => deleteApplies(d, f) && holds(d, StructField("doc_id", StringType)))) Nil
+      else {
+        val project = InterpretedUnsafeProjection.createProjection(v.columns.map(_.transform {
+          case a: UnresolvedAttribute =>
+            val i = physical.fieldIndex(a.nameParts.head)
+            BoundReference(i, physical(i).dataType, nullable = true)
+        }))
+        val out = Seq.newBuilder[InternalRow]
+        readKeyRows(conf, f, physical, v.docIdColumn, docId) { r => out += project(r).copy(); true }
+        out.result()
+      }
+    }
+    val schema = relax(schemaOf(m)).asInstanceOf[StructType]
+    PlanBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+  }
+
+  /** Calls `onRow` with each row of file `f` whose string column
+    * `keyColumn` equals `key`, read on the driver in `requested`, a subset
+    * of the file's columns that holds `keyColumn`. The key is pushed down,
+    * so footer statistics skip row groups and page indexes skip pages that
+    * cannot hold it. `conf` carries [[TokenTable.parquetReadConfs]]; the
+    * read sets its reader, requested schema and filter there. A row is
+    * valid only during its call, and reading stops at the first call that
+    * returns false. */
+  private def readKeyRows(
+      conf: Configuration, f: DataFileMeta, requested: StructType, keyColumn: String,
+      key: String)(onRow: InternalRow => Boolean): Unit = {
+    val path = new Path(root, f.path)
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
+    ParquetInputFormat.setFilterPredicate(conf,
+      FilterApi.eq(FilterApi.binaryColumn(keyColumn), Binary.fromString(key)))
+    val opened = ParquetFooterReader.openFileAndReadFooter(conf,
+      PartitionedFile(InternalRow.empty, SparkPath.fromPath(path), 0, f.bytes, fileSize = f.bytes),
+      true)
+    val written = (k: String) => opened.footer.getFileMetaData.getKeyValueMetaData.get(k)
+    val dates = DataSourceUtils.datetimeRebaseSpec(
+      written, conf.get(SQLConf.PARQUET_REBASE_MODE_IN_READ.key))
+    val int96 = DataSourceUtils.int96RebaseSpec(
+      written, conf.get(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ.key))
+    // no INT96 time-zone conversion: Spark applies it only to files that
+    // parquet-mr did not write, and the table writes every file through it
+    val reader = new VectorizedParquetRecordReader(null, dates.mode.toString, dates.timeZone,
+      int96.mode.toString, int96.timeZone, false,
+      conf.getInt(SQLConf.PARQUET_VECTORIZED_READER_BATCH_SIZE.key, 4096))
+    try {
+      reader.initialize(new FileSplit(path, 0, f.bytes, Array.empty[String]),
+        new TaskAttemptContextImpl(conf, new TaskAttemptID()),
+        Some(opened.inputFile), Some(opened.inputStream), Some(opened.footer))
+      val k = UTF8String.fromString(key)
+      val i = requested.fieldIndex(keyColumn)
+      var more = true
+      while (more && reader.nextKeyValue()) {
+        val row = reader.getCurrentValue.asInstanceOf[InternalRow]
+        if (!row.isNullAt(i) && row.getUTF8String(i) == k) more = onRow(row)
+      }
+    } finally {
+      reader.close()
+      opened.inputStream.close()
+    }
   }
 
   /** Equality-delete key entries pending on a snapshot (merge-on-read). */
@@ -373,37 +497,41 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
   }
 
   /** Read files in `m`'s current schema: one scan per schema version,
-    * unioned. `withFilePath` adds `_fpath` (`_metadata.file_path`), taken
-    * from each scan before the projection that hides the metadata column. */
+    * projected by [[versionRead]] and unioned. `withFilePath` adds `_fpath`
+    * (`_metadata.file_path`), taken from each scan in the projection that
+    * hides the metadata column. */
   private def readSchemaGroups(
       spark: SparkSession, m: TableMetadata, files: Seq[DataFileMeta],
       withFilePath: Boolean): DataFrame = {
     val filePath = if (withFilePath) Seq(col("_metadata.file_path").as("_fpath")) else Seq.empty
-    val current = m.schemaVersion(m.schemaIdNow)
-    val currentSchema = schemaOf(m)
-    val groups = files.groupBy(_.schemaIdOr0).toSeq.sortBy(_._1)
-    val frames = groups.map { case (sid, fs) =>
-      val paths = fs.map(f => new Path(root, f.path).toString)
-      if (sid == m.schemaIdNow) {
-        val raw = spark.read.schema(currentSchema).parquet(paths: _*)
-        if (withFilePath) raw.select(col("*") +: filePath: _*) else raw
-      } else {
-        val ver = m.schemaVersion(sid)
-        val physSchema = DataType.fromJson(ver.schemaJson).asInstanceOf[StructType]
-        val idToPhys: Map[Int, String] = ver.fieldIds.map(_.swap)
-        val raw = spark.read.schema(physSchema).parquet(paths: _*)
-        raw.select(currentSchema.fields.toSeq.map { f =>
-          idToPhys.get(current.fieldIds(f.name)) match {
-            case Some(phys) =>
-              val physType = physSchema(phys).dataType
-              if (physType.sql == f.dataType.sql) col(phys).as(f.name)
-              else col(phys).cast(f.dataType).as(f.name)
-            case None => lit(null).cast(f.dataType).as(f.name)
-          }
-        } ++ filePath: _*)
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    files.groupBy(_.schemaIdOr0).toSeq.sortBy(_._1).map { case (sid, fs) =>
+      val v = versionRead(m, sid, tz)
+      spark.read.schema(v.physical).parquet(fs.map(f => new Path(root, f.path).toString): _*)
+        .select(v.columns.map(ColumnBridge.column) ++ filePath: _*)
+    }.reduce(_.unionByName(_))
+  }
+
+  /** How files written under schema version `sid` read in `m`'s current
+    * schema, for both readers: one named expression per current field over
+    * the version's physical columns, referenced by name. A field resolves by
+    * field id to the physical column its id had at write time (rename-safe,
+    * like Iceberg), cast where the type differs (in session time zone
+    * `tz`), or null for a column added since. */
+  private def versionRead(m: TableMetadata, sid: Int, tz: String): VersionRead = {
+    val ver = m.schemaVersion(sid)
+    val physical = DataType.fromJson(ver.schemaJson).asInstanceOf[StructType]
+    val idToPhys: Map[Int, String] = ver.fieldIds.map(_.swap)
+    val current = m.currentSchemaVersion.fieldIds
+    val columns = schemaOf(m).fields.toSeq.map { f =>
+      val e = idToPhys.get(current(f.name)) match {
+        case Some(p) if physical(p).dataType.sql == f.dataType.sql => UnresolvedAttribute.quoted(p)
+        case Some(p) => Cast(UnresolvedAttribute.quoted(p), f.dataType, Some(tz))
+        case None => Literal.create(null, f.dataType)
       }
+      Alias(e, f.name)()
     }
-    frames.reduce(_.unionByName(_))
+    VersionRead(physical, columns, idToPhys(current("doc_id")))
   }
 
   def schema: StructType = schemaOf(meta)
@@ -428,7 +556,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * atomic migration path — one place to fix schema evolution). */
   private def withEvolvedSchema(base: TableMetadata, reduced: Seq[SchemaOp]): TableMetadata = {
     if (reduced.isEmpty) return base
-    val cur = base.schemaVersion(base.schemaIdNow)
+    val cur = base.currentSchemaVersion
     val curSchema = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
     val (newSchema, newIds) = SchemaEvolution.applyOps(curSchema, cur.fieldIds, reduced)
     val newVer = SchemaVersion(base.schemaIdNow + 1, newSchema.json, newIds)
@@ -496,18 +624,10 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * unchanged after the table's. */
   private def conformToSchema(
       df: DataFrame, schema: StructType, extra: Seq[String] = Seq.empty): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import org.apache.spark.sql.catalyst.expressions.EvalMode
     // nullability is declarative here (writes never enforced it; parquet
     // physical types are what pinned-schema readers check) — compare and
     // cast on nullability-relaxed types throughout
-    def relax(dt: DataType): DataType = dt match {
-      case ArrayType(e, _) => ArrayType(relax(e), containsNull = true)
-      case MapType(k, v, _) => MapType(relax(k), relax(v), valueContainsNull = true)
-      case StructType(fs) => StructType(fs.map(f =>
-        f.copy(dataType = relax(f.dataType), nullable = true)))
-      case other => other
-    }
     val byName = df.schema.fields.map(f => f.name -> f).toMap
     val unknown = df.columns.filterNot(c => schema.fieldNames.contains(c) || extra.contains(c))
     require(unknown.isEmpty,
@@ -1177,6 +1297,35 @@ object TokenTable {
   def docRange(files: Seq[DataFileMeta]): Option[(String, String)] =
     if (files.isEmpty) None
     else Some((files.map(_.minDocId).min, files.map(_.maxDocId).max))
+
+  /** `dt` with every field, element and value nullable, as a file scan reads it. */
+  private def relax(dt: DataType): DataType = dt match {
+    case ArrayType(e, _) => ArrayType(relax(e), containsNull = true)
+    case MapType(k, v, _) => MapType(relax(k), relax(v), valueContainsNull = true)
+    case StructType(fs) => StructType(fs.map(f =>
+      f.copy(dataType = relax(f.dataType), nullable = true)))
+    case other => other
+  }
+
+  /** Files of one schema version as read in the current schema (see
+    * [[TokenTable.versionRead]]): `physical` is the schema they were written
+    * in, `columns` one named expression per current field over its columns,
+    * `docIdColumn` the physical name of `doc_id`. */
+  private final case class VersionRead(
+      physical: StructType, columns: Seq[NamedExpression], docIdColumn: String)
+
+  /** The SQL confs Spark's parquet reader takes from its Hadoop conf rather
+    * than from a session (`ParquetFileFormat` sets them for its tasks; a
+    * missing one fails the read). The driver read copies each from the
+    * caller's session conf. */
+  private val parquetReadConfs = Seq(
+    SQLConf.SESSION_LOCAL_TIMEZONE, SQLConf.NESTED_SCHEMA_PRUNING_ENABLED, SQLConf.CASE_SENSITIVE,
+    SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+    SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
+    SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION,
+    SQLConf.PARQUET_REBASE_MODE_IN_READ, SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ,
+    SQLConf.PARQUET_VECTORIZED_READER_BATCH_SIZE
+  ).map(_.key)
 
   /** Whether equality-delete file `d` can hide rows of data file `f`: it was
     * committed later (higher sequence) and its doc range meets `f`'s. */

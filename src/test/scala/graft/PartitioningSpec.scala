@@ -22,6 +22,13 @@ class PartitioningSpec extends SparkSpec {
     t
   }
 
+  /** `lookup(key)` returns exactly one row, and it is the scan's row of `key`. */
+  private def assertLookupFinds(t: TokenTable, key: String, clue: String = ""): Unit = {
+    val got = t.lookup(spark, key).collect().toSeq
+    assert(got.size == 1, s"lookup($key) returned ${got.size} rows $clue")
+    assert(got == t.scan(spark).filter(col("doc_id") === key).collect().toSeq, clue)
+  }
+
   private def checksum(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
     val r = df.agg(count(lit(1)), bit_xor(xxhash64(col("doc_id"), col("tokens")))).head
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
@@ -86,7 +93,7 @@ class PartitioningSpec extends SparkSpec {
     val bf = spec(1)
     val want = Partitioning.transformValue(bf, key, org.apache.spark.sql.types.StringType)
     assert(kf.forall(_.partitionValue("doc_id_bucket4").forall(_ == want)))
-    assert(t.lookup(spark, key).count() == 1)
+    assertLookupFinds(t, key)
   }
 
   test("truncate transform: column/value forms agree, tuples recorded, ranges prune exactly") {
@@ -199,7 +206,7 @@ class PartitioningSpec extends SparkSpec {
     // every pre-evolution row is still findable through the pruned lookup
     (0 until 400 by 37).foreach { i =>
       val key = "doc%012d".format(i.toLong)
-      assert(t.lookup(spark, key).count() == 1, s"lookup lost $key after bucket evolution")
+      assertLookupFinds(t, key, "after bucket evolution")
     }
     // a post-evolution append records bucket8 tuples; lookups prune with them
     val extra = SequenceGen.sequences(spark, 20, seed = 9L)
@@ -208,7 +215,7 @@ class PartitioningSpec extends SparkSpec {
     assert(t.liveFiles().exists(_.partitionValue("doc_id_bucket8").nonEmpty))
     val nKey = t.liveFiles().filter(_.partitionValue("doc_id_bucket8").nonEmpty)
       .map(_.minDocId).min
-    assert(t.lookup(spark, nKey).count() == 1)
+    assertLookupFinds(t, nKey)
   }
 
   test("empty identity values map to the Hive sentinel and stay visible to pruned scans") {

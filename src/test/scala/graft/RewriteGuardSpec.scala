@@ -19,7 +19,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * and `.sample(` appears only in its `sample` and in the k-means seeding
   * of `AnnOps.ivfTopK`. And only `Ledger.scala` knows the on-disk format of
   * crash-resume state: the ledger directory name, the step id's
-  * `-snap<N>-` part and the paths built from a step id. */
+  * `-snap<N>-` part and the paths built from a step id. Table files have
+  * two readers, a Spark job's and the driver's point lookup, and one
+  * projection and one parquet reader serve them: outside `TableMeta.scala`
+  * only `TokenTable.versionRead` resolves a schema version (`schemaVersion(`,
+  * whose field ids project a file into the current schema), and only
+  * `TokenTable.readKeyRows` builds a parquet reader. */
 class RewriteGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -58,6 +63,10 @@ class RewriteGuardSpec extends AnyFunSuite {
 
   private val preimageCall = """(?<!def )\bmurmurPreimages\(""".r
   private val sampleCall = """\.sample\(""".r
+
+  private val schemaVersionCall = """(?<!def )\bschemaVersion\(""".r
+  private val parquetReader = ("""\bnew\s+(VectorizedParquetRecordReader|ParquetFileReader)\b|""" +
+    """\bbuildReaderWithPartitionValues\(|\bParquetFileReader\.open\(""").r
 
   /** What only `Ledger.scala` may spell out, each with its pattern. */
   private val ledgerFormat = Seq(
@@ -131,6 +140,13 @@ class RewriteGuardSpec extends AnyFunSuite {
     assert(callLines("""val p = murmurPreimages(8)""", preimageCall) == Seq(0))
     assert(callLines("df.select(col(\"a\"))\n  .sample(withReplacement = false, 0.5)", sampleCall) == Seq(1))
     assert(callLines("""rows.sample(false, f, seed = 7).collect()""", sampleCall) == Seq(0))
+    assert(callLines("""  def schemaVersion(id: Int): SchemaVersion =""", schemaVersionCall).isEmpty)
+    assert(callLines("""    val ver = m.schemaVersion(sid)""", schemaVersionCall) == Seq(0))
+    assert(callLines("""  VectorizedParquetRecordReader}""", parquetReader).isEmpty)
+    assert(callLines("""  * [[ParquetFileFormat.buildReaderWithPartitionValues]]""", parquetReader).isEmpty)
+    assert(callLines("val r = new VectorizedParquetRecordReader(false, 4096)", parquetReader) == Seq(0))
+    assert(callLines("x\n  fmt.buildReaderWithPartitionValues(spark, s, p, r, f)", parquetReader) == Seq(1))
+    assert(callLines("""val r = ParquetFileReader.open(file)""", parquetReader) == Seq(0))
   }
 
   test("the ledger-format detector finds each fact outside comments") {
@@ -203,5 +219,25 @@ class RewriteGuardSpec extends AnyFunSuite {
     ledgerFormat.foreach { case (what, re) =>
       assert(callLines(own, re).nonEmpty, s"Ledger.scala does not define $what")
     }
+  }
+
+  test("one projection and one parquet reader serve both readers of table files in src/main") {
+    val table = "graft/table/TokenTable.scala"
+    val lines = linesOf(table)
+    val projection = bodyOf(lines, "versionRead")
+    val reader = bodyOf(lines, "readKeyRows")
+    def hits(re: Regex) = sources.flatMap { case (f, src) => callLines(src, re).map((f, _)) }
+    val versions = hits(schemaVersionCall).filterNot(_._1 == "graft/table/TableMeta.scala")
+    val readers = hits(parquetReader)
+    assert(versions.exists { case (f, i) => f == table && projection.contains(i) },
+      "versionRead resolves no schema version")
+    assert(readers.exists { case (f, i) => f == table && reader.contains(i) },
+      "readKeyRows builds no parquet reader")
+    val strayVersions = versions.filterNot { case (f, i) => f == table && projection.contains(i) }
+    val strayReaders = readers.filterNot { case (f, i) => f == table && reader.contains(i) }
+    assert(strayVersions.isEmpty,
+      s"a schema version resolved outside TokenTable.versionRead: ${at(strayVersions)}")
+    assert(strayReaders.isEmpty,
+      s"a parquet reader built outside TokenTable.readKeyRows: ${at(strayReaders)}")
   }
 }
