@@ -27,7 +27,7 @@ object Describe {
     * then partition spec, sort order and properties. */
   def schema(t: TokenTable): String = {
     val m = t.metadata
-    val cur = m.currentSchemaVersion
+    val cur = m.schemaVersion(m.schemaIdNow)
     val st = org.apache.spark.sql.types.DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
     val sb = new StringBuilder
     sb ++= s"table ${m.tableUuid} (format v${m.formatVersion}, schema ${cur.schemaId})\n"

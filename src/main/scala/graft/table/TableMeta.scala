@@ -216,8 +216,6 @@ final case class TableMetadata(
 
   def schemaVersion(id: Int): SchemaVersion =
     schemas.find(_.schemaId == id).getOrElse(sys.error(s"unknown schema id $id"))
-
-  def currentSchemaVersion: SchemaVersion = schemaVersion(schemaIdNow)
 }
 
 object TableJson {

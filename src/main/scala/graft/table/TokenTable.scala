@@ -300,33 +300,18 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * applied like any scan: the rows of `scan(spark)` whose `doc_id` equals
     * `docId` (none for a null key), read in the metadata the call pins.
     *
-    * When the planned files and the key files that may delete the key fit
-    * in one Spark read split — their bytes plus
-    * `spark.sql.files.openCostInBytes` per file are at most
-    * `spark.sql.files.maxPartitionBytes` — they are read on the driver, at
-    * call time, and the result is a DataFrame over a local relation: a
-    * projection or filter over it folds into the local data, so collecting
-    * it runs no Spark job. A larger plan is read by a Spark job, as a scan
-    * is. */
+    * The planned files are read on the driver, at call time, and the result
+    * is a DataFrame over a local relation: a projection or filter over it
+    * folds into the local data, so collecting it runs no Spark job. Each
+    * file is probed on its `doc_id` column alone, with the key pushed down;
+    * a file that holds the key is dropped when a key file that applies to it
+    * ([[TokenTable.deleteApplies]]) holds the key too, and only the files
+    * left decode their other columns. */
   def lookup(spark: SparkSession, docId: String): DataFrame = {
     val m = meta
     val files = planFilesForKeyIn(m, docId)
-    val deletes = deleteEntriesOf(m)
-    val keyFiles = deletes.filter(d =>
+    val keyFiles = deleteEntriesOf(m).filter(d =>
       files.exists(deleteApplies(d, _)) && d.minDocId <= docId && d.maxDocId >= docId)
-    val conf = spark.sessionState.conf
-    if ((files ++ keyFiles).map(_.bytes + conf.filesOpenCostInBytes).sum <= conf.filesMaxPartitionBytes)
-      lookupOnDriver(spark, m, docId, files, keyFiles)
-    else readFilesIn(spark, m, files, deletes).filter(col("doc_id") === docId)
-  }
-
-  /** [[lookup]] of `files` read on the driver. Each file is probed on its
-    * `doc_id` column alone; a file that holds the key is dropped when a key
-    * file that applies to it ([[TokenTable.deleteApplies]]) holds the key
-    * too, and only the files left decode their other columns. */
-  private def lookupOnDriver(
-      spark: SparkSession, m: TableMetadata, docId: String,
-      files: Seq[DataFileMeta], keyFiles: Seq[DataFileMeta]): DataFrame = {
     val conf = LocalFileBinding.hadoopConf(spark)
     parquetReadConfs.foreach(k => conf.set(k, spark.conf.get(k)))
     val holdsKey = scala.collection.mutable.Map.empty[String, Boolean]
@@ -379,31 +364,30 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     val opened = ParquetFooterReader.openFileAndReadFooter(conf,
       PartitionedFile(InternalRow.empty, SparkPath.fromPath(path), 0, f.bytes, fileSize = f.bytes),
       true)
-    val written = (k: String) => opened.footer.getFileMetaData.getKeyValueMetaData.get(k)
-    val dates = DataSourceUtils.datetimeRebaseSpec(
-      written, conf.get(SQLConf.PARQUET_REBASE_MODE_IN_READ.key))
-    val int96 = DataSourceUtils.int96RebaseSpec(
-      written, conf.get(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ.key))
-    // no INT96 time-zone conversion: Spark applies it only to files that
-    // parquet-mr did not write, and the table writes every file through it
-    val reader = new VectorizedParquetRecordReader(null, dates.mode.toString, dates.timeZone,
-      int96.mode.toString, int96.timeZone, false,
-      conf.getInt(SQLConf.PARQUET_VECTORIZED_READER_BATCH_SIZE.key, 4096))
     try {
-      reader.initialize(new FileSplit(path, 0, f.bytes, Array.empty[String]),
-        new TaskAttemptContextImpl(conf, new TaskAttemptID()),
-        Some(opened.inputFile), Some(opened.inputStream), Some(opened.footer))
-      val k = UTF8String.fromString(key)
-      val i = requested.fieldIndex(keyColumn)
-      var more = true
-      while (more && reader.nextKeyValue()) {
-        val row = reader.getCurrentValue.asInstanceOf[InternalRow]
-        if (!row.isNullAt(i) && row.getUTF8String(i) == k) more = onRow(row)
-      }
-    } finally {
-      reader.close()
-      opened.inputStream.close()
-    }
+      val written = (k: String) => opened.footer.getFileMetaData.getKeyValueMetaData.get(k)
+      val dates = DataSourceUtils.datetimeRebaseSpec(
+        written, conf.get(SQLConf.PARQUET_REBASE_MODE_IN_READ.key))
+      val int96 = DataSourceUtils.int96RebaseSpec(
+        written, conf.get(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ.key))
+      // no INT96 time-zone conversion: Spark applies it only to files that
+      // parquet-mr did not write, and the table writes every file through it
+      val reader = new VectorizedParquetRecordReader(null, dates.mode.toString, dates.timeZone,
+        int96.mode.toString, int96.timeZone, false,
+        conf.getInt(SQLConf.PARQUET_VECTORIZED_READER_BATCH_SIZE.key, 4096))
+      try {
+        reader.initialize(new FileSplit(path, 0, f.bytes, Array.empty[String]),
+          new TaskAttemptContextImpl(conf, new TaskAttemptID()),
+          Some(opened.inputFile), Some(opened.inputStream), Some(opened.footer))
+        val k = UTF8String.fromString(key)
+        val i = requested.fieldIndex(keyColumn)
+        var more = true
+        while (more && reader.nextKeyValue()) {
+          val row = reader.getCurrentValue.asInstanceOf[InternalRow]
+          if (!row.isNullAt(i) && row.getUTF8String(i) == k) more = onRow(row)
+        }
+      } finally reader.close()
+    } finally opened.inputStream.close()
   }
 
   /** Equality-delete key entries pending on a snapshot (merge-on-read). */
@@ -522,7 +506,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     val ver = m.schemaVersion(sid)
     val physical = DataType.fromJson(ver.schemaJson).asInstanceOf[StructType]
     val idToPhys: Map[Int, String] = ver.fieldIds.map(_.swap)
-    val current = m.currentSchemaVersion.fieldIds
+    val current = m.schemaVersion(m.schemaIdNow).fieldIds
     val columns = schemaOf(m).fields.toSeq.map { f =>
       val e = idToPhys.get(current(f.name)) match {
         case Some(p) if physical(p).dataType.sql == f.dataType.sql => UnresolvedAttribute.quoted(p)
@@ -556,7 +540,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * atomic migration path — one place to fix schema evolution). */
   private def withEvolvedSchema(base: TableMetadata, reduced: Seq[SchemaOp]): TableMetadata = {
     if (reduced.isEmpty) return base
-    val cur = base.currentSchemaVersion
+    val cur = base.schemaVersion(base.schemaIdNow)
     val curSchema = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
     val (newSchema, newIds) = SchemaEvolution.applyOps(curSchema, cur.fieldIds, reduced)
     val newVer = SchemaVersion(base.schemaIdNow + 1, newSchema.json, newIds)

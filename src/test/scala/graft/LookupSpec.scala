@@ -12,8 +12,7 @@ import graft.maintenance.Maintenance
 import graft.table.{AddColumn, PartitionField, RenameColumn, TokenTable}
 
 /** `TokenTable.lookup` returns exactly the rows a scan filtered on the key
-  * returns, whichever of its two reads serves it: the driver read of a plan
-  * that fits one read split (no Spark job) or the job read of a larger one. */
+  * returns, read on the driver without a Spark job. */
 class LookupSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Map[Row, Int] =
@@ -127,25 +126,15 @@ class LookupSpec extends SparkSpec {
     assert(wanted.subsetOf(seen), s"histories never exercised ${wanted -- seen}")
   }
 
-  test("a lookup that fits one read split runs no Spark job; a larger one runs one") {
+  test("a lookup runs no Spark job") {
     val t = SequenceGen.createTable(spark, tmpDir("lookup-jobs") + "/tbl", 400, 4)
     val k = "doc%012d".format(123L)
-    val planned = t.planFilesForKey(k)
-    assert(planned.nonEmpty)
+    assert(t.planFilesForKey(k).nonEmpty)
     val want = rows(hashes(scanned(t, k)))
     assert(want.values.sum == 1)
-    val (small, smallJobs) = JobCounter.jobsOf(spark.sparkContext)(rows(hashes(t.lookup(spark, k))))
-    assert(small == want)
-    assert(smallJobs == 0, s"driver-read lookup ran $smallJobs jobs")
-    // the planned files no longer fit one split once each pays its open cost
-    val knob = "spark.sql.files.maxPartitionBytes"
-    val prev = spark.conf.getOption(knob)
-    spark.conf.set(knob, planned.map(_.bytes).sum.toString)
-    try {
-      val (large, largeJobs) = JobCounter.jobsOf(spark.sparkContext)(rows(hashes(t.lookup(spark, k))))
-      assert(large == want)
-      assert(largeJobs == 1, s"job-read lookup ran $largeJobs jobs")
-    } finally prev.fold(spark.conf.unset(knob))(spark.conf.set(knob, _))
+    val (got, jobs) = JobCounter.jobsOf(spark.sparkContext)(rows(hashes(t.lookup(spark, k))))
+    assert(got == want)
+    assert(jobs == 0, s"lookup ran $jobs jobs")
   }
 
   test("a null key matches no row") {

@@ -21,9 +21,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * crash-resume state: the ledger directory name, the step id's
   * `-snap<N>-` part and the paths built from a step id. Table files have
   * two readers, a Spark job's and the driver's point lookup, and one
-  * projection and one parquet reader serve them: outside `TableMeta.scala`
-  * only `TokenTable.versionRead` resolves a schema version (`schemaVersion(`,
-  * whose field ids project a file into the current schema), and only
+  * projection and one parquet reader serve them: only
+  * `TokenTable.versionRead` turns a schema version's field ids into a map
+  * from field id to physical column (`fieldIds` swapped), the map that
+  * projects a file into the current schema, and only
   * `TokenTable.readKeyRows` builds a parquet reader. */
 class RewriteGuardSpec extends AnyFunSuite {
 
@@ -64,7 +65,8 @@ class RewriteGuardSpec extends AnyFunSuite {
   private val preimageCall = """(?<!def )\bmurmurPreimages\(""".r
   private val sampleCall = """\.sample\(""".r
 
-  private val schemaVersionCall = """(?<!def )\bschemaVersion\(""".r
+  private val fieldIdProjection =
+    """\bfieldIds\b[^\n]*(\.swap\b|\{\s*case\s*\((\w+),\s*(\w+)\)\s*=>\s*\(?\3\s*(->|,)\s*\2\b)""".r
   private val parquetReader = ("""\bnew\s+(VectorizedParquetRecordReader|ParquetFileReader)\b|""" +
     """\bbuildReaderWithPartitionValues\(|\bParquetFileReader\.open\(""").r
 
@@ -140,8 +142,13 @@ class RewriteGuardSpec extends AnyFunSuite {
     assert(callLines("""val p = murmurPreimages(8)""", preimageCall) == Seq(0))
     assert(callLines("df.select(col(\"a\"))\n  .sample(withReplacement = false, 0.5)", sampleCall) == Seq(1))
     assert(callLines("""rows.sample(false, f, seed = 7).collect()""", sampleCall) == Seq(0))
-    assert(callLines("""  def schemaVersion(id: Int): SchemaVersion =""", schemaVersionCall).isEmpty)
-    assert(callLines("""    val ver = m.schemaVersion(sid)""", schemaVersionCall) == Seq(0))
+    assert(callLines("""    val id = cur.fieldIds.getOrElse(f.name, -1)""", fieldIdProjection).isEmpty)
+    assert(callLines("""  // ver.fieldIds.map(_.swap)""", fieldIdProjection).isEmpty)
+    assert(callLines("""    val oldById = oldIds.map(_.swap)""", fieldIdProjection).isEmpty)
+    assert(callLines("""    val byId = ver.fieldIds.map { case (n, id) => id -> n }""", fieldIdProjection) == Seq(0))
+    assert(callLines("""    val idToPhys: Map[Int, String] = ver.fieldIds.map(_.swap)""", fieldIdProjection) == Seq(0))
+    assert(callLines("x\n  m.schemaVersion(sid).fieldIds.toSeq.map(_.swap).toMap", fieldIdProjection) == Seq(1))
+    assert(callLines("""  v.fieldIds.map { case (n, i) => (i, n) }""", fieldIdProjection) == Seq(0))
     assert(callLines("""  VectorizedParquetRecordReader}""", parquetReader).isEmpty)
     assert(callLines("""  * [[ParquetFileFormat.buildReaderWithPartitionValues]]""", parquetReader).isEmpty)
     assert(callLines("val r = new VectorizedParquetRecordReader(false, 4096)", parquetReader) == Seq(0))
@@ -227,16 +234,16 @@ class RewriteGuardSpec extends AnyFunSuite {
     val projection = bodyOf(lines, "versionRead")
     val reader = bodyOf(lines, "readKeyRows")
     def hits(re: Regex) = sources.flatMap { case (f, src) => callLines(src, re).map((f, _)) }
-    val versions = hits(schemaVersionCall).filterNot(_._1 == "graft/table/TableMeta.scala")
+    val idMaps = hits(fieldIdProjection)
     val readers = hits(parquetReader)
-    assert(versions.exists { case (f, i) => f == table && projection.contains(i) },
-      "versionRead resolves no schema version")
+    assert(idMaps.exists { case (f, i) => f == table && projection.contains(i) },
+      "versionRead maps no field id to a physical column")
     assert(readers.exists { case (f, i) => f == table && reader.contains(i) },
       "readKeyRows builds no parquet reader")
-    val strayVersions = versions.filterNot { case (f, i) => f == table && projection.contains(i) }
+    val strayIdMaps = idMaps.filterNot { case (f, i) => f == table && projection.contains(i) }
     val strayReaders = readers.filterNot { case (f, i) => f == table && reader.contains(i) }
-    assert(strayVersions.isEmpty,
-      s"a schema version resolved outside TokenTable.versionRead: ${at(strayVersions)}")
+    assert(strayIdMaps.isEmpty,
+      s"a field-id projection outside TokenTable.versionRead: ${at(strayIdMaps)}")
     assert(strayReaders.isEmpty,
       s"a parquet reader built outside TokenTable.readKeyRows: ${at(strayReaders)}")
   }
