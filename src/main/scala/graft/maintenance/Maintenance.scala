@@ -310,8 +310,9 @@ object Maintenance {
 
   /**
    * Copy-on-write MERGE INTO: debounce the batch (last-write-wins per
-   * doc_id — reference nodestream/databases/operation_debouncer.py:46-101),
-   * prune candidate files by manifest min/max vs batch key range, rewrite
+   * doc_id — reference nodestream/databases/operation_debouncer.py:46-101;
+   * planned by [[planDebounce]] against `targetFileBytes`), prune candidate
+   * files by manifest min/max vs batch key range, rewrite
    * only touched files via a key-equality join, write with token-mass
    * balanced range partitioning (explicit skew handling), single snapshot.
    *
@@ -345,17 +346,16 @@ object Maintenance {
     }
 
     if (rule == CreationRule.Create) {
-      // Blind append — no join, no file rewrite, and a SINGLE consumer of
-      // the debounced batch: caching it would materialize every row once
-      // for nothing, so the write streams straight through the debounce.
+      // Blind append — no join, no file rewrite, and the write is the
+      // debounced batch's only consumer, so it streams through uncached.
       val added = table.stageWrite(
-        debounceBatch(batch).filter(col("_op") === "upsert").drop("_op"),
+        planDebounce(batch, targetFileBytes).filter(col("_op") === "upsert").drop("_op"),
         s"merge-append-${java.util.UUID.randomUUID()}")
       val snap = table.commit("merge", added, summary = Map("rule" -> "create") ++ extraSummary)
       runPostHooks()
       return snap
     }
-    val debounced = debounceBatch(batch).cache()
+    val debounced = planDebounce(batch, targetFileBytes).cache()
     val snap = try {
       // Manifest-level candidate-file pruning: a file is touched iff some
       // batch key falls inside its [minDocId, maxDocId]. Interval stabbing
@@ -373,8 +373,9 @@ object Maintenance {
       // its delete path into the planned set while its file is missing
       // from `live`
       Failpoints.hitCallback("merge.after-live")
-      // Fused probe: ONE aggregation job over the cached debounced batch
-      // yields the pruning hits AND the batch (rows, token mass).
+      // Fused probe: one aggregate over the cached debounced batch yields
+      // the pruning hits AND the batch (rows, token mass) in 2 jobs — AQE
+      // runs the cache fill as its own — or 4 for a shuffled batch.
       val endpoints: Array[String] =
         live.flatMap(f => Seq(f.minDocId, f.maxDocId)).distinct.sorted.toArray
       val probeRows = pruneProbeAgg(debounced, endpoints).collect()
@@ -392,10 +393,8 @@ object Maintenance {
         if (withSums.nonEmpty)
           withSums.map(_.bytes).sum.toDouble / withSums.map(_.sumNTok).sum
         else 2.5
-      val b = debounced
-        .withColumnRenamed("tokens", "_b_tokens").withColumnRenamed("n_tok", "_b_n_tok")
-        .withColumnRenamed("source", "_b_source")
-        .withColumn("_b_present", lit(true))
+      val b = debounced.select(col("doc_id"), col("tokens").as("_b_tokens"), col("n_tok").as("_b_n_tok"),
+        col("source").as("_b_source"), col("_op"), lit(true).as("_b_present"))
 
       def merged(target: DataFrame, nOut: Int, totalRows: Long): DataFrame = {
         // Route-partitioned join (guide §3.3): both sides are pre-partitioned
@@ -411,9 +410,14 @@ object Maintenance {
             .unionByName(debounced.select(col("doc_id"), col("n_tok"))), nOut, Some(totalRows))
         def side(df: DataFrame) =
           plan.fold(df)(p => df.withColumn("_mrt", p.routeCol).repartition(p.nOut, col("_mrt")))
+        // One output file, unpartitioned: a one-partition target merge-joined
+        // (a broadcast is a job more) to a micro-batch plans no exchange.
+        val (left, right) =
+          if (m.spec.isEmpty && nOut <= 1) (target.coalesce(1), b.hint("merge"))
+          else (side(target), side(b))
         // full_outer (Eager): matched → batch wins; target-only → keep;
         // batch-only → insert. left_outer (MatchOnly): unmatched batch dropped.
-        val result = side(target).join(side(b),
+        val result = left.join(right,
             if (plan.isEmpty) Seq("doc_id") else Seq("_mrt", "doc_id"),
             if (rule == CreationRule.MatchOnly) "left_outer" else "full_outer")
           // drop rows the batch deletes; batch-only delete rows also vanish here
@@ -433,8 +437,7 @@ object Maintenance {
         // A partitioned table is distributed by tuple in `rewrite`. An
         // unpartitioned one is route-clustered by the join already, so a
         // local doc_id sort gives narrow per-file stats with no further
-        // exchange; without a plan it takes the doc_id placement's other
-        // rungs.
+        // exchange; without a plan it is written as one sorted file.
         if (m.spec.nonEmpty) result
         else if (plan.nonEmpty) withPartialKeyCoPartition(result.sortWithinPartitions("doc_id"))
         else placeByDocRange(result, None, nOut)
@@ -484,22 +487,25 @@ object Maintenance {
       s"merge batch is missing required columns: ${missing.mkString(", ")}")
   }
 
+  /** The debounce of every merge. A batch planned within one target file (a
+    * micro-batch) is collapsed to one partition first, which already
+    * satisfies the aggregate's clustering, so the debounce plans no exchange.
+    * A batch of unknown or larger planned size keeps the debounce's shuffle. */
+  private def planDebounce(batch: DataFrame, targetFileBytes: Long): DataFrame = {
+    val plannedBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+    debounceBatch(if (plannedBytes <= targetFileBytes) batch.coalesce(1) else batch)
+  }
+
   /** Deterministic last-write-wins debounce per doc_id via max_by on
-    * (_seq, content) — shared by the CoW and MoR merge paths. Missing `_seq`
-    * defaults to 0, missing `_op` to 'upsert'. */
+    * (_seq, content). Missing `_seq` defaults to 0, missing `_op` to
+    * 'upsert'. Merges call it through [[planDebounce]]. */
   private def debounceBatch(batch: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val withSeq =
-      if (batch.columns.contains("_seq")) batch
-      else batch.withColumn("_seq", lit(0L).cast(LongType))
-    val withOp =
-      if (withSeq.columns.contains("_op")) withSeq
-      else withSeq.withColumn("_op", lit("upsert"))
-    withOp
-      .groupBy(col("doc_id"))
+    def orElse(c: String, default: Column) =
+      (if (batch.columns.contains(c)) col(c) else default).as(c)
+    batch.groupBy(col("doc_id"))
       .agg(max_by(
-        struct(col("tokens"), col("n_tok"), col("source"), col("_op")),
-        struct(col("_seq"), col("n_tok"), col("tokens"))).as("_r"))
+        struct(col("tokens"), col("n_tok"), col("source"), orElse("_op", lit("upsert"))),
+        struct(orElse("_seq", lit(0L)), col("n_tok"), col("tokens"))).as("_r"))
       .select(col("doc_id"), col("_r.tokens").as("tokens"), col("_r.n_tok").as("n_tok"),
         col("_r.source").as("source"), col("_r._op").as("_op"))
   }
@@ -539,15 +545,11 @@ object Maintenance {
    * batch's delete keys, with the payload columns nulled, and are delete-key
    * entries only. Both kinds carry the commit's sequence, and a delete
    * applies only to strictly lower sequences, so a file's keys never mask
-   * its own rows. A batch whose planned size is at most one target file (a
-   * micro-batch) is collapsed to one partition BEFORE the debounce: a single
-   * partition already satisfies the aggregate's clustering, so the merge
-   * runs one Spark job (the write), with no exchange, and commits at most
-   * one file of each kind (per partition tuple on a partitioned table),
-   * stats folded by the writer. A batch of unknown or
-   * larger planned size keeps the debounce's shuffle. Nothing is cached: the
-   * write is the batch's only consumer. Returns None, and commits nothing,
-   * for an empty batch.
+   * its own rows. [[planDebounce]] plans the debounce against one default
+   * target file: a micro-batch runs one Spark job (the write, uncached, no
+   * exchange) and commits at most one file of each kind (per partition
+   * tuple on a partitioned table), stats folded by the writer. Returns
+   * None, and commits nothing, for an empty batch.
    */
   def mergeMor(
       spark: SparkSession,
@@ -555,9 +557,7 @@ object Maintenance {
       batch: DataFrame,
       extraSummary: Map[String, String] = Map.empty): Option[Snapshot] = {
     validateMergeBatch(batch)
-    val plannedBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-    val debounced = debounceBatch(
-      if (plannedBytes <= DefaultTargetFileBytes) batch.coalesce(1) else batch)
+    val debounced = planDebounce(batch, DefaultTargetFileBytes)
     val upsert = "_upsert"
     val isUpsert = coalesce(col("_op") === "upsert", lit(false))
     def payload(c: String) = when(isUpsert, col(c)).as(c)

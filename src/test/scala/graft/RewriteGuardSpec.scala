@@ -25,7 +25,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `TokenTable.versionRead` turns a schema version's field ids into a map
   * from field id to physical column (`fieldIds` swapped), the map that
   * projects a file into the current schema, and only
-  * `TokenTable.readKeyRows` builds a parquet reader. */
+  * `TokenTable.readKeyRows` builds a parquet reader. Every merge debounces
+  * its batch through `Maintenance.planDebounce`, the one place that reads a
+  * plan's planned size (`sizeInBytes`) to collapse a micro-batch to one
+  * partition: `debounceBatch(` is called, and a planned size read, only
+  * inside it. */
 class RewriteGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -67,6 +71,9 @@ class RewriteGuardSpec extends AnyFunSuite {
 
   private val fieldIdProjection =
     """\bfieldIds\b[^\n]*(\.swap\b|\{\s*case\s*\((\w+),\s*(\w+)\)\s*=>\s*\(?\3\s*(->|,)\s*\2\b)""".r
+  private val debounceCall = """(?<!def )\bdebounceBatch\(""".r
+  /** A read of a plan's planned size; not a `sizeInBytes = ` named argument. */
+  private val plannedSize = """(?<!def )\bsizeInBytes\b(?!\s*=[^=])""".r
   private val parquetReader = ("""\bnew\s+(VectorizedParquetRecordReader|ParquetFileReader)\b|""" +
     """\bbuildReaderWithPartitionValues\(|\bParquetFileReader\.open\(""").r
 
@@ -154,6 +161,17 @@ class RewriteGuardSpec extends AnyFunSuite {
     assert(callLines("val r = new VectorizedParquetRecordReader(false, 4096)", parquetReader) == Seq(0))
     assert(callLines("x\n  fmt.buildReaderWithPartitionValues(spark, s, p, r, f)", parquetReader) == Seq(1))
     assert(callLines("""val r = ParquetFileReader.open(file)""", parquetReader) == Seq(0))
+    assert(callLines("""  private def debounceBatch(batch: DataFrame): DataFrame = {""", debounceCall).isEmpty)
+    assert(callLines("""    * 'upsert'. Merges call debounceBatch(b) through [[planDebounce]].""", debounceCall).isEmpty)
+    assert(callLines("x\n    val debounced = debounceBatch(batch).cache()", debounceCall) == Seq(1))
+    assert(callLines("""  // debounceBatch(batch.coalesce(1))""", debounceCall).isEmpty)
+    assert(callLines("""    val plannedBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes""",
+      plannedSize) == Seq(0))
+    assert(callLines("""if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= t) df.coalesce(1) else df""",
+      plannedSize) == Seq(0))
+    assert(callLines("x\n  val st = plan.stats\n  if (st.sizeInBytes == 0) a else b", plannedSize) == Seq(2))
+    assert(callLines("""    Statistics(sizeInBytes = sizeBytes)""", plannedSize).isEmpty)
+    assert(callLines("""  override def sizeInBytes: Long = bytes""", plannedSize).isEmpty)
   }
 
   test("the ledger-format detector finds each fact outside comments") {
@@ -212,6 +230,22 @@ class RewriteGuardSpec extends AnyFunSuite {
     assert(strayLedgers.isEmpty, s"a Ledger outside Maintenance.rewrite: ${at(strayLedgers)}")
     assert(strayCommits.isEmpty,
       s"a commit of replaced files outside Maintenance.rewrite: ${at(strayCommits)}")
+  }
+
+  test("only Maintenance.planDebounce debounces a merge batch and reads a planned size in src/main") {
+    val plan = bodyOf(linesOf(maintenance), "planDebounce")
+    def hits(re: Regex) = sources.flatMap { case (f, src) => callLines(src, re).map((f, _)) }
+    def inPlan(hit: (String, Int)) = hit._1 == maintenance && plan.contains(hit._2)
+    val debounces = hits(debounceCall)
+    val sizes = hits(plannedSize)
+    assert(debounces.exists(inPlan), "planDebounce debounces nothing")
+    assert(sizes.exists(inPlan), "planDebounce reads no planned size")
+    val strayDebounces = debounces.filterNot(inPlan)
+    val straySizes = sizes.filterNot(inPlan)
+    assert(strayDebounces.isEmpty,
+      s"a debounce outside Maintenance.planDebounce: ${at(strayDebounces)}")
+    assert(straySizes.isEmpty,
+      s"a planned-size read outside Maintenance.planDebounce: ${at(straySizes)}")
   }
 
   test("only Ledger spells out the on-disk format of crash-resume state in src/main") {

@@ -93,6 +93,41 @@ val out = {
     require(!p.contains("BroadcastNestedLoop"), "merge pruning probe regressed to NLJ")
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
   }
+  // Copy-on-write micro-batch merge: a batch planned within one target file
+  // debounces in one partition (Maintenance.planDebounce), and a rewrite of
+  // one file of an unpartitioned table reads its target in one partition, so
+  // the merge's write plans NO Exchange. The write's plan is taken from a
+  // QueryExecutionListener: the join is built inside mergeInto.
+  val cowMergeEvidence: Unit = {
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val root = java.nio.file.Files.createTempDirectory("plans-cow").toString
+    val t = graft.gen.SequenceGen.createTable(spark, root + "/tbl", 4000, 1)
+    t.scan(spark).filter(pmod(xxhash64(col("doc_id")), lit(13)) === 0)
+      .select(col("doc_id"), col("tokens"), col("n_tok"), lit("upd").as("source"))
+      .write.parquet(root + "/batch")
+    val writes = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        val p = qe.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        if (p.contains("InsertIntoHadoopFsRelationCommand")) writes.put(p)
+      }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    graft.maintenance.Maintenance.mergeInto(spark, t, spark.read.parquet(root + "/batch"))
+    // listener events arrive asynchronously
+    val p = writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    spark.listenerManager.unregister(listener)
+    require(p != null, "the CoW merge's write plan never arrived")
+    sb ++= "\n## maint_merge copy-on-write micro-batch (write plan)\n\nA batch planned within one target file, merged into a one-file unpartitioned\ntable: the debounce aggregates over one partition, the target is read in one\npartition, and the full-outer sort-merge join and the one-file placement run\nin the write's single task — NO Exchange. The merge runs 3 one-task jobs:\nthe cache fill, the pruning probe over the cached batch, and this write.\n\n```\n"
+    // the executed (final) plan only
+    val lines = p.linesIterator.toSeq
+    val treeEnd = lines.indexWhere(l => l.trim.isEmpty || l.startsWith("+- == Initial Plan"))
+    sb ++= lines.take(if (treeEnd > 0) treeEnd else lines.size).mkString("\n")
+    sb ++= "\n```\n"
+    require(!p.contains("Exchange"), "CoW micro-batch merge plans an exchange")
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
+  }
   // Merge-on-read scan: pending equality deletes must surface as ONE
   // hash anti-join on doc_id over the affected sequence tier (never an NLJ).
   val morScanEvidence: Unit = {
