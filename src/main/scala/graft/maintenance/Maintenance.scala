@@ -346,16 +346,21 @@ object Maintenance {
     }
 
     if (rule == CreationRule.Create) {
-      // Blind append — no join, no file rewrite, and the write is the
-      // debounced batch's only consumer, so it streams through uncached.
+      // Blind append — no join, no file rewrite, and a SINGLE consumer of
+      // the debounced batch: caching it would materialize every row once
+      // for nothing, so the write streams straight through the debounce.
+      // A target of 0 keeps the debounce's shuffle at any size: collapsed,
+      // the append's scan and write run in one task too, and a copy of a
+      // 3.6 MB table ran 28% slower that way.
       val added = table.stageWrite(
-        planDebounce(batch, targetFileBytes).filter(col("_op") === "upsert").drop("_op"),
+        planDebounce(batch, 0L)._1.filter(col("_op") === "upsert").drop("_op"),
         s"merge-append-${java.util.UUID.randomUUID()}")
       val snap = table.commit("merge", added, summary = Map("rule" -> "create") ++ extraSummary)
       runPostHooks()
       return snap
     }
-    val debounced = planDebounce(batch, targetFileBytes).cache()
+    val (planned, oneTask) = planDebounce(batch, targetFileBytes)
+    val debounced = planned.cache()
     val snap = try {
       // Manifest-level candidate-file pruning: a file is touched iff some
       // batch key falls inside its [minDocId, maxDocId]. Interval stabbing
@@ -410,10 +415,11 @@ object Maintenance {
             .unionByName(debounced.select(col("doc_id"), col("n_tok"))), nOut, Some(totalRows))
         def side(df: DataFrame) =
           plan.fold(df)(p => df.withColumn("_mrt", p.routeCol).repartition(p.nOut, col("_mrt")))
-        // One output file, unpartitioned: a one-partition target merge-joined
-        // (a broadcast is a job more) to a micro-batch plans no exchange.
+        // One output file, unpartitioned, from a one-partition batch: a
+        // one-partition target merge-joined to it (a broadcast is a job
+        // more) plans no exchange.
         val (left, right) =
-          if (m.spec.isEmpty && nOut <= 1) (target.coalesce(1), b.hint("merge"))
+          if (oneTask && m.spec.isEmpty && nOut <= 1) (target.coalesce(1), b.hint("merge"))
           else (side(target), side(b))
         // full_outer (Eager): matched → batch wins; target-only → keep;
         // batch-only → insert. left_outer (MatchOnly): unmatched batch dropped.
@@ -487,25 +493,38 @@ object Maintenance {
       s"merge batch is missing required columns: ${missing.mkString(", ")}")
   }
 
-  /** The debounce of every merge. A batch planned within one target file (a
-    * micro-batch) is collapsed to one partition first, which already
-    * satisfies the aggregate's clustering, so the debounce plans no exchange.
-    * A batch of unknown or larger planned size keeps the debounce's shuffle. */
-  private def planDebounce(batch: DataFrame, targetFileBytes: Long): DataFrame = {
+  /** The debounce of every merge, and whether it runs in one task. A batch
+    * planned within one core's share of a target file
+    * (`targetFileBytes / defaultParallelism`: a micro-batch) is collapsed to
+    * one partition first, which already satisfies the aggregate's
+    * clustering, so the debounce plans no exchange. A batch of unknown or
+    * larger planned size keeps the debounce's shuffle and all the cores. On
+    * 4 cores with the default target (a 32 MB bound) a copy-on-write merge
+    * of a 23 MB batch ran 25% faster collapsed, and a merge-on-read merge
+    * of a 56 MB batch twice as fast on the shuffle. */
+  private def planDebounce(batch: DataFrame, targetFileBytes: Long): (DataFrame, Boolean) = {
     val plannedBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-    debounceBatch(if (plannedBytes <= targetFileBytes) batch.coalesce(1) else batch)
+    val oneTask = plannedBytes * batch.sparkSession.sparkContext.defaultParallelism <= targetFileBytes
+    (debounceBatch(if (oneTask) batch.coalesce(1) else batch), oneTask)
   }
 
   /** Deterministic last-write-wins debounce per doc_id via max_by on
-    * (_seq, content). Missing `_seq` defaults to 0, missing `_op` to
-    * 'upsert'. Merges call it through [[planDebounce]]. */
+    * (_seq, content) — shared by the CoW and MoR merge paths through
+    * [[planDebounce]]. Missing `_seq` defaults to 0, missing `_op` to
+    * 'upsert'. */
   private def debounceBatch(batch: DataFrame): DataFrame = {
-    def orElse(c: String, default: Column) =
-      (if (batch.columns.contains(c)) col(c) else default).as(c)
-    batch.groupBy(col("doc_id"))
+    import org.apache.spark.sql.types.LongType
+    val withSeq =
+      if (batch.columns.contains("_seq")) batch
+      else batch.withColumn("_seq", lit(0L).cast(LongType))
+    val withOp =
+      if (withSeq.columns.contains("_op")) withSeq
+      else withSeq.withColumn("_op", lit("upsert"))
+    withOp
+      .groupBy(col("doc_id"))
       .agg(max_by(
-        struct(col("tokens"), col("n_tok"), col("source"), orElse("_op", lit("upsert"))),
-        struct(orElse("_seq", lit(0L)), col("n_tok"), col("tokens"))).as("_r"))
+        struct(col("tokens"), col("n_tok"), col("source"), col("_op")),
+        struct(col("_seq"), col("n_tok"), col("tokens"))).as("_r"))
       .select(col("doc_id"), col("_r.tokens").as("tokens"), col("_r.n_tok").as("n_tok"),
         col("_r.source").as("source"), col("_r._op").as("_op"))
   }
@@ -557,7 +576,7 @@ object Maintenance {
       batch: DataFrame,
       extraSummary: Map[String, String] = Map.empty): Option[Snapshot] = {
     validateMergeBatch(batch)
-    val debounced = planDebounce(batch, DefaultTargetFileBytes)
+    val debounced = planDebounce(batch, DefaultTargetFileBytes)._1
     val upsert = "_upsert"
     val isUpsert = coalesce(col("_op") === "upsert", lit(false))
     def payload(c: String) = when(isUpsert, col(c)).as(c)

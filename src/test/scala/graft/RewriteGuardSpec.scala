@@ -26,10 +26,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * from field id to physical column (`fieldIds` swapped), the map that
   * projects a file into the current schema, and only
   * `TokenTable.readKeyRows` builds a parquet reader. Every merge debounces
-  * its batch through `Maintenance.planDebounce`, the one place that reads a
-  * plan's planned size (`sizeInBytes`) to collapse a micro-batch to one
-  * partition: `debounceBatch(` is called, and a planned size read, only
-  * inside it. */
+  * its batch through `Maintenance.planDebounce`, the one place that
+  * collapses a batch to one partition by its planned size: `debounceBatch(`
+  * is called, and a `sizeInBytes` read followed by a `coalesce(1)` in the
+  * same block is written, only inside it. */
 class RewriteGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -72,8 +72,10 @@ class RewriteGuardSpec extends AnyFunSuite {
   private val fieldIdProjection =
     """\bfieldIds\b[^\n]*(\.swap\b|\{\s*case\s*\((\w+),\s*(\w+)\)\s*=>\s*\(?\3\s*(->|,)\s*\2\b)""".r
   private val debounceCall = """(?<!def )\bdebounceBatch\(""".r
-  /** A read of a plan's planned size; not a `sizeInBytes = ` named argument. */
-  private val plannedSize = """(?<!def )\bsizeInBytes\b(?!\s*=[^=])""".r
+  /** The planned-size collapse: a read of a plan's planned size (not a
+    * `sizeInBytes = ` named argument) followed by a `coalesce(1)` before the
+    * block ends. */
+  private val plannedCollapse = """(?<!def )\bsizeInBytes\b(?!\s*=[^=])[^{}]*?\.coalesce\(1\)""".r
   private val parquetReader = ("""\bnew\s+(VectorizedParquetRecordReader|ParquetFileReader)\b|""" +
     """\bbuildReaderWithPartitionValues\(|\bParquetFileReader\.open\(""").r
 
@@ -165,13 +167,17 @@ class RewriteGuardSpec extends AnyFunSuite {
     assert(callLines("""    * 'upsert'. Merges call debounceBatch(b) through [[planDebounce]].""", debounceCall).isEmpty)
     assert(callLines("x\n    val debounced = debounceBatch(batch).cache()", debounceCall) == Seq(1))
     assert(callLines("""  // debounceBatch(batch.coalesce(1))""", debounceCall).isEmpty)
-    assert(callLines("""    val plannedBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes""",
-      plannedSize) == Seq(0))
+    assert(callLines("x\n    val plannedBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes\n" +
+      "    debounceBatch(if (plannedBytes <= targetFileBytes) batch.coalesce(1) else batch)",
+      plannedCollapse) == Seq(1))
     assert(callLines("""if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= t) df.coalesce(1) else df""",
-      plannedSize) == Seq(0))
-    assert(callLines("x\n  val st = plan.stats\n  if (st.sizeInBytes == 0) a else b", plannedSize) == Seq(2))
-    assert(callLines("""    Statistics(sizeInBytes = sizeBytes)""", plannedSize).isEmpty)
-    assert(callLines("""  override def sizeInBytes: Long = bytes""", plannedSize).isEmpty)
+      plannedCollapse) == Seq(0))
+    assert(callLines("val st = plan.stats\nif (st.sizeInBytes > limit) df else broadcast(df)",
+      plannedCollapse).isEmpty)
+    assert(callLines("def a = { p.stats.sizeInBytes }\ndef b(df: DataFrame) = { df.coalesce(1) }",
+      plannedCollapse).isEmpty)
+    assert(callLines("""    Statistics(sizeInBytes = sizeBytes).copy(x = df.coalesce(1))""", plannedCollapse).isEmpty)
+    assert(callLines("""  // stats.sizeInBytes small: df.coalesce(1)""", plannedCollapse).isEmpty)
   }
 
   test("the ledger-format detector finds each fact outside comments") {
@@ -232,20 +238,20 @@ class RewriteGuardSpec extends AnyFunSuite {
       s"a commit of replaced files outside Maintenance.rewrite: ${at(strayCommits)}")
   }
 
-  test("only Maintenance.planDebounce debounces a merge batch and reads a planned size in src/main") {
+  test("only Maintenance.planDebounce debounces a merge batch and collapses it by planned size in src/main") {
     val plan = bodyOf(linesOf(maintenance), "planDebounce")
     def hits(re: Regex) = sources.flatMap { case (f, src) => callLines(src, re).map((f, _)) }
     def inPlan(hit: (String, Int)) = hit._1 == maintenance && plan.contains(hit._2)
     val debounces = hits(debounceCall)
-    val sizes = hits(plannedSize)
+    val collapses = hits(plannedCollapse)
     assert(debounces.exists(inPlan), "planDebounce debounces nothing")
-    assert(sizes.exists(inPlan), "planDebounce reads no planned size")
+    assert(collapses.exists(inPlan), "planDebounce collapses no batch by its planned size")
     val strayDebounces = debounces.filterNot(inPlan)
-    val straySizes = sizes.filterNot(inPlan)
+    val strayCollapses = collapses.filterNot(inPlan)
     assert(strayDebounces.isEmpty,
       s"a debounce outside Maintenance.planDebounce: ${at(strayDebounces)}")
-    assert(straySizes.isEmpty,
-      s"a planned-size read outside Maintenance.planDebounce: ${at(straySizes)}")
+    assert(strayCollapses.isEmpty,
+      s"a planned-size collapse outside Maintenance.planDebounce: ${at(strayCollapses)}")
   }
 
   test("only Ledger spells out the on-disk format of crash-resume state in src/main") {
