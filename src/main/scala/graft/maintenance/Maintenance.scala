@@ -349,9 +349,8 @@ object Maintenance {
       // Blind append — no join, no file rewrite, and a SINGLE consumer of
       // the debounced batch: caching it would materialize every row once
       // for nothing, so the write streams straight through the debounce.
-      // A target of 0 keeps the debounce's shuffle at any size: collapsed,
-      // the append's scan and write run in one task too, and a copy of a
-      // 3.6 MB table ran 28% slower that way.
+      // A target of 0 keeps the debounce's shuffle: collapsed, a table
+      // copy's scan and write ran in one task, 1.3-2x slower (3.6-25 MB).
       val added = table.stageWrite(
         planDebounce(batch, 0L)._1.filter(col("_op") === "upsert").drop("_op"),
         s"merge-append-${java.util.UUID.randomUUID()}")
@@ -443,7 +442,8 @@ object Maintenance {
         // A partitioned table is distributed by tuple in `rewrite`. An
         // unpartitioned one is route-clustered by the join already, so a
         // local doc_id sort gives narrow per-file stats with no further
-        // exchange; without a plan it is written as one sorted file.
+        // exchange; without a plan it takes the doc_id placement's other
+        // rungs.
         if (m.spec.nonEmpty) result
         else if (plan.nonEmpty) withPartialKeyCoPartition(result.sortWithinPartitions("doc_id"))
         else placeByDocRange(result, None, nOut)
@@ -493,15 +493,13 @@ object Maintenance {
       s"merge batch is missing required columns: ${missing.mkString(", ")}")
   }
 
-  /** The debounce of every merge, and whether it runs in one task. A batch
-    * planned within one core's share of a target file
-    * (`targetFileBytes / defaultParallelism`: a micro-batch) is collapsed to
-    * one partition first, which already satisfies the aggregate's
-    * clustering, so the debounce plans no exchange. A batch of unknown or
-    * larger planned size keeps the debounce's shuffle and all the cores. On
-    * 4 cores with the default target (a 32 MB bound) a copy-on-write merge
-    * of a 23 MB batch ran 25% faster collapsed, and a merge-on-read merge
-    * of a 56 MB batch twice as fast on the shuffle. */
+  /** The debounce of every merge, and whether it runs in one task: a batch
+    * planned within one core's share of a target file (a micro-batch) is
+    * collapsed to one partition first, which satisfies the aggregate's
+    * clustering with no exchange; a larger or unsized batch keeps the
+    * shuffle. On 4 cores and the default target (32 MB), collapsing made a
+    * 23 MB copy-on-write merge 25% faster and a 56 MB merge-on-read one 2x
+    * slower. */
   private def planDebounce(batch: DataFrame, targetFileBytes: Long): (DataFrame, Boolean) = {
     val plannedBytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
     val oneTask = plannedBytes * batch.sparkSession.sparkContext.defaultParallelism <= targetFileBytes
@@ -564,8 +562,8 @@ object Maintenance {
    * batch's delete keys, with the payload columns nulled, and are delete-key
    * entries only. Both kinds carry the commit's sequence, and a delete
    * applies only to strictly lower sequences, so a file's keys never mask
-   * its own rows. [[planDebounce]] plans the debounce against one default
-   * target file: a micro-batch runs one Spark job (the write, uncached, no
+   * its own rows. [[planDebounce]] plans the debounce against the default
+   * target file size: a micro-batch runs one Spark job (the write, uncached, no
    * exchange) and commits at most one file of each kind (per partition
    * tuple on a partitioned table), stats folded by the writer. Returns
    * None, and commits nothing, for an empty batch.
