@@ -12,7 +12,6 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.graftbridge.PlanBridge
-import org.apache.spark.util.SerializableConfiguration
 
 /** `RawLocalFileSystem` that starts no process per call. Without Hadoop's
   * native library the stock class forks `chmod` for every file, `.crc`
@@ -88,10 +87,6 @@ object LocalFileBinding {
   /** The file system of `path` under a bound copy of the session's conf. */
   def fileSystem(spark: SparkSession, path: Path): FileSystem = path.getFileSystem(hadoopConf(spark))
 
-  /** A bound conf that tasks carry, so files they create are bound too. */
-  def forTasks(spark: SparkSession): TaskFileSystems =
-    new TaskFileSystems(new SerializableConfiguration(hadoopConf(spark)))
-
   /** One bound clone per session: a clone's streaming query manager adds a
     * listener to the SparkContext's bus that nothing removes. */
   private val clones = new java.util.WeakHashMap[SparkSession, SparkSession]()
@@ -110,9 +105,4 @@ object LocalFileBinding {
       case r: StreamingRelation => r.copy(dataSource = r.dataSource.copy(sparkSession = s))
     })
   }
-}
-
-/** See [[LocalFileBinding.forTasks]]. */
-final class TaskFileSystems private[table] (conf: SerializableConfiguration) extends Serializable {
-  def fileSystem(path: Path): FileSystem = path.getFileSystem(conf.value)
 }

@@ -184,10 +184,10 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     v
   }
 
-  def manifestEntries(s: Snapshot): Seq[DataFileMeta] = entriesOf(s.manifests)
+  def manifestEntries(s: Snapshot): Seq[DataFileMeta] = s.manifests.flatMap(entriesIn)
 
-  private def entriesOf(manifests: Seq[ManifestMeta]): Seq[DataFileMeta] =
-    manifests.flatMap(m => TableJson.readManifest(readString(fs, new Path(metadataDir, m.path))))
+  private def entriesIn(m: ManifestMeta): Seq[DataFileMeta] =
+    TableJson.readManifest(readString(fs, new Path(metadataDir, m.path)))
 
   /** All live data files of a snapshot (paths relative to table root). */
   def liveFiles(snapshotId: Option[Long] = None): Seq[DataFileMeta] =
@@ -391,7 +391,7 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
   }
 
   /** Equality-delete key entries pending on a snapshot (merge-on-read). */
-  def deleteEntries(s: Snapshot): Seq[DataFileMeta] = entriesOf(s.deletes)
+  def deleteEntries(s: Snapshot): Seq[DataFileMeta] = s.deletes.flatMap(entriesIn)
 
   def scan(
       spark: SparkSession,
@@ -709,8 +709,30 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     writeStaged(keys.select(col("doc_id").cast("string")).distinct(),
       new Path(dataDir, s"deletes/$jobId"))
 
-  def writeManifest(files: Seq[DataFileMeta]): ManifestMeta =
-    TokenTable.writeManifestFile(fs, metadataDir, files)
+  /** Write one manifest file and return its list entry. */
+  def writeManifest(files: Seq[DataFileMeta]): ManifestMeta = {
+    val name = s"manifest-${UUID.randomUUID()}.json"
+    writeString(fs, new Path(metadataDir, name), TableJson.write(files))
+    ManifestMeta(name, files.size, files.map(_.records).sum, files.map(_.bytes).sum,
+      minDocId = files.map(_.minDocId).minOption,
+      maxDocId = files.map(_.maxDocId).maxOption)
+  }
+
+  /** The commit's carry-forward step over each of `manifests`, on the
+    * driver's cores: read it, drop the `drop` entries, write the
+    * replacement when changed. Returns, per manifest, (carried or
+    * replacement manifest, None when emptied; `drop` paths it held). */
+  private def carryForward(
+      manifests: Seq[ManifestMeta], drop: Set[String]): Seq[(Option[ManifestMeta], Set[String])] =
+    TokenTable.onDriverCores(manifests) { m =>
+      val entries = entriesIn(m)
+      val kept = entries.filterNot(e => drop.contains(e.path))
+      val out =
+        if (kept.size == entries.size) Some(m) // untouched: carry forward
+        else if (kept.isEmpty) None
+        else Some(writeManifest(kept))
+      (out, entries.iterator.map(_.path).filter(drop.contains).toSet)
+    }
 
   /**
    * Atomically commit a new snapshot replacing `replaced` files with `added`
@@ -779,25 +801,14 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       // Validation happens inline with the carry-forward pass: every replaced
       // file must still be live in some read manifest (otherwise a concurrent
       // maintenance already rewrote it — abort, caller replans). Manifests
-      // that must be read are rewritten on the driver when few, or by a
-      // Spark job when their combined entry count crosses the distributed
-      // threshold — at 10^6+ files per table a single-threaded driver
-      // parse/rewrite of every touched manifest is the commit bottleneck
-      // (the same wall Iceberg hits and fixes with distributed rewrites).
-      // Manifest order is not semantic (entries are a set; planning reads
-      // all), so carry-unread + rewritten concatenation is safe.
+      // that must be read are rewritten on the driver, one per core at a
+      // time (a 100-manifest, 50k-entry rewrite is a parse-bound wall on
+      // one thread). Manifest order is not semantic (entries are a set;
+      // planning reads all), so carry-unread + rewritten concatenation is
+      // safe.
       val (toCarry, toRead) = parent.map(_.manifests.partition(m => !mustRead(m)))
         .getOrElse((Seq.empty[ManifestMeta], Seq.empty[ManifestMeta]))
-      val processed: Seq[(Option[ManifestMeta], Set[String])] =
-        if (toRead.isEmpty) Seq.empty
-        else {
-          val session = org.apache.spark.sql.SparkSession.getActiveSession
-          val distributed = session.nonEmpty && toRead.size > 1 &&
-            toRead.map(_.addedFiles.toLong).sum >= distributedManifestThreshold
-          if (distributed) distributedManifestRewrite(session.get, toRead, replaced)
-          else toRead.map(m =>
-            TokenTable.rewriteManifestEntries(fs, metadataDir, m, replaced))
-        }
+      val processed = carryForward(toRead, replaced)
       val carried: Seq[ManifestMeta] = toCarry ++ processed.flatMap(_._1)
       val found: Set[String] = processed.iterator.flatMap(_._2).toSet
       val missing = replaced -- found
@@ -811,9 +822,10 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       // Delete manifests: carry the parent's forward (minus dropped key
       // files; none is read when nothing is dropped), append a manifest for
       // newly-staged delete keys.
-      val carriedDeletes: Seq[ManifestMeta] = parent.toSeq.flatMap(_.deletes).flatMap(m =>
-        if (dropDeletePaths.isEmpty) Some(m)
-        else TokenTable.rewriteManifestEntries(fs, metadataDir, m, dropDeletePaths)._1)
+      val deleteManifests = parent.toSeq.flatMap(_.deletes)
+      val carriedDeletes =
+        if (dropDeletePaths.isEmpty) deleteManifests
+        else carryForward(deleteManifests, dropDeletePaths).flatMap(_._1)
       val newDeletes = carriedDeletes ++
         (if (addDeletes.nonEmpty)
           Seq(writeManifest(addDeletes.map(_.copy(addedSeq = Some(snapId)))))
@@ -888,33 +900,6 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
       lost += 1
     }
     throw new CommitConflictException(s"lost the commit race $lost times at $root")
-  }
-
-  /** Combined entry count of touched manifests above which the commit-path
-    * manifest rewrite fans out to a Spark job (table property overridable). */
-  private def distributedManifestThreshold: Long =
-    meta.properties.get("commit.distributed-manifest-threshold").map(_.toLong)
-      .getOrElse(10000L)
-
-  /** Rewrite touched manifests in one Spark job: each task reads ONE
-    * manifest, drops replaced entries, writes the replacement manifest from
-    * the executor, and reports (replacement, replaced-paths-found). The
-    * driver never parses an entry; a retried task can leave an orphan
-    * manifest file, which [[removeOrphans]] collects like any unreferenced
-    * manifest. */
-  private def distributedManifestRewrite(
-      spark: SparkSession, toRead: Seq[ManifestMeta], replaced: Set[String])
-      : Seq[(Option[ManifestMeta], Set[String])] = {
-    val sc = spark.sparkContext
-    val fsBc = sc.broadcast(LocalFileBinding.forTasks(spark))
-    val replacedBc = sc.broadcast(replaced)
-    val mdDir = metadataDir.toString
-    val slices = math.max(1, math.min(toRead.size, sc.defaultParallelism * 2))
-    sc.parallelize(toRead, slices).map { m =>
-      val dir = new Path(mdDir)
-      TokenTable.rewriteManifestEntries(
-        fsBc.value.fileSystem(dir), dir, m, replacedBc.value)
-    }.collect().toSeq
   }
 
   /** Returns the committed metadata (manifest lists spilled and stamped) on
@@ -1060,11 +1045,9 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * its recorded files unchecked, and [[Ledger.record]] keeps them there —
     * so no ledger unit is read.
     *
-    * Past `gc.distributed-threshold` total manifest entries (default 10k)
-    * with an active SparkSession, manifests are parsed, data/ listed and
-    * orphans subtracted and deleted in Spark tasks
-    * ([[distributedOrphanData]]): at 10^6+ files a driver-side parse and
-    * recursive listing is the GC wall, as in Iceberg's remove-orphans.
+    * The pass runs on the driver and starts no Spark job: manifests are
+    * parsed and dead files deleted on the driver's cores, and data/ is
+    * listed by one NIO walk on the local file system.
     *
     * By default the table's grace window applies ([[gcGraceMs]]): an
     * in-flight writer stages output under `data/<jobId>` and externalizes
@@ -1121,65 +1104,13 @@ class TokenTable private (val root: Path, val fs: FileSystem) {
     * `cutoff` filters the LISTED side (candidates), never the reachable one. */
   private def orphanData(
       m: TableMetadata, ledgers: Ledger.OnDisk, delete: Boolean, cutoff: Long): Seq[String] = {
-    val manifests = gcManifests(m)
+    val reachable = TokenTable.onDriverCores(gcManifests(m))(entriesIn)
+      .iterator.flatMap(_.map(_.path)).toSet
     val prefixes = ledgers.resumable.map(Ledger.stagingPrefix)
-    val threshold = m.properties.get("gc.distributed-threshold").map(_.toLong).getOrElse(10000L)
-    val session = org.apache.spark.sql.SparkSession.getActiveSession
-    if (session.nonEmpty && manifests.map(_.addedFiles.toLong).sum >= threshold)
-      distributedOrphanData(session.get, manifests.map(_.path), prefixes, delete, cutoff)
-    else {
-      val reachable = entriesOf(manifests).map(_.path).toSet
-      val dead = listDataFiles(cutoff).filterNot(p =>
-        reachable.contains(p) || prefixes.exists(p.startsWith))
-      if (delete) dead.foreach(deleteDataFile)
-      dead
-    }
-  }
-
-  /** The distributed GC body: reachable = flatMap over manifests (entries
-    * parsed in tasks), listed = recursive listing fanned out per first-level
-    * data/ directory (job-prefix dirs — bounded by commit count, not file
-    * count), dead = listed.subtract(reachable), deleted per-partition in
-    * executors. Deletion is idempotent, so a retried task is harmless. */
-  private def distributedOrphanData(
-      spark: SparkSession, manifestNames: Seq[String], protectedPrefixes: Seq[String],
-      delete: Boolean, cutoff: Long): Seq[String] = {
-    val sc = spark.sparkContext
-    val fsBc = sc.broadcast(LocalFileBinding.forTasks(spark))
-    val mdDirStr = metadataDir.toString
-    val rootStr = root.toString
-    val mSlices = math.max(1, math.min(manifestNames.size, sc.defaultParallelism * 2))
-    val reachable = sc.parallelize(manifestNames, mSlices).flatMap { name =>
-      val dir = new Path(mdDirStr)
-      val tfs = fsBc.value.fileSystem(dir)
-      TableJson.readManifest(readString(tfs, new Path(dir, name))).map(_.path)
-    }
-    val top = fs.listStatus(dataDir).toSeq
-    val loose = top.filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
-        st.getModificationTime < cutoff)
-      .map(st => relativize(root, st.getPath))
-    val dirs = top.filter(_.isDirectory).map(_.getPath.toString)
-    val dSlices = math.max(1, math.min(math.max(dirs.size, 1), sc.defaultParallelism * 2))
-    // listParquetFast: an NIO walk on the local FS (no per-file `ls -ld`
-    // exec — 2 min for 33k files through Hadoop's LocalFileSystem), the
-    // paged recursive LIST elsewhere
-    val listed = sc.parallelize(dirs, dSlices).flatMap { d =>
-      val p = new Path(d)
-      TokenTable.listParquetFast(fsBc.value.fileSystem(p), p).collect {
-        case (q, _, mtime) if mtime < cutoff => relativize(new Path(rootStr), q)
-      }
-    } ++ sc.parallelize(loose, 1)
-    // resumable staging prefixes: a crash-bounded set, in the task closure
-    val dead = listed.filter(p => !protectedPrefixes.exists(p.startsWith))
-      .subtract(reachable)
-    val out =
-      if (delete) dead.mapPartitions { it =>
-        val tfs = fsBc.value.fileSystem(new Path(rootStr))
-        it.map { rel => tfs.delete(new Path(rootStr, rel), false); rel }
-      } else dead
-    // the one driver-side collect is the orphan list itself — small on any
-    // maintained table, and the caller's return value either way
-    out.collect().toSeq.sorted
+    val dead = listDataFiles(cutoff).filterNot(p =>
+      reachable.contains(p) || prefixes.exists(p.startsWith))
+    if (delete) TokenTable.onDriverCores(dead)(deleteDataFile)
+    dead
   }
 
   /** Data and delete-key files under data/ last modified before `cutoff`. */
@@ -1249,32 +1180,13 @@ object TokenTable {
     fs.exists(new Path(root, "metadata/v0.json"))
   }
 
-  /** Write one manifest file and return its list entry — static so the
-    * distributed commit path can run it inside executor tasks. */
-  private[table] def writeManifestFile(
-      fs: FileSystem, metadataDir: Path, files: Seq[DataFileMeta]): ManifestMeta = {
-    val name = s"manifest-${UUID.randomUUID()}.json"
-    writeString(fs, new Path(metadataDir, name), TableJson.write(files))
-    ManifestMeta(name, files.size, files.map(_.records).sum, files.map(_.bytes).sum,
-      minDocId = files.map(_.minDocId).minOption,
-      maxDocId = files.map(_.maxDocId).maxOption)
-  }
-
-  /** One manifest's carry-forward step: read, drop replaced entries, write
-    * the replacement when changed. Returns (carried/replacement manifest,
-    * replaced paths found). Static and pure so the driver loop and the
-    * distributed commit path share it verbatim. */
-  private[table] def rewriteManifestEntries(
-      fs: FileSystem, metadataDir: Path, m: ManifestMeta,
-      replaced: Set[String]): (Option[ManifestMeta], Set[String]) = {
-    val entries = TableJson.readManifest(readString(fs, new Path(metadataDir, m.path)))
-    val found = entries.iterator.map(_.path).filter(replaced.contains).toSet
-    val kept = entries.filterNot(e => replaced.contains(e.path))
-    val out =
-      if (kept.size == entries.size) Some(m) // untouched: carry forward
-      else if (kept.isEmpty) None
-      else Some(writeManifestFile(fs, metadataDir, kept))
-    (out, found)
+  /** `f` over `xs` on the driver's cores (the common fork-join pool), in
+    * `xs`' order. Metadata steps (a manifest's read and rewrite, a file's
+    * delete) are independent I/O plus parsing, so a commit or GC over many
+    * manifests runs them side by side and starts no Spark job. */
+  private def onDriverCores[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    import scala.collection.parallel.CollectionConverters._
+    xs.par.map(f).seq
   }
 
   /** doc_id hull of a file set — the `replacedRange` hint for [[TokenTable.commit]]. */

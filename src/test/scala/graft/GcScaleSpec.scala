@@ -2,14 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.graftbridge.JobCounter
+
 import graft.gen.SequenceGen
 import graft.maintenance.Maintenance
 import graft.table.{DataFileMeta, TokenTable}
 
-/** Reachability GC at file counts where a driver-side manifest parse +
-  * recursive listing stops scaling: past the threshold the whole pass —
-  * manifest entry parsing, data/ listing, orphan subtraction and deletion —
-  * runs as Spark jobs, and must agree exactly with the driver path. */
+/** Reachability GC: manifest entry parsing, data/ listing, orphan
+  * subtraction and deletion run on the driver at every table size, with
+  * no Spark job, and never touch a reachable or ledger-protected file. */
 class GcScaleSpec extends SparkSpec {
 
   private def entry(prefix: String, i: Int): DataFileMeta = {
@@ -38,13 +39,14 @@ class GcScaleSpec extends SparkSpec {
     t
   }
 
-  test("distributed GC: 30k reachable + 3k orphans, zero driver entry parses needed") {
+  test("GC of 30k reachable + 3k orphans runs on the driver in 0 Spark jobs") {
     val root = tmpDir("gc-scale") + "/tbl"
     val t = fabricate(root, nReachable = 30000, nOrphans = 3000, nManifests = 30)
     assert(t.metadata.currentSnapshot.get.manifests.size == 30)
     val t0 = System.nanoTime()
-    val dead = t.removeOrphans(0)
+    val (dead, jobs) = JobCounter.jobsOf(spark.sparkContext)(t.removeOrphans(0))
     val sec = (System.nanoTime() - t0) / 1e9
+    assert(jobs == 0, s"GC ran $jobs Spark jobs")
     val deadData = dead.filter(_.startsWith("data/"))
     assert(deadData.size == 3000, s"deleted ${deadData.size} orphans")
     assert(deadData.forall(_.startsWith("data/orphan/")))
@@ -55,22 +57,6 @@ class GcScaleSpec extends SparkSpec {
     assert(sec < 60.0, f"GC took $sec%.1fs")
     // second run is a no-op
     assert(t.removeOrphans(0).forall(!_.startsWith("data/")))
-  }
-
-  test("driver path (below threshold) and distributed path agree") {
-    val rootA = tmpDir("gc-agree-a") + "/tbl"
-    val rootB = tmpDir("gc-agree-b") + "/tbl"
-    // same layout; A forced distributed via a tiny threshold property, B driver
-    val a = {
-      val t = fabricate(rootA, nReachable = 400, nOrphans = 40, nManifests = 4)
-      t.updateProperties(Map("gc.distributed-threshold" -> "1"))
-      t
-    }
-    val b = fabricate(rootB, nReachable = 400, nOrphans = 40, nManifests = 4)
-    val da = a.removeOrphans(0).filter(_.startsWith("data/")).map(_.replace(rootA, ""))
-    val db = b.removeOrphans(0).filter(_.startsWith("data/")).map(_.replace(rootB, ""))
-    assert(da.sorted == db.sorted)
-    assert(da.size == 40)
   }
 
   test("stale crashed-run ledgers are swept; the current snapshot's survive") {
@@ -106,11 +92,8 @@ class GcScaleSpec extends SparkSpec {
     Files.createDirectories(p.getParent)
     Files.createFile(p)
     new graft.maintenance.Ledger(t, stepId).record("chunk-0", Seq(staged))
-    val dead = t.removeOrphans(0) // driver path
+    val dead = t.removeOrphans(0)
     assert(!dead.contains(staged.path), "GC deleted a resumable ledger's staged output")
-    assert(Files.exists(p))
-    t.updateProperties(Map("gc.distributed-threshold" -> "1"))
-    assert(!t.removeOrphans(0).contains(staged.path)) // distributed path agrees
     assert(Files.exists(p))
     // signed-checkpoint tables: the protection must read through the HMAC
     // envelope (GC strips, resume verifies)
@@ -142,12 +125,9 @@ class GcScaleSpec extends SparkSpec {
     val p = Paths.get(root, staged.path)
     Files.createDirectories(p.getParent)
     Files.createFile(p)
-    val dead = t.removeOrphans(0) // driver path
+    val dead = t.removeOrphans(0)
     assert(!dead.contains(staged.path),
       "GC deleted staged output recorded only in a corrupt (unparseable) unit")
-    assert(Files.exists(p))
-    t.updateProperties(Map("gc.distributed-threshold" -> "1"))
-    assert(!t.removeOrphans(0).contains(staged.path)) // distributed path agrees
     assert(Files.exists(p))
   }
 
@@ -217,13 +197,12 @@ class GcScaleSpec extends SparkSpec {
     assert(Files.list(Paths.get(root, "data/live")).count() == 50)
   }
 
-  test("GC never deletes pending MoR delete-key files (distributed path)") {
+  test("GC never deletes pending MoR delete-key files") {
     import org.apache.spark.sql.functions._
     val root = tmpDir("gc-mor") + "/tbl"
     val t = SequenceGen.createTable(spark, root, 1200, 3)
     val d0 = t.scan(spark).select(min(col("doc_id"))).head.getString(0)
     Maintenance.deleteWhereMor(spark, t, Maintenance.DocIdBetween(d0, d0))
-    t.updateProperties(Map("gc.distributed-threshold" -> "1"))
     val before = t.scan(spark).count()
     t.removeOrphans(0)
     assert(t.scan(spark).count() == before, "GC broke the pending-delete anti-join")

@@ -54,9 +54,7 @@ class LocalFileBindingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1).parquet(src)
     val hadoopBefore = bindingKeys.map(k => k -> spark.sparkContext.hadoopConfiguration.get(k))
     val (t, events) = processStarts {
-      // thresholds of 1 send the manifest rewrite and the orphan sweep to executor tasks
-      val t = TokenTable.create(spark, s"$root/tbl", properties = Map(
-        "commit.distributed-manifest-threshold" -> "1", "gc.distributed-threshold" -> "1"))
+      val t = TokenTable.create(spark, s"$root/tbl")
       t.commit("append", t.stageWrite(SequenceGen.sequences(spark, 200), "seed"))
       Maintenance.mergeInto(spark, t, SequenceGen.sequences(spark, 50, seed = 7L))
       val q = Incremental.streamMergeMor(stream, s"$root/tbl", s"$root/ckpt", Trigger.AvailableNow())

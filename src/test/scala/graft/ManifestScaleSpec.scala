@@ -1,14 +1,15 @@
 package graft
 
+import org.apache.spark.graftbridge.JobCounter
+
 import graft.gen.SequenceGen
 import graft.maintenance.Maintenance
 import graft.table.{DataFileMeta, TokenTable}
 
-/** Commit-path manifest handling at file counts where a driver-side JSON
-  * crawl stops scaling: the touched-manifest rewrite must fan out to a Spark
-  * job past the threshold and produce byte-identical metadata semantics
-  * (replaced entries gone, everything else carried, conflict validation
-  * intact). */
+/** Commit-path manifest handling at tens of thousands of entries: the
+  * touched-manifest rewrite runs on the driver's cores with no Spark job
+  * and keeps the metadata semantics (replaced entries gone, everything
+  * else carried, conflict validation intact). */
 class ManifestScaleSpec extends SparkSpec {
 
   private def syntheticEntry(i: Int): DataFileMeta = {
@@ -31,7 +32,7 @@ class ManifestScaleSpec extends SparkSpec {
     t
   }
 
-  test("distributed rewrite: 50k entries across 100 manifests, one replaced each") {
+  test("rewrite of 50k entries across 100 manifests, one replaced each, in 0 Spark jobs") {
     val t = fabricate(nManifests = 100, perManifest = 500)
     val before = t.liveFiles().map(_.path).toSet
     assert(before.size == 50000)
@@ -40,9 +41,10 @@ class ManifestScaleSpec extends SparkSpec {
     val victims = (0 until 100).map(g => syntheticEntry(g * 500).path).toSet
     val added = Seq(syntheticEntry(999999))
     val t0 = System.nanoTime()
-    t.commit("compact", added, victims,
-      replacedRange = Some(("doc000000000000", "doc000000999999")))
+    val (_, jobs) = JobCounter.jobsOf(spark.sparkContext)(t.commit("compact", added, victims,
+      replacedRange = Some(("doc000000000000", "doc000000999999"))))
     val sec = (System.nanoTime() - t0) / 1e9
+    assert(jobs == 0, s"the commit ran $jobs Spark jobs")
     val after = t.liveFiles().map(_.path).toSet
     assert(after == before -- victims ++ added.map(_.path))
     assert(after.size == 50000 - 100 + 1)
@@ -51,7 +53,7 @@ class ManifestScaleSpec extends SparkSpec {
     assert(sec < 60.0, f"commit took $sec%.1fs")
   }
 
-  test("conflict validation survives the distributed path") {
+  test("conflict validation holds on a 20k-entry rewrite") {
     val t = fabricate(nManifests = 40, perManifest = 500)
     intercept[graft.table.CommitConflictException] {
       t.commit("compact", Seq.empty,
@@ -66,18 +68,5 @@ class ManifestScaleSpec extends SparkSpec {
     Maintenance.compact(spark, t, targetFileBytes = 16 << 20,
       smallFileThreshold = Some(64 << 20))
     assert(t.scan(spark).count() == before)
-  }
-
-  test("threshold is table-property overridable") {
-    val root = tmpDir("manifests-prop") + "/tbl"
-    val t = TokenTable.create(spark, root,
-      properties = Map("commit.distributed-manifest-threshold" -> "100"))
-    val entries = (0 until 400).map(syntheticEntry)
-    t.commit("append", entries)
-    Maintenance.rewriteManifests(t, entriesPerManifest = 100)
-    val victims = Set(syntheticEntry(0).path, syntheticEntry(100).path)
-    t.commit("compact", Seq(syntheticEntry(888888)), victims,
-      replacedRange = Some(("doc000000000000", "doc000000999999")))
-    assert(t.liveFiles().size == 400 - 2 + 1)
   }
 }
